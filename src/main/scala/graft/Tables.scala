@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central table reader for the driver-generated testdata
   * (`/root/testdata/sf*`; schemas in FIXTURES.md §B).
@@ -8,8 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale notes (100 TB design stance): all reads are plain parquet scans so
   * Catalyst's FileSourceStrategy gets full predicate pushdown + column
   * pruning; callers `.select(...)` / `.filter(...)` immediately after the
-  * read so `PushedFilters`/`ReadSchema` stay tight. No caching here — at
-  * 100 TB a cached base table is a liability; each query plans its own scan.
+  * read so `PushedFilters`/`ReadSchema` stay tight. Metadata is cached,
+  * data never is: a regular file's inferred schema is memoised per path
+  * and stamp ([[schemaOnce]]), while every read still lists its file and
+  * plans its own scan — at 100 TB a cached base table is a liability.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +22,23 @@ object Tables {
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") readEvents(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without the per-call schema inference:
+    * Spark infers a parquet schema with a one-task footer-reading job
+    * (`mergeSchemasInParallel`), which made up most of the build-phase
+    * jobs of the reference queries. For a regular file the inferred
+    * schema is memoised ([[schemaOnce]]) and handed back through
+    * `.schema(...)` — the same `StructType`, so the same plan. A
+    * directory goes through Spark's own inference on every call: its
+    * mtime does not track its part files. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    stamp(spark, path) match {
+      case Some(st) =>
+        spark.read.schema(cached(st)(spark.read.parquet(path).schema))
+          .parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   /** Session conf every graft entry point must set at SESSION CONSTRUCTION
     * (`SparkSession.builder().config(nanosConfKey, "true")`): the driver
@@ -76,7 +96,7 @@ object Tables {
     *    naive value as the same UTC instant DuckDB reads — bit-exact.
     *  - TIMESTAMP (tz-adjusted — any normal source): untouched. */
   private def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts",
@@ -89,6 +109,57 @@ object Tables {
       case _ => raw
     }
   }
+
+  /** The session confs that change the schema Spark infers from the same
+    * parquet footer; part of every [[schemaOnce]] stamp. */
+  private val inferenceConfKeys = Seq(nanosConfKey,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** What an inferred schema depends on besides the path: the file's
+    * modification time and length, and the inference confs. */
+  private final case class Stamp(path: String, mtime: Long, length: Long,
+      confs: Seq[Option[String]])
+
+  /** The stamp of `path` if it is a regular file; `None` for a directory
+    * or a missing path (Spark then reports it as usual). */
+  private def stamp(spark: SparkSession, path: String): Option[Stamp] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      if (!st.isFile) None
+      else Some(Stamp(fs.makeQualified(p).toString, st.getModificationTime,
+        st.getLen, inferenceConfKeys.map(spark.conf.getOption)))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** One entry per qualified path, replaced when the stamp changes, so
+    * the map is bounded by the number of distinct files read. */
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]
+
+  /** `infer` runs outside any map lock: an inference is a Spark job, and
+    * two racing callers with the same stamp infer the same schema. */
+  private def cached(st: Stamp)(infer: => StructType): StructType = {
+    val hit = schemaCache.get(st.path)
+    if (hit != null && hit._1 == st) hit._2
+    else {
+      val schema = infer
+      schemaCache.put(st.path, (st, schema))
+      schema
+    }
+  }
+
+  /** The one schema memo for inputs whose schema is inferred by a scan:
+    * `infer` runs once per stamp of `stampFile`, a regular file that is
+    * rewritten whenever the input is (a table's parquet file, or the
+    * `_SUCCESS` marker of a published fixture copy). Without a regular
+    * file to stamp, `infer` runs on every call. */
+  def schemaOnce(spark: SparkSession, stampFile: String)(
+      infer: => StructType): StructType =
+    stamp(spark, stampFile).fold(infer)(cached(_)(infer))
 
   /** Register every table as a temp view (reference S5 shape:
     * `registerTempTable`, query1.py:93). */

@@ -1272,11 +1272,10 @@ object Similarity {
     * ChecksumP, quantized eigenvector), each d = 64 rows keyed by
     * dimension. The eigensolver chain is fully deterministic (exact
     * fixed-point integers) and the testdata is immutable within a JVM
-    * run (the `Etl.schemaOnce` precedent), so the corpus-sized Gramian
-    * pass — the dominant cost of BOTH [[pcaPower]] and [[projectPc]] —
-    * is paid once per (process, sfDir) instead of once per query: a
-    * fitted-model cache, exactly like the ≤128-row codebook collects the
-    * ANN tiers already do. */
+    * run, so the corpus-sized Gramian pass — the dominant cost of BOTH
+    * [[pcaPower]] and [[projectPc]] — is paid once per (process, sfDir)
+    * instead of once per query: a fitted-model cache, exactly like the
+    * ≤128-row codebook collects the ANN tiers already do. */
   private val pcaModelCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[(Long, Long)], Array[(Long, Long)])]
 

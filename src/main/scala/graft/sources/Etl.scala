@@ -48,20 +48,6 @@ object Etl {
   def csvFixture(spark: SparkSession, sfDir: String, table: String): String =
     fixture(spark, sfDir, table, "csv")
 
-  /** Once-per-JVM schema memo for the format-twin readers. Schema
-    * inference is a full extra scan of the input — the reference pays it
-    * once during its one-time ETL (csv_to_parquet.py:7-13), so a bench
-    * or verify run invoking a CSV/JSON twin N times must not pay N
-    * inference scans (at 100 TB one inference pass is hours). Keyed by
-    * fixture path; testdata is immutable within a JVM run. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
-
-  def schemaOnce(key: String)(
-      infer: => org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(key, _ => infer)
-
   /** Cached alternate-format copy of a fixture table (`csv`, `json`
     * (JSON-lines), `orc`) for source-twin queries.
     *

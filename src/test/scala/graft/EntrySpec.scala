@@ -25,6 +25,28 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("declarative ref queries build without a job once their tables " +
+      "were read") {
+    // the build of a declarative query only plans; with every input's
+    // schema known (Tables' per-file memo) it must launch no job, so each
+    // job a query runs belongs to its action
+    val declarative = Seq("q1_topmonths", "q1_sql", "q2_buckets", "q2_sql",
+      "q2_typed", "q4_distance", "q4_distance_broadcast", "q4_distance_sql")
+    // builds that run jobs on purpose: q3's `head(3)` driver round trip
+    // and q4_distance_bcastvar's `collect` into a broadcast variable
+    val eager = Seq("q3_joinchain", "q4_distance_bcastvar")
+    (declarative ++ eager).foreach(SparkEntry.queries(_)(spark, sf))
+    declarative.foreach { name =>
+      val (_, jobs) = jobsDuring(SparkEntry.queries(name)(spark, sf))
+      assert(jobs == 0, s"building $name launched $jobs job(s)")
+    }
+    eager.foreach { name =>
+      val (_, jobs) = jobsDuring(SparkEntry.queries(name)(spark, sf))
+      assert(jobs > 0, s"building $name launched no job: move it to " +
+        "the declarative list")
+    }
+  }
+
   test("registerViews exposes every table to SQL") {
     Tables.registerViews(spark, sf)
     val n = spark.sql("""

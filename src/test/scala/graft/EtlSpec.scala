@@ -55,6 +55,25 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  test("a CSV twin rebuilt from a newer source is read with its new " +
+      "schema") {
+    // the twin's inferred schema is memoised per published copy: a copy
+    // rebuilt at the same path must not be read with the old schema
+    val dir = Files.createTempDirectory("graft-twin").toString
+    val src = new java.io.File(dir, "t.parquet")
+    spark.range(4).selectExpr("id AS a", "id * 2 AS b")
+      .write.parquet(src.getPath)
+    val before = graft.operators.RefQueries.readCsvTwin(spark, dir, "t")
+    assert(before.columns.toSeq == Seq("a", "b"))
+    spark.range(4).selectExpr("id AS a", "id * 2 AS b", "id * 3 AS c")
+      .write.mode("overwrite").parquet(src.getPath)
+    src.setLastModified(System.currentTimeMillis() + 2000)
+    val after = graft.operators.RefQueries.readCsvTwin(spark, dir, "t")
+    assert(after.columns.toSeq == Seq("a", "b", "c"))
+    assert(after.orderBy("a").collect().map(_.getInt(2)).toSeq ==
+      Seq(0, 3, 6, 9))
+  }
+
   test("cosine_sim is SQL-callable after registration") {
     val s2 = spark.newSession()
     graft.functions.CosineSimilarity.register(s2)

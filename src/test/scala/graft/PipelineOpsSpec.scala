@@ -1280,20 +1280,10 @@ class PipelineOpsSpec extends SparkSpec {
     assert(n1 > 0L)
     // a memo hit must run ZERO jobs (the one-pass property: the family's
     // later queries re-derive from the checkpoint, never re-scan)
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val (df2, n2) = E.eventsProjection(spark, sf, 4)
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-      assert(df2 eq df1, "memo hit must return the same checkpoint")
-      assert(n2 == n1)
-      assert(jobs == 0, s"memo hit launched $jobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val ((df2, n2), jobs) = jobsDuring(E.eventsProjection(spark, sf, 4))
+    assert(df2 eq df1, "memo hit must return the same checkpoint")
+    assert(n2 == n1)
+    assert(jobs == 0, s"memo hit launched $jobs job(s)")
     // the family leaves NO CacheManager entry (the r13 persist() did):
     // a fresh session running a declared lateness query end-to-end must
     // find the shared cache manager exactly as empty as it started

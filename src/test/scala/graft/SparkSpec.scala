@@ -30,6 +30,25 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
 
+  /** `body`'s result and the number of Spark jobs it launched (listener
+    * delivery is drained before and after, so no other job is counted). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBridge.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq == b.columns.toSeq,
