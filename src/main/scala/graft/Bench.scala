@@ -38,8 +38,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cpus
     // N>=3 timed passes: a single-pass number is hostage to machine-load
     // variance (the r5 artifact disagreed with a re-run by 1.6-2.9x on
     // one query family) — the committed per-query number is the MEDIAN,
@@ -47,23 +47,7 @@ object Bench {
     // of silently baked in.
     val passes = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(Tables.nanosConfKey, "true") // events TIMESTAMP(NANOS) decode
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // one task per path is pure scheduling overhead on a single node —
-      // see Tables.listingParallelism (scale-adaptive, env-overridable)
-      .config(Tables.listingParallelismKey, Tables.listingParallelism(cpus))
-      // per-process private warehouse, deleted on exit (Etl.warehouseDir:
-      // bucket metadata cannot outlive the in-memory catalog, so
-      // isolation is free and concurrent runs cannot collide)
-      .config("spark.sql.warehouse.dir", graft.sources.Etl.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
     // returns false on timeout: queued events from the PREVIOUS query may

@@ -1,11 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time queries (2 runs each — cold incl. codegen/JIT, then
   * warm) or dump formatted plans with -plan. `-jobs` additionally prints
   * every Spark job the warm run launched (wall ms + description) plus the
   * driver-side gap between jobs — the planning/listing/collect time no
-  * task metric sees. Not part of the driver contract. */
+  * task metric sees. Not part of the driver contract.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=...
+  *   runMain graft.DevTime [-plan | -jobs] <query> [<query> ...] */
 object DevTime {
 
   private final class JobLog extends org.apache.spark.scheduler.SparkListener {
@@ -27,17 +29,8 @@ object DevTime {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("DEV_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConfKey, "true") // events TIMESTAMP(NANOS) decode
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", graft.sources.Etl.warehouseDir)
-      .config(Tables.listingParallelismKey, Tables.listingParallelism(cpus))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val d = sys.env.getOrElse("DEV_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local(GraftSession.cpus)
+    val d = GraftSession.sfDir
     val (flags, names) = args.partition(_.startsWith("-"))
     val jl = new JobLog
     if (flags.contains("-jobs")) spark.sparkContext.addSparkListener(jl)

@@ -41,8 +41,8 @@ object Tables {
     }
 
   /** Session conf every graft entry point must set at SESSION CONSTRUCTION
-    * (`SparkSession.builder().config(nanosConfKey, "true")`): the driver
-    * regenerates the events fixture each round and has shipped `ts` as
+    * (GraftSession.local sets it for every main and the tests): the
+    * events fixture is regenerated each round and has shipped `ts` as
     * TIMESTAMP(NANOS) (through r7), which Spark's parquet reader rejects
     * by default; under this conf it decodes as long (readEvents then
     * floor-divides to micros). Harmless when the fixture is micros (the

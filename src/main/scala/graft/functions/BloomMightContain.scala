@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Native Catalyst expression: probe a PACKED Bloom-filter bitmap with the
@@ -51,7 +52,7 @@ case class BloomMightContain(child: Expression, words: Array[Long],
   override def nullSafeEval(key: Any): Any = {
     // pmod, not %: a signed remainder on a negative key would drive pos
     // negative and the word index out of bounds (fixture keys are
-    // nonnegative, but the function is registered session-wide)
+    // nonnegative, but the probe takes any BIGINT column)
     val k = (key.asInstanceOf[Long] % BloomMightContain.P +
       BloomMightContain.P) % BloomMightContain.P
     var i = 0
@@ -99,11 +100,11 @@ object BloomMightContain {
     Array(2654435761L, 2246822519L, 3266489917L, 668265263L)
   val B: Array[Long] = Array.tabulate(4)(i => 10007L * i + 1L)
 
-  /** Register a probe bound to one fitted bitmap under `name` (the bitmap
-    * is model state, not an expression argument — same fitted-model
-    * pattern as HyperplaneSignature's per-width registrations). */
-  def register(spark: SparkSession, words: Array[Long], mBits: Int,
-      name: String = "bloom_might_contain"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BloomMightContain(exprs.head, words, mBits), "built-in")
+  /** Probe `key` against one fitted bitmap. The bitmap is model state,
+    * not an expression argument, so the probe is a Column built straight
+    * from the Expression: no registry name, so two bitmaps in one session
+    * (or one plan) never clobber each other. */
+  def column(key: Column, words: Array[Long], mBits: Int): Column =
+    GraftBridge.column(
+      BloomMightContain(GraftBridge.expression(key), words, mBits))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -82,18 +81,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim` in the session's function registry so it is
-    * usable from both `expr("cosine_sim(a, b)")` and SQL text.
-    * Idempotent — safe to call per query build. */
-  def register(spark: SparkSession): Unit =
-    // skip when present: the builder is fixed (no model state), so
-    // re-registration only spams SimpleFunctionRegistry WARNs
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)),
-        "built-in")
 }

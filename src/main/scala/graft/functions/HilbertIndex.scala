@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,13 +91,4 @@ object HilbertIndex {
     }
     d.toLong
   }
-
-  /** Register `hilbert_xy2d` for `expr(...)`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    // skip when present: the builder is fixed (no model state), so
-    // re-registration only spams SimpleFunctionRegistry WARNs
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert_xy2d")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hilbert_xy2d", exprs => HilbertIndex(exprs(0), exprs(1)), "built-in")
 }

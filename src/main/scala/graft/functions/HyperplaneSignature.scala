@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expression: random-hyperplane LSH signature — bit p of
@@ -74,13 +75,11 @@ case class HyperplaneSignature(child: Expression,
 }
 
 object HyperplaneSignature {
-  /** Register `<name>(vec)` bound to a fixed plane matrix. Distinct names
-    * let one session hold several signature widths at once (e.g. the
-    * 16-bit top-k signature next to the adaptive per-band near-dup
-    * signatures) without clobbering each other. */
-  def register(spark: SparkSession, planes: Array[Array[Double]],
-      name: String = "hyperplane_sig"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => HyperplaneSignature(exprs.head, planes),
-      "built-in")
+  /** The signature of `vec` under one fixed plane matrix, as a Column
+    * built straight from the Expression: no registry name, so several
+    * signature widths (the 16-bit top-k signature next to the adaptive
+    * per-band near-dup signatures) coexist in one plan, each with its
+    * own planes. */
+  def column(vec: Column, planes: Array[Array[Double]]): Column =
+    GraftBridge.column(HyperplaneSignature(GraftBridge.expression(vec), planes))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,20 +76,11 @@ object MinhashSig {
   /** poly_hash prefix cap (bytes) the shingle hash must honor. */
   private val Cap = 1 << 20
 
-  /** Register `minhash_sig` for `expr(...)`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    // skip when present: the builder is fixed (no model state), so
-    // re-registration only spams SimpleFunctionRegistry WARNs
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_sig", exprs => MinhashSig(exprs.head), "built-in")
-
   /** The kernel — called from both the interpreted eval and the generated
     * code (one virtual call per row; the loops JIT as tight byte/long
     * loops either way). Returns null when the document has no 3-gram
-    * shingle, or when any token is NULL — the function is registered
-    * session-wide for SQL, where `array('a', NULL, 'b')` is easy to
+    * shingle, or when any token is NULL — `minhash_sig` is callable
+    * from any SQL text, where `array('a', NULL, 'b')` is easy to
     * construct; a null token means unknown content, so the signature is
     * unknown (internal callers split on non-null text and never hit
     * this). */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,13 +71,4 @@ object Mix64 {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
-
-  /** Register `mix64` for `expr(...)`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    // skip when present: the builder is fixed (no model state), so
-    // re-registration only spams SimpleFunctionRegistry WARNs
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("mix64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "mix64", exprs => Mix64(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,15 +68,6 @@ case class PolyHash(left: Expression, right: Expression)
 }
 
 object PolyHash {
-  /** Register `poly_hash` for `expr(...)`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    // skip when present: the builder is fixed (no model state), so
-    // re-registration only spams SimpleFunctionRegistry WARNs
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("poly_hash")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "poly_hash", exprs => PolyHash(exprs(0), exprs(1)), "built-in")
-
   /** Pure JVM twin of the expression — for in-memory differential specs. */
   def hash(s: String, prefixLen: Int): Long = {
     val bytes = s.getBytes("UTF-8")

@@ -271,7 +271,6 @@ object Dedup {
   private[graft] def minhashBanded(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinhashSig.register(spark)
     docs
       .withColumn("norm", normText)
       .withColumn("sig", call_function("minhash_sig", split($"norm", " ")))
@@ -302,7 +301,6 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val nPerm = NPerm
-    graft.functions.PolyHash.register(spark)
     val toks = docs
       .withColumn("norm", normText)
       .select($"doc_id", posexplode(split($"norm", " ")).as(Seq("pos", "tok")))
@@ -334,7 +332,6 @@ object Dedup {
   private[graft] def minhashBandedHofRef(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     val sigExpr =
       s"""transform(sequence(0, ${NPerm - 1}), p ->
             array_min(transform(shingles, s ->
@@ -393,7 +390,6 @@ object Dedup {
     * one compliance batch. */
   def dedupForgetIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
     // persisted state stand-in: occupancy cells over the full corpus,
     // built once and frozen (the signature-index precedent)
@@ -1133,7 +1129,6 @@ object Dedup {
     require(n >= 2, s"span shingle width must be >= 2, got $n")
     require(hotCap >= 2L,
       s"hotCap must be >= 2 (the bypass marks hot shingles dup), got $hotCap")
-    graft.functions.PolyHash.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
       .withColumn("norm", normText)
       .select($"doc_id", split($"norm", " ").as("toks"))
@@ -1251,7 +1246,6 @@ object Dedup {
     require(k >= 1, s"probe count k must be >= 1, got $k")
     require(maxDf >= 2L,
       s"maxDf must be >= 2 (DF 1 shingles cannot witness a pair), got $maxDf")
-    graft.functions.PolyHash.register(spark)
     val toks = Tables.read(spark, sfDir, "documents")
       .withColumn("norm", normText)
       .select($"doc_id", posexplode(split($"norm", " ")).as(Seq("pos", "tok")))
@@ -1326,7 +1320,6 @@ object Dedup {
   def winnowing(spark: SparkSession, sfDir: String,
       n: Int = 3, w: Int = WinnowW): DataFrame = {
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
       .withColumn("norm", normText)
       .select($"doc_id", split($"norm", " ").as("toks"))

@@ -589,7 +589,6 @@ object Events {
     * user) partials once — the one unavoidable exchange. */
   def abAssign(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val ev = Tables.read(spark, sfDir, "events")
       .withColumn("variant",
         when(pmod(call_function("mix64", $"user_id"), lit(2L)) === 0L,

@@ -126,7 +126,6 @@ object Forget {
         $"n_after", $"survivor_checksum")
 
     // 4. per-lang rollup: checksum binds (lang, surviving count)
-    graft.functions.PolyHash.register(spark)
     val langs = d.groupBy($"lang")
       .agg(sum(when(!$"dead", 1L).otherwise(0L)).as("n_alive"))
     val s4 = langs.agg(count(lit(1)).as("n_before"),
@@ -222,7 +221,6 @@ object Forget {
   private[graft] def prunedPairStore(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val root = graft.sources.Etl.pairStoreFixture(spark, sfDir)
     val labels = spark.read.parquet(s"$root/labels")
     val tombs = Tables.read(spark, sfDir, "documents")
@@ -256,7 +254,6 @@ object Forget {
     * assignment. */
   def qForget(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
       .select($"doc_id", $"lang")
     val tombs = docs

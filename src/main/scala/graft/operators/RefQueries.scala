@@ -817,7 +817,6 @@ object RefQueries {
     * write that makes both dimensions' predicates prune. */
   def qHilbertLayout(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.HilbertIndex.register(spark)
     val ord = Tables.read(spark, sfDir, "orders")
       .select($"o_custkey".cast("long").as("ck"),
         datediff($"o_orderdate".cast("date"),

@@ -66,7 +66,6 @@ object Similarity {
   def topKBruteForceNative(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 3): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     val queries = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
@@ -98,12 +97,8 @@ object Similarity {
     * expression (graft.functions.HyperplaneSignature); the corpus-wide
     * signature pass stays inside WholeStageCodegen instead of paying 16
     * interpreted HOF folds per row. */
-  private def signature(spark: SparkSession, vec: Column): Column = {
-    graft.functions.HyperplaneSignature.register(spark, planes)
-    // call_function binds the Column directly — no round-trip through SQL
-    // text (expr(s"...${vec.toString}...") breaks on any derived Column)
-    call_function("hyperplane_sig", vec)
-  }
+  private def signature(vec: Column): Column =
+    graft.functions.HyperplaneSignature.column(vec, planes)
 
   private def withBands(df: DataFrame, nBands: Int = 4): DataFrame = {
     val bits = 16 / nBands
@@ -123,11 +118,10 @@ object Similarity {
   def topKLsh(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 3): DataFrame = {
     import spark.implicits._
-    val emb = corpus(spark, sfDir).withColumn("sig", signature(spark, $"vec"))
+    val emb = corpus(spark, sfDir).withColumn("sig", signature($"vec"))
     val banded = withBands(emb)
     val qb = withBands(emb.filter($"vec_id" < nQueries))
       .select($"vec_id".as("q_id"), $"vec".as("q_vec"), $"band", $"bval")
-    graft.functions.CosineSimilarity.register(spark)
     val candidates = banded.join(broadcast(qb), Seq("band", "bval"))
       .filter($"vec_id" =!= $"q_id")
       .select($"q_id", $"q_vec", $"vec_id", $"vec")
@@ -167,8 +161,7 @@ object Similarity {
   def radiusSearch(spark: SparkSession, sfDir: String,
       tau: Double = RadiusTau, nQueries: Int = 3): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
-    val emb = corpus(spark, sfDir).withColumn("sig", signature(spark, $"vec"))
+    val emb = corpus(spark, sfDir).withColumn("sig", signature($"vec"))
     val queries = emb.filter($"vec_id" < nQueries)
       .select($"vec_id".as("q_id"), $"vec".as("q_vec"), $"sig".as("q_sig"))
     val bandMatch = (0 until 4).map { b =>
@@ -238,7 +231,6 @@ object Similarity {
   def topKBatch(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 64, nCells: Int = 0, nprobe: Int = 0): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
     val centroids = broadcast(
@@ -358,7 +350,6 @@ object Similarity {
   private def seedSample(spark: SparkSession, emb: DataFrame, n: Int)
       : Array[(Int, Long, Array[Double])] = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     emb
       .select(call_function("mix64", $"vec_id").as("mz"), $"vec_id", $"vec")
       .orderBy($"mz".asc, $"vec_id".asc)
@@ -388,7 +379,6 @@ object Similarity {
   private[graft] def assignCells(spark: SparkSession, emb: DataFrame,
       centroids: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     emb.crossJoin(broadcast(centroids))
       .withColumn("cell_cos", expr("cosine_sim(vec, centroid)"))
       .groupBy($"vec_id")
@@ -428,7 +418,6 @@ object Similarity {
       assigned: DataFrame, centroids: DataFrame, k: Int, nQueries: Int,
       nprobe: Int): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     // query → nprobe nearest centroids
     val wProbe = Window.partitionBy($"q_id")
       .orderBy($"probe_cos".desc, $"cell_id".asc)
@@ -582,7 +571,6 @@ object Similarity {
   private[graft] def kmeansCentroids(spark: SparkSession, sfDir: String,
       nCells: Int = 16, iters: Int = 2): Array[(Int, Array[Double])] = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     var cents: Array[(Int, Array[Double])] = seedVectors(spark, emb, nCells)
     for (_ <- 1 to iters) {
@@ -622,7 +610,6 @@ object Similarity {
   def kmeansClusters(spark: SparkSession, sfDir: String,
       nCells: Int = 16): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     val cents = kmeansCentroids(spark, sfDir, nCells)
     val centroids = broadcast(
@@ -663,9 +650,8 @@ object Similarity {
     * best — first maximum = lowest cell_id on ties, exactly
     * `max_by(struct(cos, -cell_id))`'s order. Zero bytes per vector to
     * any exchange. */
-  private[graft] def cellAssignCol(spark: SparkSession,
+  private[graft] def cellAssignCol(
       cents: Array[(Int, Array[Double])]): Column = {
-    graft.functions.CosineSimilarity.register(spark)
     val centArr = array(cents.sortBy(_._1).map { case (id, v) =>
       struct(lit(id).as("cell_id"),
         array(v.map(lit): _*).as("centroid"))
@@ -867,7 +853,6 @@ object Similarity {
       nQueries: Int = 3, nCells: Int = 0, nprobe: Int = 0,
       nSub: Int = 8, nCodes: Int = 16): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val subDim = Dim / nSub
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
@@ -965,7 +950,6 @@ object Similarity {
   def topKBinary(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 3, maxHamming: Int = 26): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     def word(w: Int): Column = expr(
       s"""aggregate(sequence(0, 31), 0L,
@@ -1021,7 +1005,6 @@ object Similarity {
   def dedupSemantic(spark: SparkSession, sfDir: String,
       threshold: Double = 0.4, nCells: Int = 0): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = corpus(spark, sfDir)
     val k = if (nCells > 0) nCells else semanticCellCount(emb.count())
     val cents = kmeansCentroids(spark, sfDir, k)
@@ -1118,16 +1101,12 @@ object Similarity {
   /** Per-band hyperplane signature: band `j` folds the `bits` planes with
     * GLOBAL indices `j*bits .. j*bits+bits-1` (the oracle regenerates the
     * same matrix from the global index and splits with `p // bits`,
-    * `p % bits`). Separate registered functions per (bits, band) so the
-    * adaptive widths never clobber the fixed 16-bit top-k signature. */
-  private def bandSignature(spark: SparkSession, vec: Column,
-      bits: Int, band: Int): Column = {
-    val name = s"hyperplane_sig_${bits}b_$band"
-    val slice = Array.tabulate(bits, Dim)((i, d) =>
-      planeComponent(band * bits + i, d))
-    graft.functions.HyperplaneSignature.register(spark, slice, name)
-    call_function(name, vec)
-  }
+    * `p % bits`). Each band's Column carries its own plane slice, so
+    * the adaptive widths never clobber the fixed 16-bit top-k signature. */
+  private[graft] def bandSignature(vec: Column, bits: Int,
+      band: Int): Column =
+    graft.functions.HyperplaneSignature.column(vec,
+      Array.tabulate(bits, Dim)((i, d) => planeComponent(band * bits + i, d)))
 
   /** Embedding-cosine near-duplicate pairs via LSH banding — all-pairs
     * within band buckets only, never a full cross join.
@@ -1149,7 +1128,6 @@ object Similarity {
   def cosineNearDup(spark: SparkSession, sfDir: String,
       threshold: Double = 0.4, nBands: Int = 4): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb0 = corpus(spark, sfDir)
     val n = emb0.count()
     var bits = 8
@@ -1167,7 +1145,7 @@ object Similarity {
     val banded = emb0.select(col("*"),
       explode(array((0 until nBands).map(j => struct(
         lit(j).as("band"),
-        bandSignature(spark, $"vec", bits, j).cast("long").as("bval"))): _*))
+        bandSignature($"vec", bits, j).cast("long").as("bval"))): _*))
         .as("bb"))
       .select($"vec_id", $"vec", $"bb.band".as("band"), $"bb.bval".as("bval"))
     val l = banded.select($"vec_id".as("id_a"), $"vec".as("vec_a"),

@@ -135,10 +135,9 @@ object Sketches {
         .withColumn("pass", $"matched")
     } else {
       val (words, mBits, _) = buildBloomBitmap(keys, capBits, nKeys)
-      graft.functions.BloomMightContain.register(spark, words, mBits)
       fact0
-        .withColumn("pass",
-          call_function("bloom_might_contain", $"l_orderkey"))
+        .withColumn("pass", graft.functions.BloomMightContain.column(
+          $"l_orderkey", words, mBits))
         // exact semi join, included to measure the filter's error
         .join(broadcast(keys.withColumn("matched", lit(true))),
           $"l_orderkey" === $"k", "left_outer")
@@ -339,7 +338,6 @@ object Sketches {
     * compute — the sketch is ~8 KB per group forever. */
   def hllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val li = Tables.read(spark, sfDir, "lineitem")
       .select($"l_returnflag", $"l_orderkey")
     val reg = li
@@ -402,8 +400,8 @@ object Sketches {
     * shared by [[hllSliding]] and the STREAMING register maintainer
     * (`stream_hll_distinct`): the groupBy-max is exactly the
     * incremental state update a Complete-mode streaming aggregation
-    * keeps, because register max is merge-order-invariant. Caller must
-    * have registered `mix64` on the session. */
+    * keeps, because register max is merge-order-invariant. `mix64`
+    * resolves through GraftExtensions. */
   private[graft] def hllDayRegisters(ev: DataFrame): DataFrame = {
     ev.select(to_date(col("ts")).as("day"),
         call_function("mix64", col("user_id")).as("z"))
@@ -447,7 +445,6 @@ object Sketches {
   def hllSliding(spark: SparkSession, sfDir: String,
       winDays: Int = HllWinDays): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val ev = Tables.read(spark, sfDir, "events")
       .select($"ts", $"user_id")
     val days = ev.select(to_date($"ts").as("day")).distinct()
@@ -510,7 +507,6 @@ object Sketches {
     * estimates, so the acceptance band is 2× the single-set bound. */
   def hllIntersect(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val ev = Tables.read(spark, sfDir, "events")
       .select($"event_type", $"user_id")
     val reg = ev
@@ -592,7 +588,6 @@ object Sketches {
     * row groups a pruned scan would read. */
   def sampleBlocks(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val li = Tables.read(spark, sfDir, "lineitem")
       .select($"l_orderkey", $"l_extendedprice")
     val mk = li.agg(max($"l_orderkey")).head().getLong(0)

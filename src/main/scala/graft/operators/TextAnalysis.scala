@@ -260,7 +260,6 @@ object TextAnalysis {
   def chunk(spark: SparkSession, sfDir: String,
       chunkSize: Int = 64, stride: Int = 48): DataFrame = {
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     Tables.read(spark, sfDir, "documents")
       .withColumn("toks", split(expr(TextNorm.normSql), " "))
       .withColumn("n_toks", size($"toks"))
@@ -495,7 +494,6 @@ object TextAnalysis {
       benchMax: Long = 5L, n: Int = 3): DataFrame = {
     import spark.implicits._
     require(n >= 2, s"shingle width must be >= 2, got $n")
-    graft.functions.PolyHash.register(spark)
     val toks = Tables.read(spark, sfDir, "documents")
       .withColumn("norm", TextNorm.normCol)
       .select($"doc_id", posexplode(split($"norm", " ")).as(Seq("pos", "tok")))
@@ -642,7 +640,6 @@ object TextAnalysis {
   def capPerSource(spark: SparkSession, sfDir: String,
       cap: Int = SourceCap): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
       .select($"source", $"doc_id")
     val w = Window.partitionBy($"source")
@@ -771,7 +768,6 @@ object TextAnalysis {
     * would dominate the scan. */
   def fingerprint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     Tables.read(spark, sfDir, "documents")
       .withColumn("norm",
         expr(s"substr(${TextNorm.normSql}, 1, 1024)"))
@@ -1100,7 +1096,6 @@ object TextAnalysis {
   def hashFeatures(spark: SparkSession, sfDir: String, nBins: Int = 64)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     val P = ChecksumP
     val bins = Tables.read(spark, sfDir, "documents")
       .select($"doc_id", explode(split(TextNorm.normCol, " ")).as("tok"))
@@ -1308,9 +1303,8 @@ object TextAnalysis {
     * group-then-dot plan). The weight table rides along as nBins plan
     * literals ([[classifierWeight]]). Shared by the batch operator and
     * its streaming twin. */
-  def classifierDocScore(spark: SparkSession, nBins: Int = 64,
+  def classifierDocScore(nBins: Int = 64,
       weights: Seq[Long] = Nil): Column = {
-    graft.functions.PolyHash.register(spark)
     val ws = if (weights.nonEmpty) weights
       else (0 until nBins).map(classifierWeight)
     val wArr = array(ws.map(lit): _*)
@@ -1381,7 +1375,7 @@ object TextAnalysis {
       nBins: Int = 64, threshold: Long = 0L): DataFrame = {
     import spark.implicits._
     val scored = Tables.read(spark, sfDir, "documents")
-      .select($"lang", classifierDocScore(spark, nBins).as("score"))
+      .select($"lang", classifierDocScore(nBins).as("score"))
     classifierFinalize(classifierRollup(scored, threshold))
   }
 
@@ -1409,7 +1403,6 @@ object TextAnalysis {
       nBins: Int, posLang: String, vsAll: Boolean): Array[Long] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     val rows = docs
       .select($"lang", explode(split(TextNorm.normCol, " ")).as("tok"))
       .select($"lang",
@@ -1464,7 +1457,7 @@ object TextAnalysis {
     val w = trainedBinWeights(docs, nBins, posLang, vsAll = false)
     val scored = docs
       .select($"lang",
-        classifierDocScore(spark, nBins, w.toIndexedSeq).as("score"))
+        classifierDocScore(nBins, w.toIndexedSeq).as("score"))
     classifierFinalize(classifierRollup(scored))
   }
 
@@ -1507,7 +1500,7 @@ object TextAnalysis {
     val w = trainedBinWeights(docs, nBins, targetLang, vsAll = true)
     docs
       .select($"doc_id", $"lang",
-        classifierDocScore(spark, nBins, w.toIndexedSeq).as("score"))
+        classifierDocScore(nBins, w.toIndexedSeq).as("score"))
       .withColumn("sel", $"score" >= 0)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),

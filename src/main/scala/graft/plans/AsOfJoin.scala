@@ -150,9 +150,6 @@ object AsOfJoin {
       leftTsCol: String, rightTsCol: String,
       tieBreak: Seq[String] = Nil, leftOuter: Boolean = true): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

@@ -168,12 +168,6 @@ object RangeJoin {
       leftTsCol: String, rightTsCol: String,
       windowMicros: Long): DataFrame = {
     val spark = left.sparkSession
-    // idempotent fallback registration for sessions built without
-    // spark.sql.extensions=graft.GraftExtensions (mirrors the
-    // register() pattern of the native functions)
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

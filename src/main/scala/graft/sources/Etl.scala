@@ -101,7 +101,6 @@ object Etl {
   val HilbertZonesDir = "zones"
 
   def hilbertOrdersFixture(spark: SparkSession, sfDir: String): String = {
-    graft.functions.HilbertIndex.register(spark)
     curveOrdersFixture(spark, sfDir, "orders-hilbert-v3",
       "hilbert_xy2d(x8, y8)")
   }
@@ -488,8 +487,6 @@ object Etl {
       srcRoot: String, dstRoot: java.io.File): (Array[Long], Array[Long]) = {
     import org.apache.spark.sql.functions._
     val R = graft.operators.RefQueries
-    graft.functions.HilbertIndex.register(spark)
-    graft.functions.Mix64.register(spark)
     val (sLo, sHi) = R.MergeStripe
     val keyOff = mergeKeyOffset(spark, sfDir)
     // update half reads ONLY the stripe's zone-map candidates
@@ -539,8 +536,6 @@ object Etl {
       candRows: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
     val R = graft.operators.RefQueries
-    graft.functions.HilbertIndex.register(spark)
-    graft.functions.Mix64.register(spark)
     val (sLo, sHi) = R.MergeStripe
     val st = orderLayoutStats(spark, sfDir)
     val dayMin = st.getLong(2)
@@ -1008,7 +1003,6 @@ object Etl {
     * PartitionFilters). */
   def partitionEvolutionFixture(spark: SparkSession, sfDir: String)
       : String = {
-    graft.functions.HilbertIndex.register(spark)
     cachedFixture(sfDir, "orders-partition-evo-v1",
         s"$sfDir/orders.parquet") { tmp =>
       import org.apache.spark.sql.functions._
@@ -1152,8 +1146,6 @@ object Etl {
   def chainFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-chain-v4", s"$sfDir/orders.parquet") { tmp =>
       import org.apache.spark.sql.functions._
-      graft.functions.HilbertIndex.register(spark)
-      graft.functions.Mix64.register(spark)
       val R = graft.operators.RefQueries
       val data = new java.io.File(tmp, ChainDataDir)
       val mans = new java.io.File(tmp, ChainManifestsDir)
@@ -1346,8 +1338,6 @@ object Etl {
     val src = chainFixture(spark, sfDir)
     cachedFixture(sfDir, "orders-chain-wap-v2", s"$src/_SUCCESS") { tmp =>
       import org.apache.spark.sql.functions._
-      graft.functions.HilbertIndex.register(spark)
-      graft.functions.Mix64.register(spark)
       linkDir(new java.io.File(src, ChainDataDir),
         new java.io.File(tmp, ChainDataDir))
       copyDir(new java.io.File(src, ChainManifestsDir),

@@ -273,7 +273,6 @@ object StreamingQueries {
     * no raw retention, readable at any time. */
   def hllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val ev = eventsDf(spark, sfDir)
     val out = runFileStream(spark, "hll_registers",
       Seq(ev.filter($"event_id" % 2 === 0), ev.filter($"event_id" % 2 === 1)),
@@ -515,7 +514,7 @@ object StreamingQueries {
       OutputMode.Complete()) { df =>
       graft.operators.TextAnalysis.classifierRollup(
         df.select($"lang",
-          graft.operators.TextAnalysis.classifierDocScore(spark)
+          graft.operators.TextAnalysis.classifierDocScore()
             .as("score")))
     }
     graft.operators.TextAnalysis.classifierFinalize(out)
@@ -545,7 +544,7 @@ object StreamingQueries {
       graft.operators.TextAnalysis.classifierRollup(
         df.select($"lang",
           graft.operators.TextAnalysis
-            .classifierDocScore(spark, nBins, w.toIndexedSeq)
+            .classifierDocScore(nBins, w.toIndexedSeq)
             .as("score")))
     }
     graft.operators.TextAnalysis.classifierFinalize(out)
@@ -713,7 +712,7 @@ object StreamingQueries {
     val out = runFileStream(spark, "ivf_cells",
       Seq(emb.filter($"vec_id" % 2 === 0), emb.filter($"vec_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
-      df.select(graft.operators.Similarity.cellAssignCol(spark, cents)
+      df.select(graft.operators.Similarity.cellAssignCol(cents)
           .as("cell_id"))
         .groupBy($"cell_id")
         .agg(count(lit(1)).as("n_vecs"))
@@ -870,7 +869,6 @@ object StreamingQueries {
     * compliance batches. */
   def forgetIndexStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sfDir, "documents")
       .select($"doc_id", $"text")
     // persisted state: the full-corpus occupancy cells, built once and

@@ -674,7 +674,6 @@ class DedupSpec extends SparkSpec {
     assert(graft.functions.MinhashSig.compute(withNull) == null)
     // SQL level: array(..., NULL, ...) is containsNull=true — the exact
     // shape an ad-hoc SQL caller constructs; must return NULL, not NPE
-    graft.functions.MinhashSig.register(spark)
     val r = spark.sql(
       "SELECT minhash_sig(array('a', CAST(NULL AS STRING), 'b', 'c')) " +
         "AS sig, minhash_sig(array('a', 'b', 'c', 'd')) AS ok")
@@ -756,7 +755,6 @@ class DedupSpec extends SparkSpec {
   test("signature-index forget ≡ alive-corpus rebuild (sf fixture" +
       " differential)") {
     import org.apache.spark.sql.functions.{call_function, col, lit, pmod}
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sf, "documents")
     val alive = docs.filter(
       pmod(call_function("mix64", col("doc_id")), lit(19L)) =!= 0L)

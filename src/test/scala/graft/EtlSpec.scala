@@ -5,7 +5,7 @@ import graft.sources.Etl
 
 /** S1/S3 ETL parity (reference csv_to_parquet.py): CSV → snappy parquet
   * roundtrip preserves rows, plus the explicit-schema + partitioned
-  * production variant. Also covers the GraftExtensions registration. */
+  * production variant. */
 class EtlSpec extends SparkSpec {
 
   test("csv -> parquet roundtrip preserves data (inferred schema)") {
@@ -72,25 +72,6 @@ class EtlSpec extends SparkSpec {
     assert(after.columns.toSeq == Seq("a", "b", "c"))
     assert(after.orderBy("a").collect().map(_.getInt(2)).toSeq ==
       Seq(0, 3, 6, 9))
-  }
-
-  test("cosine_sim is SQL-callable after registration") {
-    val s2 = spark.newSession()
-    graft.functions.CosineSimilarity.register(s2)
-    val r = s2.sql(
-      "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
-      .collect()(0).getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-12)
-    // orthogonal → 0
-    val o = s2.sql(
-      "SELECT cosine_sim(array(1.0d, 0.0d), array(0.0d, 1.0d)) AS c")
-      .collect()(0).getDouble(0)
-    assert(math.abs(o) < 1e-12)
-  }
-
-  test("GraftExtensions injects cosine_sim at session build time") {
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(e) // must register without throwing
   }
 
   test("type widening: mergeSchema hard-fails on int-vs-bigint" +

@@ -136,7 +136,6 @@ class ForgetSpec extends SparkSpec {
       " the on-disk buckets and lossless vs the unpruned read") {
     import org.apache.spark.sql.functions.{broadcast, call_function, col,
       lit, pmod}
-    graft.functions.Mix64.register(spark)
     val root = graft.sources.Etl.pairStoreFixture(spark, sf)
     val allBucketDirs = Option(new java.io.File(s"$root/pairs").listFiles())
       .map(_.filter(f => f.isDirectory && f.getName.startsWith("lbucket="))

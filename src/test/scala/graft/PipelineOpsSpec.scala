@@ -42,10 +42,9 @@ class PipelineOpsSpec extends SparkSpec {
         words((pos >>> 6).toInt) |= (1L << (pos & 63L).toInt)
       }
     }
-    graft.functions.BloomMightContain.register(spark, words, mBits,
-      "bloom_probe_negtest")
     val got = keys.toDF("k")
-      .selectExpr("k", "bloom_probe_negtest(k) AS hit")
+      .select($"k", graft.functions.BloomMightContain.column(
+        $"k", words, mBits).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     keys.foreach(k => assert(got(k), s"inserted key $k not found"))
   }
@@ -67,10 +66,9 @@ class PipelineOpsSpec extends SparkSpec {
       "the saturation warning must fire")
     // saturation degrades false POSITIVES only — every inserted key must
     // still probe true (the invariant that makes the filter a safe prune)
-    graft.functions.BloomMightContain.register(spark, words, mBits,
-      "bloom_probe_sattest")
     val misses = keysDf
-      .selectExpr("k", "bloom_probe_sattest(k) AS hit")
+      .select($"k", graft.functions.BloomMightContain.column(
+        $"k", words, mBits).as("hit"))
       .filter(!col("hit")).count()
     assert(misses == 0L, s"$misses inserted keys probed false " +
       "— saturation must never cost a true match")
@@ -252,7 +250,6 @@ class PipelineOpsSpec extends SparkSpec {
     import spark.implicits._
     // every reported pair must be a genuine above-threshold pair (the
     // banding can miss pairs, never invent them)
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.read(spark, sf, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val all = emb.as("a").crossJoin(emb.as("b"))
@@ -938,7 +935,6 @@ class PipelineOpsSpec extends SparkSpec {
     // expression can never drift from the Scala reference
     import org.apache.spark.sql.functions.{col, expr}
     import spark.implicits._
-    graft.functions.HilbertIndex.register(spark)
     val cases = Seq((300L, 5L), (256L, 0L), (511L, 255L), (-1L, 7L),
       (1L << 40, 99L), (1234567L, 7654321L))
     cases.foreach { case (x, y) =>
@@ -1421,7 +1417,7 @@ class PipelineOpsSpec extends SparkSpec {
     // corpus each lang is textually uniform, so fixed keeps all-or-none
     // of each side and cannot reach perfect accuracy on both
     val fixedScored = toy.select($"lang", graft.operators.TextAnalysis
-      .classifierDocScore(spark).as("score"))
+      .classifierDocScore().as("score"))
       .collect().map(r => (r.getString(0), r.getLong(1) >= 0L))
     val fixedAcc = fixedScored.count { case (l, kept) =>
       kept == (l == "en") }.toDouble / fixedScored.length
@@ -1950,7 +1946,6 @@ class PipelineOpsSpec extends SparkSpec {
       // every row self-consistent with the curve: the partition dir, the
       // stored hidx, and the stored grid coords must agree — a relocated
       // row written to a stale bucket fails here
-      graft.functions.HilbertIndex.register(spark)
       val bad = merged.filter(
         col("hbucket") =!= expr("hidx div 24") ||
           col("hidx") =!= expr("hilbert_xy2d(x8, y8)")).count()
@@ -1958,7 +1953,6 @@ class PipelineOpsSpec extends SparkSpec {
       // key set = source keys ∪ re-keyed inserts
       val srcKeys = spark.read.parquet(s"$src/${E.HilbertTableDir}")
         .select("o_orderkey").collect().map(_.getLong(0)).toSet
-      graft.functions.Mix64.register(spark)
       val keyOff = E.mergeKeyOffset(spark, sf)
       val expectIns = Tables.read(spark, sf, "orders")
         .filter(pmod(call_function("mix64", col("o_orderkey")),

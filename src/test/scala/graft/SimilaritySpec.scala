@@ -389,7 +389,6 @@ class SimilaritySpec extends SparkSpec {
   test("radius search: exact vs brute-force threshold scan (recall 1.0" +
       " by construction); band audit matches an independent replay") {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.read(spark, sf, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val queries = emb.filter($"vec_id" < 3)

@@ -4,22 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — suites
-  * run sequentially under `Test / fork := true`). */
+  * run sequentially under `Test / fork := true`), built by the same
+  * GraftSession.local the mains use. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConfKey, "true") // events TIMESTAMP(NANOS) decode
-      .config("spark.ui.enabled", "false")
-      .config(Tables.listingParallelismKey, Tables.listingParallelism("4"))
-      .config("spark.sql.warehouse.dir", graft.sources.Etl.warehouseDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("4")
   val sf: String = "/root/testdata/sf0.001"
   /** The denser second-scale fixture for tests whose claim only holds
     * past the sparse-grid regime (curve-layout comparisons etc.). */

@@ -236,7 +236,6 @@ class StreamingSpec extends SparkSpec {
     // fixture micro-batch deliveries; register max is merge-invariant,
     // so the finalized estimates must equal the one-shot batch build
     val got = graft.streaming.StreamingQueries.hllDistinct(spark, sf)
-    graft.functions.Mix64.register(spark)
     val batchReg = graft.operators.Sketches.hllDayRegisters(
       Tables.read(spark, sf, "events").select($"ts", $"user_id"))
     val want = graft.operators.Sketches.hllFinalizeDaily(spark, sf, batchReg)
@@ -314,7 +313,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>")
         .as("vec"))
     val both = emb
-      .select(graft.operators.Similarity.cellAssignCol(spark, cents)
+      .select(graft.operators.Similarity.cellAssignCol(cents)
         .as("cell_id"), (col("vec_id") % 2).as("par"))
       .groupBy("cell_id").agg(countDistinct("par").as("nPar"))
       .filter(col("nPar") === 2).count()
@@ -415,7 +414,6 @@ class StreamingSpec extends SparkSpec {
     // dead state genuinely accumulates across batches (a single shared
     // cell straddling the parities is too rare at spec scale — the
     // planted toy test above proves that exact case deterministically)
-    graft.functions.Mix64.register(spark)
     val docs = Tables.read(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val tombs = docs.filter(
