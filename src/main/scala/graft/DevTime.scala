@@ -1,10 +1,13 @@
 package graft
 
 /** Dev utility: time queries (2 runs each — cold incl. codegen/JIT, then
-  * warm) or dump formatted plans with -plan. `-jobs` additionally prints
-  * every Spark job the warm run launched (wall ms + description) plus the
-  * driver-side gap between jobs — the planning/listing/collect time no
-  * task metric sees. Not part of the driver contract.
+  * warm) or, with -plan, run the noop action and print the executed
+  * write's formatted plan: the AQE FINAL plan (runtime exchange reuse,
+  * coalesced partitions, join conversions), then the initial one. `-jobs`
+  * additionally prints every Spark job the warm run launched (wall ms +
+  * description) plus the driver-side gap between jobs — the
+  * planning/listing/collect time no task metric sees. Not part of the
+  * driver contract.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=...
   *   runMain graft.DevTime [-plan | -jobs] <query> [<query> ...] */
@@ -28,6 +31,28 @@ object DevTime {
     def clear(): Unit = { jobs.clear(); open.clear() }
   }
 
+  /** Formatted plan of the last query `action` executed, captured after
+    * it ran (the listener bus is drained before reading). */
+  private def executedPlan(spark: org.apache.spark.sql.SparkSession)(
+      action: => Unit): String = {
+    val last = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.execution.QueryExecution]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = last.set(qe)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      action
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    last.get.explainString(org.apache.spark.sql.execution.FormattedMode)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(GraftSession.cpus)
     val d = GraftSession.sfDir
@@ -40,7 +65,7 @@ object DevTime {
     names.foreach { name =>
       if (flags.contains("-plan")) {
         println(s"===== PLAN $name =====")
-        SparkEntry.queries(name)(spark, d).explain("formatted")
+        println(executedPlan(spark)(noop(name)))
       } else {
         (1 to 2).foreach { i =>
           if (i == 2 && flags.contains("-jobs")) {

@@ -92,19 +92,6 @@ object Dedup {
     singles.union(confirmed).orderBy($"keep_id".asc)
   }
 
-  /** Token 3-gram shingles of normalized text, as a Column over `toks`.
-    * The size guard must short-circuit: Spark's `sequence(1, 0)` counts
-    * DOWN (step defaults to -1 when start > stop), so a bare
-    * `sequence(1, greatest(size-2, 0))` would index element 0 and crash
-    * on documents with fewer than 3 tokens. */
-  private val shinglesExpr =
-    """CASE WHEN size(toks) >= 3 THEN
-         transform(sequence(1, size(toks) - 2),
-                   i -> concat(element_at(toks, i), ' ',
-                               element_at(toks, i + 1), ' ',
-                               element_at(toks, i + 2)))
-       ELSE array() END"""
-
   /** Exact n-gram (token-3-gram) Jaccard near-dup within a cheap blocking
     * key: (first 64 normalized chars, shingle-count log2 bucket). Blocking
     * bounds the pair count — the exact-similarity stage only ever sees
@@ -155,8 +142,8 @@ object Dedup {
   private[graft] def ngramCandidates(spark: SparkSession,
       sfDir: String, threshold: Double = 0.5): DataFrame = {
     import spark.implicits._
-    // Shingle sets via the codegen'd posexplode + lead-window stream (the
-    // minHashLsh path), materialized ONCE by the collect_set aggregate.
+    // Shingle sets via the codegen'd posexplode + lead-window stream,
+    // materialized ONCE by the collect_set aggregate.
     // The one-Project HOF route (`transform(sequence(...))`) is
     // interpreted AND would be re-evaluated per downstream reference —
     // sh_a, the size bucket, and twice inside the explode array — which
@@ -197,34 +184,6 @@ object Dedup {
         greatest($"id_a", $"id_b").as("doc_b"), $"jaccard")
   }
 
-  /** Differential reference for the skew stress spec: blocking on the
-    * prefix alone (exactly the oracle's semantics — and the pre-hardening
-    * implementation). Quadratic in hot blocks; kept to prove the
-    * size-bucket split returns the identical pair set. */
-  private[graft] def ngramJaccardUnsplit(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.read(spark, sfDir, "documents")
-      .withColumn("norm", normText)
-      .withColumn("toks", expr("split(norm, ' ')"))
-      .withColumn("shingles", expr(s"array_distinct($shinglesExpr)"))
-      .withColumn("block", substring($"norm", 1, 64))
-      .select($"doc_id", $"block", $"shingles")
-    val a = docs.select($"doc_id".as("doc_a"), $"block",
-      $"shingles".as("sh_a"))
-    val b = docs.select($"doc_id".as("doc_b"), $"block",
-      $"shingles".as("sh_b"))
-    a.join(b, Seq("block"))
-      .filter($"doc_a" < $"doc_b")
-      .withColumn("jaccard", round(
-        size(array_intersect($"sh_a", $"sh_b")).cast("double") /
-          greatest(size(array_union($"sh_a", $"sh_b")), lit(1)).cast("double"),
-        4))
-      .filter($"jaccard" >= threshold)
-      .select($"doc_a", $"doc_b", $"jaccard")
-      .orderBy($"doc_a".asc, $"doc_b".asc)
-  }
-
   /** MinHash + LSH banding near-dup: 16 permutations over poly-hashed
     * shingles, banded 4×4; candidate pairs = docs sharing any band bucket;
     * estimated Jaccard = fraction of matching minhashes.
@@ -236,12 +195,19 @@ object Dedup {
     * it is also cheaper than 16 independent string hashes (one byte-loop
     * per shingle, then 16 reg-width mod-muls).
     * Scale: the band-bucket self-join replaces the O(n²) pair space with
-    * per-bucket fan-out; 16 minhash aggregates are one pass over the
-    * shingle stream inside codegen. */
+    * per-bucket fan-out. Signing is one fused `minhash_sig` call per
+    * document ([[minhashBanded]]), and the corpus is signed ONCE per
+    * query: `banded` is hash-partitioned on the join key before the
+    * self-join, so both sides are the same exchange and AQE reads the
+    * second one as a `ReusedExchange` (PlanSpec pins one `documents`
+    * scan). The self-join needs that (band, bsig) partitioning anyway;
+    * the repartition is the join's own exchange, built once instead of
+    * once per side. */
   def minHashLsh(spark: SparkSession, sfDir: String,
       estThreshold: Double = 0.5): DataFrame = {
     import spark.implicits._
     val banded = minhashBanded(Tables.read(spark, sfDir, "documents"))
+      .repartition($"band", $"bsig")
     val left = banded.select($"doc_id".as("doc_a"), $"sig".as("sig_a"),
       $"band", $"bsig")
     val right = banded.select($"doc_id".as("doc_b"), $"sig".as("sig_b"),
@@ -262,88 +228,39 @@ object Dedup {
     * poly-hash, and all 16 permutation minima fold inside one map-only
     * operator — ZERO shuffles before banding (the historical window
     * route shuffled the full shingle stream per doc; the interpreted
-    * HOF route re-hashed every shingle 16× — both kept below as
-    * differential spec references, DedupSpec proves all three routes
+    * HOF route re-hashed every shingle 16× — both live on as
+    * differential references in DedupSpec, which proves all three routes
     * produce the identical (doc_id, sig, band, bsig) set). Map-only is
     * also what lets a streaming micro-batch sign documents without a
     * second aggregation. Docs with < 3 tokens have no shingles → NULL
-    * signature → dropped, same as the window route's empty group. */
+    * signature → no band rows, same as the window route's empty group.
+    * The NULL guard lives inside [[bandExplode]]'s generator, not in a
+    * Filter: the optimizer pushes a `sig IS NOT NULL` Filter below the
+    * Project by inlining `sig`, which evaluates the normalisation and
+    * `minhash_sig` twice per row (PlanSpec pins exactly one call). */
   private[graft] def minhashBanded(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
       .withColumn("norm", normText)
       .withColumn("sig", call_function("minhash_sig", split($"norm", " ")))
-      .filter($"sig".isNotNull)
       .transform(bandExplode)
   }
 
   /** (doc_id, sig) → one row per (band, bsig) bucket — the 4-way band
-    * explode shared by every signing route. */
-  private def bandExplode(sig: DataFrame): DataFrame = {
+    * explode shared by every signing route. A NULL `sig` explodes a NULL
+    * array, which emits no rows. */
+  private[graft] def bandExplode(sig: DataFrame): DataFrame = {
     val spark = sig.sparkSession
     import spark.implicits._
     val rowsPerBand = NPerm / NBands
     sig.select($"doc_id", $"sig",
-      explode(array((0 until NBands).map(b =>
+      explode(when($"sig".isNotNull, array((0 until NBands).map(b =>
         struct(lit(b).as("band"),
           concat_ws(":", (0 until rowsPerBand).map(r =>
-            col("sig")(b * rowsPerBand + r)): _*).as("bsig"))): _*)).as("bb"))
+            col("sig")(b * rowsPerBand + r)): _*).as("bsig"))): _*)))
+        .as("bb"))
       .select($"doc_id", $"sig", $"bb.band", $"bb.bsig")
-  }
-
-  /** Differential reference #1 (spec-only): the historical batch route —
-    * posexplode tokens → lead-window shingles → 16 min() aggregates.
-    * Correct but shuffles the full shingle stream per document before
-    * signing; kept so DedupSpec can prove the fused [[minhashBanded]]
-    * kernel signature-identical to an independent formulation. */
-  private[graft] def minhashBandedWindowRef(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nPerm = NPerm
-    val toks = docs
-      .withColumn("norm", normText)
-      .select($"doc_id", posexplode(split($"norm", " ")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy($"doc_id").orderBy($"pos".asc)
-    val shingles = toks
-      .withColumn("t1", lead($"tok", 1).over(w))
-      .withColumn("t2", lead($"tok", 2).over(w))
-      .filter($"t2".isNotNull)
-      .select($"doc_id", concat_ws(" ", $"tok", $"t1", $"t2").as("shingle"))
-    def perm(p: Int): Column =
-      (call_function("poly_hash", $"shingle", lit(1 << 20)) * lit(2L * p + 1)
-        + lit(7919L * p)) % lit(1000000007L)
-    shingles
-      .groupBy($"doc_id")
-      .agg(min(perm(0)).as("mh_0"),
-        (1 until nPerm).map(p => min(perm(p)).as(s"mh_$p")): _*)
-      .withColumn("sig",
-        array((0 until nPerm).map(p => col(s"mh_$p")): _*))
-      .select($"doc_id", $"sig")
-      .transform(bandExplode)
-  }
-
-  /** Differential reference #2 (spec-only): the interpreted HOF route —
-    * shingles via transform(sequence(...)) and each permutation min as
-    * an array_min fold over `poly_hash`. Row-local like the production
-    * kernel but ~5× slower (interpreted lambdas, every shingle re-hashed
-    * per permutation); kept as the second independent formulation in
-    * DedupSpec's three-way route-equivalence gate. */
-  private[graft] def minhashBandedHofRef(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sigExpr =
-      s"""transform(sequence(0, ${NPerm - 1}), p ->
-            array_min(transform(shingles, s ->
-              (poly_hash(s, ${1 << 20}) * (2*p + 1) + 7919*p)
-                % 1000000007)))"""
-    docs
-      .withColumn("norm", normText)
-      .withColumn("toks", expr("split(norm, ' ')"))
-      .filter(expr("size(toks) >= 3"))
-      .withColumn("shingles", expr(shinglesExpr))
-      .withColumn("sig", expr(sigExpr))
-      .transform(bandExplode)
   }
 
   /** Band-bucket occupancy cells over a banded signature table — one row

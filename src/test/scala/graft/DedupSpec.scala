@@ -231,7 +231,7 @@ class DedupSpec extends SparkSpec {
   test("ngram blocking skew: size-bucket split is lossless vs prefix-only blocking") {
     assertSameRows(
       Dedup.ngramJaccard(spark, boilerplateDir),
-      Dedup.ngramJaccardUnsplit(spark, boilerplateDir))
+      DedupRefs.ngramJaccardUnsplit(spark, boilerplateDir))
   }
 
   test("ngram split stays lossless below t=0.5 (probe width derived from threshold)") {
@@ -239,7 +239,7 @@ class DedupSpec extends SparkSpec {
     // the fixed {s, s+1} probe set would lose cross-group pairs here
     assertSameRows(
       Dedup.ngramJaccard(spark, boilerplateDir, threshold = 0.2),
-      Dedup.ngramJaccardUnsplit(spark, boilerplateDir, threshold = 0.2))
+      DedupRefs.ngramJaccardUnsplit(spark, boilerplateDir, threshold = 0.2))
   }
 
   /** Sums shuffle-write bytes across all tasks of `run` via a listener.
@@ -604,8 +604,8 @@ class DedupSpec extends SparkSpec {
       key(df.select(col("doc_id"), col("sig"), col("band").cast("int"),
         col("bsig")))
     val fused = banded(Dedup.minhashBanded(docs))
-    val window = banded(Dedup.minhashBandedWindowRef(docs))
-    val hof = banded(Dedup.minhashBandedHofRef(docs))
+    val window = banded(DedupRefs.minhashBandedWindowRef(docs))
+    val hof = banded(DedupRefs.minhashBandedHofRef(docs))
     assert(fused.nonEmpty, "banded signature table must be non-empty")
     assert(fused == window,
       s"fused kernel drifted from the window route: only-fused=" +

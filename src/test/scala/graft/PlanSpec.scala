@@ -1101,6 +1101,41 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"plan went cartesian:\n$p")
   }
 
+  test("dedup_minhash_lsh: both self-join sides share one exchange — the" +
+      " corpus is scanned and signed once per query") {
+    val df = SparkEntry.queries("dedup_minhash_lsh")(spark, sf)
+    df.collect()
+    // the AQE FINAL plan: runtime exchange reuse only shows after the
+    // action. The build side must read the probe side's (band, bsig)
+    // exchange back as a ReusedExchange; a second documents.parquet
+    // location means each side scans and signs the corpus again.
+    val aqe = df.queryExecution.executedPlan
+    assert(aqe.toString.contains("isFinalPlan=true"),
+      s"plan was not executed:\n$aqe")
+    val p = aqe.asInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+      .executedPlan.toString
+    val docScans = "documents\\.parquet".r.findAllIn(p).length
+    assert(docScans == 1,
+      s"expected one documents scan shared by both join sides, got" +
+        s" $docScans:\n$p")
+    assert(p.contains("ReusedExchange"),
+      s"the second join side must reuse the banded exchange:\n$p")
+  }
+
+  test("minhashBanded: one minhash_sig evaluation per document — no NULL" +
+      " filter pushed below the signing Project") {
+    // a `sig IS NOT NULL` Filter over the Project is pushed below it by
+    // inlining `sig`, so the regex normalisation and the signing kernel
+    // run twice per row; the guard belongs inside the band explode
+    val docs = Tables.read(spark, sf, "documents")
+    val p = operators.Dedup.minhashBanded(docs)
+      .queryExecution.optimizedPlan.toString
+    val calls = "minhashsig\\(".r.findAllIn(p.toLowerCase).length
+    assert(calls == 1,
+      s"expected exactly one minhash_sig call per row, got $calls:\n$p")
+  }
+
   test("dedup_forget_index: the alive corpus is never re-signed — one" +
       " parquet scan (the tombstone side), subtraction broadcast") {
     val df = SparkEntry.queries("dedup_forget_index")(spark, sf)
