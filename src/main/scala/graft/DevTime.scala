@@ -84,7 +84,10 @@ object DevTime {
             val gap = if (prev == 0L) 0L else j.start - prev
             prev = math.max(prev, j.end)
             val dur = if (j.end > 0) j.end - j.start else -1L
-            println(f"  JOB ${j.id}%4d ${dur}%6d ms  (gap ${gap}%5d ms)  ${j.desc.take(90)}")
+            // first line only: a stream job's description goes on with
+            // "\nid = …\nrunId = …"
+            val desc = j.desc.takeWhile(_ != '\n').take(90)
+            println(f"  JOB ${j.id}%4d ${dur}%6d ms  (gap ${gap}%5d ms)  $desc")
           }
           println(s"  JOBS total ${js.length}")
         }

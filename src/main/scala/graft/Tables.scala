@@ -2,7 +2,9 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Central table reader for the driver-generated testdata
   * (`/root/testdata/sf*`; schemas in FIXTURES.md §B).
@@ -14,6 +16,10 @@ import org.apache.spark.sql.types.StructType
   * data never is: a regular file's inferred schema is memoised per path
   * and stamp ([[schemaOnce]]), while every read still lists its file and
   * plans its own scan — at 100 TB a cached base table is a liability.
+  *
+  * Events are read through [[normalizeEvents]], the one `ts` fix-up
+  * shared by the batch reads and by the streams that take the stored
+  * events file itself as their source (declared with [[rawSchema]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -22,7 +28,7 @@ object Tables {
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") readEvents(spark, sfDir)
-    else parquet(spark, s"$sfDir/$name.parquet")
+    else parquet(spark, file(sfDir, name))
 
   /** `spark.read.parquet(path)` without the per-call schema inference:
     * Spark infers a parquet schema with a one-task footer-reading job
@@ -76,8 +82,14 @@ object Tables {
   val listingParallelismKey =
     "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
+  /** The events table as the batch reads see it: [[normalizeEvents]]
+    * over the stored parquet file. */
+  private def readEvents(spark: SparkSession, sfDir: String): DataFrame =
+    normalizeEvents(parquet(spark, file(sfDir, "events")))
+
   /** Normalizes `ts` to a session-tz TIMESTAMP whatever the parquet
-    * writer chose, schema-driven per branch:
+    * writer chose, schema-driven per branch; one code path for the batch
+    * reads and the streams that read the stored events file directly:
     *
     *  - TIMESTAMP(NANOS): under `nanosConfKey` (set at session
     *    construction — see above) it decodes as long; floor-divided to
@@ -95,19 +107,27 @@ object Tables {
     *    `spark.sql.session.timeZone=UTC`, so the cast reinterprets the
     *    naive value as the same UTC instant DuckDB reads — bit-exact.
     *  - TIMESTAMP (tz-adjusted — any normal source): untouched. */
-  private def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = parquet(spark, s"$sfDir/events.parquet")
+  def normalizeEvents(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr(
-              "(ts - pmod(ts, 1000)) div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
+          timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000")))
+      case TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
+
+  /** Where table `name` of a scale-factor directory is stored. */
+  def file(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** The schema Spark infers from table `name`'s parquet file, before any
+    * normalisation — what a stream reading the stored file declares. A
+    * regular file's schema comes from the [[schemaOnce]] memo, so a
+    * repeat call launches no job. */
+  def rawSchema(spark: SparkSession, sfDir: String, name: String)
+      : StructType = {
+    val path = file(sfDir, name)
+    schemaOnce(spark, path)(spark.read.parquet(path).schema)
   }
 
   /** The session confs that change the schema Spark infers from the same

@@ -16,9 +16,13 @@ import graft.Tables
   * driver hash-verifies on the full fixture.
   *
   * Source stance (r6): the declared queries feed via Spark's FILE-STREAM
-  * source (`readStream.schema(...).parquet(dir)`) — each delivery is a
-  * distributed parquet write into the monitored directory, drained with
-  * `processAllAvailable()` so batch boundaries are deterministic. Nothing
+  * source (`readStream.schema(...).parquet(dir)`), each delivery drained
+  * with `processAllAvailable()` so batch boundaries are deterministic. A
+  * delivery of a filtered slice is a distributed parquet write into the
+  * monitored directory ([[runFileStream]]); a delivery of the WHOLE
+  * stored events table is a byte copy of its parquet file renamed in
+  * ([[runEventsStream]]), so no Spark job runs before the stream and the
+  * micro-batch is the table's only scan. Nothing
   * data-sized ever touches the driver (the r5 MemoryStream feed collected
   * the fixture driver-side; MemoryStream now lives only in StreamingSpec's
   * toy fixtures). In production the source swaps to
@@ -30,11 +34,13 @@ import graft.Tables
   * pass-through, which is fixture-sized by design. */
 object StreamingQueries {
 
-  private def eventsDf(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.read(spark, sfDir, "events")
-      .select($"event_id", $"user_id", $"ts", $"event_type", $"value")
-  }
+  private def eventsDf(spark: SparkSession, sfDir: String): DataFrame =
+    eventColumns(Tables.read(spark, sfDir, "events"))
+
+  /** The five event columns every stream uses (`props` is never read, so
+    * it stays pruned from the scan). */
+  private def eventColumns(events: DataFrame): DataFrame =
+    events.select("event_id", "user_id", "ts", "event_type", "value")
 
   /** One micro-batch worth of input: a distributed parquet append into the
     * monitored directory. The file source tracks files by PATH (part
@@ -59,7 +65,7 @@ object StreamingQueries {
     * durability buys nothing here; a production deployment points
     * `SPARK_GRAFT_STREAM_TMP` at storage whose durability matches its
     * recovery story. */
-  private val streamTmpBase: java.nio.file.Path = {
+  private[graft] val streamTmpBase: java.nio.file.Path = {
     val base = sys.env.get("SPARK_GRAFT_STREAM_TMP")
       .map(java.nio.file.Paths.get(_))
       .filter(java.nio.file.Files.isDirectory(_))
@@ -153,22 +159,30 @@ object StreamingQueries {
     } finally rmTree(root.toFile)
   }
 
-  /** Staged-delivery variant of [[runFileStream]] for MANY-batch
-    * replays: the caller pre-writes every delivery in ONE partitioned
-    * Spark write (one parquet file per delivery instead of one
-    * write JOB per delivery — the r17 `stream_lateness` finding: 32
-    * filter+write jobs emitted ~32 part-files EACH, so the file source
-    * re-listed a directory growing toward ~1000 tiny files every
-    * micro-batch), and each delivery here is a plain file RENAME into
-    * the monitored directory — no Spark job, no re-scan of the staged
-    * frame. `staged` is the delivery list in arrival order, each entry
-    * the files of one micro-batch. */
+  /** Rename-delivery variant of [[runFileStream]]: no Spark job per
+    * delivery. `stage` lays every delivery down under the directory it
+    * is given (inside this run's scratch root, so the run's `rmTree`
+    * removes what it leaves on every exit path) and returns the delivery
+    * list in arrival order, each entry the files of one micro-batch;
+    * each delivery is then a plain file RENAME into the monitored
+    * directory. Two stagings use it:
+    *  - MANY-batch replays pre-write every delivery in ONE partitioned
+    *    Spark write (one parquet file per delivery instead of one write
+    *    JOB per delivery — the r17 `stream_lateness` finding: 32
+    *    filter+write jobs emitted ~32 part-files EACH, so the file
+    *    source re-listed a directory growing toward ~1000 tiny files
+    *    every micro-batch);
+    *  - a whole stored table is a byte copy of its parquet file
+    *    ([[copyTable]]): no Spark job at all, where a write would have
+    *    read and re-encoded every row before the stream read them
+    *    again. */
   private def runFileStreamStaged(spark: SparkSession, key: String,
-      schema: org.apache.spark.sql.types.StructType,
-      staged: Seq[Seq[java.io.File]], mode: OutputMode)(
+      schema: org.apache.spark.sql.types.StructType, mode: OutputMode)(
+      stage: java.nio.file.Path => Seq[Seq[java.io.File]])(
       pipeline: DataFrame => DataFrame): DataFrame = {
     val root = streamTmp(s"graft_stream_$key")
     try {
+      val staged = stage(root.resolve("stage"))
       val srcDir = root.resolve("src")
       java.nio.file.Files.createDirectories(srcDir)
       // batch index prefixes keep names unique across deliveries (part
@@ -192,16 +206,49 @@ object StreamingQueries {
     } finally rmTree(root.toFile)
   }
 
+  /** A whole stored table as ONE delivery: its parquet file copied byte
+    * for byte into `dir`. The table is only ever read — fixtures may sit
+    * on read-only storage, so it is never linked, renamed or written.
+    * Fails unless the table is a non-empty regular file and the copy is
+    * whole, so a stream never runs over a silently empty source. */
+  private def copyTable(table: String, dir: java.nio.file.Path)
+      : java.io.File = {
+    val src = new java.io.File(table)
+    require(src.isFile && src.length > 0,
+      s"whole-table delivery: $table is not a non-empty parquet file")
+    java.nio.file.Files.createDirectories(dir)
+    val copy = java.nio.file.Files.copy(src.toPath,
+      dir.resolve(src.getName)).toFile
+    require(copy.length == src.length,
+      s"whole-table delivery: copied ${copy.length} of ${src.length} " +
+        s"bytes of $table")
+    copy
+  }
+
+  /** Runs `pipeline` as a stream over ONE delivery of the whole events
+    * table ([[copyTable]] through [[runFileStreamStaged]]): no Spark job
+    * runs before the stream starts, and its micro-batch is the table's
+    * only scan. The source declares the stored file's raw schema
+    * (memoised by `Tables.rawSchema`, so no footer job); `pipeline` sees
+    * what [[eventsDf]] gives a batch query — `Tables.normalizeEvents`,
+    * then the five event columns. */
+  private def runEventsStream(spark: SparkSession, sfDir: String,
+      key: String, mode: OutputMode)(
+      pipeline: DataFrame => DataFrame): DataFrame =
+    runFileStreamStaged(spark, key,
+      Tables.rawSchema(spark, sfDir, "events"), mode)(
+      dir => Seq(Seq(copyTable(Tables.file(sfDir, "events"), dir)))) {
+      src => pipeline(eventColumns(Tables.normalizeEvents(src)))
+    }
+
   /** Watermarked tumbling-window aggregation, run as a stream (complete
     * mode — the memory sink holds the final windows; the watermark is
     * exercised but eviction isn't needed for a finite fixture). Oracle =
     * the batch tumbling-window SQL (`ev_window_tumbling`'s). */
   def windowTumbling(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = runFileStream(spark, "window_tumbling",
-      Seq(eventsDf(spark, sfDir)), OutputMode.Complete()) { df =>
-      StreamingOps.windowedCounts(df)
-    }
+    val out = runEventsStream(spark, sfDir, "window_tumbling",
+      OutputMode.Complete())(StreamingOps.windowedCounts)
     out.select($"hour_start".cast("string").as("hour_start"),
       $"event_type", $"cnt", $"sum_value")
       .orderBy($"hour_start".asc, $"event_type".asc)
@@ -248,8 +295,8 @@ object StreamingQueries {
     import spark.implicits._
     val dim = Tables.read(spark, sfDir, "customer")
       .select($"c_custkey", $"c_mktsegment")
-    val out = runFileStream(spark, "enrich",
-      Seq(eventsDf(spark, sfDir)), OutputMode.Complete()) { df =>
+    val out = runEventsStream(spark, sfDir, "enrich",
+      OutputMode.Complete()) { df =>
       StreamingOps.enrichWithDim(df, dim)
         .groupBy($"c_mktsegment")
         .agg(count(lit(1)).as("cnt"),
@@ -322,11 +369,11 @@ object StreamingQueries {
     * `ev_cdc_compact` argmax aggregate. */
   def cdcUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val cdc = eventsDf(spark, sfDir)
-      .select($"user_id", $"event_id", $"ts", $"event_type")
-    val out = runFileStream(spark, "cdc", Seq(cdc),
-      OutputMode.Update()) { df =>
-      StreamingOps.latestPerKey(df.as[StreamingOps.Cdc]).toDF()
+    val out = runEventsStream(spark, sfDir, "cdc", OutputMode.Update()) {
+      df =>
+        StreamingOps.latestPerKey(
+          df.select($"user_id", $"event_id", $"ts", $"event_type")
+            .as[StreamingOps.Cdc]).toDF()
     }
     out.select($"user_id", $"n_versions", $"last_event_id",
       $"last_event_type", $"last_ts".cast("string").as("last_ts"))
@@ -640,33 +687,30 @@ object StreamingQueries {
     // re-scanned the checkpointed replay and emitted one part-file per
     // partition, ~1000 tiny files total) that used to dominate this
     // query's wall time.
-    val stageRoot = streamTmp("graft_lateness_stage")
-    val out =
-      try {
-        late.select($"event_id", $"ts", $"event_type", $"cycle", $"shard")
-          .repartition($"cycle", $"shard")
-          .write.partitionBy("cycle", "shard").mode("overwrite")
-          .parquet(stageRoot.toString)
-        val dirPat = "cycle=(\\d+)/shard=(\\d+)".r
-        val staged = new java.io.File(stageRoot.toString).listFiles().toSeq
-          .filter(_.isDirectory).flatMap(_.listFiles())
-          .filter(_.isDirectory)
-          .flatMap { d =>
-            dirPat.findFirstMatchIn(d.getPath).map { m =>
-              ((m.group(1).toLong, m.group(2).toInt),
-                d.listFiles().toSeq.filter(f =>
-                  f.getName.endsWith(".parquet")))
-            }
+    val schema = org.apache.spark.sql.types.StructType(
+      late.select($"event_id", $"ts", $"event_type").schema.fields)
+    val out = runFileStreamStaged(spark, "lateness", schema,
+      OutputMode.Append()) { stageDir =>
+      late.select($"event_id", $"ts", $"event_type", $"cycle", $"shard")
+        .repartition($"cycle", $"shard")
+        .write.partitionBy("cycle", "shard").mode("overwrite")
+        .parquet(stageDir.toString)
+      val dirPat = "cycle=(\\d+)/shard=(\\d+)".r
+      stageDir.toFile.listFiles().toSeq
+        .filter(_.isDirectory).flatMap(_.listFiles())
+        .filter(_.isDirectory)
+        .flatMap { d =>
+          dirPat.findFirstMatchIn(d.getPath).map { m =>
+            ((m.group(1).toLong, m.group(2).toInt),
+              d.listFiles().toSeq.filter(f =>
+                f.getName.endsWith(".parquet")))
           }
-          .sortBy(_._1)
-        val schema = org.apache.spark.sql.types.StructType(
-          late.select($"event_id", $"ts", $"event_type").schema.fields)
-        runFileStreamStaged(spark, "lateness", schema, staged.map(_._2),
-          OutputMode.Append()) { df =>
-          df.withWatermark("ts", s"$delayMs milliseconds")
-            .dropDuplicates("event_id")
         }
-      } finally rmTree(stageRoot.toFile)
+        .sortBy(_._1).map(_._2)
+    } { df =>
+      df.withWatermark("ts", s"$delayMs milliseconds")
+        .dropDuplicates("event_id")
+    }
     val admitted = out.groupBy($"event_type")
       .agg(count(lit(1)).as("n_admitted"),
         pmod(sum(pmod($"event_id", lit(P))).cast("decimal(38,0)"),
@@ -770,34 +814,30 @@ object StreamingQueries {
     val deliveries = (Seq(ingest, feed(1)) ++ mergeBatches).zipWithIndex
       .map { case (df, i) => df.withColumn("bid", lit(i)) }
       .reduce(_ unionByName _)
-    val stageRoot = streamTmp("graft_cdf_stage")
-    val out =
-      try {
-        deliveries.repartition($"bid")
-          .write.partitionBy("bid").mode("overwrite")
-          .parquet(stageRoot.toString)
-        val bidPat = "bid=(\\d+)".r
-        val staged = new java.io.File(stageRoot.toString).listFiles().toSeq
-          .filter(_.isDirectory)
-          .flatMap { d =>
-            bidPat.findFirstMatchIn(d.getName).map { m =>
-              (m.group(1).toInt, d.listFiles().toSeq
-                .filter(_.getName.endsWith(".parquet")))
-            }
+    val out = runFileStreamStaged(spark, "cdf_replay", ingest.schema,
+      OutputMode.Complete()) { stageDir =>
+      deliveries.repartition($"bid")
+        .write.partitionBy("bid").mode("overwrite")
+        .parquet(stageDir.toString)
+      val bidPat = "bid=(\\d+)".r
+      stageDir.toFile.listFiles().toSeq
+        .filter(_.isDirectory)
+        .flatMap { d =>
+          bidPat.findFirstMatchIn(d.getName).map { m =>
+            (m.group(1).toInt, d.listFiles().toSeq
+              .filter(_.getName.endsWith(".parquet")))
           }
-          .sortBy(_._1)
-        val schema = ingest.schema
-        runFileStreamStaged(spark, "cdf_replay", schema, staged.map(_._2),
-          OutputMode.Complete()) { df =>
-          val sgn = when($"change_type".isin("delete", "update_pre"), -1L)
-            .otherwise(1L)
-          val sq =
-            pmod($"o_orderkey", lit(P)) * pmod($"o_orderkey", lit(P)) % P
-          df.groupBy(expr("x8 div 32").as("xband"))
-            .agg(sum(sgn).as("n"), sum(sgn * sq).as("kck"),
-              sum(sgn * pmod($"hidx", lit(P))).as("hck"))
         }
-      } finally rmTree(stageRoot.toFile)
+        .sortBy(_._1).map(_._2)
+    } { df =>
+      val sgn = when($"change_type".isin("delete", "update_pre"), -1L)
+        .otherwise(1L)
+      val sq =
+        pmod($"o_orderkey", lit(P)) * pmod($"o_orderkey", lit(P)) % P
+      df.groupBy(expr("x8 div 32").as("xband"))
+        .agg(sum(sgn).as("n"), sum(sgn * sq).as("kck"),
+          sum(sgn * pmod($"hidx", lit(P))).as("hck"))
+    }
     out.filter($"n" > 0L)
       .select($"xband".cast("long").as("xband"), $"n".as("n_rows"),
         pmod($"kck", lit(P)).as("key_checksum"),

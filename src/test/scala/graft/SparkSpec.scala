@@ -20,13 +20,24 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs it launched (listener
     * delivery is drained before and after, so no other job is counted). */
-  def jobsDuring[T](body: => T): (T, Int) = {
+  def jobsDuring[T](body: => T): (T, Int) = jobsWhere(_ => true)(body)
+
+  /** As [[jobsDuring]], counting only the jobs launched outside any
+    * streaming query (no `sql.streaming.queryId` local property): the
+    * jobs a stream-backed query runs before or after its stream. */
+  def nonStreamJobsDuring[T](body: => T): (T, Int) =
+    jobsWhere(j => Option(j.properties)
+      .forall(_.getProperty("sql.streaming.queryId") == null))(body)
+
+  private def jobsWhere[T](
+      counted: org.apache.spark.scheduler.SparkListenerJobStart => Boolean)(
+      body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+        if (counted(j)) jobs.incrementAndGet(): Unit
     }
     org.apache.spark.GraftListenerBridge.drain(sc)
     sc.addSparkListener(l)

@@ -230,6 +230,53 @@ class StreamingSpec extends SparkSpec {
     assertSameRows(got, want)
   }
 
+  test("whole-table streams launch no job outside the stream and leave " +
+      "no staged copy behind") {
+    // these three deliver the whole events table as a copy of its parquet
+    // file; the dedup redelivery still writes its filtered slice, which
+    // proves the counter sees a delivery's write job
+    val wholeTable =
+      Seq("stream_window_tumbling", "stream_enrich_agg", "stream_cdc_upsert")
+    val written = "stream_dedup_redelivery"
+    // a first build fills the schema memo, so a job counted below is a
+    // delivery (or a driver round trip), not a footer inference
+    (wholeTable :+ written).foreach(SparkEntry.queries(_)(spark, sf))
+    val base = graft.streaming.StreamingQueries.streamTmpBase.toFile
+    def outsideStream(name: String): Int = {
+      val before = base.list().toSet
+      val (_, jobs) = nonStreamJobsDuring(SparkEntry.queries(name)(spark, sf))
+      assert(base.list().toSet == before,
+        s"$name left stream scratch behind")
+      jobs
+    }
+    wholeTable.foreach { name =>
+      val jobs = outsideStream(name)
+      assert(jobs == 0, s"building $name launched $jobs job(s) outside " +
+        "its stream")
+    }
+    assert(outsideStream(written) > 0,
+      s"$written launched no job outside its stream: the counter is blind")
+  }
+
+  test("whole-table streams ≡ their batch twins, with the stored ts " +
+      "normalised inside the stream") {
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+    // the fixture stores ts as NTZ (or nanos), so the stream runs
+    // Tables.normalizeEvents itself; an un-normalised ts would shift or
+    // fail every window and every last_ts
+    val rawTs = Tables.rawSchema(spark, sf, "events")("ts").dataType
+    assert(rawTs == TimestampNTZType || rawTs == LongType,
+      s"events ts is stored as $rawTs: no normalisation to cover")
+    Seq("stream_window_tumbling" -> "ev_window_tumbling",
+        "stream_cdc_upsert" -> "ev_cdc_compact").foreach {
+      case (stream, batch) =>
+        assert(SparkEntry.oracleSql(stream) == SparkEntry.oracleSql(batch),
+          s"$stream and $batch no longer share one oracle")
+        assertSameRows(SparkEntry.queries(stream)(spark, sf),
+          SparkEntry.queries(batch)(spark, sf))
+    }
+  }
+
   test("streaming HLL registers land on the batch sketch bit-for-bit") {
     import spark.implicits._
     // the stream maintains per-day register maxima across two half-
