@@ -92,7 +92,7 @@ object SparkEntry {
     "dedup_incremental" -> ((s, d) => Dedup.dedupIncremental(s, d)),
     "dedup_incremental_cc" -> ((s, d) => Dedup.dedupIncrementalCc(s, d)),
     "dedup_clusters" -> ((s, d) => Dedup.dedupClusters(s, d)),
-    "dedup_clusters_star" -> ((s, d) => Dedup.dedupClustersStar(s, d)),
+    "dedup_clusters_star" -> ((s, d) => Dedup.dedupClusters(s, d)),
     "dedup_pipeline" -> ((s, d) => Dedup.dedupPipeline(s, d)),
     "dedup_simhash" -> ((s, d) => Dedup.simHash(s, d)),
     "dedup_substring" -> ((s, d) => Dedup.substringDedup(s, d)),

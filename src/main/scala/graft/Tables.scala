@@ -72,12 +72,10 @@ object Tables {
     * task-overhead-bound end to end (stat'ing 2731 paths took the same
     * ~210 ms as 77 paths at 128 tasks; at 32 tasks the whole chain
     * family dropped ~1 s per query), so over-scheduling buys nothing
-    * where a stat is microseconds. `SPARK_GRAFT_LISTING_PAR` overrides
-    * for cluster deployments on high-latency object stores, where
-    * listing fan-out beyond the core count genuinely pays. */
+    * where a stat is microseconds. Every graft session is `local[cpus]`
+    * (GraftSession.local), so the core count is the whole cluster. */
   def listingParallelism(cpus: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR",
-      math.max(8, cpus.toInt).toString)
+    math.max(8, cpus.toInt).toString
 
   val listingParallelismKey =
     "spark.sql.sources.parallelPartitionDiscovery.parallelism"

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable.LongMap
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -34,11 +37,13 @@ object Dedup {
     * (checkpointed blocks are non-evictable: lineage is cut, so eviction
     * would fail the job rather than recompute). `Dataset.unpersist` is a
     * no-op for checkpoints (they are not CacheManager entries); the
-    * handle lives on the plan's `LogicalRDD`. */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false): Unit)
+    * handle lives on the plan's `LogicalRDD` ([[checkpointRdd]]). */
+  private[graft] def dropCheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(false): Unit)
+
+  /** The RDD behind a checkpointed frame's `LogicalRDD`, if it has one. */
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
 
   /** Exact dedup: group on (xxhash64(norm), norm), keep the smallest
     * doc_id. Grouping on the hash alone would silently merge 64-bit
@@ -500,10 +505,7 @@ object Dedup {
       .select($"doc_id".as("doc_a"), $"label".as("doc_b"))
     val (merged, _) = connectedComponentsStar(
       starEdges.unionByName(deltaPairs.select($"doc_a", $"doc_b")))
-    merged
-      .select($"doc_id", $"label".as("cluster_id"),
-        ($"doc_id" === $"label").as("is_keeper"))
-      .orderBy($"doc_id".asc)
+    keeperLabels(merged)
   }
 
   /** Near-dup cluster resolution — the step AFTER pair generation that
@@ -511,121 +513,60 @@ object Dedup {
     * `minHashLsh` pair graph, each doc labeled with its component's min
     * doc_id (the canonical keeper). Pairs alone over-remove: (a,b) and
     * (b,c) pairs must keep ONE of {a,b,c}, not drop both b and c's
-    * partners independently.
-    *
-    * Algorithm: neighbor-min label propagation PLUS pointer jumping
-    * (`L(v) ← min over {L(v), min_nbr L(u), L(L(v))}` per iteration) —
-    * the label-chasing step collapses chains exponentially, so the loop
-    * converges in O(log diameter) iterations instead of diameter (the
-    * difference between ~4 and ~30 jobs on chain-shaped dup clusters).
-    * The driver-side loop is CONTROL only, one action per iteration:
-    * labels are monotone non-increasing, so an unchanged sum(label) IS
-    * the fixpoint test — no second compare join. At 100 TB each
-    * iteration is one shuffle of (node, label) pairs, and each iterate is
-    * `localCheckpoint`ed: without the lineage cut the self-join doubles
-    * the logical plan per iteration (2^k growth — the driver OOMs on
-    * plan analysis long before the data is large; measured at sf0.1).
+    * partners independently. The components come from
+    * [[connectedComponentsStar]]; `dedup_clusters_star` names the same
+    * query.
     *
     * Deterministic: the fixpoint (component-min labels) is independent
     * of execution order, so the DuckDB oracle — a recursive CTE
     * computing min reachable doc_id — replays it exactly. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // the pair pipeline materializes ONCE through SQL (AQE on); the
-    // loop below runs on a plain RDD — the same move as
-    // [[connectedComponentsStar]] (r18): per-iteration Catalyst
-    // planning + AQE stage jobs cost more than the iteration's work on
-    // bounded iterates, and the iteration's shape is fixed anyway
     val pairs = minHashLsh(spark, sfDir).select($"doc_a", $"doc_b")
-      .localCheckpoint(true)
-    val pairsRdd = pairs.queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val nPairs = pairsRdd.count()
-    val part = new org.apache.spark.HashPartitioner(loopParts(2L * nPairs))
-    // both directions, hash-partitioned by src once for the whole loop
-    val edges = pairsRdd.flatMap(t => Iterator(t, t.swap))
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // initial labels: every endpoint labels itself. Partition-local
-    // distinct IS global distinct here — all copies of a src live in
-    // one partition — so the iterate starts co-partitioned with edges.
-    var labels = edges.mapPartitions({ it =>
-      val m = new scala.collection.mutable.LongMap[Long]
-      it.foreach(t => m(t._1) = t._1)
-      m.iterator
-    }, preservesPartitioning = true)
-    labels.localCheckpoint()
-    // labels are monotone non-increasing, so an unchanged wraparound
-    // Long sum IS the fixpoint test (same arithmetic as the old
-    // LongType SQL sum); the fold is also the action that materializes
-    // each iterate's localCheckpoint — one job per iteration, fold
-    // included
-    def labelSum(r: org.apache.spark.rdd.RDD[(Long, Long)]): Long =
-      r.mapPartitions { it =>
-        var s = 0L
-        while (it.hasNext) s += it.next()._2
-        Iterator.single(s)
-      }.collect().sum
-    var prevSum = Long.MinValue
-    var curSum = labelSum(labels)
-    var iter = 0
-    try while (curSum != prevSum && iter < 64) {
-      // nbr-min: edges stream against the co-partitioned label map
-      // (zipPartitions — no join materialization, the hub's rows are
-      // streamed), partial-min map-side via the LongMap, one shuffle
-      val contrib = edges.zipPartitions(labels,
-        preservesPartitioning = true) { (eit, lit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        lit.foreach(t => m(t._1) = t._2)
-        val acc = new scala.collection.mutable.LongMap[Long]
-        eit.foreach { t =>
-          val l = m(t._1)
-          if (l < acc.getOrElse(t._2, Long.MaxValue)) acc(t._2) = l
-        }
-        acc.iterator
-      }.reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      // L(v) ← min(L(v), nbr-min) — narrow, stays co-partitioned
-      val stepped = labels.zipPartitions(contrib,
-        preservesPartitioning = true) { (lit, nit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        nit.foreach(t => m(t._1) = t._2)
-        lit.map(t => (t._1, math.min(t._2, m.getOrElse(t._1, t._2))))
-      }
-      // pointer jump: L(L(v)) — labels are node ids, so the grandparent
-      // lookup re-keys by label (one shuffle) and reads the SAME
-      // stepped iterate as the lookup side; every label value is a
-      // node id present in stepped, matching the old self-join's
-      // always-matching left_outer
-      val probe = stepped.map(t => (t._2, t._1)).partitionBy(part)
-      val next = probe.zipPartitions(stepped,
-        preservesPartitioning = false) { (pit, sit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        sit.foreach(t => m(t._1) = t._2)
-        pit.map { case (l, d) => (d, math.min(l, m(l))) }
-      }.partitionBy(part)
-      next.localCheckpoint()
-      prevSum = curSum
-      curSum = labelSum(next)
-      // `next` is materialized by the fold; the superseded iterate's
-      // blocks are dead
-      labels.unpersist(false)
-      labels = next
-      iter += 1
-    } finally edges.unpersist(false) // also on non-convergence
-    if (curSum != prevSum)
-      throw new IllegalStateException(
-        s"dedupClusters did not converge in $iter iterations")
-    labels.toDF("doc_id", "label")
-      .select($"doc_id", $"label".as("cluster_id"),
-        ($"doc_id" === $"label").as("is_keeper"))
-      .orderBy($"doc_id".asc)
+    keeperLabels(connectedComponentsStar(pairs)._1)
+  }
+
+  /** (doc_id, label) rows → the cluster shape every resolver returns:
+    * (doc_id, cluster_id, is_keeper), the keeper being the doc that is
+    * its own label (its component's min id), ordered by doc_id. */
+  private[graft] def keeperLabels(labels: DataFrame): DataFrame =
+    labels
+      .select(col("doc_id"), col("label").as("cluster_id"),
+        (col("doc_id") === col("label")).as("is_keeper"))
+      .orderBy(col("doc_id").asc)
+
+  /** Edge rows per round-shuffle partition for the star loop — the
+    * RDD twin of AQE's advisory partition size, derived from the DATA
+    * (current edge count), never from the core count: at sf0.1 the
+    * pair graphs are a few thousand edges → 1 partition (exactly what
+    * AQE's coalescing produced), at 100 TB a 10^12-edge graph gets
+    * ~10^7 partitions. */
+  private val StarRowsPerPartition: Long = 1L << 16
+
+  /** Partition count for an RDD fixpoint-loop shuffle, derived from the
+    * DATA (row count), never the core count — see
+    * [[StarRowsPerPartition]]. */
+  private def loopParts(rows: Long): Int =
+    math.min(1L + rows / StarRowsPerPartition, Int.MaxValue.toLong).toInt
+
+  /** A frame's first two bigint columns as the RDD pairs the graph
+    * loops run on. */
+  private def longPairs(df: DataFrame): RDD[(Long, Long)] =
+    df.queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** The stage-local key → value map a loop builds from one
+    * co-partitioned side (a repeated key keeps its last value). */
+  private def longMap(it: Iterator[(Long, Long)]): LongMap[Long] = {
+    val m = new LongMap[Long]
+    it.foreach(t => m(t._1) = t._2)
+    m
   }
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the HUB-SKEW-HARDENED cluster resolver. Same fixpoint as
-    * `dedupClusters` (every node labeled with its component's min id,
-    * same recursive-CTE oracle), different per-iteration shape:
+    * the one connected-components loop: every cluster resolver labels
+    * each node with its component's min id through it, and each answers
+    * to the same recursive-CTE oracle. Per-iteration shape:
     *
     *  - large-star: every node attaches its LARGER neighbors to the
     *    minimum of its neighborhood; small-star: attaches its smaller
@@ -638,9 +579,7 @@ object Dedup {
     *    partial-agg-then-separate-probe-shuffle shape, and computes the
     *    union'd stream once instead of twice). A hub key's rows meet on
     *    one reducer for the join in either shape; the real skew defence
-    *    is large-star's degree cutting, below. The pointer-jump loop's
-    *    label self-join offers no such relief: a hub label's rows must
-    *    meet on one reducer with no degree-cutting in sight.
+    *    is large-star's degree cutting, below.
     *  - large-star provably cuts hub degree (larger neighbors re-attach
     *    to the min, turning a degree-d hub into ~d/2 stars), so the
     *    edge multiset never grows and per-round shuffle bytes are
@@ -665,27 +604,9 @@ object Dedup {
     * only removes rows with positive endpoint sums), so a changed set
     * implies a changed signature and the cheap check never misses
     * progress. Only when the signature is unchanged does the exact
-    * `exceptAll` emptiness test run (≈ once per invocation) to CONFIRM
+    * `subtract` emptiness test run (≈ once per invocation) to CONFIRM
     * the fixpoint rather than trust the monotonicity argument.
-    * Iterates are localCheckpoint'ed like the pointer-jump loop
-    * (constant-size plans). */
-  /** Edge rows per round-shuffle partition for the star loop — the
-    * RDD twin of AQE's advisory partition size, derived from the DATA
-    * (current edge count), never from the core count: at sf0.1 the
-    * pair graphs are a few thousand edges → 1 partition (exactly what
-    * AQE's coalescing produced), at 100 TB a 10^12-edge graph gets
-    * ~10^7 partitions. `SPARK_GRAFT_STARCC_ROWS_PER_PART` overrides
-    * for cluster tuning. */
-  private val StarRowsPerPartition: Long =
-    sys.env.get("SPARK_GRAFT_STARCC_ROWS_PER_PART").map(_.toLong)
-      .getOrElse(1L << 16)
-
-  /** Partition count for an RDD fixpoint-loop shuffle, derived from the
-    * DATA (row count), never the core count — see
-    * [[StarRowsPerPartition]]. */
-  private def loopParts(rows: Long): Int =
-    math.min(1L + rows / StarRowsPerPartition, Int.MaxValue.toLong).toInt
-
+    * Iterates are localCheckpoint'ed (constant-size plans). */
   private[graft] def connectedComponentsStar(pairs: DataFrame,
       onRound: (Int, Long) => Unit = (_, _) => ())
       : (DataFrame, Seq[Long]) = {
@@ -721,12 +642,11 @@ object Dedup {
     // hub-skew stance: a hub's rows meet in one partition but are
     // STREAMED, only the per-node min map is held). Rows are
     // specialized (Long, Long) tuples — no boxing on the hot path.
-    var edges: org.apache.spark.rdd.RDD[(Long, Long)] =
-      canon.queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    def minMap(nbrs: org.apache.spark.rdd.RDD[(Long, Long)],
-        withSelf: Boolean): org.apache.spark.rdd.RDD[(Long, Long)] =
+    var edges = longPairs(canon)
+    def minMap(nbrs: RDD[(Long, Long)], withSelf: Boolean)
+        : RDD[(Long, Long)] =
       nbrs.mapPartitions({ it =>
-        val m = new scala.collection.mutable.LongMap[Long]
+        val m = new LongMap[Long]
         while (it.hasNext) {
           val t = it.next()
           if (t._2 < m.getOrElse(t._1, Long.MaxValue)) m(t._1) = t._2
@@ -749,13 +669,11 @@ object Dedup {
     // hub's rows meet in one partition but are never materialized —
     // only the per-node min map is held — and large-star's degree
     // cutting remains the real defence.
-    def largeStar(e: org.apache.spark.rdd.RDD[(Long, Long)], p: Int)
-        : org.apache.spark.rdd.RDD[(Long, Long)] = {
+    def largeStar(e: RDD[(Long, Long)], p: Int): RDD[(Long, Long)] = {
       val nbrs = e.flatMap(t => Iterator((t._1, t._2), (t._2, t._1)))
         .partitionBy(new org.apache.spark.HashPartitioner(p))
       nbrs.zipPartitions(minMap(nbrs, withSelf = true)) { (it, mit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        mit.foreach(t => m(t._1) = t._2)
+        val m = longMap(mit)
         it.flatMap { t =>
           val u = t._1; val v = t._2
           if (v > u) {
@@ -771,14 +689,12 @@ object Dedup {
     // output is canonical (a < b), so the smaller-neighbor stream is
     // exactly the (b, a) direction — no filter pass needed. Trailing
     // distinct canonicalizes the round into a set.
-    def smallStar(e: org.apache.spark.rdd.RDD[(Long, Long)], p: Int)
-        : org.apache.spark.rdd.RDD[(Long, Long)] = {
+    def smallStar(e: RDD[(Long, Long)], p: Int): RDD[(Long, Long)] = {
       val smaller = e.map(t => (t._2, t._1))
         .partitionBy(new org.apache.spark.HashPartitioner(p))
       smaller.zipPartitions(minMap(smaller, withSelf = false)) {
         (it, mit) =>
-          val m = new scala.collection.mutable.LongMap[Long]
-          mit.foreach(t => m(t._1) = t._2)
+          val m = longMap(mit)
           it.flatMap { t =>
             val u = t._1; val v = t._2; val mm = m(u)
             if (v != mm) Iterator.single((mm, v)) else Iterator.empty
@@ -792,8 +708,7 @@ object Dedup {
     // decimal(38,0) SQL sum). Running the fold is also what
     // MATERIALIZES the round's localCheckpoint — one job per round,
     // fold included.
-    def signature(e: org.apache.spark.rdd.RDD[(Long, Long)])
-        : (Long, java.math.BigDecimal) = {
+    def signature(e: RDD[(Long, Long)]): (Long, java.math.BigDecimal) = {
       val parts = e.mapPartitions { it =>
         var c = 0L
         var acc = 0L
@@ -879,26 +794,11 @@ object Dedup {
     (labels, counts.reverse)
   }
 
-  /** `dedupClusters` twin resolved by the large-star/small-star rounds —
-    * identical output and oracle, hub-skew-safe iterations (see
-    * `connectedComponentsStar`). */
-  def dedupClustersStar(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = minHashLsh(spark, sfDir).select($"doc_a", $"doc_b")
-    val (labels, _) = connectedComponentsStar(pairs)
-    labels
-      .select($"doc_id", $"label".as("cluster_id"),
-        ($"doc_id" === $"label").as("is_keeper"))
-      .orderBy($"doc_id".asc)
-  }
-
   /** The end-to-end dedup pipeline — the single query a curation user
     * actually runs: near-dup pair generation (MinHash+LSH) → cluster
-    * resolution (the hub-skew-safe large-star/small-star resolver, the
-    * PRIMARY resolver since r6 — 2.7× faster than pointer jumping in the
-    * committed bench and provably degree-cutting; the pointer-jump twin
-    * stays declared for comparison) → keeper filter → surviving-corpus
-    * stats per language.
+    * resolution ([[connectedComponentsStar]], hub-skew-safe and
+    * provably degree-cutting) → keeper filter → surviving-corpus stats
+    * per language.
     *
     * Shape at scale: the label table is O(pair-graph nodes) = the
     * duplicated minority of the corpus, so the docs⋈labels join streams
@@ -1280,8 +1180,8 @@ object Dedup {
   /** Triangle census of the near-dup graph — the cohesion statistic that
     * tells a dedup pipeline whether its candidate pairs form tight
     * boilerplate CLIQUES (high transitivity → cluster-level dedup is
-    * safe) or fragile CHAINS (low transitivity → pointer-jump CC is
-    * gluing unrelated docs through hubs). Counted with the
+    * safe) or fragile CHAINS (low transitivity → connected components
+    * glue unrelated docs through hubs). Counted with the
     * degree-ORIENTED wedge algorithm (Suri & Vassilvitskii, "Counting
     * Triangles and the Curse of the Last Reducer", WWW 2011): each edge
     * points from its lower-(degree, id) endpoint to the higher, wedges
@@ -1348,9 +1248,10 @@ object Dedup {
     * Scale: the edge list joins ranks on u (equi-join, AQE-splittable)
     * and the contribution sum collapses MAP-SIDE per v before the
     * exchange — a degree-D hub costs one row per map task, not D rows
-    * on one reducer. Each iterate is localCheckpoint'ed (constant-size
-    * plans, the [[dedupClusters]] lesson); at 100 TB you'd bucket edges
-    * by u so the per-iteration join never re-shuffles the graph. */
+    * on one reducer. The edge list is localCheckpoint'ed once, and the
+    * iterations run on co-partitioned RDDs (below), so no per-iteration
+    * plan is built; at 100 TB you'd bucket edges by u so the
+    * per-iteration join never re-shuffles the graph. */
   def pageRank(spark: SparkSession, sfDir: String, iters: Int = 3)
       : DataFrame = {
     import spark.implicits._
@@ -1373,18 +1274,15 @@ object Dedup {
     // shuffles are stage-reused, nothing is recomputed exponentially.
     val nEdges = edges.count()
     val part = new org.apache.spark.HashPartitioner(loopParts(nEdges))
-    val edgesP = edges.queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part)
+    val edgesP = longPairs(edges).partitionBy(part)
     val degM = edgesP.mapPartitions({ it =>
-      val m = new scala.collection.mutable.LongMap[Long]
+      val m = new LongMap[Long]
       it.foreach(t => m(t._1) = m.getOrElse(t._1, 0L) + 1L)
       m.iterator
     }, preservesPartitioning = true)
     val edgesDeg = edgesP.zipPartitions(degM,
       preservesPartitioning = true) { (eit, dit) =>
-      val m = new scala.collection.mutable.LongMap[Long]
-      dit.foreach(t => m(t._1) = t._2)
+      val m = longMap(dit)
       eit.map(t => (t._1, (t._2, m(t._1))))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = Tables.read(spark, sfDir, "documents").select($"doc_id")
@@ -1394,9 +1292,8 @@ object Dedup {
       val cur = ranks
       val contrib = edgesDeg.zipPartitions(cur,
         preservesPartitioning = true) { (eit, rit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        rit.foreach(t => m(t._1) = t._2)
-        val acc = new scala.collection.mutable.LongMap[Long]
+        val m = longMap(rit)
+        val acc = new LongMap[Long]
         eit.foreach { case (u, (v, d)) =>
           acc(v) = acc.getOrElse(v, 0L) + m(u) / d
         }
@@ -1404,8 +1301,7 @@ object Dedup {
       }.reduceByKey(part, _ + _)
       ranks = cur.zipPartitions(contrib,
         preservesPartitioning = true) { (rit, cit) =>
-        val m = new scala.collection.mutable.LongMap[Long]
-        cit.foreach(t => m(t._1) = t._2)
+        val m = longMap(cit)
         rit.map(t =>
           (t._1, 150000L + (m.getOrElse(t._1, 0L) * 85L) / 100L))
       }

@@ -741,8 +741,8 @@ object Events {
     * (`spark.catalog.clearCache` never sees them; a fresh session
     * inherits nothing), retention is explicit and BOUNDED — at most
     * [[EvProjMax]] parameterizations, oldest-evicted with its storage
-    * blocks released through the LogicalRDD handle (the Dedup
-    * dropCheckpoint idiom) — and an entry from a stopped or foreign
+    * blocks released through the LogicalRDD handle
+    * ([[Dedup.dropCheckpoint]]) — and an entry from a stopped or foreign
     * SparkContext is rebuilt. What the r13 persist bought is preserved:
     * ONE corpus scan per (sfDir, nShards) per JVM, shared by the
     * 3-query lateness family, repeated bench passes, and the streaming
@@ -753,14 +753,9 @@ object Events {
 
   private[graft] def releaseEventsProjections(): Unit =
     evProjMemo.synchronized {
-      evProjMemo.values.forEach { case (df, _) => dropCheckpoint(df) }
+      evProjMemo.values.forEach { case (df, _) => Dedup.dropCheckpoint(df) }
       evProjMemo.clear()
     }
-
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false): Unit)
 
   private[graft] def eventsProjection(spark: SparkSession, sfDir: String,
       nShards: Int): (DataFrame, Long) = evProjMemo.synchronized {
@@ -768,10 +763,8 @@ object Events {
     val key = (sfDir, nShards)
     val hit = Option(evProjMemo.get(key))
       .filter { case (df, _) =>
-        df.queryExecution.analyzed.collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.exists(r => (r.context eq spark.sparkContext) &&
-          !r.context.isStopped)
+        Dedup.checkpointRdd(df).exists(r =>
+          (r.context eq spark.sparkContext) && !r.context.isStopped)
       }
     hit.getOrElse {
       val ev = Tables.read(spark, sfDir, "events")
@@ -785,7 +778,7 @@ object Events {
       while (evProjMemo.size() > EvProjMax) {
         val oldest = evProjMemo.keySet().iterator().next()
         Option(evProjMemo.remove(oldest))
-          .foreach { case (df, _) => dropCheckpoint(df) }
+          .foreach { case (df, _) => Dedup.dropCheckpoint(df) }
       }
       built
     }

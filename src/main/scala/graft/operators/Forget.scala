@@ -188,10 +188,8 @@ object Forget {
         "left_anti")
       .select($"doc_a", $"doc_b")
     val (relabeled, _) = Dedup.connectedComponentsStar(alive)
-    untouched.unionByName(relabeled.select($"doc_id", $"label"))
-      .select($"doc_id", $"label".as("cluster_id"),
-        ($"doc_id" === $"label").as("is_keeper"))
-      .orderBy($"doc_id".asc)
+    Dedup.keeperLabels(
+      untouched.unionByName(relabeled.select($"doc_id", $"label")))
   }
 
   /** Declared incremental-forget query against the PHYSICAL pair store

@@ -635,7 +635,7 @@ object Similarity {
       (id, BigDecimal(math.sqrt(ss))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.toDF("cell_id", "centroid_norm")
-    broadcast(norms).join(counts, Seq("cell_id"), "left")
+    norms.join(counts, Seq("cell_id"), "left")
       .select($"cell_id", coalesce($"n_vecs", lit(0L)).as("n_vecs"),
         $"centroid_norm")
       .orderBy($"cell_id".asc)

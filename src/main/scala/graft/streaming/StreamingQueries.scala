@@ -84,8 +84,7 @@ object StreamingQueries {
     java.nio.file.Files.createTempDirectory(streamTmpBase, prefix)
 
   /** See [[startToSink]]'s scaladoc. */
-  private val streamStateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2")
+  private val streamStateParts: String = "2"
 
   /** Run one streaming query to completion over the file-stream source:
     * each element of `batches` is delivered as (at least) one micro-batch
@@ -105,10 +104,9 @@ object StreamingQueries {
     * eviction batches — schedules one task and commits one delta file
     * per store. r17 pinned 8; the r18 profile of stream_lateness (64
     * micro-batches, ~190 ms/batch) showed the per-batch floor is still
-    * those mostly-empty store commits, so the default drops to 2 —
+    * those mostly-empty store commits, so the count drops to 2 —
     * deliveries here are KB-sized, and results are partition-count
-    * invariant (oracle-gated). `SPARK_GRAFT_STREAM_PARTS` overrides for
-    * a cluster, where the same knob is sized to state volume/cores. */
+    * invariant (oracle-gated). */
   private def startToSink(spark: SparkSession, key: String,
       mode: OutputMode, df: DataFrame,
       ckRoot: java.nio.file.Path)

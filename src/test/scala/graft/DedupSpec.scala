@@ -327,7 +327,7 @@ class DedupSpec extends SparkSpec {
 
   test("star CC: hub-skewed graph resolves correctly, shuffle rows bounded") {
     import spark.implicits._
-    // the dup-graph shape pointer jumping handles worst: one document
+    // the dup-graph shape label propagation handles worst: one document
     // near-dup to a thousand others (hub), plus a diameter-64 chain and
     // a bridged double-star — three components with known minima
     val hub = (1001L to 2000L).map(v => (1000L, v))
@@ -352,10 +352,33 @@ class DedupSpec extends SparkSpec {
     assert(counts.length <= 12, s"too many rounds for log-n: $counts")
   }
 
-  test("star CC matches pointer-jumping labels on the fixture corpus") {
-    assertSameRows(
-      operators.Dedup.dedupClustersStar(spark, sf),
-      operators.Dedup.dedupClusters(spark, sf))
+  /** Reference components from a plain union-find that shares no code
+    * with the star loop: every endpoint → its component's min id. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    nodes.map(v => v -> find(v)).toMap
+  }
+
+  test("dedupClusters matches union-find over the fixture corpus's LSH pairs") {
+    val pairs = Dedup.minHashLsh(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.nonEmpty, "fixture pair graph must be non-empty")
+    val expect = unionFind(pairs).toSeq.sorted
+      .map { case (v, root) => (v, root, v == root) }
+    val got = Dedup.dedupClusters(spark, sf).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    assert(got == expect,
+      s"clusters diverge from union-find: only-got=${got.diff(expect)}" +
+        s" only-expected=${expect.diff(got)}")
   }
 
   test("CC loops release superseded checkpoint iterates") {
@@ -364,7 +387,7 @@ class DedupSpec extends SparkSpec {
     // the retained-RDD delta would grow with iteration count, not stay
     // at the handful of live iterates
     val before = spark.sparkContext.getPersistentRDDs.size
-    operators.Dedup.dedupClustersStar(spark, sf).count()
+    operators.Dedup.dedupClusters(spark, sf).count()
     operators.Dedup.dedupClusters(spark, sf).count()
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after - before <= 8,
@@ -376,19 +399,6 @@ class DedupSpec extends SparkSpec {
     // deterministic LCG sweep over random graph shapes — the structures
     // the hub/chain fixture can't cover (multi-hub, dense blobs, many
     // small components); reference labels from a plain union-find
-    def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      nodes.map(v => v -> find(v)).toMap
-    }
     var lcg = 20260813L
     def next(bound: Int): Int = {
       lcg = (lcg * 6364136223846793005L + 1442695040888963407L)
@@ -400,7 +410,7 @@ class DedupSpec extends SparkSpec {
       val edges = Seq.fill(m)((next(n).toLong, next(n).toLong))
         .filter { case (a, b) => a != b }
       if (edges.nonEmpty) {
-        val expect = unionFind(n, edges)
+        val expect = unionFind(edges)
         val (labels, _) = operators.Dedup
           .connectedComponentsStar(edges.toDF("doc_a", "doc_b"))
         val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -563,7 +573,7 @@ class DedupSpec extends SparkSpec {
 
   test("incremental cluster maintenance ≡ full recompute (sf fixture" +
       " differential)") {
-    val full = Dedup.dedupClustersStar(spark, sf).collect()
+    val full = Dedup.dedupClusters(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val inc = Dedup.dedupIncrementalCc(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet

@@ -39,7 +39,6 @@ class RobustnessSpec extends SparkSpec {
     assert(Dedup.minHashLsh(spark, emptyDir).count() == 0)
     assert(Dedup.simHash(spark, emptyDir).count() == 0)
     assert(Dedup.dedupClusters(spark, emptyDir).count() == 0)
-    assert(Dedup.dedupClustersStar(spark, emptyDir).count() == 0)
     // the pipeline rollup groups by lang — zero docs, zero groups
     assert(Dedup.dedupPipeline(spark, emptyDir).count() == 0)
     assert(Multimodal.phashDedup(spark, emptyDir).count() == 0)

@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source-tree guards that keep the single seams single: one session
-  * builder (GraftSession), and function names and planner strategies
-  * bound only through GraftExtensions. */
+  * builder (GraftSession), function names and planner strategies bound
+  * only through GraftExtensions, one connected-components loop, and a
+  * fixed set of environment keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -45,5 +46,36 @@ class StructureSpec extends AnyFunSuite {
       " planner strategy") {
     val bad = offenders("experimental.extraStrategies")
     assert(bad.isEmpty, s"per-call strategy registration in: $bad")
+  }
+
+  test("one connected-components loop: one convergence failure message") {
+    val hits = sources.flatMap { case (p, text) =>
+      "did not converge".r.findAllMatchIn(text).map(_ => p.toString)
+    }
+    assert(hits.size == 1,
+      s"expected connectedComponentsStar's alone, found in: $hits")
+  }
+
+  /** Deployment paths and core count, then the Bench/StarCcAudit
+    * harness keys. */
+  private val envKeys = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_STREAM_TMP", "SPARK_GRAFT_PASSES", "SPARK_GRAFT_ONLY",
+    "SPARK_GRAFT_WARMUP", "SPARK_GRAFT_SOLO_PASSES",
+    "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_STARCC_OUT")
+
+  test("environment reads use only the allowed keys") {
+    val anyRead = """sys\.env|System\.getenv""".r
+    val keyed =
+      """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"(\w+)"""".r
+    val unkeyed = sources.collect {
+      case (p, text) if anyRead.findAllMatchIn(text).size !=
+          keyed.findAllMatchIn(text).size => p.toString
+    }
+    assert(unkeyed.isEmpty, s"environment read without a literal key: $unkeyed")
+    val keys = sources.flatMap { case (_, text) =>
+      keyed.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+    assert(keys == envKeys,
+      s"unexpected keys ${keys -- envKeys}, missing ${envKeys -- keys}")
   }
 }
