@@ -4,8 +4,9 @@ object Bench {
 
   /** Per-task counters summed (peak: maxed) over whatever ran between two
     * listener-bus drains — the per-query physical cost the 100 TB design
-    * claims are graded on. */
-  private final class MetricsListener
+    * claims are graded on. StarCcAudit reads its `shuffleWrite` per
+    * round. */
+  private[graft] final class MetricsListener
       extends org.apache.spark.scheduler.SparkListener {
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
     val spillMem = new java.util.concurrent.atomic.AtomicLong

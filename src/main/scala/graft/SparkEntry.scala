@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.streaming.StreamingQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in `queries` has a matching DuckDB-dialect oracle in
-  * `oracleSql` unless the operator is not SQL-expressible (approximate /
-  * hash-randomized ops), in which case the driver records a rows-only
-  * check. Column names + ordering are deterministic and identical on both
-  * sides; aggregated doubles are rounded on both sides (driver hashes raw
-  * values).
+  * `registry` declares every query once: its name, the function that
+  * builds its DataFrame from a session and a data directory, and its
+  * DuckDB-dialect oracle. `queries` and `oracleSql` are views of it, so
+  * every query has an oracle by construction. Column names + ordering are
+  * deterministic and identical on both sides; aggregated doubles are
+  * rounded on both sides (driver hashes raw values).
   */
 object SparkEntry {
 
@@ -18,294 +19,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RefQueries.q1TopMonths(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Q1 shape: union → substring year/month → group-count → window top-3
-    "q1_topmonths" -> ((s, d) => RefQueries.q1TopMonths(s, d)),
-    "q1_csv" -> ((s, d) => RefQueries.q1TopMonthsCsv(s, d)),
-    "q1_csv_schema" -> ((s, d) => RefQueries.q1TopMonthsCsvSchema(s, d)),
-    "q1_orc" -> ((s, d) => RefQueries.q1TopMonthsOrc(s, d)),
-    "q1_jsonl" -> ((s, d) => RefQueries.q1TopMonthsJsonl(s, d)),
-    "q1_sql" -> ((s, d) => RefQueries.q1TopMonthsSql(s, d)),
-    "q1_typed" -> ((s, d) => RefQueries.q1TopMonthsTyped(s, d)),
-    // Q2 shape: filter → lpad/cast → CASE buckets → group-count
-    "q2_buckets" -> ((s, d) => RefQueries.q2TimeBuckets(s, d)),
-    "q2_csv" -> ((s, d) => RefQueries.q2TimeBucketsCsv(s, d)),
-    "q2_sql" -> ((s, d) => RefQueries.q2TimeBucketsSql(s, d)),
-    "q2_typed" -> ((s, d) => RefQueries.q2TimeBucketsTyped(s, d)),
-    // Q3 shape: clean → join chain (hints) → top-3-to-driver → isin →
-    // inline dim → group-count
-    "q3_joinchain" -> ((s, d) => RefQueries.q3JoinChain(s, d)),
-    "q3_csv" -> ((s, d) => RefQueries.q3JoinChain(s, d, fromCsv = true)),
-    "q3_hint_broadcast" -> ((s, d) => RefQueries.q3JoinChain(s, d, "broadcast", "broadcast")),
-    "q3_hint_merge" -> ((s, d) => RefQueries.q3JoinChain(s, d, "merge", "merge")),
-    "q3_hint_shuffle_hash" -> ((s, d) => RefQueries.q3JoinChain(s, d, "shuffle_hash", "shuffle_hash")),
-    // asymmetric hints — the reference CLI selects each join's hint
-    // independently (query3.py:175-192); the published matrix also
-    // includes per-join "optimal" combos (results/query3.txt:96-102)
-    "q3_hint_asym" -> ((s, d) => RefQueries.q3JoinChain(s, d, "merge", "broadcast")),
-    "q3_hint_opt_merge" -> ((s, d) => RefQueries.q3JoinChain(s, d, "optimal", "merge")),
-    "q3_hint_opt_shuffle_hash" -> ((s, d) => RefQueries.q3JoinChain(s, d, "optimal", "shuffle_hash")),
-    "q3_hint_replicate_nl" -> ((s, d) => RefQueries.q3JoinChainReplicateNl(s, d)),
-    "q3_hint_replicate_nl_join1" -> ((s, d) => RefQueries.q3JoinChainReplicateNlJoin1(s, d)),
-    "q3_joinchain_bot" -> ((s, d) => RefQueries.q3JoinChain(s, d, extreme = "bot")),
-    "q3_joinchain_rawkey" -> ((s, d) => RefQueries.q3JoinChainRawKey(s, d)),
-    "q3_topk_distributed" -> ((s, d) => RefQueries.q3TopKDistributed(s, d)),
-    // Q4 shape: compound filter → expression join → haversine → avg+count
-    "q4_distance" -> ((s, d) => RefQueries.q4Distance(s, d)),
-    "q4_csv" -> ((s, d) => RefQueries.q4DistanceCsv(s, d)),
-    "q4_distance_broadcast" -> ((s, d) => RefQueries.q4DistanceBroadcast(s, d)),
-    "q4_distance_sql" -> ((s, d) => RefQueries.q4DistanceSql(s, d)),
-    "q4_distance_cogroup" -> ((s, d) => RefQueries.q4DistanceCogroup(s, d)),
-    "q4_distance_bcastvar" -> ((s, d) => RefQueries.q4DistanceBroadcastVar(s, d)),
-    "q_skew_salted_agg" -> ((s, d) => RefQueries.qSkewSaltedAgg(s, d)),
-    "q_skew_join" -> ((s, d) => RefQueries.qSkewJoin(s, d)),
-    // J1: multi-key USING join
-    "q_join_multikey" -> ((s, d) => RefQueries.qJoinMultiKey(s, d)),
-    "q_bucketed_join" -> ((s, d) => RefQueries.qBucketedJoin(s, d)),
-    // A5: typed Aggregator custom aggregate
-    "q_avg_aggregator" -> ((s, d) => RefQueries.qAvgAggregator(s, d)),
-    // Native codegen'd cosine_sim Catalyst expression
-    "sim_topk_native" -> ((s, d) => Similarity.topKBruteForceNative(s, d)),
-    // Text analysis (documents)
-    "text_tokens" -> ((s, d) => TextAnalysis.tokenCounts(s, d)),
-    "text_quality" -> ((s, d) => TextAnalysis.qualityScore(s, d)),
-    "text_langid" -> ((s, d) => TextAnalysis.langId(s, d)),
-    "text_langid_ngram" -> ((s, d) => TextAnalysis.langIdNgram(s, d)),
-    "text_langid_eval" -> ((s, d) => TextAnalysis.langIdEval(s, d)),
-    "text_fingerprint" -> ((s, d) => TextAnalysis.fingerprint(s, d)),
-    "text_tfidf_topk" -> ((s, d) => TextAnalysis.tfidfTopK(s, d)),
-    "text_sample_stratified" -> ((s, d) => TextAnalysis.stratifiedSample(s, d)),
-    "text_repetition" -> ((s, d) => TextAnalysis.repetition(s, d)),
-    "text_chunk" -> ((s, d) => TextAnalysis.chunk(s, d)),
-    "text_mixture_sample" -> ((s, d) => TextAnalysis.mixtureSample(s, d)),
-    "text_split_assign" -> ((s, d) => TextAnalysis.splitAssign(s, d)),
-    "text_shuffle_pack" -> ((s, d) => TextAnalysis.shufflePack(s, d)),
-    "text_token_rarity" -> ((s, d) => TextAnalysis.tokenRarity(s, d)),
-    "text_decontaminate" -> ((s, d) => TextAnalysis.decontaminate(s, d)),
-    "text_curation_funnel" -> ((s, d) => TextAnalysis.curationFunnel(s, d)),
-    "text_pack_sequences" -> ((s, d) => TextAnalysis.packSequences(s, d)),
-    // Deduplication (documents)
-    "dedup_exact" -> ((s, d) => Dedup.exactDedup(s, d)),
-    "dedup_exact_twopass" -> ((s, d) => Dedup.exactDedupTwoPass(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minHashLsh(s, d)),
-    "dedup_incremental" -> ((s, d) => Dedup.dedupIncremental(s, d)),
-    "dedup_incremental_cc" -> ((s, d) => Dedup.dedupIncrementalCc(s, d)),
-    "dedup_clusters" -> ((s, d) => Dedup.dedupClusters(s, d)),
-    "dedup_clusters_star" -> ((s, d) => Dedup.dedupClusters(s, d)),
-    "dedup_pipeline" -> ((s, d) => Dedup.dedupPipeline(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simHash(s, d)),
-    "dedup_substring" -> ((s, d) => Dedup.substringDedup(s, d)),
-    "dedup_containment" -> ((s, d) => Dedup.containmentDedup(s, d)),
-    // Similarity search (embeddings)
-    "sim_topk_bruteforce" -> ((s, d) => Similarity.topKBruteForce(s, d)),
-    "sim_topk_lsh" -> ((s, d) => Similarity.topKLsh(s, d)),
-    "sim_topk_ivf" -> ((s, d) => Similarity.topKIvf(s, d)),
-    "sim_topk_batch" -> ((s, d) => Similarity.topKBatch(s, d)),
-    "sim_topk_ivf_kmeans" -> ((s, d) => Similarity.topKIvfKmeans(s, d)),
-    "sim_topk_pq" -> ((s, d) => Similarity.topKPq(s, d)),
-    "sim_topk_binary" -> ((s, d) => Similarity.topKBinary(s, d)),
-    "embed_kmeans_clusters" -> ((s, d) => Similarity.kmeansClusters(s, d)),
-    "embed_cosine_neardup" -> ((s, d) => Similarity.cosineNearDup(s, d)),
-    "dedup_semantic" -> ((s, d) => Similarity.dedupSemantic(s, d)),
-    "embed_quantize_int8" -> ((s, d) => Similarity.quantizeInt8(s, d)),
-    // Multimodal columns
-    "mm_props_json" -> ((s, d) => Multimodal.propsJson(s, d)),
-    "mm_binary_features" -> ((s, d) => Multimodal.binaryFeatures(s, d)),
-    "mm_frame_sample" -> ((s, d) => Multimodal.frameSample(s, d)),
-    "mm_resize" -> ((s, d) => Multimodal.resize(s, d)),
-    "mm_phash_dedup" -> ((s, d) => Multimodal.phashDedup(s, d)),
-    "mm_crossmodal_join" -> ((s, d) => Multimodal.crossModalJoin(s, d)),
-    "mm_audio_features" -> ((s, d) => Multimodal.audioFeatures(s, d)),
-    // Event windowing / sessionization (batch twins of graft.streaming)
-    "ev_window_tumbling" -> ((s, d) => Events.tumblingWindow(s, d)),
-    "ev_window_sliding" -> ((s, d) => Events.slidingWindow(s, d)),
-    "ev_sessionize" -> ((s, d) => Events.sessionize(s, d)),
-    "ev_sessionize_typed" -> ((s, d) => Events.sessionizeTyped(s, d)),
-    "ev_asof_join" -> ((s, d) => Events.asofJoin(s, d)),
-    "ev_asof_native" -> ((s, d) => Events.asofJoinNative(s, d)),
-    "ev_range_join" -> ((s, d) => Events.rangeJoinBinned(s, d)),
-    "ev_range_join_native" -> ((s, d) => Events.rangeJoinNative(s, d)),
-    "ev_funnel" -> ((s, d) => Events.funnel(s, d)),
-    "ev_pivot" -> ((s, d) => Events.pivotCounts(s, d)),
-    "ev_retention" -> ((s, d) => Events.retention(s, d)),
-    "ev_partitioned_scan" -> ((s, d) => Events.partitionedScan(s, d)),
-    "ev_cdc_compact" -> ((s, d) => Events.cdcCompact(s, d)),
-    "ev_incremental_agg" -> ((s, d) => Events.incrementalAgg(s, d)),
-    // Structured Streaming pipelines run to completion over MemoryStream
-    // (graft.streaming.StreamingQueries) — the streaming tier under the
-    // same DuckDB oracle gate as the batch operators
-    "stream_window_tumbling" -> ((s, d) =>
-      graft.streaming.StreamingQueries.windowTumbling(s, d)),
-    "stream_dedup_redelivery" -> ((s, d) =>
-      graft.streaming.StreamingQueries.dedupRedelivery(s, d)),
-    "stream_enrich_agg" -> ((s, d) =>
-      graft.streaming.StreamingQueries.enrichAgg(s, d)),
-    "stream_sessionize" -> ((s, d) =>
-      graft.streaming.StreamingQueries.sessionizeToCompletion(s, d)),
-    "stream_cdc_upsert" -> ((s, d) =>
-      graft.streaming.StreamingQueries.cdcUpsert(s, d)),
-    "stream_stream_join" -> ((s, d) =>
-      graft.streaming.StreamingQueries.streamStreamJoin(s, d)),
-    "stream_incremental_sink" -> ((s, d) =>
-      graft.streaming.StreamingQueries.incrementalSink(s, d)),
-    // Probabilistic filters (portable integer hash math — fully oracle-gated)
-    "q_bloom_prune" -> ((s, d) => Sketches.bloomPrune(s, d)),
-    "q_heavy_hitters_cms" -> ((s, d) => Sketches.heavyHittersCms(s, d)),
-    "q_rollup" -> ((s, d) => RefQueries.qRollup(s, d)),
-    "q_cube" -> ((s, d) => RefQueries.qCube(s, d)),
-    "q_grouping_sets" -> ((s, d) => RefQueries.qGroupingSets(s, d)),
-    "q_zorder_layout" -> ((s, d) => RefQueries.qZorderLayout(s, d)),
-    "mm_props_json_typed" -> ((s, d) => Multimodal.propsJsonTyped(s, d)),
-    "q_semi_anti_join" -> ((s, d) => RefQueries.qSemiAntiJoin(s, d)),
-    "q_window_suite" -> ((s, d) => RefQueries.qWindowSuite(s, d)),
-    "q_order_latency" -> ((s, d) => RefQueries.qOrderLatency(s, d)),
-    // Sketches
-    "q_approx_distinct" -> ((s, d) => RefQueries.qApproxDistinct(s, d)),
-    "q_profile" -> ((s, d) => RefQueries.qProfile(s, d)),
-    "q_profile_approx" -> ((s, d) => RefQueries.qProfileApprox(s, d)),
-    "q_quantiles" -> ((s, d) => RefQueries.qQuantiles(s, d)),
-    "q_quantiles_approx" -> ((s, d) => RefQueries.qQuantilesApprox(s, d)),
-    "text_bigrams" -> ((s, d) => TextAnalysis.bigramStats(s, d)),
-    // Round 8: sequence mining, robust anomalies, portable HLL,
-    // quantized-surprisal quality scoring
-    "ev_transition_matrix" -> ((s, d) => Events.transitionMatrix(s, d)),
-    "ev_anomaly_mad" -> ((s, d) => Events.anomalyMad(s, d)),
-    "q_hll_distinct" -> ((s, d) => Sketches.hllDistinct(s, d)),
-    "text_surprisal" -> ((s, d) => TextAnalysis.surprisal(s, d)),
-    "ev_scd2" -> ((s, d) => Events.scd2(s, d)),
-    "embed_random_project" -> ((s, d) => Similarity.randomProject(s, d)),
-    "text_cap_per_source" -> ((s, d) => TextAnalysis.capPerSource(s, d)),
-    "q_selfjoin_size_cms" -> ((s, d) => Sketches.selfJoinSizeCms(s, d)),
-    "q_preagg_rollup" -> ((s, d) => RefQueries.qPreaggRollup(s, d)),
-    // Round 8 (cont.): iterative graph ranking, sketch-merge windows,
-    // distribution profiling
-    "text_textrank" -> ((s, d) => TextAnalysis.textRank(s, d)),
-    "ev_hll_sliding" -> ((s, d) => Sketches.hllSliding(s, d)),
-    "q_histogram" -> ((s, d) => RefQueries.qHistogram(s, d)),
-    // Round 8 (cont. 2): collocations, winnowing fingerprints,
-    // last-touch attribution, streaming sketch maintenance
-    "text_pmi_bigrams" -> ((s, d) => TextAnalysis.pmiBigrams(s, d)),
-    "text_winnowing" -> ((s, d) => Dedup.winnowing(s, d)),
-    "ev_attribution" -> ((s, d) => Events.attribution(s, d)),
-    "stream_hll_distinct" -> ((s, d) =>
-      graft.streaming.StreamingQueries.hllDistinct(s, d)),
-    // Round 8 (cont. 3): corpus statistics (spectrum, Heaps curve),
-    // bigram-LM scoring
-    "text_freq_spectrum" -> ((s, d) => TextAnalysis.freqSpectrum(s, d)),
-    "text_vocab_growth" -> ((s, d) => TextAnalysis.vocabGrowth(s, d)),
-    "text_bigram_surprisal" -> ((s, d) =>
-      TextAnalysis.bigramSurprisal(s, d)),
-    // Round 8 (cont. 4): time-series resampling, state dwell, gap fill
-    "ev_ohlc" -> ((s, d) => Events.ohlcBars(s, d)),
-    "ev_dwell_time" -> ((s, d) => Events.dwellTime(s, d)),
-    "ev_gap_fill" -> ((s, d) => Events.gapFill(s, d)),
-    "q_hll_intersect" -> ((s, d) => Sketches.hllIntersect(s, d)),
-    "embed_pca_power" -> ((s, d) => Similarity.pcaPower(s, d)),
-    // Round 8 (cont. 5): relational surface — FK audit, set ops, melt
-    "q_fk_integrity" -> ((s, d) => RefQueries.qFkIntegrity(s, d)),
-    "q_set_ops" -> ((s, d) => RefQueries.qSetOps(s, d)),
-    "ev_unpivot" -> ((s, d) => Events.unpivotCounts(s, d)),
-    // Round 8 (cont. 6): k-step path mining, streaming bar maintenance
-    "ev_paths" -> ((s, d) => Events.pathMining(s, d)),
-    "stream_ohlc" -> ((s, d) =>
-      graft.streaming.StreamingQueries.ohlcBars(s, d)),
-    // Round 8 (cont. 7): RANGE-frame windows, subquery decorrelation
-    "ev_rolling_window" -> ((s, d) => Events.rollingWindow(s, d)),
-    "q_subqueries" -> ((s, d) => RefQueries.qSubqueries(s, d)),
-    // Round 8 (cont. 8): graph cohesion census, snapshot reconciliation
-    "dedup_triangles" -> ((s, d) => Dedup.triangleCount(s, d)),
-    "ev_snapshot_diff" -> ((s, d) => Events.snapshotDiff(s, d)),
-    // Round 8 (cont. 9): BPE tokenizer training + encode
-    "text_bpe_merges" -> ((s, d) => TextAnalysis.bpeMerges(s, d)),
-    "text_bpe_apply" -> ((s, d) => TextAnalysis.bpeApply(s, d)),
-    // Round 8 (cont. 10): embedding data quality, series peaks
-    "embed_outliers" -> ((s, d) => Similarity.embedOutliers(s, d)),
-    "ev_peaks" -> ((s, d) => Events.peakDetection(s, d)),
-    // Round 9: streaming CMS maintenance, cosine radius search,
-    // stupid-backoff bigram LM scoring
-    "stream_heavy_hitters" -> ((s, d) =>
-      graft.streaming.StreamingQueries.heavyHittersCms(s, d)),
-    "sim_radius" -> ((s, d) => Similarity.radiusSearch(s, d)),
-    "text_lm_backoff" -> ((s, d) => TextAnalysis.lmBackoff(s, d)),
-    "sim_topk_pq_kmeans" -> ((s, d) => Similarity.topKPqKmeans(s, d)),
-    "embed_project_pc" -> ((s, d) => Similarity.projectPc(s, d)),
-    "mm_scene_cuts" -> ((s, d) => Multimodal.sceneCuts(s, d)),
-    "sim_topk_ivfpq" -> ((s, d) => Similarity.topKIvfPq(s, d)),
-    "dedup_pagerank" -> ((s, d) => Dedup.pageRank(s, d)),
-    "mm_audio_silence" -> ((s, d) => Multimodal.audioSilence(s, d)),
-    "stream_histogram" -> ((s, d) =>
-      graft.streaming.StreamingQueries.histogramStream(s, d)),
-    "ev_lateness" -> ((s, d) => Events.latenessAudit(s, d)),
-    "text_hash_features" -> ((s, d) => TextAnalysis.hashFeatures(s, d)),
-    "mm_shot_stats" -> ((s, d) => Multimodal.shotStats(s, d)),
-    "ev_ab_assign" -> ((s, d) => Events.abAssign(s, d)),
-    "q_delta_join" -> ((s, d) => RefQueries.qDeltaJoin(s, d)),
-    "q_forget" -> ((s, d) => Forget.qForget(s, d)),
-    "dedup_forget_cc" -> ((s, d) => Forget.qDedupForgetCc(s, d)),
-    "q_hilbert_layout" -> ((s, d) => RefQueries.qHilbertLayout(s, d)),
-    "mm_image_stats" -> ((s, d) => Multimodal.imageStats(s, d)),
-    "q_dpp_join" -> ((s, d) => Events.dppJoin(s, d)),
-    "text_classifier_score" -> ((s, d) => TextAnalysis.classifierScore(s, d)),
-    "mm_phash_clusters" -> ((s, d) => Multimodal.phashClusters(s, d)),
-    "q_hilbert_write" -> ((s, d) => RefQueries.qHilbertWrite(s, d)),
-    "stream_classifier_score" -> ((s, d) =>
-      graft.streaming.StreamingQueries.classifierStream(s, d)),
-    "text_classifier_train" -> ((s, d) => TextAnalysis.classifierTrain(s, d)),
-    "text_importance_sample" -> ((s, d) =>
-      TextAnalysis.importanceSample(s, d)),
-    "ev_lateness_approx" -> ((s, d) => Events.latenessAuditApprox(s, d)),
-    "q_zorder_write" -> ((s, d) => RefQueries.qZorderWrite(s, d)),
-    "stream_lateness" -> ((s, d) =>
-      graft.streaming.StreamingQueries.latenessEnforced(s, d)),
-    "text_pii_scrub" -> ((s, d) => TextAnalysis.piiScrub(s, d)),
-    "mm_audio_dedup" -> ((s, d) => Multimodal.audioDedup(s, d)),
-    "mm_video_dedup" -> ((s, d) => Multimodal.videoDedup(s, d)),
-    "stream_classifier_train" -> ((s, d) =>
-      graft.streaming.StreamingQueries.classifierTrainStream(s, d)),
-    "stream_ivf_cells" -> ((s, d) =>
-      graft.streaming.StreamingQueries.ivfCellsStream(s, d)),
-    "stream_minhash_index" -> ((s, d) =>
-      graft.streaming.StreamingQueries.minhashIndexStream(s, d)),
-    "q_cbo_reorder" -> ((s, d) => RefQueries.qCboReorder(s, d)),
-    "ev_secondary_sort" -> ((s, d) => Events.secondarySortTyped(s, d)),
-    "q_sample_blocks" -> ((s, d) => Sketches.sampleBlocks(s, d)),
-    "q_compact_scan" -> ((s, d) => RefQueries.qCompactScan(s, d)),
-    "q_compact_scan_z" -> ((s, d) => RefQueries.qCompactScanZ(s, d)),
-    "q_delete_rewrite" -> ((s, d) => RefQueries.qDeleteRewrite(s, d)),
-    "q_runtime_filter" -> ((s, d) => RefQueries.qRuntimeFilter(s, d)),
-    "dedup_forget_index" -> ((s, d) => Dedup.dedupForgetIndex(s, d)),
-    "q_time_travel" -> ((s, d) => RefQueries.qTimeTravel(s, d)),
-    "q_merge_rewrite" -> ((s, d) => RefQueries.qMergeRewrite(s, d)),
-    "sim_topk_ivf_incremental" -> ((s, d) =>
-      Similarity.topKIvfIncremental(s, d)),
-    "q_vacuum" -> ((s, d) => RefQueries.qVacuum(s, d)),
-    "q_schema_evolution" -> ((s, d) => RefQueries.qSchemaEvolution(s, d)),
-    "q_time_travel_chain" -> ((s, d) => RefQueries.qTimeTravelChain(s, d)),
-    "q_vacuum_retention" -> ((s, d) => RefQueries.qVacuumRetention(s, d)),
-    "q_schema_widening" -> ((s, d) => RefQueries.qSchemaWidening(s, d)),
-    "stream_forget_index" -> ((s, d) =>
-      graft.streaming.StreamingQueries.forgetIndexStream(s, d)),
-    "sim_topk_serving_consistency" -> ((s, d) =>
-      Similarity.topKServingConsistency(s, d)),
-    "q_schema_rename" -> ((s, d) => RefQueries.qSchemaRename(s, d)),
-    "q_delete_mor" -> ((s, d) => RefQueries.qDeleteMor(s, d)),
-    "q_wap_audit" -> ((s, d) => RefQueries.qWapAudit(s, d)),
-    "q_delete_mor_stacked" -> ((s, d) => RefQueries.qDeleteMorStacked(s, d)),
-    "q_dv_compaction" -> ((s, d) => RefQueries.qDvCompaction(s, d)),
-    "q_wap_publish" -> ((s, d) => RefQueries.qWapPublish(s, d)),
-    "q_table_changes" -> ((s, d) => RefQueries.qTableChanges(s, d)),
-    "q_cdf_refresh" -> ((s, d) => RefQueries.qCdfRefresh(s, d)),
-    "q_commit_conflict" -> ((s, d) => RefQueries.qCommitConflict(s, d)),
-    "q_merge_mor" -> ((s, d) => RefQueries.qMergeMor(s, d)),
-    "q_stats_prune" -> ((s, d) => RefQueries.qStatsPrune(s, d)),
-    "sim_index_rebuild" -> ((s, d) => Similarity.indexRebuild(s, d)),
-    "stream_cdf_replay" -> ((s, d) =>
-      graft.streaming.StreamingQueries.cdfReplayStream(s, d)),
-    "q_schema_drop" -> ((s, d) => RefQueries.qSchemaDrop(s, d)),
-    "q_partition_evolution" -> ((s, d) =>
-      RefQueries.qPartitionEvolution(s, d)),
-  )
+  /** One declared query: `run(spark, dataDir)` builds its DataFrame and
+    * `oracle` is the DuckDB SQL whose result it must hash-match. */
+  final case class Query(name: String,
+      run: (SparkSession, String) => DataFrame, oracle: String)
 
   // ---------------------------------------------------------------------
   // DuckDB oracles (ANSI-ish, DuckDB 1.0 dialect). Table names resolve to
@@ -1977,38 +1694,56 @@ object SparkEntry {
       GROUP BY band, bsig
       ORDER BY band ASC, bsig ASC"""
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_topmonths" -> q1Oracle,
-    "q1_sql" -> q1Oracle,
-    "q1_typed" -> q1Oracle,
-    "q1_csv" -> q1Oracle,
-    "q1_csv_schema" -> q1Oracle,
-    "q1_orc" -> q1Oracle,
-    "q1_jsonl" -> q1Oracle,
-    "q2_buckets" -> q2Oracle,
-    "q2_csv" -> q2Oracle,
-    "q2_sql" -> q2Oracle,
-    "q2_typed" -> q2Oracle,
-    "q3_joinchain" -> q3Oracle,
-    "q3_csv" -> q3Oracle,
-    "q3_hint_broadcast" -> q3Oracle,
-    "q3_hint_merge" -> q3Oracle,
-    "q3_hint_shuffle_hash" -> q3Oracle,
-    "q3_hint_asym" -> q3Oracle,
-    "q3_hint_opt_merge" -> q3Oracle,
-    "q3_hint_opt_shuffle_hash" -> q3Oracle,
-    "q3_hint_replicate_nl" -> q3Oracle,
-    "q3_hint_replicate_nl_join1" -> q3Oracle,
-    "q3_joinchain_bot" -> q3OracleBot,
-    "q3_joinchain_rawkey" -> q3OracleRawKey,
-    "q3_topk_distributed" -> q3Oracle,
-    "q4_distance" -> q4Oracle,
-    "q4_csv" -> q4Oracle,
-    "q4_distance_broadcast" -> q4Oracle,
-    "q4_distance_sql" -> q4Oracle,
-    "q4_distance_cogroup" -> q4Oracle,
-    "q4_distance_bcastvar" -> q4Oracle,
-    "q_profile" -> """
+  /** Every declared query, each with its oracle. A strict val: it must
+    * stay below the oracle vals it reads, or it would capture them before
+    * they are initialised (null). */
+  val registry: Seq[Query] = Seq(
+    Query("q1_topmonths", RefQueries.q1TopMonths(_, _), q1Oracle),
+    Query("q1_sql", RefQueries.q1TopMonthsSql(_, _), q1Oracle),
+    Query("q1_typed", RefQueries.q1TopMonthsTyped(_, _), q1Oracle),
+    Query("q1_csv", RefQueries.q1TopMonthsCsv(_, _), q1Oracle),
+    Query("q1_csv_schema", RefQueries.q1TopMonthsCsvSchema(_, _), q1Oracle),
+    Query("q1_orc", RefQueries.q1TopMonthsOrc(_, _), q1Oracle),
+    Query("q1_jsonl", RefQueries.q1TopMonthsJsonl(_, _), q1Oracle),
+    Query("q2_buckets", RefQueries.q2TimeBuckets(_, _), q2Oracle),
+    Query("q2_csv", RefQueries.q2TimeBucketsCsv(_, _), q2Oracle),
+    Query("q2_sql", RefQueries.q2TimeBucketsSql(_, _), q2Oracle),
+    Query("q2_typed", RefQueries.q2TimeBucketsTyped(_, _), q2Oracle),
+    Query("q3_joinchain", RefQueries.q3JoinChain(_, _), q3Oracle),
+    Query("q3_csv", RefQueries.q3JoinChain(_, _, fromCsv = true), q3Oracle),
+    Query("q3_hint_broadcast",
+      RefQueries.q3JoinChain(_, _, "broadcast", "broadcast"), q3Oracle),
+    Query("q3_hint_merge", RefQueries.q3JoinChain(_, _, "merge", "merge"),
+      q3Oracle),
+    Query("q3_hint_shuffle_hash",
+      RefQueries.q3JoinChain(_, _, "shuffle_hash", "shuffle_hash"), q3Oracle),
+    // asymmetric hints — the reference CLI selects each join's hint
+    // independently (query3.py:175-192); the published matrix also
+    // includes per-join "optimal" combos (results/query3.txt:96-102)
+    Query("q3_hint_asym", RefQueries.q3JoinChain(_, _, "merge", "broadcast"),
+      q3Oracle),
+    Query("q3_hint_opt_merge", RefQueries.q3JoinChain(_, _, "optimal", "merge"),
+      q3Oracle),
+    Query("q3_hint_opt_shuffle_hash",
+      RefQueries.q3JoinChain(_, _, "optimal", "shuffle_hash"), q3Oracle),
+    Query("q3_hint_replicate_nl", RefQueries.q3JoinChainReplicateNl(_, _),
+      q3Oracle),
+    Query("q3_hint_replicate_nl_join1",
+      RefQueries.q3JoinChainReplicateNlJoin1(_, _), q3Oracle),
+    Query("q3_joinchain_bot", RefQueries.q3JoinChain(_, _, extreme = "bot"),
+      q3OracleBot),
+    Query("q3_joinchain_rawkey", RefQueries.q3JoinChainRawKey(_, _),
+      q3OracleRawKey),
+    Query("q3_topk_distributed", RefQueries.q3TopKDistributed(_, _), q3Oracle),
+    Query("q4_distance", RefQueries.q4Distance(_, _), q4Oracle),
+    Query("q4_csv", RefQueries.q4DistanceCsv(_, _), q4Oracle),
+    Query("q4_distance_broadcast", RefQueries.q4DistanceBroadcast(_, _),
+      q4Oracle),
+    Query("q4_distance_sql", RefQueries.q4DistanceSql(_, _), q4Oracle),
+    Query("q4_distance_cogroup", RefQueries.q4DistanceCogroup(_, _), q4Oracle),
+    Query("q4_distance_bcastvar", RefQueries.q4DistanceBroadcastVar(_, _),
+      q4Oracle),
+    Query("q_profile", RefQueries.qProfile(_, _), """
       SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
              count(*) - count(o_orderstatus) AS n_null,
              count(DISTINCT o_orderstatus) AS n_distinct FROM orders
@@ -2018,10 +1753,10 @@ object SparkEntry {
       UNION ALL
       SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
              count(DISTINCT o_custkey) FROM orders
-      ORDER BY col_name ASC""",
+      ORDER BY col_name ASC"""),
     // bound-checked sketch twin (literal TRUE gates the 5% bound, like
     // q_approx_distinct)
-    "q_profile_approx" -> """
+    Query("q_profile_approx", RefQueries.qProfileApprox(_, _), """
       SELECT * FROM (
         SELECT 'o_orderstatus' AS col_name, count(*) AS n_rows,
                count(*) - count(o_orderstatus) AS n_null,
@@ -2033,35 +1768,35 @@ object SparkEntry {
         UNION ALL
         SELECT 'o_custkey', count(*), count(*) - count(o_custkey),
                count(DISTINCT o_custkey), true FROM orders
-      ) ORDER BY col_name ASC""",
-    "text_sample_stratified" -> """
+      ) ORDER BY col_name ASC"""),
+    Query("text_sample_stratified", TextAnalysis.stratifiedSample(_, _), """
       SELECT lang, count(*) AS n_total,
              count(CASE WHEN doc_id % 10 < 1 THEN 1 END) AS n_kept,
              round(count(CASE WHEN doc_id % 10 < 1 THEN 1 END)::double /
                    greatest(count(*), 1), 4) AS rate
-      FROM documents GROUP BY lang ORDER BY lang ASC""",
-    "q_quantiles" -> """
+      FROM documents GROUP BY lang ORDER BY lang ASC"""),
+    Query("q_quantiles", RefQueries.qQuantiles(_, _), """
       SELECT l_returnflag,
              round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
              round(quantile_cont(l_extendedprice, 0.9), 4) AS p90_price,
              count(*) AS cnt
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC""",
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC"""),
     // bound-checked sketch oracles: the oracle computes the exact side and
     // asserts (via literal TRUE columns that the driver hash-compares) that
     // the Spark-side sketch stayed within its documented error bound
-    "q_quantiles_approx" -> """
+    Query("q_quantiles_approx", RefQueries.qQuantilesApprox(_, _), """
       SELECT l_returnflag,
              round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
              round(quantile_cont(l_extendedprice, 0.9), 4) AS p90_price,
              count(*) AS cnt, true AS p50_ok, true AS p90_ok
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC""",
-    "q_approx_distinct" -> """
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC"""),
+    Query("q_approx_distinct", RefQueries.qApproxDistinct(_, _), """
       SELECT l_returnflag,
              count(DISTINCT l_orderkey) AS exact_orders,
              count(DISTINCT l_partkey) AS exact_parts,
              true AS orders_ok, true AS parts_ok
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC""",
-    "text_bigrams" -> """
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC"""),
+    Query("text_bigrams", TextAnalysis.bigramStats(_, _), """
       WITH toks AS (
         SELECT doc_id, l[ord] AS tok, ord FROM (
           SELECT doc_id, l, unnest(generate_series(1, len(l))) AS ord
@@ -2074,14 +1809,14 @@ object SparkEntry {
         FROM toks
       )
       SELECT bigram, count(*) AS cnt FROM bg WHERE bigram IS NOT NULL
-      GROUP BY bigram ORDER BY cnt DESC, bigram ASC LIMIT 20""",
-    "q_skew_salted_agg" -> """
+      GROUP BY bigram ORDER BY cnt DESC, bigram ASC LIMIT 20"""),
+    Query("q_skew_salted_agg", RefQueries.qSkewSaltedAgg(_, _), """
       SELECT event_type, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value,
              round(sum(CAST(value AS DECIMAL(20,6)))::DOUBLE / count(*), 4)
                AS avg_value
-      FROM events GROUP BY event_type ORDER BY event_type ASC""",
-    "q_skew_join" -> """
+      FROM events GROUP BY event_type ORDER BY event_type ASC"""),
+    Query("q_skew_join", RefQueries.qSkewJoin(_, _), """
       SELECT c_mktsegment, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value,
              sum(length(props))::BIGINT AS props_bytes
@@ -2089,8 +1824,8 @@ object SparkEntry {
       JOIN (SELECT c_custkey, c_mktsegment FROM customer
             WHERE c_custkey <= 20) c
         ON e.k = c.c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment ASC""",
-    "ev_window_sliding" -> """
+      GROUP BY c_mktsegment ORDER BY c_mktsegment ASC"""),
+    Query("ev_window_sliding", Events.slidingWindow(_, _), """
       WITH w AS (
         SELECT unnest([time_bucket(INTERVAL '30 minutes', ts),
                        time_bucket(INTERVAL '30 minutes', ts)
@@ -2101,18 +1836,19 @@ object SparkEntry {
       SELECT cast(win_start AS varchar) AS win_start, event_type,
              count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value
-      FROM w GROUP BY 1, 2 ORDER BY 1 ASC, 2 ASC""",
-    "q_join_multikey" -> multiKeyOracle,
-    "q_bucketed_join" -> """
+      FROM w GROUP BY 1, 2 ORDER BY 1 ASC, 2 ASC"""),
+    Query("q_join_multikey", RefQueries.qJoinMultiKey(_, _), multiKeyOracle),
+    Query("q_bucketed_join", RefQueries.qBucketedJoin(_, _), """
       SELECT o_orderpriority, count(*) AS cnt,
              round(sum(l_quantity), 4) AS qty
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority ASC""",
-    "text_tokens" -> textTokensOracle,
-    "text_quality" -> textQualityOracle,
-    "text_langid" -> textLangIdOracle,
-    "text_langid_eval" -> textLangIdEvalOracle,
-    "text_langid_ngram" -> """
+      GROUP BY o_orderpriority ORDER BY o_orderpriority ASC"""),
+    Query("text_tokens", TextAnalysis.tokenCounts(_, _), textTokensOracle),
+    Query("text_quality", TextAnalysis.qualityScore(_, _), textQualityOracle),
+    Query("text_langid", TextAnalysis.langId(_, _), textLangIdOracle),
+    Query("text_langid_eval", TextAnalysis.langIdEval(_, _),
+      textLangIdEvalOracle),
+    Query("text_langid_ngram", TextAnalysis.langIdNgram(_, _), """
       WITH t AS (SELECT doc_id, lower(text) AS lt FROM documents),
       s AS (
         SELECT doc_id,
@@ -2134,11 +1870,12 @@ object SparkEntry {
                   WHEN g_de >= g_fr AND g_de >= g_es THEN 'de'
                   WHEN g_fr >= g_es THEN 'fr'
                   ELSE 'es' END AS pred_lang
-      FROM s ORDER BY doc_id ASC""",
-    "text_fingerprint" -> textFingerprintOracle,
+      FROM s ORDER BY doc_id ASC"""),
+    Query("text_fingerprint", TextAnalysis.fingerprint(_, _),
+      textFingerprintOracle),
     // decontamination: same poly-hash fold as the minhash oracle; the
     // benchmark set (docs 0..4) is replayed as a DISTINCT hash CTE
-    "text_decontaminate" -> """
+    Query("text_decontaminate", TextAnalysis.decontaminate(_, _), """
       WITH d AS (
         SELECT doc_id, string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -2164,8 +1901,8 @@ object SparkEntry {
              n_matched::BIGINT AS n_matched,
              round(n_matched::DOUBLE / n_shingles, 4) AS contamination,
              n_matched > 0 AS contaminated
-      FROM agg ORDER BY doc_id ASC""",
-    "text_curation_funnel" -> """
+      FROM agg ORDER BY doc_id ASC"""),
+    Query("text_curation_funnel", TextAnalysis.curationFunnel(_, _), """
       WITH t AS (
         SELECT doc_id,
                regexp_split_to_array(lower(trim(text)), '\s+') AS toks
@@ -2216,12 +1953,12 @@ object SparkEntry {
         UNION ALL SELECT '2_min_length', n1, n2 FROM a
         UNION ALL SELECT '3_stopword_band', n2, n3 FROM a
         UNION ALL SELECT '4_repetition_cap', n3, n4 FROM a
-      ) ORDER BY stage ASC""",
+      ) ORDER BY stage ASC"""),
     // naive single cumsum — independently validates the distributed
     // range-decomposed prefix sum the Spark side runs
     // seqLen is TextAnalysis.PackSeqLen on both sides — one source of
     // truth for operator default and oracle replay
-    "text_pack_sequences" -> s"""
+    Query("text_pack_sequences", TextAnalysis.packSequences(_, _), s"""
       WITH t AS (
         SELECT doc_id,
                len(string_split(regexp_replace(lower(trim(text)),
@@ -2238,8 +1975,8 @@ object SparkEntry {
              count(*) AS n_docs,
              sum(n_tokens)::BIGINT AS bin_tokens,
              min(doc_id) AS first_doc, max(doc_id) AS last_doc
-      FROM c GROUP BY 1 ORDER BY 1 ASC""",
-    "q_zorder_layout" -> """
+      FROM c GROUP BY 1 ORDER BY 1 ASC"""),
+    Query("q_zorder_layout", RefQueries.qZorderLayout(_, _), """
       WITH o AS (
         SELECT o_custkey AS ck,
                date_diff('day', DATE '1992-01-01',
@@ -2263,23 +2000,23 @@ object SparkEntry {
       SELECT (zval // 16)::BIGINT AS zbucket, count(*) AS cnt,
              min(ck)::BIGINT AS ck_lo, max(ck)::BIGINT AS ck_hi,
              min(day)::BIGINT AS day_lo, max(day)::BIGINT AS day_hi
-      FROM zz GROUP BY 1 ORDER BY 1 ASC""",
+      FROM zz GROUP BY 1 ORDER BY 1 ASC"""),
     // Hilbert layout replay: same 8-bit grid as zorder, then the xy2d
     // quadrant-rotation loop as a packed-state (d·2^16 + x·2^8 + y)
     // list_reduce fold over levels 7..0 — pure integer arithmetic,
     // bit-identical to the codegen'd expression
-    "q_hilbert_layout" -> s"""
+    Query("q_hilbert_layout", RefQueries.qHilbertLayout(_, _), s"""
       WITH $hilbertGridCtes
       SELECT (hidx // 24)::BIGINT AS hbucket, count(*) AS cnt,
              min(ck)::BIGINT AS ck_lo, max(ck)::BIGINT AS ck_hi,
              min(day)::BIGINT AS day_lo, max(day)::BIGINT AS day_hi
-      FROM h GROUP BY 1 ORDER BY 1 ASC""",
+      FROM h GROUP BY 1 ORDER BY 1 ASC"""),
     // the write-path twin: same grid + fold, then the zone-map protocol
     // — per-bucket (x8, y8) zone maps, rectangle-overlap bucket count,
     // and the exact rectangle aggregate (pruning is exact by zone-map
     // soundness, so the oracle needs no prune of its own); every sum
     // reduced mod P before the BIGINT cast (HUGEINT-safe)
-    "q_hilbert_write" -> s"""
+    Query("q_hilbert_write", RefQueries.qHilbertWrite(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket FROM h
       ), z AS (
@@ -2306,25 +2043,27 @@ object SparkEntry {
       )
       SELECT zc.n_buckets_total, zc.n_buckets_scanned,
              m.n_rows, m.key_checksum
-      FROM zc, m""",
+      FROM zc, m"""),
     // compaction replay (see compactScanOracle): n_files_before =
     // #buckets (one file per bucket by construction), n_files_after =
     // #derived bins — the Spark side reports ON-DISK counts, so a writer
     // that splits a bin across files fails the hash gate. Row/checksum
     // invariance + the rectangle re-run through per-BIN zone maps prove
     // compaction changed layout only.
-    "q_compact_scan" -> compactScanOracle(s"""$hilbertGridCtes, hb AS (
+    Query("q_compact_scan", RefQueries.qCompactScan(_, _),
+      compactScanOracle(s"""$hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket FROM h
-      )"""),
+      )""")),
     // the Z-order table under the SAME curve-agnostic compaction pass —
     // only the hb chain differs
-    "q_compact_scan_z" -> compactScanOracle(mortonBucketCtes),
+    Query("q_compact_scan_z", RefQueries.qCompactScanZ(_, _),
+      compactScanOracle(mortonBucketCtes)),
     // copy-on-write DELETE replay: zone-map candidates (touched), the
     // predicate-row delete, the derived post-delete file census (buckets
     // minus fully-deleted buckets — untouched partitions keep their one
     // file, touched survivors rewrite to one), survivor checksum, and
     // the zero-row rectangle re-scan
-    "q_delete_rewrite" -> s"""
+    Query("q_delete_rewrite", RefQueries.qDeleteRewrite(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket FROM h
       ), z AS (
@@ -2364,12 +2103,12 @@ object SparkEntry {
                AS n_rows_deleted,
              m.n_rows_after, m.survivor_checksum,
              0::BIGINT AS n_rect_rows_after
-      FROM fd, m""",
+      FROM fd, m"""),
     // write-audit-publish replay: the branch batch is the mix64 mod-101
     // draw over orders keys; a duplicate materializes only when the
     // defect sub-draw's ORIGINAL key is still alive in v2/v3 (the chain
     // CTEs' v2r) — flagging a dead key would wrongly block a publish
-    "q_wap_audit" -> s"""
+    Query("q_wap_audit", RefQueries.qWapAudit(_, _), s"""
       WITH $chainCtes,
       wk AS (
         SELECT o_orderkey FROM k2
@@ -2398,12 +2137,12 @@ object SparkEntry {
              n_appended, n_dup_keys, dup_key_checksum,
              (CASE WHEN n_dup_keys > 0 THEN 0 ELSE 1 END)::BIGINT
                AS publish_ok
-      FROM n""",
+      FROM n"""),
     // merge-on-read delete replay: the SAME rectangle arithmetic as the
     // COW twin — sidecar files = buckets holding >= 1 predicate row,
     // entries = predicate rows, survivors identical to q_delete_rewrite;
     // n_files_rewritten is a hard 0 (the whole point of MOR)
-    "q_delete_mor" -> s"""
+    Query("q_delete_mor", RefQueries.qDeleteMor(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket FROM h
       ), dd AS (
@@ -2432,14 +2171,14 @@ object SparkEntry {
              (SELECT count(*) FROM hb)::BIGINT AS n_rows_before,
              m.n_rows_after, m.survivor_checksum,
              0::BIGINT AS n_rect_rows_after
-      FROM m""",
+      FROM m"""),
     // WAP happy-path replay: the published read must serve exactly
     // v3's rows (the chain CTEs' v2r) plus the SAME mod-101 CDC draw
     // re-keyed by 2·koff (the defect fixed) — a publish that didn't
     // swap the pointer serves v3 alone and fails rows + checksum; a
     // batch that kept any original key would have produced duplicates
     // and a refusal
-    "q_wap_publish" -> s"""
+    Query("q_wap_publish", RefQueries.qWapPublish(_, _), s"""
       WITH $chainCtes,
       wk AS (
         SELECT o_orderkey FROM k2
@@ -2466,13 +2205,13 @@ object SparkEntry {
       )
       SELECT n_live_rows, n_appended, 0::BIGINT AS n_dup_keys,
              1::BIGINT AS publish_ok, n_published_rows, published_checksum
-      FROM n""",
+      FROM n"""),
     // stacked-DV replay: dv1 = rect1 rows, dv2 = rect2 rows still alive
     // under dv1 (the overlap lives in dv1 ONLY — double-tombstoning the
     // overlap would break n_rows_before = survivors + |dv1| + |dv2|),
     // survivors = rows outside both rectangles; zero rows of either
     // rectangle may survive the composed read
-    "q_delete_mor_stacked" -> s"""
+    Query("q_delete_mor_stacked", RefQueries.qDeleteMorStacked(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8 FROM h
       ), r AS (
@@ -2499,13 +2238,13 @@ object SparkEntry {
                   * (o_orderkey % 1000000007) % 1000000007)
                 % 1000000007), 0) FROM sv)::BIGINT AS survivor_checksum,
              0::BIGINT AS n_rect1_rows_after,
-             0::BIGINT AS n_rect2_rows_after""",
+             0::BIGINT AS n_rect2_rows_after"""),
     // DV-compaction replay: the materialized layout must converge to
     // the COW arithmetic — one file per surviving bucket (total buckets
     // minus buckets whose EVERY row died under rect1 ∪ rect2), rows and
     // checksum exactly the stacked read's survivors, zero rectangle
     // rows through the compacted (anti-join-free) read
-    "q_dv_compaction" -> s"""
+    Query("q_dv_compaction", RefQueries.qDvCompaction(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket,
                (x8 BETWEEN ${RefQueries.HilbertRect._1}
@@ -2531,13 +2270,13 @@ object SparkEntry {
                   * (o_orderkey % 1000000007) % 1000000007)
                 % 1000000007), 0) FROM sv)::BIGINT AS survivor_checksum,
              0::BIGINT AS n_rect1_rows_after,
-             0::BIGINT AS n_rect2_rows_after""",
+             0::BIGINT AS n_rect2_rows_after"""),
     // schema-evolution replay: both physical generations derive from
     // orders (gen 1 = even keys without the column, gen 2 = odd keys
     // with o_bucket = o_custkey mod 16), so the merged read must report
     // exactly these totals — losing old rows, inventing non-NULL values
     // for them, or dropping evolved rows all fail the hash
-    "q_schema_evolution" -> """
+    Query("q_schema_evolution", RefQueries.qSchemaEvolution(_, _), """
       SELECT count(*)::BIGINT AS n_rows,
              sum(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END)::BIGINT
                AS n_evolved,
@@ -2545,13 +2284,13 @@ object SparkEntry {
                       ELSE 0 END)::BIGINT AS bucket_sum,
              (sum((o_orderkey % 1000000007) * (o_orderkey % 1000000007)
                   % 1000000007) % 1000000007)::BIGINT AS key_checksum
-      FROM orders""",
+      FROM orders"""),
     // type-widening replay: all three generations derive from orders
     // (gen by key mod 3; o_qty = ck mod 100 [+100 | +5e9]), so the
     // widened cast-on-read must report exactly these totals — losing a
     // narrow-generation row, truncating a wide value, or inventing
     // width all fail the hash
-    "q_schema_widening" -> """
+    Query("q_schema_widening", RefQueries.qSchemaWidening(_, _), """
       SELECT count(*)::BIGINT AS n_rows,
              sum(CASE WHEN o_orderkey % 3 = 2 THEN 1 ELSE 0 END)::BIGINT
                AS n_wide,
@@ -2561,13 +2300,13 @@ object SparkEntry {
                  ELSE o_custkey % 100 + 5000000000 END)::BIGINT AS qty_sum,
              (sum((o_orderkey % 1000000007) * (o_orderkey % 1000000007)
                   % 1000000007) % 1000000007)::BIGINT AS key_checksum
-      FROM orders""",
+      FROM orders"""),
     // column-rename replay: gen 1 (even keys) stores the measure under
     // its ORIGINAL name with values < 100, gen 2 (odd keys, post-rename)
     // under the new name with values >= 100 — the per-generation counts
     // bind the mapping to the VALUES, so a mapping applied to the wrong
     // generation (or a generation dropped by the mapped read) fails
-    "q_schema_rename" -> """
+    Query("q_schema_rename", RefQueries.qSchemaRename(_, _), """
       SELECT count(*)::BIGINT AS n_rows,
              sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                AS n_gen1,
@@ -2577,13 +2316,13 @@ object SparkEntry {
                  THEN 100 ELSE 0 END)::BIGINT AS qty_sum,
              (sum((o_orderkey % 1000000007) * (o_orderkey % 1000000007)
                   % 1000000007) % 1000000007)::BIGINT AS key_checksum
-      FROM orders""",
+      FROM orders"""),
     // drop-column replay: the current read serves both generations
     // under the post-drop schema (counts + checksum from orders); the
     // pre-drop epoch still serves the dropped column's values
     // (note = ck mod 1000 over even keys) — losing history or leaking
     // the drop into the preserved epoch fails the hash
-    "q_schema_drop" -> """
+    Query("q_schema_drop", RefQueries.qSchemaDrop(_, _), """
       SELECT count(*)::BIGINT AS n_rows,
              sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)::BIGINT
                AS n_gen1,
@@ -2595,14 +2334,14 @@ object SparkEntry {
                AS pre_n_rows,
              sum(CASE WHEN o_orderkey % 2 = 0 THEN o_custkey % 1000
                       ELSE 0 END)::BIGINT AS pre_note_sum
-      FROM orders""",
+      FROM orders"""),
     // partition-spec-evolution replay: per-spec partition censuses and
     // zone-candidate counts derive from the grid arithmetic over the
     // even/odd key split (width 24 for the old spec, 96 for the new);
     // the rectangle count + checksum cover BOTH layouts — a reader
     // that planned a file group through the wrong spec's metadata
     // (or dropped a generation) fails the gate
-    "q_partition_evolution" -> s"""
+    Query("q_partition_evolution", RefQueries.qPartitionEvolution(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, hidx, (o_orderkey % 2) AS par FROM h
       ), z24 AS (
@@ -2640,12 +2379,12 @@ object SparkEntry {
         (SELECT count(*) FROM r)::BIGINT AS n_rect_rows,
         (SELECT coalesce((sum((o_orderkey % 1000000007)
              * (o_orderkey % 1000000007) % 1000000007)
-           % 1000000007), 0) FROM r)::BIGINT AS rect_checksum""",
+           % 1000000007), 0) FROM r)::BIGINT AS rect_checksum"""),
     // vacuum dry-run replay: all five counts derive from the delete's
     // zone-map arithmetic — total buckets (one file each), touched
     // candidates (their v0 files are the garbage), fully-dead buckets
     // (touched minus them are the fresh rewrites); shared = untouched
-    "q_vacuum" -> s"""
+    Query("q_vacuum", RefQueries.qVacuum(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8, (hidx // 24) AS hbucket FROM h
       ), z AS (
@@ -2672,14 +2411,14 @@ object SparkEntry {
              (tot.total - tt.touched)::BIGINT AS n_shared,
              tt.touched AS n_garbage,
              (tt.touched - fd.dead)::BIGINT AS n_fresh
-      FROM tot, tt, fd""",
+      FROM tot, tt, fd"""),
     // copy-on-write MERGE replay: the splitmix64 insert draw, the stripe
     // update with the RELOCATION fold re-run on the shifted coordinate,
     // the derived post-merge bucket census (one file per surviving
     // bucket), the touched set (stripe zone candidates ∪ incoming
     // buckets), and the (key, hidx) position checksum that pins every
     // relocated row to its recomputed curve position
-    "q_merge_rewrite" -> s"""
+    Query("q_merge_rewrite", RefQueries.qMergeRewrite(_, _), s"""
       WITH $mergeCtes,
       zz AS (
         SELECT (hidx // 24) AS hbucket, min(x8) AS x_lo, max(x8) AS x_hi
@@ -2715,13 +2454,13 @@ object SparkEntry {
              (SELECT count(*) FROM mv2)::BIGINT AS n_updated,
              (SELECT count(*) FROM ins)::BIGINT AS n_inserted,
              m.n_rows_after, m.key_checksum, m.pos_checksum
-      FROM m""",
+      FROM m"""),
     // per-file column-stats replay: file boundaries ARE the cents bins
     // (one file per non-empty bin — the price-clustered write's layout
     // identity), each file's min/max the bin's actual extremes, so the
     // candidate census and the matched rows both derive from the bin
     // arithmetic alone; sum is cents-exact (no float)
-    "q_stats_prune" -> s"""
+    Query("q_stats_prune", RefQueries.qStatsPrune(_, _), s"""
       WITH c AS (
         SELECT o_orderkey,
                CAST(o_totalprice * 100 AS BIGINT) AS cents
@@ -2747,13 +2486,13 @@ object SparkEntry {
       SELECT (SELECT count(*) FROM b)::BIGINT AS n_files_total,
              (SELECT n FROM cand) AS n_files_scanned,
              m.n_rows, m.key_checksum, m.cents_sum
-      FROM m""",
+      FROM m"""),
     // merge-on-read MERGE replay: the SAME mergeCtes replay as the COW
     // twin (gating both strategies against one derivation IS the
     // equivalence claim) — DV entries = the stripe's pre-images,
     // appends = movers' new versions + CDC inserts, zero files
     // rewritten, and the composed read's rows/checksums are fin's
-    "q_merge_mor" -> s"""
+    Query("q_merge_mor", RefQueries.qMergeMor(_, _), s"""
       WITH $mergeCtes,
       m AS (
         SELECT count(*)::BIGINT AS n_rows_after,
@@ -2775,12 +2514,12 @@ object SparkEntry {
               + (SELECT count(*) FROM ins))::BIGINT AS n_appended,
              (SELECT count(*) FROM hb)::BIGINT AS n_rows_before,
              m.n_rows_after, m.key_checksum, m.pos_checksum
-      FROM m""",
+      FROM m"""),
     // time-travel replay: version 0 derives from the source orders (a
     // hash match proves the COW delete left history byte-complete);
     // version 1 is the survivor set with a zero rectangle — one row per
     // snapshot, each a versioned zone-map-pruned read on the Spark side
-    "q_time_travel" -> s"""
+    Query("q_time_travel", RefQueries.qTimeTravel(_, _), s"""
       WITH $hilbertGridCtes, hb AS (
         SELECT o_orderkey, x8, y8 FROM h
       ), v0 AS (
@@ -2805,13 +2544,13 @@ object SparkEntry {
                AND y8 BETWEEN ${RefQueries.HilbertRect._3}
                           AND ${RefQueries.HilbertRect._4})
       )
-      SELECT * FROM v0 UNION ALL SELECT * FROM v1 ORDER BY version ASC""",
+      SELECT * FROM v0 UNION ALL SELECT * FROM v1 ORDER BY version ASC"""),
     // depth-4 commit-chain time travel: v0 from source orders, v1 the
     // delete survivors, v2 the post-merge set, v3 ≡ v2 (OPTIMIZE moves
     // bytes, never rows) — the Spark side reads every version through
     // its manifest + own zone maps in one pass over distinct files, so
     // a hash match proves the whole chain's history is byte-complete
-    "q_time_travel_chain" -> s"""
+    Query("q_time_travel_chain", RefQueries.qTimeTravelChain(_, _), s"""
       WITH $chainCtes,
       vv0 AS (${chainVersionAgg(0, "hb")}),
       vv1 AS (${chainVersionAgg(1, "v1r")}),
@@ -2819,7 +2558,7 @@ object SparkEntry {
       vv3 AS (${chainVersionAgg(3, "v2r")})
       SELECT * FROM vv0 UNION ALL SELECT * FROM vv1
       UNION ALL SELECT * FROM vv2 UNION ALL SELECT * FROM vv3
-      ORDER BY version ASC""",
+      ORDER BY version ASC"""),
     // change-data-feed replay: the DELETE commit's feed is the rectangle
     // rows; the MERGE commit's is the stripe movers whose curve position
     // actually moved (update_pre/update_post pairs — a no-op update is
@@ -2828,7 +2567,7 @@ object SparkEntry {
     // I/O on both engines). Checksums bind key AND (key, hidx) image,
     // so serving the wrong image (pre for an insert, post for a delete)
     // or emitting a carry-over fails the hash
-    "q_table_changes" -> s"""
+    Query("q_table_changes", RefQueries.qTableChanges(_, _), s"""
       WITH $chainCtes,
       up AS (
         SELECT p.o_orderkey, p.hidx AS pre_hidx, q.hidx AS post_hidx
@@ -2861,7 +2600,7 @@ object SparkEntry {
       FROM ch GROUP BY 1, 2
       UNION ALL
       SELECT 3::BIGINT, 'none', 0::BIGINT, 0::BIGINT, 0::BIGINT
-      ORDER BY version ASC, change_type ASC""",
+      ORDER BY version ASC, change_type ASC"""),
     // concurrent-commit replay: the oracle re-derives v3's bin-pack
     // layout (the OPTIMIZE arithmetic), each branch's zone-candidate
     // bin set, the conflict census |S1 ∩ S2| (one file per bin), the
@@ -2869,7 +2608,7 @@ object SparkEntry {
     // state v3 − rect1 − (rect3 if it landed) — conditional on the
     // SAME disjointness test the validator runs, so both engines agree
     // at any scale
-    "q_commit_conflict" -> s"""
+    Query("q_commit_conflict", RefQueries.qCommitConflict(_, _), s"""
       WITH $chainCtes,
       bc AS (
         SELECT (hidx // 24) AS hbucket, count(*)::BIGINT AS bc
@@ -2951,15 +2690,16 @@ object SparkEntry {
               END)::BIGINT AS publish3_ok,
              m.n_rows, m.key_checksum,
              0::BIGINT AS n_rect1_rows, m.n_rect2_rows, m.n_rect3_rows
-      FROM m""",
+      FROM m"""),
     // incremental-refresh replay: the oracle computes the per-band
     // summary DIRECTLY from v2's row set, while the Spark side never
     // reads v2 — it refreshes the v1 summary with the change feed's
     // signed delta terms. A hash match IS apply(changes, v1) == v2,
     // band for band. The streaming replay twin shares the SAME string:
     // stream-replay ≡ batch-refresh ≡ direct recompute, one oracle
-    "q_cdf_refresh" -> cdfSummaryOracle,
-    "stream_cdf_replay" -> cdfSummaryOracle,
+    Query("q_cdf_refresh", RefQueries.qCdfRefresh(_, _), cdfSummaryOracle),
+    Query("stream_cdf_replay", StreamingQueries.cdfReplayStream(_, _),
+      cdfSummaryOracle),
     // retention-vacuum replay: every file count derives from the curve
     // arithmetic — per-version live buckets, the delete's zone
     // candidates (their c0 files are the only garbage when v0 expires),
@@ -2967,7 +2707,7 @@ object SparkEntry {
     // kept c0 + c1 + c2 + c3 files. A wrong manifest composition
     // anywhere in the chain (e.g. vacuuming a {v0,v1}-shared file the
     // current version no longer references) fails this gate
-    "q_vacuum_retention" -> s"""
+    Query("q_vacuum_retention", RefQueries.qVacuumRetention(_, _), s"""
       WITH $chainCtes,
       z0 AS (
         SELECT hbucket, min(x8) AS x_lo, max(x8) AS x_hi,
@@ -3028,11 +2768,11 @@ object SparkEntry {
              n3 AS n_files_v3, ntd AS n_garbage,
              (n0 - ntd)::BIGINT AS n_shared_kept,
              ((n0 - ntd) + c1n + c2n + n3)::BIGINT AS n_live
-      FROM n""",
+      FROM n"""),
     // Morton write-path twin: same grid, width-24 buckets, rectangle,
     // and zone-map protocol — only the curve index differs (the
     // q_zorder_layout bit-interleave instead of the Hilbert fold)
-    "q_zorder_write" -> s"""
+    Query("q_zorder_write", RefQueries.qZorderWrite(_, _), s"""
       WITH $mortonBucketCtes, z AS (
         SELECT hbucket, min(x8) AS x_lo, max(x8) AS x_hi,
                min(y8) AS y_lo, max(y8) AS y_hi
@@ -3057,35 +2797,39 @@ object SparkEntry {
       )
       SELECT zc.n_buckets_total, zc.n_buckets_scanned,
              m.n_rows, m.key_checksum
-      FROM zc, m""",
-    "dedup_exact" -> dedupExactOracle,
-    "dedup_exact_twopass" -> dedupExactOracle,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardOracle,
-    "dedup_minhash_lsh" -> dedupMinhashOracle,
+      FROM zc, m"""),
+    Query("dedup_exact", Dedup.exactDedup(_, _), dedupExactOracle),
+    Query("dedup_exact_twopass", Dedup.exactDedupTwoPass(_, _),
+      dedupExactOracle),
+    Query("dedup_ngram_jaccard", Dedup.ngramJaccard(_, _),
+      dedupNgramJaccardOracle),
+    Query("dedup_minhash_lsh", Dedup.minHashLsh(_, _), dedupMinhashOracle),
     // incremental-dedup oracle: the FULL-corpus minhash recompute
     // restricted to pairs touching the new shard (odd doc_ids) — an
     // independent derivation of the delta identity the incremental path
     // banks on (Δ×index + Δ×Δ = all-pairs ∖ index×index); the Spark side
     // never materializes an index×index candidate, the oracle never
     // skips one
-    "dedup_incremental" -> s"""
+    Query("dedup_incremental", Dedup.dedupIncremental(_, _), s"""
       WITH pr AS ($dedupMinhashOracle)
       SELECT doc_a, doc_b, est_jaccard FROM pr
       WHERE doc_a % 2 = 1 OR doc_b % 2 = 1
-      ORDER BY doc_a ASC, doc_b ASC""",
-    "dedup_clusters" -> dedupClustersOracle,
-    "dedup_clusters_star" -> dedupClustersOracle,
+      ORDER BY doc_a ASC, doc_b ASC"""),
+    Query("dedup_clusters", Dedup.dedupClusters(_, _), dedupClustersOracle),
+    Query("dedup_clusters_star", Dedup.dedupClusters(_, _),
+      dedupClustersOracle),
     // incremental cluster maintenance reuses the FULL-recompute oracle
     // VERBATIM: merging star(index labels) + delta pairs must land on
     // exactly the labels a from-scratch walk over all pairs produces —
     // the hash gate is the cross-engine incremental ≡ recompute proof
-    "dedup_incremental_cc" -> dedupClustersOracle,
-    "dedup_pagerank" -> dedupPagerankOracle,
+    Query("dedup_incremental_cc", Dedup.dedupIncrementalCc(_, _),
+      dedupClustersOracle),
+    Query("dedup_pagerank", Dedup.pageRank(_, _), dedupPagerankOracle),
     // end-to-end pipeline: the SHARED cluster oracle (one definition —
     // a second inlined copy of the recursive walk could silently drift)
     // feeds a per-lang survival rollup — kept docs are everything
     // outside the pair graph plus each component's min doc_id
-    "dedup_pipeline" -> s"""
+    Query("dedup_pipeline", Dedup.dedupPipeline(_, _), s"""
       WITH lab AS (
         SELECT doc_id, cluster_id FROM ($dedupClustersOracle)
       ),
@@ -3104,12 +2848,12 @@ object SparkEntry {
                AS n_tokens_kept,
              round(avg(CASE WHEN NOT removed THEN n_toks END), 4)
                AS avg_tokens_kept
-      FROM d GROUP BY lang ORDER BY lang ASC""",
-    "dedup_simhash" -> dedupSimhashOracle,
+      FROM d GROUP BY lang ORDER BY lang ASC"""),
+    Query("dedup_simhash", Dedup.simHash(_, _), dedupSimhashOracle),
     // substring dedup: replay the poly-hash shingle stream WITH positions,
     // count occurrences corpus-wide, then the same gaps-and-islands span
     // merge (a join is fine at oracle scale; the Spark side must not)
-    "dedup_substring" -> """
+    Query("dedup_substring", Dedup.substringDedup(_, _), """
       WITH d AS (
         SELECT doc_id, string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -3159,12 +2903,12 @@ object SparkEntry {
         round(coalesce(a.dup_tokens, 0)::DOUBLE /
           greatest(b.n_tokens, 1), 4) AS dup_fraction
       FROM base b LEFT JOIN agg a ON b.doc_id = a.doc_id
-      ORDER BY b.doc_id ASC""",
+      ORDER BY b.doc_id ASC"""),
     // containment replay: identical shingling + poly-hash, identical
     // DF cap (1000) and bottom-k (16) probe selection, exact hit
     // counts — the estimator is approximate vs TRUE containment but
     // exactly deterministic, so the oracle is bit-for-bit
-    "dedup_containment" -> """
+    Query("dedup_containment", Dedup.containmentDedup(_, _), """
       WITH d AS (
         SELECT doc_id, string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -3200,24 +2944,32 @@ object SparkEntry {
              round(h.hits::DOUBLE / n.n_probe, 4) AS containment
       FROM hits h JOIN np n USING (id_a)
       WHERE round(h.hits::DOUBLE / n.n_probe, 4) >= 0.8
-      ORDER BY doc_a ASC, doc_b ASC""",
-    "sim_topk_bruteforce" -> simTopKOracle,
-    "sim_topk_native" -> simTopKOracle,
-    "sim_topk_lsh" -> simTopKLshOracle,
-    "sim_topk_ivf" -> simTopKIvfOracle,
-    "sim_topk_batch" -> simTopKIvfOracleFor(64),
-    "sim_topk_ivf_incremental" -> simTopKIvfIncrementalOracleFor(3),
+      ORDER BY doc_a ASC, doc_b ASC"""),
+    Query("sim_topk_bruteforce", Similarity.topKBruteForce(_, _),
+      simTopKOracle),
+    Query("sim_topk_native", Similarity.topKBruteForceNative(_, _),
+      simTopKOracle),
+    Query("sim_topk_lsh", Similarity.topKLsh(_, _), simTopKLshOracle),
+    Query("sim_topk_ivf", Similarity.topKIvf(_, _), simTopKIvfOracle),
+    Query("sim_topk_batch", Similarity.topKBatch(_, _),
+      simTopKIvfOracleFor(64)),
+    Query("sim_topk_ivf_incremental", Similarity.topKIvfIncremental(_, _),
+      simTopKIvfIncrementalOracleFor(3)),
     // the serving-consistency probe is the SAME frozen-model rebuild
     // replayed at the 64-query batch size — merged-index serving under
     // maintenance must land on it exactly
-    "sim_topk_serving_consistency" -> simTopKIvfIncrementalOracleFor(64),
-    "sim_topk_ivf_kmeans" -> simTopKIvfKmeansOracle,
-    "sim_index_rebuild" -> simIndexRebuildOracle,
+    Query("sim_topk_serving_consistency",
+      Similarity.topKServingConsistency(_, _),
+      simTopKIvfIncrementalOracleFor(64)),
+    Query("sim_topk_ivf_kmeans", Similarity.topKIvfKmeans(_, _),
+      simTopKIvfKmeansOracle),
+    Query("sim_index_rebuild", Similarity.indexRebuild(_, _),
+      simIndexRebuildOracle),
     // binary-quantized ANN replay: identical sign-bit packing (two
     // 32-bit words — bit 63 is the BIGINT sign bit on both engines),
     // integer hamming prefilter, exact-cosine rerank with the same
     // tie-breaks
-    "sim_topk_binary" -> """
+    Query("sim_topk_binary", Similarity.topKBinary(_, _), """
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       ), s AS (
@@ -3248,10 +3000,10 @@ object SparkEntry {
       )
       SELECT q_id, vec_id, hamming, round(c, 6) AS cos_sim,
              rnk::INTEGER AS rnk
-      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC""",
+      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC"""),
     // PQ/ADC replay: same codebook seeding, same sequential L2 folds,
     // same subspace-ordered distance accumulation as the Scala side
-    "sim_topk_pq" -> s"""
+    Query("sim_topk_pq", Similarity.topKPq(_, _), s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       ), $seedRankCtes, cb AS (
@@ -3293,28 +3045,31 @@ object SparkEntry {
         FROM est WHERE vec_id != q_id
       )
       SELECT q_id, vec_id, round(dist, 6) AS pq_dist, rnk::INTEGER AS rnk
-      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC""",
-    "embed_kmeans_clusters" -> embedKmeansClustersOracle,
+      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC"""),
+    Query("embed_kmeans_clusters", Similarity.kmeansClusters(_, _),
+      embedKmeansClustersOracle),
     // the streaming maintenance twin shares the batch oracle verbatim:
     // Complete-mode per-cell counts finalized through the shared report
     // must reproduce the one-shot batch summary cell for cell
-    "stream_ivf_cells" -> embedKmeansClustersOracle,
+    Query("stream_ivf_cells", StreamingQueries.ivfCellsStream(_, _),
+      embedKmeansClustersOracle),
     // streaming signature-index oracle: the BATCH minhash banded chain
     // (shared CTE text with every pair oracle) grouped to (band, bsig)
     // occupancy cells — stream ≡ batch, cell for cell, member checksum
     // included (the squared mod-prime fold, merge-order-invariant)
-    "stream_minhash_index" -> s"""
+    Query("stream_minhash_index",
+      StreamingQueries.minhashIndexStream(_, _), s"""
       WITH $minhashBandedCtes
       SELECT band, bsig, count(*)::BIGINT AS n_docs,
              (sum((doc_id % 1000000007) * (doc_id % 1000000007)
                   % 1000000007) % 1000000007)::BIGINT AS member_checksum
       FROM banded
       GROUP BY band, bsig
-      ORDER BY band ASC, bsig ASC""",
+      ORDER BY band ASC, bsig ASC"""),
     // PQ-training replay: per-subspace Lloyd unrolled twice over the
     // exploded subvector stream (same fixed-point update as the IVF
     // kmeans CTEs), then the standard ADC chain on the refined codebook
-    "sim_topk_pq_kmeans" -> s"""
+    Query("sim_topk_pq_kmeans", Similarity.topKPqKmeans(_, _), s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       ), $seedRankCtes, cb0 AS (
@@ -3361,13 +3116,13 @@ object SparkEntry {
         FROM est WHERE vec_id != q_id
       )
       SELECT q_id, vec_id, round(dist, 6) AS pq_dist, rnk::INTEGER AS rnk
-      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC""",
+      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC"""),
     // IVF-PQ replay: mix64 seed centroids, cosine-argmax assignment with
     // exact-double residuals, the seeds' own residuals as the per-subspace
     // codebook, L2-argmin encoding, per-probed-cell ADC tables on the
     // query residual, subspace-ordered distance folds — term-for-term the
     // Similarity.topKIvfPq chain
-    "sim_topk_ivfpq" -> s"""
+    Query("sim_topk_ivfpq", Similarity.topKIvfPq(_, _), s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       ), $ivfParamCte, $seedRankCtes, centroids AS (
@@ -3436,12 +3191,12 @@ object SparkEntry {
         FROM est
       )
       SELECT q_id, vec_id, round(dist, 6) AS ivfpq_dist, rnk::INTEGER AS rnk
-      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC""",
+      FROM r WHERE rnk <= 5 ORDER BY q_id ASC, rnk ASC"""),
     // SemDeDup replay: the shared unrolled-Lloyd assignment, within-cell
     // round-6 cosine pairs, the recursive min-reachable walk, per-class
     // survival rollup (RECURSIVE prefixed onto the shared CTE chain —
     // DuckDB requires it once for the whole WITH list)
-    "dedup_semantic" -> s"""
+    Query("dedup_semantic", Similarity.dedupSemantic(_, _), s"""
       ${kmeansCtes(semanticKSql).replaceFirst("WITH ", "WITH RECURSIVE ")}, sp AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM assigned a
@@ -3472,8 +3227,8 @@ object SparkEntry {
       SELECT label, count(*) AS n_vecs,
              sum(CASE WHEN removed THEN 1 ELSE 0 END)::BIGINT AS n_removed,
              sum(CASE WHEN NOT removed THEN 1 ELSE 0 END)::BIGINT AS n_kept
-      FROM allv GROUP BY label ORDER BY label ASC""",
-    "text_repetition" -> """
+      FROM allv GROUP BY label ORDER BY label ASC"""),
+    Query("text_repetition", TextAnalysis.repetition(_, _), """
       WITH d AS (
         SELECT doc_id,
                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
@@ -3491,8 +3246,8 @@ object SparkEntry {
       SELECT doc_id, sum(c)::BIGINT AS n_shingles, count(*) AS n_distinct,
              max(c) AS max_repeat,
              round(1.0 - count(*)::double / sum(c), 4) AS rep_ratio
-      FROM pc GROUP BY doc_id ORDER BY doc_id ASC""",
-    "text_chunk" -> """
+      FROM pc GROUP BY doc_id ORDER BY doc_id ASC"""),
+    Query("text_chunk", TextAnalysis.chunk(_, _), """
       WITH d AS (
         SELECT doc_id,
                regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
@@ -3520,8 +3275,8 @@ object SparkEntry {
                  generate_series(1, length(array_to_string(ct, ' '))),
                  i -> ascii(substr(array_to_string(ct, ' '), i, 1))::BIGINT)),
                (a, b) -> (a * 31 + b) % 1000000007) AS chunk_hash
-      FROM s ORDER BY doc_id ASC, chunk_id ASC""",
-    "text_mixture_sample" -> """
+      FROM s ORDER BY doc_id ASC, chunk_id ASC"""),
+    Query("text_mixture_sample", TextAnalysis.mixtureSample(_, _), """
       WITH x AS (
         SELECT lang, doc_id,
                (CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 1.0
@@ -3537,12 +3292,12 @@ object SparkEntry {
              round(sum(CASE WHEN h < floor(rate * 1000000007)::BIGINT
                             THEN 1 ELSE 0 END)::DOUBLE / count(*), 4)
                AS actual_rate
-      FROM x GROUP BY lang ORDER BY lang ASC""",
+      FROM x GROUP BY lang ORDER BY lang ASC"""),
     // token rarity: replay vocabulary counts, the one-division corpus
     // mean, and the per-doc mod-prime frequency checksums (exported as
     // BIGINT residues — the prime is TextAnalysis.ChecksumP on both
     // sides, so operator and oracle cannot disagree on the modulus)
-    "text_token_rarity" -> s"""
+    Query("text_token_rarity", TextAnalysis.tokenRarity(_, _), s"""
       WITH t AS (
         SELECT doc_id, unnest(string_split(
           regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS tok
@@ -3567,13 +3322,13 @@ object SparkEntry {
              round(freq_total::DOUBLE / n_tokens, 4) AS avg_freq,
              n_below_mean,
              round(n_below_mean::DOUBLE / n_tokens, 4) AS rare_fraction
-      FROM a ORDER BY doc_id ASC""",
+      FROM a ORDER BY doc_id ASC"""),
     // split assignment: replay the salted affine bucket (saltMix is
     // derived HERE from TextAnalysis.SplitSalt — the same constant the
     // operator defaults to, so the two cannot silently diverge) and the
     // 90/5/5 thresholds; the mod-prime doc_id checksum + min/max gate
     // exact membership
-    "text_split_assign" -> s"""
+    Query("text_split_assign", TextAnalysis.splitAssign(_, _), s"""
       WITH x AS (
         SELECT doc_id, lang,
                ((doc_id % 1000000007 + 1000000007) % 1000000007
@@ -3594,14 +3349,14 @@ object SparkEntry {
                % ${TextAnalysis.ChecksumP})::BIGINT AS docid_sum,
              min(doc_id)::BIGINT AS docid_min,
              max(doc_id)::BIGINT AS docid_max
-      FROM s GROUP BY split, lang ORDER BY split ASC, lang ASC""",
+      FROM s GROUP BY split, lang ORDER BY split ASC, lang ASC"""),
     // deterministic shuffle + pack: the oracle replays the salted
     // affine order key (saltMix derived from TextAnalysis.SplitSalt,
     // same constant the operator defaults to) and computes position /
     // running tokens with the NAIVE global window — affordable at
     // oracle scale, and independently validating the operator's
     // range-decomposed prefix sum
-    "text_shuffle_pack" -> s"""
+    Query("text_shuffle_pack", TextAnalysis.shufflePack(_, _), s"""
       WITH t AS (
         SELECT doc_id,
                len(string_split(regexp_replace(lower(trim(text)),
@@ -3622,8 +3377,8 @@ object SparkEntry {
       )
       SELECT doc_id, shuffle_key, pos, n_tokens,
              (cum_before // ${TextAnalysis.PackSeqLen})::BIGINT AS bin_id
-      FROM o ORDER BY pos ASC""",
-    "ev_retention" -> """
+      FROM o ORDER BY pos ASC"""),
+    Query("ev_retention", Events.retention(_, _), """
       WITH e AS (
         SELECT user_id, cast(ts AS date) AS day FROM events
       ), c AS (
@@ -3633,37 +3388,39 @@ object SparkEntry {
              date_diff('day', cohort_day, day)::BIGINT AS day_offset,
              count(DISTINCT user_id) AS n_users
       FROM e JOIN c USING (user_id)
-      GROUP BY 1, 2 ORDER BY 1 ASC, 2 ASC""",
-    "ev_partitioned_scan" -> """
+      GROUP BY 1, 2 ORDER BY 1 ASC, 2 ASC"""),
+    Query("ev_partitioned_scan", Events.partitionedScan(_, _), """
       SELECT event_type, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value
       FROM events
       WHERE cast(ts AS date) BETWEEN DATE '2024-01-08' AND DATE '2024-01-14'
-      GROUP BY event_type ORDER BY event_type ASC""",
-    "ev_cdc_compact" -> evCdcCompactOracle,
+      GROUP BY event_type ORDER BY event_type ASC"""),
+    Query("ev_cdc_compact", Events.cdcCompact(_, _), evCdcCompactOracle),
     // DPP join: the runtime-pruned fact join reduces to the same
     // one-week rollup (nation keys 7..13 → 2024-01-08..2024-01-14) —
     // correctness is date-filter equivalence; the DYNAMIC part is
     // plan-guarded in PlanSpec, not visible in rows
-    "q_dpp_join" -> """
+    Query("q_dpp_join", Events.dppJoin(_, _), """
       SELECT event_type, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value
       FROM events
       WHERE cast(ts AS date) BETWEEN DATE '2024-01-08' AND DATE '2024-01-14'
-      GROUP BY event_type ORDER BY event_type ASC""",
+      GROUP BY event_type ORDER BY event_type ASC"""),
     // streaming declared queries: the oracle is always the equivalent
     // BATCH SQL — the stream must converge to exactly the batch answer
-    "stream_window_tumbling" -> evWindowOracle,
-    "stream_dedup_redelivery" -> """
+    Query("stream_window_tumbling", StreamingQueries.windowTumbling(_, _),
+      evWindowOracle),
+    Query("stream_dedup_redelivery", StreamingQueries.dedupRedelivery(_, _), """
       SELECT event_type, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value
-      FROM events GROUP BY event_type ORDER BY event_type ASC""",
-    "stream_enrich_agg" -> """
+      FROM events GROUP BY event_type ORDER BY event_type ASC"""),
+    Query("stream_enrich_agg", StreamingQueries.enrichAgg(_, _), """
       SELECT c_mktsegment, count(*) AS cnt,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE AS sum_value
       FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment ASC""",
-    "stream_sessionize" -> """
+      GROUP BY c_mktsegment ORDER BY c_mktsegment ASC"""),
+    Query("stream_sessionize",
+      StreamingQueries.sessionizeToCompletion(_, _), """
       WITH x AS (
         SELECT user_id, event_id, ts,
                lag(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -3680,23 +3437,24 @@ object SparkEntry {
       )
       SELECT user_id, max(session_id)::BIGINT AS n_sessions,
              count(*) AS n_events
-      FROM s GROUP BY user_id ORDER BY user_id ASC""",
-    "stream_cdc_upsert" -> evCdcCompactOracle,
-    "stream_stream_join" -> """
+      FROM s GROUP BY user_id ORDER BY user_id ASC"""),
+    Query("stream_cdc_upsert", StreamingQueries.cdcUpsert(_, _),
+      evCdcCompactOracle),
+    Query("stream_stream_join", StreamingQueries.streamStreamJoin(_, _), """
       SELECT p.user_id, count(*) AS n_pairs
       FROM (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
       JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') c
         ON p.user_id = c.user_id
        AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-      GROUP BY p.user_id ORDER BY p.user_id ASC""",
-    "stream_incremental_sink" -> """
+      GROUP BY p.user_id ORDER BY p.user_id ASC"""),
+    Query("stream_incremental_sink", StreamingQueries.incrementalSink(_, _), """
       SELECT user_id, count(*) AS n_total,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE
                AS total_value
-      FROM events GROUP BY user_id ORDER BY user_id ASC""",
+      FROM events GROUP BY user_id ORDER BY user_id ASC"""),
     // the single-pass recompute: the oracle independently proves the
     // Spark side's state+delta partial-aggregate merge is exact
-    "ev_incremental_agg" -> """
+    Query("ev_incremental_agg", Events.incrementalAgg(_, _), """
       SELECT user_id,
              sum(CASE WHEN ts < TIMESTAMP '2024-01-20 00:00:00'
                  THEN 1 ELSE 0 END)::BIGINT AS n_state,
@@ -3705,8 +3463,8 @@ object SparkEntry {
              count(*) AS n_total,
              round(sum(CAST(value AS DECIMAL(20,6))), 4)::DOUBLE
                AS total_value
-      FROM events GROUP BY user_id ORDER BY user_id ASC""",
-    "q_bloom_prune" -> s"""
+      FROM events GROUP BY user_id ORDER BY user_id ASC"""),
+    Query("q_bloom_prune", Sketches.bloomPrune(_, _), s"""
       WITH keys AS (
         SELECT o_orderkey AS k FROM orders
         WHERE o_orderpriority = '1-URGENT'
@@ -3765,28 +3523,32 @@ object SparkEntry {
       FROM lineitem l
       LEFT JOIN fhit fh ON l.l_orderkey = fh.l_orderkey
       LEFT JOIN (SELECT k FROM keys) kk ON l.l_orderkey = kk.k
-      GROUP BY l.l_returnflag ORDER BY l.l_returnflag ASC""",
-    "q_heavy_hitters_cms" -> cmsHeavyHittersOracle,
+      GROUP BY l.l_returnflag ORDER BY l.l_returnflag ASC"""),
+    Query("q_heavy_hitters_cms", Sketches.heavyHittersCms(_, _),
+      cmsHeavyHittersOracle),
     // stream ≡ batch: the streaming twin maintains the same d×w cells as
     // Complete-mode state and finalizes through the same estimator
-    "stream_heavy_hitters" -> cmsHeavyHittersOracle,
-    "sim_radius" -> simRadiusOracle,
-    "text_lm_backoff" -> textLmBackoffOracle,
-    "embed_cosine_neardup" -> embCosineNearDupOracle,
-    "q_avg_aggregator" -> """
+    Query("stream_heavy_hitters", StreamingQueries.heavyHittersCms(_, _),
+      cmsHeavyHittersOracle),
+    Query("sim_radius", Similarity.radiusSearch(_, _), simRadiusOracle),
+    Query("text_lm_backoff", TextAnalysis.lmBackoff(_, _), textLmBackoffOracle),
+    Query("embed_cosine_neardup", Similarity.cosineNearDup(_, _),
+      embCosineNearDupOracle),
+    Query("q_avg_aggregator", RefQueries.qAvgAggregator(_, _), """
       SELECT l_returnflag, round(avg(l_quantity), 4) AS avg_qty
-      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC""",
-    "mm_props_json" -> mmPropsJsonOracle,
-    "mm_props_json_typed" -> mmPropsJsonOracle,
-    "q_cube" -> """
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag ASC"""),
+    Query("mm_props_json", Multimodal.propsJson(_, _), mmPropsJsonOracle),
+    Query("mm_props_json_typed", Multimodal.propsJsonTyped(_, _),
+      mmPropsJsonOracle),
+    Query("q_cube", RefQueries.qCube(_, _), """
       SELECT l_returnflag, l_linestatus, count(*) AS cnt,
              round(sum(l_quantity), 4) AS qty,
              (grouping(l_returnflag) * 2 + grouping(l_linestatus))::BIGINT
                AS gid
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
       ORDER BY gid ASC, l_returnflag ASC NULLS FIRST,
-               l_linestatus ASC NULLS FIRST""",
-    "q_grouping_sets" -> """
+               l_linestatus ASC NULLS FIRST"""),
+    Query("q_grouping_sets", RefQueries.qGroupingSets(_, _), """
       SELECT l_returnflag, l_linestatus, count(*) AS cnt,
              round(sum(l_quantity), 4) AS qty,
              (grouping(l_returnflag) * 2 + grouping(l_linestatus))::BIGINT
@@ -3794,11 +3556,12 @@ object SparkEntry {
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
       ORDER BY gid ASC, l_returnflag ASC NULLS FIRST,
-               l_linestatus ASC NULLS FIRST""",
-    "mm_binary_features" -> mmBinaryFeaturesOracle,
+               l_linestatus ASC NULLS FIRST"""),
+    Query("mm_binary_features", Multimodal.binaryFeatures(_, _),
+      mmBinaryFeaturesOracle),
     // replays the decoded 8-bit PCM: sample i = ascii(text[i]), centered
     // at the unsigned-PCM midpoint 128; energies are exact integers
-    "mm_audio_features" -> """
+    Query("mm_audio_features", Multimodal.audioFeatures(_, _), """
       WITH d AS (
         SELECT doc_id, text, length(text)::BIGINT AS n
         FROM documents WHERE length(text) > 0
@@ -3822,11 +3585,11 @@ object SparkEntry {
                         sq[(w*80 + 1)::int : (w*80 + 80)::int])::BIGINT)),
                     (a, x) -> (a * 31 + x) % 1000000007) END
                AS win_energy_hash
-      FROM e ORDER BY doc_id ASC""",
+      FROM e ORDER BY doc_id ASC"""),
     // silence segmentation replay: per-frame integer energies from the
     // text bytes, threshold, gaps-and-islands run merge — the run_hash
     // folds run START frames in order, exactly the Scala byte loop
-    "mm_audio_silence" -> """
+    Query("mm_audio_silence", Multimodal.audioSilence(_, _), """
       WITH d AS (
         SELECT doc_id, text, length(text)::BIGINT AS n
         FROM documents WHERE length(text) >= 80
@@ -3867,11 +3630,11 @@ object SparkEntry {
       FROM base b
       LEFT JOIN cnt c USING (doc_id)
       LEFT JOIN agg a USING (doc_id)
-      ORDER BY doc_id ASC""",
+      ORDER BY doc_id ASC"""),
     // replays the decoded P6 frames: each frame is a 16-pixel text row,
     // each gray sample replicated into R=G=B — hence the (i-1)//3 over
     // 48 channel bytes (the hash covers the full decoded channel data)
-    "mm_frame_sample" -> """
+    Query("mm_frame_sample", Multimodal.frameSample(_, _), """
       WITH d AS (
         SELECT doc_id, text, (length(text) // 16) AS n_frames
         FROM documents
@@ -3886,11 +3649,11 @@ object SparkEntry {
                  i -> ascii(substr(text,
                    frame_idx::int * 16 + ((i - 1) // 3) + 1, 1)))),
                (a, x) -> (a * 31 + x) % 1000000007) AS frame_hash
-      FROM idx ORDER BY doc_id ASC, frame_idx ASC""",
+      FROM idx ORDER BY doc_id ASC, frame_idx ASC"""),
     // replays scene-cut SAD from the text bytes: frame f vs f-1 over 16
     // gray pixels ×3 replicated channels (hence the ×3); cut where SAD
     // exceeds the shared threshold; checksum over cut frame indices
-    "mm_scene_cuts" -> s"""
+    Query("mm_scene_cuts", Multimodal.sceneCuts(_, _), s"""
       WITH d AS (
         SELECT doc_id, text, (length(text) // 16) AS n_frames
         FROM documents
@@ -3915,12 +3678,12 @@ object SparkEntry {
                AS cut_checksum,
              max(sad)::BIGINT AS max_sad,
              (sum(sad) // (n_frames - 1))::BIGINT AS mean_sad
-      FROM s GROUP BY doc_id, n_frames ORDER BY doc_id ASC""",
+      FROM s GROUP BY doc_id, n_frames ORDER BY doc_id ASC"""),
     // image statistics replay: gray samples are the text bytes; variance
     // numerator is the exact n*sum(p^2) - sum(p)^2 (no division, no
     // float); the 4-bin histogram folds with a per-step mod, congruent
     // to the Scala fold
-    "mm_image_stats" -> """
+    Query("mm_image_stats", Multimodal.imageStats(_, _), """
       WITH d AS (
         SELECT doc_id, text, (length(text) // 16) AS h FROM documents
       ), px AS (
@@ -3938,11 +3701,11 @@ object SparkEntry {
                    % 1000000007) * 31
                 + sum(CASE WHEN p // 64 = 3 THEN 1 ELSE 0 END))::BIGINT
                % 1000000007 AS hist_checksum
-      FROM px GROUP BY doc_id ORDER BY doc_id ASC""",
+      FROM px GROUP BY doc_id ORDER BY doc_id ASC"""),
     // shot segmentation replay: same SAD cut stream, shot lengths via
     // lag over cut frames + the final open shot (a no-cut video is one
     // full-length shot), lengths folded in start order
-    "mm_shot_stats" -> s"""
+    Query("mm_shot_stats", Multimodal.shotStats(_, _), s"""
       WITH d AS (
         SELECT doc_id, text, (length(text) // 16) AS n_frames
         FROM documents
@@ -3985,11 +3748,11 @@ object SparkEntry {
                (a, x) -> (a * 31 + x) % 1000000007)::BIGINT
                AS len_checksum
       FROM sh JOIN base b ON sh.doc_id = b.doc_id
-      GROUP BY b.doc_id, b.n_frames ORDER BY b.doc_id ASC""",
+      GROUP BY b.doc_id, b.n_frames ORDER BY b.doc_id ASC"""),
     // replays the 2x2 box filter over the decoded 16-wide gray image:
     // pixel (y,x) of the output = integer mean of rows {2y, min(2y+1,
     // in_h-1)} (edge-replicate) x cols {2x, 2x+1}, text byte (r*16+c)
-    "mm_resize" -> """
+    Query("mm_resize", Multimodal.resize(_, _), """
       WITH d AS (
         SELECT doc_id, text, (length(text) // 16)::BIGINT AS in_h
         FROM documents
@@ -4011,16 +3774,16 @@ object SparkEntry {
                          (least(2*(i//8)+1, in_h-1)*16 + 2*(i%8) + 1)::int
                            + 1, 1))) // 4)),
                (a, x) -> (a * 31 + x) % 1000000007) AS out_hash
-      FROM s ORDER BY doc_id ASC""",
+      FROM s ORDER BY doc_id ASC"""),
     // replays the aHash grid from the text bytes: grid cell (i,j) =
     // decoded gray pixel (i*h/8, 2j) = text byte at (i*h/8)*16 + 2j;
     // bit = 64*g > grid sum (strict, integer-exact); two 32-bit words,
     // 4x16-bit band buckets, bit_count(xor) hamming <= 10
-    "mm_phash_dedup" -> mmPhashDedupOracle,
+    Query("mm_phash_dedup", Multimodal.phashDedup(_, _), mmPhashDedupOracle),
     // the SHARED phash pair replay feeds the recursive min-reachable
     // walk (the dedup_clusters oracle pattern) + per-lang survival —
     // one pair definition, so the two mm_phash_* oracles cannot drift
-    "mm_phash_clusters" -> s"""
+    Query("mm_phash_clusters", Multimodal.phashClusters(_, _), s"""
       WITH RECURSIVE pr AS ($mmPhashDedupOracle),
       edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pr
@@ -4049,7 +3812,7 @@ object SparkEntry {
                AS bytes_kept,
              sum(CASE WHEN removed THEN n_chars ELSE 0 END)::BIGINT
                AS bytes_saved
-      FROM d GROUP BY lang ORDER BY lang ASC""",
+      FROM d GROUP BY lang ORDER BY lang ASC"""),
     // audio fingerprint dedup replay: same planted-twin construction as
     // Multimodal.audioDedup (12 smallest >=64-byte docs, first sample
     // perturbed, twin id = src + max + 1), then the frame-energy
@@ -4057,7 +3820,7 @@ object SparkEntry {
     // bytes (samples = bytes, the WavCodec round-trip contract), energy
     // Σ(c-128)², bit = 64·e > Σe — banded hamming ≤ 10 candidates, the
     // recursive min-reachable CC walk, per-lang survival rollup
-    "mm_audio_dedup" -> """
+    Query("mm_audio_dedup", Multimodal.audioDedup(_, _), """
       WITH RECURSIVE mx AS (SELECT max(doc_id) AS m FROM documents),
       src AS (
         SELECT doc_id, lang, text FROM documents
@@ -4144,13 +3907,13 @@ object SparkEntry {
              -- of failing with a confusing mismatch
              sum(CASE WHEN bytes = 0 THEN 1 ELSE 0 END)::BIGINT
                AS n_undecodable
-      FROM r GROUP BY lang ORDER BY lang ASC""",
+      FROM r GROUP BY lang ORDER BY lang ASC"""),
     // video-dedup replay: planted twins, the mm_frame_sample 48-byte
     // frame hash per frame, 4 temporal segment folds as LSH band keys,
     // 16 sampled-frame-hash confirmation (>= 8 integer matches), the
     // recursive min-reachable cluster walk, per-lang survival — every
     // value derived straight from the text bytes
-    "mm_video_dedup" -> s"""
+    Query("mm_video_dedup", Multimodal.videoDedup(_, _), s"""
       WITH RECURSIVE mx AS (SELECT max(doc_id) AS m FROM documents),
       src AS (
         SELECT doc_id, lang, text FROM documents
@@ -4238,8 +4001,8 @@ object SparkEntry {
                AS frames_kept,
              sum(CASE WHEN removed THEN frames ELSE 0 END)::BIGINT
                AS frames_saved
-      FROM rr GROUP BY lang ORDER BY lang ASC""",
-    "mm_crossmodal_join" -> """
+      FROM rr GROUP BY lang ORDER BY lang ASC"""),
+    Query("mm_crossmodal_join", Multimodal.crossModalJoin(_, _), """
       WITH v AS (
         SELECT vec_id AS doc_id,
                sqrt(list_reduce(list_prepend(0.0::DOUBLE,
@@ -4252,11 +4015,12 @@ object SparkEntry {
                AS avg_norm,
              round(avg(length(text)), 4) AS avg_chars
       FROM documents d JOIN v USING (doc_id)
-      GROUP BY lang ORDER BY lang ASC""",
-    "ev_window_tumbling" -> evWindowOracle,
-    "ev_sessionize" -> evSessionizeOracle,
-    "ev_sessionize_typed" -> evSessionizeOracle,
-    "q_window_suite" -> """
+      GROUP BY lang ORDER BY lang ASC"""),
+    Query("ev_window_tumbling", Events.tumblingWindow(_, _), evWindowOracle),
+    Query("ev_sessionize", Events.sessionize(_, _), evSessionizeOracle),
+    Query("ev_sessionize_typed", Events.sessionizeTyped(_, _),
+      evSessionizeOracle),
+    Query("q_window_suite", RefQueries.qWindowSuite(_, _), """
       SELECT o_orderkey, o_custkey,
              row_number() OVER seq_w AS seq,
              round(o_totalprice - coalesce(
@@ -4272,8 +4036,8 @@ object SparkEntry {
                        ORDER BY o_orderdate ASC, o_orderkey ASC),
              price_w AS (PARTITION BY o_custkey
                          ORDER BY o_totalprice DESC, o_orderkey ASC)
-      ORDER BY o_custkey ASC, seq ASC""",
-    "q_order_latency" -> """
+      ORDER BY o_custkey ASC, seq ASC"""),
+    Query("q_order_latency", RefQueries.qOrderLatency(_, _), """
       SELECT o_orderpriority, count(*) AS cnt,
              round(avg(date_diff('day', cast(o_orderdate AS date),
                                  cast(l_shipdate AS date))), 4)
@@ -4282,8 +4046,8 @@ object SparkEntry {
                            cast(l_shipdate AS date)))::BIGINT
                AS max_latency_days
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority ASC""",
-    "q_semi_anti_join" -> """
+      GROUP BY o_orderpriority ORDER BY o_orderpriority ASC"""),
+    Query("q_semi_anti_join", RefQueries.qSemiAntiJoin(_, _), """
       SELECT c_mktsegment,
              count(CASE WHEN EXISTS (SELECT 1 FROM events e
                                      WHERE e.user_id = c.c_custkey)
@@ -4291,16 +4055,16 @@ object SparkEntry {
              count(CASE WHEN NOT EXISTS (SELECT 1 FROM events e
                                          WHERE e.user_id = c.c_custkey)
                    THEN 1 END) AS n_without_events
-      FROM customer c GROUP BY c_mktsegment ORDER BY c_mktsegment ASC""",
-    "ev_pivot" -> """
+      FROM customer c GROUP BY c_mktsegment ORDER BY c_mktsegment ASC"""),
+    Query("ev_pivot", Events.pivotCounts(_, _), """
       SELECT user_id,
              count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
              count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
              count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
              count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
              count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-      FROM events GROUP BY user_id ORDER BY user_id ASC""",
-    "q_rollup" -> """
+      FROM events GROUP BY user_id ORDER BY user_id ASC"""),
+    Query("q_rollup", RefQueries.qRollup(_, _), """
       WITH ym AS (
         SELECT substr(cast(l_shipdate AS varchar), 1, 4) AS year,
                substr(cast(l_shipdate AS varchar), 6, 2) AS month,
@@ -4310,7 +4074,7 @@ object SparkEntry {
       SELECT year, month, count(*) AS cnt, round(sum(l_quantity), 4) AS qty,
              (grouping(year) * 2 + grouping(month))::BIGINT AS gid
       FROM ym GROUP BY ROLLUP (year, month)
-      ORDER BY gid ASC, year ASC NULLS FIRST, month ASC NULLS FIRST""",
+      ORDER BY gid ASC, year ASC NULLS FIRST, month ASC NULLS FIRST"""),
     // oracle: DuckDB's native ASOF JOIN — an independent implementation
     // of the as-of semantics our union+window composition expresses.
     // The right side is pre-reduced to max(event_id) per (user, ts):
@@ -4318,10 +4082,10 @@ object SparkEntry {
     // unspecified, while both Spark variants deterministically keep the
     // max click_id — the reduction makes the oracle's tie-break explicit
     // instead of relying on the fixture having no ties
-    "ev_asof_join" -> evAsofOracle,
+    Query("ev_asof_join", Events.asofJoin(_, _), evAsofOracle),
     // same independent DuckDB ASOF oracle for the native AsOfJoinExec
-    "ev_asof_native" -> evAsofOracle,
-    "embed_quantize_int8" -> """
+    Query("ev_asof_native", Events.asofJoinNative(_, _), evAsofOracle),
+    Query("embed_quantize_int8", Similarity.quantizeInt8(_, _), """
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       ), m AS (
@@ -4342,8 +4106,8 @@ object SparkEntry {
              list_reduce(list_prepend(0::BIGINT,
                list_transform(qv, x -> abs(x)::BIGINT)), (a, x) -> a + x)
                AS q_l1
-      FROM q ORDER BY vec_id ASC""",
-    "ev_funnel" -> """
+      FROM q ORDER BY vec_id ASC"""),
+    Query("ev_funnel", Events.funnel(_, _), """
       WITH per_user AS (
         SELECT user_id,
                min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)
@@ -4359,7 +4123,7 @@ object SparkEntry {
              round(count(CASE WHEN last_purchase > first_click THEN 1 END)
                    ::double /
                    greatest(count(first_click), 1), 4) AS conversion
-      FROM per_user""",
+      FROM per_user"""),
     // delete-propagation oracle: replay the splitmix64 tombstone draw
     // (UHUGEINT chain, signed pmod 19), then each surface independently —
     // documents, the minhash pair graph with a RE-RESOLVED recursive
@@ -4368,7 +4132,7 @@ object SparkEntry {
     // decomposition), and the per-lang rollup with the poly-hash fold.
     // Checksums: cs1 = Σ(k mod P)² mod P; cs2 = Σ(((k1 mod P)·31 +
     // k2 mod P) mod P)² mod P — identical integer arithmetic both sides.
-    "q_forget" -> s"""
+    Query("q_forget", Forget.qForget(_, _), s"""
       WITH RECURSIVE
       z0 AS (SELECT doc_id, lang,
                ((doc_id::UHUGEINT + 11400714819323198485)
@@ -4485,7 +4249,7 @@ object SparkEntry {
       )
       SELECT * FROM s1 UNION ALL SELECT * FROM s2
       UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4
-      ORDER BY surface ASC""",
+      ORDER BY surface ASC"""),
     // incremental-forget oracle: the FULL re-resolution — the splitmix64
     // tombstone draw, the minhash pair replay, and the recursive
     // min-reachable walk over the ENTIRE induced (both-alive) subgraph.
@@ -4493,7 +4257,7 @@ object SparkEntry {
     // passes untouched components' persisted labels through verbatim, so
     // the hash gate IS the scoped ≡ full proof (deletions can only split
     // or shrink components, never merge them).
-    "dedup_forget_cc" -> s"""
+    Query("dedup_forget_cc", Forget.qDedupForgetCc(_, _), s"""
       WITH RECURSIVE
       z0 AS (SELECT doc_id,
                ((doc_id::UHUGEINT + 11400714819323198485)
@@ -4528,35 +4292,37 @@ object SparkEntry {
       )
       SELECT doc_id, min(label) AS cluster_id,
              doc_id = min(label) AS is_keeper
-      FROM walk GROUP BY doc_id ORDER BY doc_id ASC""",
+      FROM walk GROUP BY doc_id ORDER BY doc_id ASC"""),
     // signature-index forget oracle: REBUILD the band-bucket occupancy
     // cells from scratch over the alive corpus (tombstones = the same
     // splitmix64 mod-19 draw as q_forget). The Spark side never re-signs
     // the alive corpus — it subtracts the tombstoned docs' contributions
     // from the persisted cells — so the hash gate is the
     // subtract-maintenance ≡ rebuild proof.
-    "dedup_forget_index" -> forgetIndexOracle,
+    Query("dedup_forget_index", Dedup.dedupForgetIndex(_, _),
+      forgetIndexOracle),
     // the streaming twin subtracts the SAME tombstone draw as
     // Complete-mode dead-cell state and finalizes through the shared
     // batch subtraction — its oracle is the batch rebuild VERBATIM, so
     // the gate is stream-subtract ≡ batch-subtract ≡ rebuild
-    "stream_forget_index" -> forgetIndexOracle,
+    Query("stream_forget_index", StreamingQueries.forgetIndexStream(_, _),
+      forgetIndexOracle),
     // runtime-filter oracle: the plain join rollup — the bloom filter is
     // a PLAN transformation (might_contain prunes non-joining fact rows
     // before the exchange); the answer must be bit-identical to the
     // unfiltered join, which is exactly what this gate checks
-    "q_runtime_filter" -> """
+    Query("q_runtime_filter", RefQueries.qRuntimeFilter(_, _), """
       SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
              count(*)::BIGINT AS n_items,
              CAST(round(sum(CAST(l_extendedprice AS decimal(20,6))), 4)
                AS DOUBLE) AS revenue
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       WHERE o.o_orderpriority = '1-URGENT'
-      GROUP BY 1 ORDER BY 1 ASC""",
+      GROUP BY 1 ORDER BY 1 ASC"""),
     // delta-join oracle: ONE full join with base/delta flags — an
     // independent algorithm for the 4-term incremental decomposition,
     // so the hash match proves (A∪ΔA)⋈(B∪ΔB) = A⋈B + the deltas
-    "q_delta_join" -> """
+    Query("q_delta_join", RefQueries.qDeltaJoin(_, _), """
       WITH j AS (
         SELECT o.o_orderpriority,
                CASE WHEN o.o_orderdate < TIMESTAMP '1999-01-01'
@@ -4572,11 +4338,11 @@ object SparkEntry {
                AS n_delta,
              count(*)::BIGINT AS n_pairs,
              round(sum(l_quantity::DECIMAL(20,6)), 4)::DOUBLE AS qty_total
-      FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority ASC""",
+      FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority ASC"""),
     // A/B assignment replay: the splitmix64 finalizer in UHUGEINT
     // wrap-around arithmetic over distinct user ids, signed-domain pmod,
     // then the per-arm rollup with decimal-exact value totals
-    "ev_ab_assign" -> """
+    Query("ev_ab_assign", Events.abAssign(_, _), """
       WITH u AS (
         SELECT DISTINCT user_id FROM events
       ), mz AS (
@@ -4609,13 +4375,13 @@ object SparkEntry {
                AS events_per_user
       FROM events e JOIN va USING (user_id)
       GROUP BY e.event_type, va.variant
-      ORDER BY e.event_type ASC, va.variant ASC""",
+      ORDER BY e.event_type ASC, va.variant ASC"""),
     // lateness audit replay: the same round-robin shard-merge arrival
     // order (per-shard sequence, count-derived batch size, batch maxima,
     // lexicographic earlier-batch running max — as a window here, which
     // is equivalent to the Spark side's triangular join), integer gaps,
     // mod-prime checksum of the late ids, sums cast back to BIGINT
-    "ev_lateness" -> s"""
+    Query("ev_lateness", Events.latenessAudit(_, _), s"""
       WITH $latenessLateCtes
       SELECT event_type, count(*)::BIGINT AS n_events,
              sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END)::BIGINT AS n_late,
@@ -4627,14 +4393,14 @@ object SparkEntry {
              (sum(CASE WHEN late_us > 0 THEN event_id % 1000000007
                        ELSE 0 END) % 1000000007)::BIGINT
                AS late_ids_checksum
-      FROM l GROUP BY event_type ORDER BY event_type ASC""",
+      FROM l GROUP BY event_type ORDER BY event_type ASC"""),
     // watermark-ENFORCEMENT replay: the stream observed what the
     // ms-floor watermark prediction says it must — the oracle computes
     // the prediction (batch granularity n/32, running-max ms-floor
     // watermark base, drop iff late_us ≥ delay_ms·1000, delay = p99
     // discrete order statistic DIV 1000 + 1), so the hash gate IS the
     // predicted ≡ observed proof
-    "stream_lateness" -> """
+    Query("stream_lateness", StreamingQueries.latenessEnforced(_, _), """
       WITH e AS (
         SELECT event_type, event_id, epoch_us(ts) AS us,
                (event_id % 4)::INT AS shard
@@ -4679,19 +4445,19 @@ object SparkEntry {
              (sum(CASE WHEN admitted THEN event_id % 1000000007
                   ELSE 0 END) % 1000000007)::BIGINT
                AS admitted_ids_checksum
-      FROM a GROUP BY event_type ORDER BY event_type ASC""",
+      FROM a GROUP BY event_type ORDER BY event_type ASC"""),
     // approx_percentile twin: exact values + a bound gate the oracle
     // re-checks as literal TRUE (the q_quantiles_approx discipline —
     // the sketch value itself is never exported)
-    "ev_lateness_approx" -> s"""
+    Query("ev_lateness_approx", Events.latenessAuditApprox(_, _), s"""
       WITH $latenessLateCtes
       SELECT event_type, count(*)::BIGINT AS n_events,
              sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END)::BIGINT AS n_late,
              round(quantile_cont(late_us, 0.99), 4) AS wm_p99_us,
              true AS wm_p99_ok
-      FROM l GROUP BY event_type ORDER BY event_type ASC""",
+      FROM l GROUP BY event_type ORDER BY event_type ASC"""),
     // oracle: DuckDB's native inequality (IE) join for the range predicate
-    "ev_range_join" -> """
+    Query("ev_range_join", Events.rangeJoinBinned(_, _), """
       WITH e AS (
         SELECT user_id, event_id, epoch_us(ts) AS us FROM events
       )
@@ -4699,8 +4465,8 @@ object SparkEntry {
       FROM e a JOIN e b
         ON a.user_id = b.user_id AND a.event_id < b.event_id
        AND abs(a.us - b.us) <= 60000000
-      GROUP BY a.user_id ORDER BY a.user_id ASC""",
-    "ev_range_join_native" -> """
+      GROUP BY a.user_id ORDER BY a.user_id ASC"""),
+    Query("ev_range_join_native", Events.rangeJoinNative(_, _), """
       WITH e AS (
         SELECT user_id, event_id, epoch_us(ts) AS us FROM events
       )
@@ -4708,12 +4474,12 @@ object SparkEntry {
       FROM e a JOIN e b
         ON a.user_id = b.user_id AND a.event_id < b.event_id
        AND abs(a.us - b.us) <= 60000000
-      GROUP BY a.user_id ORDER BY a.user_id ASC""",
+      GROUP BY a.user_id ORDER BY a.user_id ASC"""),
     // hashing-trick replay: per-token poly_hash % 64 bins, per-doc
     // sparse-vector summary; the checksum folds the (bin, cnt) pairs
     // bin-ordered — interleaved with a per-step mod, congruent to the
     // Spark side's per-struct fold (both reduce mod 1e9+7)
-    "text_hash_features" -> """
+    Query("text_hash_features", TextAnalysis.hashFeatures(_, _), """
       WITH t AS (
         SELECT doc_id, unnest(string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
@@ -4737,7 +4503,7 @@ object SparkEntry {
                flatten(list([bin::BIGINT, cnt] ORDER BY bin ASC))),
                (a, x) -> (a * 31 + x) % 1000000007)::BIGINT
                AS feat_checksum
-      FROM b GROUP BY doc_id ORDER BY doc_id ASC""",
+      FROM b GROUP BY doc_id ORDER BY doc_id ASC"""),
     // classifier apply over the hashing-trick bins: same poly_hash % 64
     // replay, weights regenerated from the shared integer formula
     // (TextAnalysis.classifierWeight), per-doc integer dot, keep = score
@@ -4745,16 +4511,21 @@ object SparkEntry {
     // (HUGEINT-safe: the sum is reduced mod P before the BIGINT cast);
     // shared verbatim by the Complete-mode streaming twin (stream ≡
     // batch — same rollup cells, same finalizer)
-    "text_classifier_score" -> classifierScoreOracle,
-    "stream_classifier_score" -> classifierScoreOracle,
-    "text_classifier_train" -> classifierTrainOracle,
+    Query("text_classifier_score", TextAnalysis.classifierScore(_, _),
+      classifierScoreOracle),
+    Query("stream_classifier_score", StreamingQueries.classifierStream(_, _),
+      classifierScoreOracle),
+    Query("text_classifier_train", TextAnalysis.classifierTrain(_, _),
+      classifierTrainOracle),
     // the trained-model streaming twin shares the batch training oracle
     // verbatim: batch-fit weights applied through the Complete-mode
     // rollup must reproduce the one-shot batch report cell for cell
-    "stream_classifier_train" -> classifierTrainOracle,
-    "text_importance_sample" -> importanceSampleOracle,
-    "text_pii_scrub" -> piiScrubOracle,
-    "text_tfidf_topk" -> """
+    Query("stream_classifier_train",
+      StreamingQueries.classifierTrainStream(_, _), classifierTrainOracle),
+    Query("text_importance_sample", TextAnalysis.importanceSample(_, _),
+      importanceSampleOracle),
+    Query("text_pii_scrub", TextAnalysis.piiScrub(_, _), piiScrubOracle),
+    Query("text_tfidf_topk", TextAnalysis.tfidfTopK(_, _), """
       WITH toks AS (
         SELECT doc_id, unnest(string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
@@ -4777,10 +4548,10 @@ object SparkEntry {
       )
       SELECT doc_id, tok, tf, df, round(tfidf_raw, 6) AS tfidf,
              rnk::INTEGER AS rnk
-      FROM ranked WHERE rnk <= 3 ORDER BY doc_id ASC, rnk ASC""",
+      FROM ranked WHERE rnk <= 3 ORDER BY doc_id ASC, rnk ASC"""),
     // first-order Markov transitions: same (ts, event_id) total order
     // per user; integer counts, one rounded division for the probability
-    "ev_transition_matrix" -> """
+    Query("ev_transition_matrix", Events.transitionMatrix(_, _), """
       WITH p AS (
         SELECT event_type AS from_type,
                lead(event_type) OVER (PARTITION BY user_id
@@ -4796,12 +4567,12 @@ object SparkEntry {
       SELECT c.from_type, c.to_type, c.cnt,
              round(c.cnt::DOUBLE / t.total, 4) AS prob
       FROM c JOIN t USING (from_type)
-      ORDER BY from_type ASC, to_type ASC""",
+      ORDER BY from_type ASC, to_type ASC"""),
     // median + MAD replay: quantile_cont is the same linear interpolation
     // as Spark's percentile (q_quantiles precedent); med/mad are rounded
     // to 4 dp BEFORE thresholding on both sides so the outlier flag
     // compares identical doubles
-    "ev_anomaly_mad" -> """
+    Query("ev_anomaly_mad", Events.anomalyMad(_, _), """
       WITH ev AS (
         SELECT event_type, value::DOUBLE AS v FROM events
       ), med AS (
@@ -4822,7 +4593,7 @@ object SparkEntry {
                             THEN 1 ELSE 0 END)::DOUBLE / count(*), 4)
                AS outlier_rate
       FROM d JOIN mad USING (event_type)
-      GROUP BY d.event_type ORDER BY d.event_type ASC""",
+      GROUP BY d.event_type ORDER BY d.event_type ASC"""),
     // portable-HLL replay: re-derives every register from the same
     // splitmix64 finalizer (graft.functions.Mix64) — Java's wrap-around
     // long arithmetic IS mod-2^64, replayed here with UHUGEINT products
@@ -4830,7 +4601,7 @@ object SparkEntry {
     // overflows); bin()-length rho and an exact-binary-fraction harmonic
     // sum make even the double estimate hash-exact. Geometry constants
     // interpolated from Sketches — one source of truth.
-    "q_hll_distinct" -> s"""
+    Query("q_hll_distinct", Sketches.hllDistinct(_, _), s"""
       WITH z0 AS (
         SELECT l_returnflag,
                ((l_orderkey::UHUGEINT + 11400714819323198485)
@@ -4880,10 +4651,10 @@ object SparkEntry {
              round(est.e, 4) AS hll_est,
              abs(est.e / ex.exact_orders - 1.0) < 0.25 AS hll_ok
       FROM ex JOIN est USING (l_returnflag)
-      ORDER BY l_returnflag ASC""",
+      ORDER BY l_returnflag ASC"""),
     // quantized unigram surprisal: bitlen(N) − bitlen(cnt) per token via
     // bin() string length — pure integer replay, no libm log anywhere
-    "text_surprisal" -> """
+    Query("text_surprisal", TextAnalysis.surprisal(_, _), """
       WITH t AS (
         SELECT doc_id, unnest(string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
@@ -4899,10 +4670,10 @@ object SparkEntry {
       )
       SELECT doc_id, count(*) AS n_tokens, sum(bits)::BIGINT AS bits_total,
              round(sum(bits)::DOUBLE / count(*), 4) AS bits_per_token
-      FROM j GROUP BY doc_id ORDER BY doc_id ASC""",
+      FROM j GROUP BY doc_id ORDER BY doc_id ASC"""),
     // SCD2 gaps-and-islands replay: same (ts, event_id) total order,
     // same running-sum island ids, valid_to stitched by lead()
-    "ev_scd2" -> """
+    Query("ev_scd2", Events.scd2(_, _), """
       WITH e AS (
         SELECT user_id, ts, event_id, event_type,
                CASE WHEN lag(event_type) OVER w IS NULL
@@ -4927,11 +4698,11 @@ object SparkEntry {
              n_events,
              (lead(from_ts) OVER w2 IS NULL) AS is_current
       FROM g WINDOW w2 AS (PARTITION BY user_id ORDER BY version_no ASC)
-      ORDER BY user_id ASC, version_no ASC""",
+      ORDER BY user_id ASC, version_no ASC"""),
     // JL projection replay: the oracle SQL is GENERATED from the same
     // jlSign matrix the operator folds in, term-for-term in the same
     // left-associative order — the double sums are bit-identical
-    "embed_random_project" -> {
+    Query("embed_random_project", Similarity.randomProject(_, _), {
       val cols = (0 until Similarity.JlOutDim).map { j =>
         val terms = (0 until Similarity.Dim).map { d =>
           s"embedding[${d + 1}]::DOUBLE * (${Similarity.jlSign(j, d)})"
@@ -4942,12 +4713,12 @@ object SparkEntry {
       SELECT vec_id,
              $cols
       FROM embeddings ORDER BY vec_id ASC"""
-    },
+    }),
     // per-source cap replay: the same splitmix64 chain as
     // q_hll_distinct on doc_id, reinterpreted as SIGNED 64-bit for the
     // ORDER BY (Spark sorts the signed long; subtracting 2^64 above
     // the sign point is exactly that reinterpretation)
-    "text_cap_per_source" -> s"""
+    Query("text_cap_per_source", TextAnalysis.capPerSource(_, _), s"""
       WITH z0 AS (
         SELECT source, doc_id,
                ((doc_id::UHUGEINT + 11400714819323198485)
@@ -4982,11 +4753,11 @@ object SparkEntry {
         SELECT source, count(*) AS total_docs FROM documents GROUP BY source
       )
       SELECT t.source, t.total_docs, k.kept_docs, k.kept_checksum
-      FROM t JOIN k USING (source) ORDER BY source ASC""",
+      FROM t JOIN k USING (source) ORDER BY source ASC"""),
     // F2 / self-join-size replay: same skewed key domain and hash
     // constants as q_heavy_hitters_cms; everything integer, so the
     // sketch estimate itself is hash-gated
-    "q_selfjoin_size_cms" -> """
+    Query("q_selfjoin_size_cms", Sketches.selfJoinSizeCms(_, _), """
       WITH fact AS (
         SELECT l_returnflag,
                CASE WHEN l_partkey % 7 = 0 THEN l_partkey % 5
@@ -5019,21 +4790,21 @@ object SparkEntry {
              (est.f2_est <= ex.f2_exact
                + 2 * ex.n_rows * ex.n_rows / 2048) AS within_bound
       FROM ex JOIN est USING (l_returnflag)
-      ORDER BY l_returnflag ASC""",
+      ORDER BY l_returnflag ASC"""),
     // hierarchical-rollup oracle: the DIRECT monthly aggregation from
     // the fact table — proving the daily-preagg path is exact
-    "q_preagg_rollup" -> """
+    Query("q_preagg_rollup", RefQueries.qPreaggRollup(_, _), """
       SELECT substr(cast(l_shipdate AS varchar), 1, 7) AS month,
              l_returnflag, count(*) AS cnt,
              round(sum(l_quantity), 4) AS qty
       FROM lineitem GROUP BY 1, 2
-      ORDER BY month ASC, l_returnflag ASC""",
+      ORDER BY month ASC, l_returnflag ASC"""),
     // TextRank replay: the same three fixed-point iterations unrolled —
     // all constants interpolated from TextAnalysis (one source of
     // truth), all arithmetic integer floor division on positive
     // operands (DuckDB `//` == Spark `div` there), so the ranking is
     // bit-exact with no float tolerance
-    "text_textrank" -> {
+    Query("text_textrank", TextAnalysis.textRank(_, _), {
       val sc = TextAnalysis.TrScale
       val dn = TextAnalysis.TrDampNum
       val dd = TextAnalysis.TrDampDen
@@ -5080,10 +4851,10 @@ object SparkEntry {
       SELECT d.src AS tok, d.wdeg, s3.score
       FROM s3 JOIN deg d ON d.src = s3.tok
       ORDER BY s3.score DESC, tok ASC LIMIT 20"""
-    },
+    }),
     // sliding-HLL replay: the q_hll_distinct register chain per day,
     // fanned winDays forward in sketch space, merged by per-bucket max
-    "ev_hll_sliding" -> s"""
+    Query("ev_hll_sliding", Sketches.hllSliding(_, _), s"""
       WITH ev AS (
         SELECT ts::DATE AS day, user_id FROM events
       ), days AS (
@@ -5142,10 +4913,10 @@ object SparkEntry {
              round(est.e, 4) AS hll_est,
              abs(est.e / ex.exact_users - 1.0) < 0.25 AS hll_ok
       FROM ex JOIN est USING (wday)
-      ORDER BY day ASC""",
+      ORDER BY day ASC"""),
     // quantized-PMI collocations: log2 via bit length on both engines —
     // no products, no libm; marginals derive from the pair table
-    "text_pmi_bigrams" -> s"""
+    Query("text_pmi_bigrams", TextAnalysis.pmiBigrams(_, _), s"""
       WITH toks AS (
         SELECT doc_id, l[ord] AS tok, ord FROM (
           SELECT doc_id, l, unnest(generate_series(1, len(l))) AS ord
@@ -5166,10 +4937,10 @@ object SparkEntry {
               - (length(bin(ca)) + length(bin(cb))))::BIGINT AS pmi_bits
       FROM cab JOIN ca USING (a) JOIN cb USING (b) CROSS JOIN n
       WHERE cab >= ${TextAnalysis.PmiMinCount}
-      ORDER BY pmi_bits DESC, cnt DESC, bigram ASC LIMIT 20""",
+      ORDER BY pmi_bits DESC, cnt DESC, bigram ASC LIMIT 20"""),
     // winnowing replay: identical trigram poly-hash stream, identical
     // (hash·2^31 + pos) packed tie-break, full windows only
-    "text_winnowing" -> s"""
+    Query("text_winnowing", Dedup.winnowing(_, _), s"""
       WITH d AS (
         SELECT doc_id, string_split(
           regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
@@ -5208,10 +4979,10 @@ object SparkEntry {
                    / greatest(b.n_shingles, 1), 4) AS fp_density,
              coalesce(a.fp_checksum, 0)::BIGINT AS fp_checksum
       FROM base b LEFT JOIN agg a USING (doc_id)
-      ORDER BY b.doc_id ASC""",
+      ORDER BY b.doc_id ASC"""),
     // last-touch attribution replay: same (ts, event_id) total order,
     // IGNORE NULLS carry-forward, horizon from the shared constant
-    "ev_attribution" -> s"""
+    Query("ev_attribution", Events.attribution(_, _), s"""
       WITH e AS (
         SELECT user_id, ts, event_id, event_type, value FROM events
         WHERE event_type IN ('click', 'purchase')
@@ -5236,11 +5007,11 @@ object SparkEntry {
              round(sum(CASE WHEN attributed
                             THEN CAST(value AS DECIMAL(20,6))
                             ELSE 0 END), 4)::DOUBLE AS attributed_value
-      FROM conv GROUP BY 1 ORDER BY day ASC""",
+      FROM conv GROUP BY 1 ORDER BY day ASC"""),
     // streaming-HLL replay: registers from the WHOLE fixture at once —
     // register max is merge-invariant, so the incrementally-maintained
     // streaming state must land on identical bits
-    "stream_hll_distinct" -> s"""
+    Query("stream_hll_distinct", StreamingQueries.hllDistinct(_, _), s"""
       WITH ev AS (
         SELECT ts::DATE AS day, user_id FROM events
       ), z0 AS (
@@ -5285,17 +5056,18 @@ object SparkEntry {
              round(est.e, 4) AS hll_est,
              abs(est.e / ex.exact_users - 1.0) < 0.25 AS hll_ok
       FROM ex JOIN est USING (day)
-      ORDER BY day ASC""",
+      ORDER BY day ASC"""),
     // equi-width histogram + CDF: integer counts, single rounded
     // divisions; the oracle's running sum is a window (DuckDB replay
     // only — the Spark side uses a triangular broadcast join)
-    "q_histogram" -> qHistogramOracle,
+    Query("q_histogram", RefQueries.qHistogram(_, _), qHistogramOracle),
     // streaming histogram maintenance finalizes through the shared batch
     // CDF code — stream ≡ batch, so the oracle is the batch SQL verbatim
-    "stream_histogram" -> qHistogramOracle,
+    Query("stream_histogram", StreamingQueries.histogramStream(_, _),
+      qHistogramOracle),
     // frequency-of-frequencies: bitlen(cnt) bands over the vocabulary,
     // exact integer masses, single rounded divisions
-    "text_freq_spectrum" -> """
+    Query("text_freq_spectrum", TextAnalysis.freqSpectrum(_, _), """
       WITH t AS (
         SELECT unnest(string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
@@ -5313,12 +5085,12 @@ object SparkEntry {
                AS type_fraction,
              round(sum(cnt)::DOUBLE / any_value(tot.n_total)::DOUBLE, 6)
                AS mass_fraction
-      FROM v CROSS JOIN tot GROUP BY 1 ORDER BY band ASC""",
+      FROM v CROSS JOIN tot GROUP BY 1 ORDER BY band ASC"""),
     // Heaps curve: first-occurrence attribution + the naive global
     // cumsum (oracle scale affords it; the Spark side is the
     // range-decomposed prefix sum — the oracle independently validates
     // the decomposition)
-    "text_vocab_growth" -> """
+    Query("text_vocab_growth", TextAnalysis.vocabGrowth(_, _), """
       WITH t AS (
         SELECT doc_id, unnest(string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
@@ -5335,11 +5107,11 @@ object SparkEntry {
              sum(n_new) OVER (ORDER BY doc_id ASC
                               ROWS UNBOUNDED PRECEDING)::BIGINT
                AS vocab_size
-      FROM d ORDER BY doc_id ASC""",
+      FROM d ORDER BY doc_id ASC"""),
     // bigram-LM surprisal: same per-doc lead() bigram formation, same
     // bitlen quantization; c1 derives from the bigram-count table on
     // both sides so the two LMs are identical by construction
-    "text_bigram_surprisal" -> """
+    Query("text_bigram_surprisal", TextAnalysis.bigramSurprisal(_, _), """
       WITH s AS (
         SELECT doc_id, string_split(
           regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
@@ -5365,11 +5137,11 @@ object SparkEntry {
       )
       SELECT doc_id, count(*) AS n_bigrams, sum(bits)::BIGINT AS bits_total,
              round(sum(bits)::DOUBLE / count(*), 4) AS bits_per_bigram
-      FROM j GROUP BY doc_id ORDER BY doc_id ASC""",
+      FROM j GROUP BY doc_id ORDER BY doc_id ASC"""),
     // OHLC bars: open/close replayed as rn=1 picks over the same
     // (ts, event_id) total order the Spark argmin/argmax aggregates use;
     // volume is the decimal sum rounded once
-    "ev_ohlc" -> """
+    Query("ev_ohlc", Events.ohlcBars(_, _), """
       WITH e AS (
         SELECT event_type, ts::DATE::VARCHAR AS day, ts, event_id, value,
                row_number() OVER (PARTITION BY event_type, ts::DATE
@@ -5384,9 +5156,9 @@ object SparkEntry {
              max(CASE WHEN rn_z = 1 THEN value END) AS close,
              round(sum(value::DECIMAL(20,6)), 4)::DOUBLE AS volume
       FROM e GROUP BY event_type, day
-      ORDER BY event_type ASC, day ASC""",
+      ORDER BY event_type ASC, day ASC"""),
     // dwell: same per-user lead() gap, same 30-min cap, decimal gap sum
-    "ev_dwell_time" -> """
+    Query("ev_dwell_time", Events.dwellTime(_, _), """
       WITH g AS (
         SELECT event_type,
                lead(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -5402,11 +5174,11 @@ object SparkEntry {
              round((sum(least(gap_us, 1800000000)::DECIMAL(38,0))::DOUBLE
                    / 1000000.0) / count(*), 4) AS dwell_avg_s
       FROM g WHERE gap_us IS NOT NULL
-      GROUP BY event_type ORDER BY event_type ASC""",
+      GROUP BY event_type ORDER BY event_type ASC"""),
     // gap fill: per-user generate_series spine + IGNORE NULLS
     // forward-fill window — the same fill semantics as Spark's
     // last(_, ignoreNulls) over the per-user day order
-    "ev_gap_fill" -> """
+    Query("ev_gap_fill", Events.gapFill(_, _), """
       WITH d AS (
         SELECT user_id, ts::DATE AS day, count(*) AS n_events,
                round(sum(value::DECIMAL(20,6)), 4)::DOUBLE AS day_value
@@ -5426,12 +5198,12 @@ object SparkEntry {
              last_value(day_value IGNORE NULLS)
                OVER (PARTITION BY user_id ORDER BY day ASC
                      ROWS UNBOUNDED PRECEDING) AS filled_value
-      FROM j ORDER BY user_id ASC, day ASC""",
+      FROM j ORDER BY user_id ASC, day ASC"""),
     // audience overlap via merged HLL registers: same splitmix64 replay
     // as q_hll_distinct (two's-complement wrap == unsigned mod 2^64),
     // union registers are per-bucket maxima, inclusion–exclusion on
     // three identically-computed estimates
-    "q_hll_intersect" -> s"""
+    Query("q_hll_intersect", Sketches.hllIntersect(_, _), s"""
       WITH z0 AS (
         SELECT event_type,
                ((user_id::UHUGEINT + 11400714819323198485)
@@ -5512,22 +5284,22 @@ object SparkEntry {
       JOIN est1 e1 ON e1.event_type = exact.t1
       JOIN est1 e2 ON e2.event_type = exact.t2
       JOIN uest ON uest.t1 = exact.t1 AND uest.t2 = exact.t2
-      ORDER BY exact.t1 ASC, exact.t2 ASC""",
+      ORDER BY exact.t1 ASC, exact.t2 ASC"""),
     // power-iteration PCA: the same exact fixed-point pipeline in
     // HUGEINT (128-bit == Spark's DECIMAL(38,0) headroom): quantized
     // components, Gramian cell sums, and per-iteration max-renormalized
     // matrix–vector products with truncating integer division on the
     // magnitude (abs-then-sign == Spark's remainder-stripped floor)
-    "embed_pca_power" -> s"""
+    Query("embed_pca_power", Similarity.pcaPower(_, _), s"""
       $pcaCtes
       SELECT g.i::BIGINT AS dim, (g.g % ${TextAnalysis.ChecksumP})::BIGINT
                AS gii_mod,
              v3.v::BIGINT AS eigvec_q
       FROM g JOIN v3 ON v3.vi = g.i WHERE g.i = g.j
-      ORDER BY dim ASC""",
+      ORDER BY dim ASC"""),
     // PCA rotation apply: the same chain through v3, then a per-vector
     // exact integer dot of quantized components with the eigenvector
-    "embed_project_pc" -> s"""
+    Query("embed_project_pc", Similarity.projectPc(_, _), s"""
       $pcaCtes, ev AS (
         SELECT list(v ORDER BY vi ASC) AS evl FROM v3
       )
@@ -5537,9 +5309,9 @@ object SparkEntry {
                           * ${Similarity.PcaScale})::HUGEINT
                     * ev.evl[j]))::BIGINT AS proj_q
       FROM embeddings e2, ev
-      ORDER BY e2.vec_id ASC""",
+      ORDER BY e2.vec_id ASC"""),
     // FK audit: per-edge orphan row counts via NOT-EXISTS left joins
-    "q_fk_integrity" -> """
+    Query("q_fk_integrity", RefQueries.qFkIntegrity(_, _), """
       WITH e AS (
         SELECT 'customer.c_nationkey->nation' AS edge,
                (SELECT count(*) FROM customer) AS n_child,
@@ -5585,7 +5357,7 @@ object SparkEntry {
       SELECT edge, n_child::BIGINT AS n_child, n_orphans::BIGINT AS n_orphans,
              round(n_orphans::DOUBLE / greatest(n_child, 1), 6)
                AS orphan_rate
-      FROM e ORDER BY edge ASC""",
+      FROM e ORDER BY edge ASC"""),
     // set ops: the same INTERSECT/EXCEPT/UNION over behavior triples
     // block-sampling replay: corpus-sized key-range blocks, the
     // splitmix64 selection gate via the UHUGEINT wrap-around chain
@@ -5594,7 +5366,7 @@ object SparkEntry {
     // term the Spark DECIMAL(38,0) arithmetic, incl. the m < 2 NULL
     // guard (zero sampled blocks would divide by zero; one makes the
     // variance side vacuous)
-    "q_sample_blocks" -> """
+    Query("q_sample_blocks", Sketches.sampleBlocks(_, _), """
       WITH mx AS (SELECT max(l_orderkey) AS mk FROM lineitem),
       w AS (SELECT greatest(1, (mk + 256) // 256) AS bw FROM mx),
       r AS (
@@ -5638,13 +5410,13 @@ object SparkEntry {
             * (m - 1)
             <= 16::HUGEINT * n_blocks * (n_blocks - m)
                * (m::HUGEINT * sxx - sx::HUGEINT * sx)) END AS est_ok
-      FROM agg""",
+      FROM agg"""),
     // secondary-sort replay: the typed one-pass running state re-derived
     // declaratively — running max via an unbounded-preceding window on
     // the same (us, event_id) order, advance = first row or vq above the
     // prior max, ordered checksum via the list_reduce fold (per-step
     // mod, congruent to the Spark loop), last id as the ordered argmax
-    "ev_secondary_sort" -> """
+    Query("ev_secondary_sort", Events.secondarySortTyped(_, _), """
       WITH e AS (
         SELECT user_id, event_id, epoch_us(ts) AS us,
                CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vq
@@ -5672,11 +5444,11 @@ object SparkEntry {
                AS advance_cks,
              first(event_id ORDER BY us DESC, event_id DESC)
                AS last_event_id
-      FROM a GROUP BY user_id ORDER BY user_id ASC""",
+      FROM a GROUP BY user_id ORDER BY user_id ASC"""),
     // CBO reorder: the ANSWER is plan-invariant by definition — the
     // oracle replays the 3-table star rollup; the join-order flip itself
     // is PlanSpec's job (optimizer surfaces can't hash)
-    "q_cbo_reorder" -> """
+    Query("q_cbo_reorder", RefQueries.qCboReorder(_, _), """
       SELECT o.o_orderpriority AS priority,
              count(*)::BIGINT AS n_items,
              round(sum(l.l_extendedprice::DECIMAL(20,6)), 4)::DOUBLE
@@ -5686,8 +5458,8 @@ object SparkEntry {
       JOIN customer c ON o.o_custkey = c.c_custkey
       WHERE c.c_mktsegment = 'BUILDING'
       GROUP BY o.o_orderpriority
-      ORDER BY priority ASC""",
-    "q_set_ops" -> s"""
+      ORDER BY priority ASC"""),
+    Query("q_set_ops", RefQueries.qSetOps(_, _), s"""
       WITH w1 AS (
         SELECT DISTINCT user_id, event_type,
                floor(value / 10.0)::BIGINT AS value_decile
@@ -5712,9 +5484,9 @@ object SparkEntry {
              n_both::BIGINT AS n_both, n_only_w1::BIGINT AS n_only_w1,
              n_only_w2::BIGINT AS n_only_w2, n_union::BIGINT AS n_union,
              round(n_both::DOUBLE / n_union, 6) AS jaccard
-      FROM c""",
+      FROM c"""),
     // melt replay: users × the 5 fixed type columns, zeros explicit
-    "ev_unpivot" -> """
+    Query("ev_unpivot", Events.unpivotCounts(_, _), """
       WITH u AS (SELECT DISTINCT user_id FROM events),
       t AS (SELECT unnest(['click', 'error', 'purchase', 'signup',
                            'view']) AS event_type),
@@ -5726,10 +5498,10 @@ object SparkEntry {
              coalesce(c.cnt, 0)::BIGINT AS cnt
       FROM u CROSS JOIN t
       LEFT JOIN c ON c.user_id = u.user_id AND c.event_type = t.event_type
-      ORDER BY u.user_id ASC, t.event_type ASC""",
+      ORDER BY u.user_id ASC, t.event_type ASC"""),
     // 3-step paths: two leads over the same per-user total order,
     // deterministic (cnt DESC, path ASC) top-k
-    "ev_paths" -> s"""
+    Query("ev_paths", Events.pathMining(_, _), s"""
       WITH p AS (
         SELECT event_type AS t0,
                lead(event_type, 1) OVER w AS t1,
@@ -5740,10 +5512,10 @@ object SparkEntry {
       SELECT t0 || '>' || t1 || '>' || t2 AS path, count(*) AS cnt
       FROM p WHERE t2 IS NOT NULL
       GROUP BY 1 ORDER BY cnt DESC, path ASC
-      LIMIT ${Events.PathTopK}""",
+      LIMIT ${Events.PathTopK}"""),
     // streaming bars: the state store must converge to the batch bars —
     // same oracle shape as ev_ohlc
-    "stream_ohlc" -> """
+    Query("stream_ohlc", StreamingQueries.ohlcBars(_, _), """
       WITH e AS (
         SELECT event_type, ts::DATE::VARCHAR AS day, ts, event_id, value,
                row_number() OVER (PARTITION BY event_type, ts::DATE
@@ -5758,10 +5530,10 @@ object SparkEntry {
              max(CASE WHEN rn_z = 1 THEN value END) AS close,
              round(sum(value::DECIMAL(20,6)), 4)::DOUBLE AS volume
       FROM e GROUP BY event_type, day
-      ORDER BY event_type ASC, day ASC""",
+      ORDER BY event_type ASC, day ASC"""),
     // RANGE-frame rolling window: trailing 7 CALENDAR days on the
     // numeric day axis — silent days don't consume frame slots
-    "ev_rolling_window" -> """
+    Query("ev_rolling_window", Events.rollingWindow(_, _), """
       WITH d AS (
         SELECT user_id, ts::DATE AS day, count(*) AS n_events,
                sum(value::DECIMAL(20,6)) AS day_value,
@@ -5774,14 +5546,15 @@ object SparkEntry {
       FROM d
       WINDOW w AS (PARTITION BY user_id ORDER BY day_num ASC
                    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-      ORDER BY user_id ASC, day ASC""",
+      ORDER BY user_id ASC, day ASC"""),
     // subquery surface: the ORACLE IS THE SAME SQL STRING the Spark
     // side executes — pure ANSI, zero dialect drift possible
-    "q_subqueries" -> RefQueries.SubqueriesSql,
+    Query("q_subqueries", RefQueries.qSubqueries(_, _),
+      RefQueries.SubqueriesSql),
     // triangle census: the oracle counts NAIVELY (id-ordered triple
     // self-join over the replayed simhash pair graph) — independently
     // validating the Spark side's degree-oriented wedge algorithm
-    "dedup_triangles" -> s"""
+    Query("dedup_triangles", Dedup.triangleCount(_, _), s"""
       WITH pairs AS ($dedupSimhashOracle),
       e AS (SELECT doc_a AS a, doc_b AS b FROM pairs),
       deg AS (
@@ -5801,10 +5574,10 @@ object SparkEntry {
              round(3.0 * tri.n_triangles
                    / greatest((SELECT sum(deg * (deg - 1) // 2) FROM deg),
                               1), 6) AS transitivity
-      FROM tri""",
+      FROM tri"""),
     // snapshot diff: same cutoff, same full-outer classification, same
     // mod-prime membership checksums
-    "ev_snapshot_diff" -> s"""
+    Query("ev_snapshot_diff", Events.snapshotDiff(_, _), s"""
       WITH a AS (
         SELECT user_id, count(*) AS n_a,
                sum(value::DECIMAL(20,6)) AS v_a
@@ -5828,13 +5601,13 @@ object SparkEntry {
                % ${graft.operators.TextAnalysis.ChecksumP})::BIGINT
                AS key_checksum,
              min(user_id) AS min_key, max(user_id) AS max_key
-      FROM j GROUP BY status ORDER BY status ASC""",
+      FROM j GROUP BY status ORDER BY status ASC"""),
     // BPE training replay: same marker-wrapped symbol strings (chr(31)
     // == TextAnalysis.BpeMark), same (count DESC, pair ASC) winner,
     // same single-pass greedy replace — adjacent matches share no
     // characters in the wrapped representation, so one left-to-right
     // non-overlapping replace IS the greedy fold on both engines
-    "text_bpe_merges" -> {
+    Query("text_bpe_merges", TextAnalysis.bpeMerges(_, _), {
       def stage(w: String, m: String, wNext: String) = s"""$m AS (
         SELECT p1, p2, p1 || p2 AS merged, sum(cnt)::BIGINT AS pair_count
         FROM (
@@ -5869,11 +5642,11 @@ object SparkEntry {
       UNION ALL SELECT 2, p1, p2, merged, pair_count FROM m2
       UNION ALL SELECT 3, p1, p2, merged, pair_count FROM m3
       ORDER BY step ASC"""
-    },
+    }),
     // BPE encode replay: re-derive the same merge table, apply it to
     // the distinct vocabulary (tok carried through the chain), join
     // documents' tokens against the segmentation
-    "text_bpe_apply" -> {
+    Query("text_bpe_apply", TextAnalysis.bpeApply(_, _), {
       def stage(w: String, m: String, wNext: String) = s"""$m AS (
         SELECT p1, p2, p1 || p2 AS merged
         FROM (
@@ -5915,11 +5688,11 @@ object SparkEntry {
                AS compression
       FROM t JOIN v USING (tok)
       GROUP BY t.doc_id ORDER BY t.doc_id ASC"""
-    },
+    }),
     // embedding outliers: same quantization, same un-divided centroid
     // sum, same n²-scaled exact integer distances (HUGEINT == the Spark
     // side's DECIMAL(38,0) headroom), one double division at export
-    "embed_outliers" -> s"""
+    Query("embed_outliers", Similarity.embedOutliers(_, _), s"""
       WITH c AS (
         SELECT vec_id, label, j,
                floor(embedding[j + 1]::DOUBLE
@@ -5942,9 +5715,9 @@ object SparkEntry {
                    / ${Similarity.PcaScale.toDouble * Similarity.PcaScale},
                    6) AS dist2
       FROM d ORDER BY dist2 DESC, vec_id ASC
-      LIMIT ${Similarity.OutlierTopK}""",
+      LIMIT ${Similarity.OutlierTopK}"""),
     // peak detection: same per-type lag/lead strict-maximum rule
-    "ev_peaks" -> """
+    Query("ev_peaks", Events.peakDetection(_, _), """
       WITH d AS (
         SELECT event_type, ts::DATE AS day, count(*) AS cnt
         FROM events GROUP BY 1, 2
@@ -5958,6 +5731,12 @@ object SparkEntry {
       FROM x
       WHERE prev IS NOT NULL AND next IS NOT NULL
         AND cnt > prev AND cnt > next
-      ORDER BY event_type ASC, day ASC""",
+      ORDER BY event_type ASC, day ASC"""),
   )
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -29,21 +29,11 @@ import org.apache.spark.sql.functions._
   */
 object StarCcAudit {
 
-  private final class ShuffleListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(t.taskMetrics).foreach { m =>
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-      }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = GraftSession.sfDir
     val tolerance = 1.10
     val spark = GraftSession.local(GraftSession.cpus)
-    val listener = new ShuffleListener
+    val listener = new Bench.MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
     val mode = args.headOption.getOrElse("lsh")
@@ -71,12 +61,12 @@ object StarCcAudit {
     def drain(): Unit =
       org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
     drain()
-    var last = listener.bytes.get()
+    var last = listener.shuffleWrite.get()
     val rounds = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
     val (labels, _) = operators.Dedup.connectedComponentsStar(pairs,
       onRound = (iter, edges) => {
         drain()
-        val now = listener.bytes.get()
+        val now = listener.shuffleWrite.get()
         rounds += ((iter, edges, now - last))
         last = now
       })

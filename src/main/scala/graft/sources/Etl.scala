@@ -1756,7 +1756,7 @@ object Etl {
     target.getAbsolutePath
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.Tables
+import graft.sources.Etl
 
 /** Declared-query wrappers around the `StreamingOps` pipelines: each runs
   * the REAL Structured Streaming query (file-stream source → transform →
@@ -48,11 +49,6 @@ object StreamingQueries {
     * every append is new input — including a byte-identical redelivery. */
   private def deliver(df: DataFrame, dir: String): Unit =
     df.write.mode("append").parquet(dir)
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
 
   /** Scratch base for ALL stream-run state — source dirs, staging,
     * offset/commit logs, state-store deltas: tmpfs (`/dev/shm`) when
@@ -119,9 +115,9 @@ object StreamingQueries {
         spark.conf.set("spark.sql.shuffle.partitions", streamStateParts)
         df.writeStream.format("memory").queryName(name)
           // explicit checkpoint under the caller's scratch root (tmpfs,
-          // cleaned by the caller's rmTree) — the default temporary
-          // checkpoint lands on java.io.tmpdir and pays a disk fsync
-          // per micro-batch for offsets/commits/state deltas
+          // cleaned by the caller's deleteRecursively) — the default
+          // temporary checkpoint lands on java.io.tmpdir and pays a disk
+          // fsync per micro-batch for offsets/commits/state deltas
           .option("checkpointLocation",
             ckRoot.resolve(s"ck_$key").toString)
           .outputMode(mode).start()
@@ -154,16 +150,16 @@ object StreamingQueries {
         }
       } finally q.stop()
       spark.table(name)
-    } finally rmTree(root.toFile)
+    } finally Etl.deleteRecursively(root.toFile)
   }
 
   /** Rename-delivery variant of [[runFileStream]]: no Spark job per
     * delivery. `stage` lays every delivery down under the directory it
-    * is given (inside this run's scratch root, so the run's `rmTree`
-    * removes what it leaves on every exit path) and returns the delivery
-    * list in arrival order, each entry the files of one micro-batch;
-    * each delivery is then a plain file RENAME into the monitored
-    * directory. Two stagings use it:
+    * is given (inside this run's scratch root, so the run's
+    * `deleteRecursively` removes what it leaves on every exit path) and
+    * returns the delivery list in arrival order, each entry the files of
+    * one micro-batch; each delivery is then a plain file RENAME into the
+    * monitored directory. Two stagings use it:
     *  - MANY-batch replays pre-write every delivery in ONE partitioned
     *    Spark write (one parquet file per delivery instead of one write
     *    JOB per delivery — the r17 `stream_lateness` finding: 32
@@ -201,7 +197,7 @@ object StreamingQueries {
         }
       } finally q.stop()
       spark.table(name)
-    } finally rmTree(root.toFile)
+    } finally Etl.deleteRecursively(root.toFile)
   }
 
   /** A whole stored table as ONE delivery: its parquet file copied byte
@@ -411,7 +407,7 @@ object StreamingQueries {
           OutputMode.Append(), joined, root)
         try q.processAllAvailable() finally q.stop()
         spark.table(name)
-      } finally rmTree(root.toFile)
+      } finally Etl.deleteRecursively(root.toFile)
     result
       .groupBy($"p_user")
       .agg(count(lit(1)).as("n_pairs"))
@@ -473,7 +469,7 @@ object StreamingQueries {
       // bench warm+timed runs
       val snap = result.localCheckpoint(true)
       snap.orderBy($"user_id".asc)
-    } finally rmTree(root.toFile)
+    } finally Etl.deleteRecursively(root.toFile)
   }
 
   /** Streaming OHLC bars — the stateful ARGMIN/ARGMAX maintenance twin of

@@ -1,8 +1,8 @@
 package graft
 
 /** Driver-contract smoke: every declared query runs and returns rows, the
-  * flagship entry is non-empty, and every oracle key refers to a declared
-  * query. Mirrors the reference's own differential methodology (each query
+  * flagship entry is non-empty, and no query name is declared twice.
+  * Mirrors the reference's own differential methodology (each query
   * implemented 2-4 ways and compared — SURVEY.md §5) via the *Differential*
   * suites; this one guards the contract surface itself.
   */
@@ -64,9 +64,13 @@ class EntrySpec extends SparkSpec {
     df.explain() // S7
   }
 
-  test("oracle keys are a subset of query keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracles without queries: $extra")
+  test("query names are unique") {
+    // `queries` and `oracleSql` are `.toMap` views: a second entry with
+    // the same name would silently replace the first
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
   }
 
   test("oracle column aliases appear in spark output columns") {

@@ -2,16 +2,16 @@
 """Guard: every declared query key appears in SURVEY.md §7.7.
 
 Expands the section's `name_{a,b,c}` brace-group shorthand, then diffs
-against the keys of `SparkEntry.queries`. Exits non-zero on drift —
-run before committing a round's SURVEY refresh (the §7.7 prose drifted
-by exactly one operator in each of rounds 7 and 8).
+against the names declared in `SparkEntry.registry`. Exits non-zero on
+drift — run before committing a round's SURVEY refresh (the §7.7 prose
+drifted by exactly one operator in each of rounds 7 and 8).
 """
 import re, sys
 
 def main():
     src = open('src/main/scala/graft/SparkEntry.scala').read()
-    qsec = src[src.index('def queries'):src.index('def oracleSql')]
-    keys = set(re.findall(r'"([a-z0-9_]+)"\s*->', qsec))
+    reg = src[src.index('val registry'):src.index('lazy val queries')]
+    keys = set(re.findall(r'^    Query\("([a-z0-9_]+)"', reg, re.M))
     survey = open('SURVEY.md').read()
     i77 = survey.index('### 7.7')
     m = re.search(r'\n### (?!7\.7)', survey[i77:])
