@@ -8,7 +8,7 @@ import graft.functions.{CosineSimilarity, HilbertIndex, MinhashSig, Mix64, PolyH
 /** Session extensions for the engine: the one place graft functions and
   * the graft planner strategy are bound. Every GraftSession loads it
   * (`spark.sql.extensions=graft.GraftExtensions`), and so does every
-  * `newSession()` child of one, so `call_function("mix64", ...)`,
+  * [[GraftSession.child]] of one, so `call_function("mix64", ...)`,
   * `expr("cosine_sim(...)")` and SQL text resolve with no per-query
   * registration. Functions bound to fitted data (a plane matrix, a Bloom
   * bitmap) are not names here: they are built as Columns straight from

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a session is built. Bench, Verify, DevTime, StarCcAudit
   * and the test suites all call [[local]], so tests run the exact config
-  * the correctness dump and the bench run. */
+  * the correctness dump and the bench run; a query that needs its own
+  * confs takes a [[child]], and a stream starts inside [[withConfs]]. */
 object GraftSession {
 
   /** Core count the mains run with (`SPARK_GRAFT_CPUS`). */
@@ -35,5 +36,40 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Turns artifact isolation off for a session derived from the main
+    * one. With it on (Spark's default) every session UUID runs its tasks
+    * in its own executor class loader, and Spark keys its generated-code
+    * cache by class loader, so a clone or child made per run compiles all
+    * of its code again on every run. Graft adds no session artifacts, so
+    * the shared loader changes no result; the main session keeps its one
+    * stable loader. */
+  val sharedExecutor: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
+
+  /** A `newSession()` child of `spark` (its own SQLConf, the shared
+    * catalog) with `confs` set, that runs on the shared executor state:
+    * isolation is off before the child's first use, so its generated
+    * code is compiled once per JVM, not once per child. */
+  def child(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = spark.newSession()
+    (sharedExecutor +: confs).foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** `body` with `confs` set on `spark`; each key then goes back to its
+    * prior value, or is unset if it had none. Streams start in here: a
+    * stream runs on a clone that copies the conf at `start()`. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val set = spark.conf.getAll
+    val prior = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.GeoFunctions.{haversineKm, haversineKmScalar}
 
 /** Re-expressions of the reference's four analytical queries
@@ -965,7 +965,7 @@ object RefQueries {
     * a fact⋈fact join broadcasts.
     *
     * Conf scoping: the PERF.md CBO lesson applied — all three confs
-    * live on a `spark.newSession()` child (lazy execution would undo a
+    * live on a [[GraftSession.child]] (lazy execution would undo a
     * set-then-restore; session-wide they would flip every other
     * query's join strategy). The two thresholds exist because the
     * DEFAULTS (10 MB creation / 10 GB application-side scan) correctly
@@ -976,14 +976,12 @@ object RefQueries {
     * a shuffle join, the answer is invariant, and the parent session's
     * confs are untouched. */
   def qRuntimeFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val child = spark.newSession()
-    child.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    child.conf.set("spark.sql.optimizer.runtime.bloomFilter" +
-      ".applicationSideScanSizeThreshold", "0")
-    child.conf.set("spark.sql.optimizer.runtime.bloomFilter" +
-      ".creationSideThreshold", "100MB")
-    child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    runtimeFilterQuery(child, sfDir)
+    val bloom = "spark.sql.optimizer.runtime.bloomFilter"
+    runtimeFilterQuery(GraftSession.child(spark,
+      s"$bloom.enabled" -> "true",
+      s"$bloom.applicationSideScanSizeThreshold" -> "0",
+      s"$bloom.creationSideThreshold" -> "100MB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"), sfDir)
   }
 
   /** The join [[qRuntimeFilter]] runs — exposed so PlanSpec can compare
@@ -2455,14 +2453,12 @@ object RefQueries {
       .orderBy($"col_name".asc)
   }
 
-  /** Sketch aggregation: exact `countDistinct` next to the HyperLogLog++
-    * `approx_count_distinct` — at 100 TB the exact distinct is a full
-    * shuffle of the key set while the sketch is a few KB per partition;
-    * this query exposes both so the error is observable. Approx column →
-    * rows-only driver check; the accuracy bound is asserted in
-    * `SketchSpec`. */
-  /** Raw form: exact distincts next to the HLL estimates (SketchSpec
-    * asserts the 3-sigma error bound on these columns directly). */
+  /** Sketch aggregation, raw form: exact `countDistinct` next to the
+    * HyperLogLog++ `approx_count_distinct` — at 100 TB the exact distinct
+    * is a full shuffle of the key set while the sketch is a few KB per
+    * partition; both are exposed so the error is observable. SketchSpec
+    * asserts the 3-sigma error bound on these columns directly;
+    * [[qApproxDistinct]] is the oracle-gated declared form. */
   def qApproxDistinctRaw(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val li = Tables.read(spark, sfDir, "lineitem")
@@ -2806,7 +2802,7 @@ object RefQueries {
     * answer's invariance; the declared output is the priority revenue
     * rollup, hash-gated like any other query.
     *
-    * The CBO confs live on a CHILD session (`spark.newSession()`), never
+    * The CBO confs live on a CHILD session ([[GraftSession.child]]), never
     * the caller's: Spark optimizes a DataFrame lazily when the CALLER
     * executes it, so a set-then-restore on the parent would silently
     * undo the reorder before the plan ever runs — but leaving CBO on
@@ -2821,9 +2817,7 @@ object RefQueries {
     * every other bench/verify query — keeps the defaults. PlanSpec
     * asserts the parent's conf is untouched after building the query. */
   def qCboReorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val child = spark.newSession()
-    child.conf.set("spark.sql.cbo.enabled", "true")
-    child.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    cboQuery(child, sfDir)
+    cboQuery(GraftSession.child(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true"), sfDir)
   }
 }

@@ -113,8 +113,9 @@ object Similarity {
 
   /** LSH-bucketed approximate top-k: same output shape as the brute-force
     * baseline but candidates limited to vectors sharing ≥1 of 4 signature
-    * bands with the query. Approximate (can miss true neighbors) →
-    * rows-only check, with the brute-force entry as the recall reference. */
+    * bands with the query. Approximate (can miss true neighbors); the
+    * oracle replays the same signature bands, so candidates and ranks are
+    * hash-gated, and the brute-force entry is the recall reference. */
   def topKLsh(spark: SparkSession, sfDir: String,
       k: Int = 5, nQueries: Int = 3): DataFrame = {
     import spark.implicits._

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.GraftSession
 
 /** Structured Streaming operators — the streaming twins of the batch
   * `graft.operators.Events` queries. The reference is purely batch
@@ -183,21 +184,6 @@ object StreamingOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
   }
 
-  /** Streaming incremental aggregation via `foreachBatch` — the
-    * production pattern behind the batch `Events.incrementalAgg`: each
-    * micro-batch's per-user (count, decimal-sum) partials merge into a
-    * persisted state table. GENERATIONAL state dirs (`state_v<batchId>`)
-    * make the merge idempotent: a replayed micro-batch after a crash
-    * rewrites the same generation from the same predecessor instead of
-    * double-counting — foreachBatch's at-least-once redelivery composes
-    * to exactly-once because generation N is a pure function of
-    * (generation N-1, batch N). That composition REQUIRES durable batch
-    * ids, so the query checkpoints under `stateRoot/_checkpoint` (same
-    * durability domain as the state itself): a restarted query resumes
-    * its batch numbering instead of starting a fresh temp checkpoint at
-    * batch 0 — which would take the delta-only branch and silently reset
-    * the totals. In production the state table is a MERGE INTO target;
-    * the generational parquet dir is the dependency-free equivalent. */
   /** `state_v<N>` directory-name parse, shared by the retention pruner
     * below and StreamingQueries' generation reader — ONE definition of
     * "which directories are generations", so a future change (e.g.
@@ -212,52 +198,74 @@ object StreamingOps {
     else None
   }
 
+  /** Streaming incremental aggregation via `foreachBatch` — the
+    * production pattern behind the batch `Events.incrementalAgg`: each
+    * micro-batch's per-user (count, decimal-sum) partials merge into a
+    * persisted state table. GENERATIONAL state dirs (`state_v<batchId>`)
+    * make the merge idempotent: a replayed micro-batch after a crash
+    * rewrites the same generation from the same predecessor instead of
+    * double-counting — foreachBatch's at-least-once redelivery composes
+    * to exactly-once because generation N is a pure function of
+    * (generation N-1, batch N). That composition REQUIRES durable batch
+    * ids, so the query checkpoints under `stateRoot/_checkpoint` (same
+    * durability domain as the state itself): a restarted query resumes
+    * its batch numbering instead of starting a fresh temp checkpoint at
+    * batch 0 — which would take the delta-only branch and silently reset
+    * the totals. In production the state table is a MERGE INTO target;
+    * the generational parquet dir is the dependency-free equivalent.
+    * The query starts inside [[GraftSession.withConfs]] with the
+    * shared executor class loader, so its batches compile once per JVM. */
   def incrementalAggSink(events: DataFrame, stateRoot: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.DataFrame
-    events.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", s"$stateRoot/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        import sp.implicits._
-        // the sum's raw type is decimal(30,6); cast back so batch 0 (which
-        // writes the bare delta) has the same schema as every later
-        // generation — no drift across generation dirs
-        val delta = batch.groupBy($"user_id")
-          .agg(count(lit(1)).as("n"),
-            sum($"value".cast("decimal(20,6)")).cast("decimal(20,6)").as("s"))
-        val prevPath = new org.apache.hadoop.fs.Path(
-          s"$stateRoot/state_v${batchId - 1}")
-        // Hadoop FS, not java.io.File: stateRoot may be hdfs://s3a://;
-        // and a MISSING predecessor for batchId > 0 must fail loudly —
-        // silently merging delta-only would reset the running totals,
-        // which is exactly the wrong-totals bug the generational design
-        // exists to prevent. (batchId 0 legitimately has no predecessor.)
-        val fs = prevPath.getFileSystem(
-          sp.sessionState.newHadoopConf())
-        val merged =
-          if (batchId == 0L) delta
-          else if (!fs.exists(prevPath))
-            throw new IllegalStateException(
-              s"incrementalAggSink: predecessor generation $prevPath " +
-                s"missing for batch $batchId — refusing to reset totals")
-          else sp.read.parquet(prevPath.toString).union(delta)
-            .groupBy($"user_id")
-            .agg(sum($"n").as("n"),
-              sum($"s").cast("decimal(20,6)").as("s"))
-        merged.write.mode("overwrite")
-          .parquet(s"$stateRoot/state_v$batchId")
-        // Retention: a replay of batch N (at-least-once redelivery) reads
-        // only generation N-1, so once N is durably written every
-        // generation <= N-2 is dead — prune it or storage grows with
-        // batch count forever on a long-running query.
-        val root = new org.apache.hadoop.fs.Path(stateRoot)
-        if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-          if (parseGeneration(st.getPath.getName).exists(_ <= batchId - 2))
-            fs.delete(st.getPath, true): Unit
+    GraftSession.withConfs(events.sparkSession,
+        GraftSession.sharedExecutor) {
+      events.writeStream
+        .outputMode(OutputMode.Update)
+        .option("checkpointLocation", s"$stateRoot/_checkpoint")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val sp = batch.sparkSession
+          import sp.implicits._
+          // the sum's raw type is decimal(30,6); cast back so batch 0
+          // (which writes the bare delta) has the same schema as every
+          // later generation — no drift across generation dirs
+          val delta = batch.groupBy($"user_id")
+            .agg(count(lit(1)).as("n"),
+              sum($"value".cast("decimal(20,6)"))
+                .cast("decimal(20,6)").as("s"))
+          val prevPath = new org.apache.hadoop.fs.Path(
+            s"$stateRoot/state_v${batchId - 1}")
+          // Hadoop FS, not java.io.File: stateRoot may be hdfs://s3a://;
+          // and a MISSING predecessor for batchId > 0 must fail loudly —
+          // silently merging delta-only would reset the running totals,
+          // which is exactly the wrong-totals bug the generational design
+          // exists to prevent. (batchId 0 legitimately has no predecessor.)
+          val fs = prevPath.getFileSystem(
+            sp.sessionState.newHadoopConf())
+          val merged =
+            if (batchId == 0L) delta
+            else if (!fs.exists(prevPath))
+              throw new IllegalStateException(
+                s"incrementalAggSink: predecessor generation $prevPath " +
+                  s"missing for batch $batchId — refusing to reset totals")
+            else sp.read.parquet(prevPath.toString).union(delta)
+              .groupBy($"user_id")
+              .agg(sum($"n").as("n"),
+                sum($"s").cast("decimal(20,6)").as("s"))
+          merged.write.mode("overwrite")
+            .parquet(s"$stateRoot/state_v$batchId")
+          // Retention: a replay of batch N (at-least-once redelivery)
+          // reads only generation N-1, so once N is durably written every
+          // generation <= N-2 is dead — prune it or storage grows with
+          // batch count forever on a long-running query.
+          val root = new org.apache.hadoop.fs.Path(stateRoot)
+          if (fs.exists(root)) fs.listStatus(root).foreach { st =>
+            if (parseGeneration(st.getPath.getName)
+                .exists(_ <= batchId - 2))
+              fs.delete(st.getPath, true): Unit
+          }
         }
-      }
-      .start()
+        .start()
+    }
   }
 }

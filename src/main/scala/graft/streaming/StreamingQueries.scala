@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.sources.Etl
 
 /** Declared-query wrappers around the `StreamingOps` pipelines: each runs
@@ -91,11 +91,13 @@ object StreamingQueries {
     * the temp source dir is deleted before returning (the memory sink
     * holds the results, so the source files are dead weight).
     *
-    * The stream's state layout is pinned to [[streamStateParts]]
-    * partitions for the query's lifetime (scoped save/restore around
-    * `start()` — the conf is captured at query start, so concurrent
-    * batch plans on the session are unaffected): stateful operators run
-    * one state store per shuffle partition (FOUR for a stream-stream
+    * The stream starts inside [[GraftSession.withConfs]]: its clone
+    * copies the session conf at `start()`, and the session gets its prior
+    * values back right after, so concurrent batch plans are unaffected.
+    * It sets [[GraftSession.sharedExecutor]], so the stream's generated
+    * code is compiled once per JVM and not on every run, and pins the
+    * state layout to [[streamStateParts]] partitions: stateful operators
+    * run one state store per shuffle partition (FOUR for a stream-stream
     * join), and EVERY micro-batch — including the load-bearing no-data
     * eviction batches — schedules one task and commits one delta file
     * per store. r17 pinned 8; the r18 profile of stream_lateness (64
@@ -109,19 +111,16 @@ object StreamingQueries {
       : (String, org.apache.spark.sql.streaming.StreamingQuery) = {
     val name = s"graft_sink_$key"
     spark.catalog.dropTempView(name)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", streamStateParts)
-        df.writeStream.format("memory").queryName(name)
-          // explicit checkpoint under the caller's scratch root (tmpfs,
-          // cleaned by the caller's deleteRecursively) — the default
-          // temporary checkpoint lands on java.io.tmpdir and pays a disk
-          // fsync per micro-batch for offsets/commits/state deltas
-          .option("checkpointLocation",
-            ckRoot.resolve(s"ck_$key").toString)
-          .outputMode(mode).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
+    val q = GraftSession.withConfs(spark, GraftSession.sharedExecutor,
+        "spark.sql.shuffle.partitions" -> streamStateParts) {
+      df.writeStream.format("memory").queryName(name)
+        // explicit checkpoint under the caller's scratch root (tmpfs,
+        // cleaned by the caller's deleteRecursively) — the default
+        // temporary checkpoint lands on java.io.tmpdir and pays a disk
+        // fsync per micro-batch for offsets/commits/state deltas
+        .option("checkpointLocation", ckRoot.resolve(s"ck_$key").toString)
+        .outputMode(mode).start()
+    }
     (name, q)
   }
   // NOTE (r17, measured dead end): disabling no-data micro-batches

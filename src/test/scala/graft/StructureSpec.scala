@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source-tree guards that keep the single seams single: one session
-  * builder (GraftSession), function names and planner strategies bound
-  * only through GraftExtensions, one connected-components loop, and a
-  * fixed set of environment keys. */
+  * builder (GraftSession), derived sessions and stream starts only through
+  * its `child` and `withConfs`, function names and planner strategies
+  * bound only through GraftExtensions, one connected-components loop, and
+  * a fixed set of environment keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -34,6 +35,27 @@ class StructureSpec extends AnyFunSuite {
     val bad = offenders("SparkSession.builder",
       _.getFileName.toString == "GraftSession.scala")
     assert(bad.isEmpty, s"build sessions with GraftSession.local: $bad")
+  }
+
+  test("newSession( appears only in GraftSession: children come from" +
+      " GraftSession.child") {
+    val bad = offenders("newSession(",
+      _.getFileName.toString == "GraftSession.scala")
+    assert(bad.isEmpty, s"derive sessions with GraftSession.child: $bad")
+  }
+
+  test("every writeStream starts inside GraftSession.withConfs") {
+    val any = """\.writeStream\b""".r
+    val scoped = """withConfs\([^{}]*?[{(]\s*\w+\.writeStream\b""".r
+    val streams = sources.filter { case (_, text) =>
+      any.findFirstIn(text).nonEmpty
+    }
+    assert(streams.nonEmpty, "no writeStream under the program sources")
+    val bad = streams.collect {
+      case (p, text) if any.findAllMatchIn(text).size !=
+          scoped.findAllMatchIn(text).size => p.toString
+    }
+    assert(bad.isEmpty, s"a stream starts outside withConfs in: $bad")
   }
 
   test("no createOrReplaceTempFunction: graft functions bind through" +

@@ -3,10 +3,11 @@
 
 Usage: python3 tools/check.py <sfDir> <outDir> [jsonOut]
 
-For each <outDir>/<name> parquet dir with an entry in oracle_sql.json:
-run the oracle in DuckDB (views named after tables over <sfDir> parquet),
+For each <outDir>/<name> parquet dir: run its oracle_sql.json entry in
+DuckDB (views named after tables over <sfDir> parquet),
 sort columns by name, sort rows, compare cell-by-cell. Reports match /
-mismatch with diff details. Queries without oracle entries → rows-only.
+mismatch with diff details. A dumped query with no oracle entry fails
+("no oracle entry"): the oracle file and the dump disagree.
 With jsonOut, also writes a per-query {match, rows, detail} JSON summary
 (the committed large-scale sweep artifact).
 
@@ -39,10 +40,9 @@ def check_one(con, name, d, oracles, record):
         record(False, 0, "no output files"); return False
     got = con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
     if name not in oracles:
-        print(f"  {name}: rows-only ({len(got)} rows)"
-              + (" EMPTY!" if len(got) == 0 else ""))
-        record(len(got) > 0, len(got), "rows-only")
-        return len(got) > 0
+        print(f"  {name}: NO ORACLE ENTRY ({len(got)} rows)")
+        record(False, len(got), "no oracle entry")
+        return False
     try:
         exp = con.execute(oracles[name]).fetchdf()
     except Exception as e:
