@@ -1,9 +1,12 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 import graft.{GraftSession, Tables}
 import graft.sources.Etl
 
@@ -16,17 +19,20 @@ import graft.sources.Etl
   * batch/stream equivalence StreamingSpec asserts on toy fixtures, the
   * driver hash-verifies on the full fixture.
   *
-  * Source stance (r6): the declared queries feed via Spark's FILE-STREAM
-  * source (`readStream.schema(...).parquet(dir)`), each delivery drained
-  * with `processAllAvailable()` so batch boundaries are deterministic. A
-  * delivery of a filtered slice is a distributed parquet write into the
-  * monitored directory ([[runFileStream]]); a delivery of the WHOLE
-  * stored events table is a byte copy of its parquet file renamed in
-  * ([[runEventsStream]]), so no Spark job runs before the stream and the
-  * micro-batch is the table's only scan. Nothing
-  * data-sized ever touches the driver (the r5 MemoryStream feed collected
-  * the fixture driver-side; MemoryStream now lives only in StreamingSpec's
-  * toy fixtures). In production the source swaps to
+  * Source stance: the declared queries feed via Spark's FILE-STREAM
+  * source (`readStream.schema(...).parquet(dir)`). Every delivery is
+  * staged before the stream starts, in one of two ways, and reaches the
+  * monitored directory by file RENAME in [[replay]], the one replay loop,
+  * which drains the query with `processAllAvailable()` after each
+  * delivery so batch boundaries are deterministic:
+  *  - filtered slices (and any other computed deliveries) are laid down
+  *    by ONE Spark write for the whole replay ([[stageDeliveries]]: one
+  *    parquet file per delivery);
+  *  - a delivery of the WHOLE stored events table is a byte copy of its
+  *    parquet file ([[copyTable]]), so no Spark job runs before the
+  *    stream and the micro-batch is the table's only scan.
+  * Nothing data-sized ever touches the driver (MemoryStream lives only in
+  * StreamingSpec's toy fixtures). In production the source swaps to
   * `readStream.format("kafka")` one line per query; every pipeline here is
   * already partitioned/watermarked for unbounded input (state is O(active
   * keys or windows), never O(stream length)). Sinks are kept small by
@@ -42,13 +48,6 @@ object StreamingQueries {
     * it stays pruned from the scan). */
   private def eventColumns(events: DataFrame): DataFrame =
     events.select("event_id", "user_id", "ts", "event_type", "value")
-
-  /** One micro-batch worth of input: a distributed parquet append into the
-    * monitored directory. The file source tracks files by PATH (part
-    * files are UUID-named, `_SUCCESS` markers are filtered as hidden), so
-    * every append is new input — including a byte-identical redelivery. */
-  private def deliver(df: DataFrame, dir: String): Unit =
-    df.write.mode("append").parquet(dir)
 
   /** Scratch base for ALL stream-run state — source dirs, staging,
     * offset/commit logs, state-store deltas: tmpfs (`/dev/shm`) when
@@ -82,14 +81,10 @@ object StreamingQueries {
   /** See [[startToSink]]'s scaladoc. */
   private val streamStateParts: String = "2"
 
-  /** Run one streaming query to completion over the file-stream source:
-    * each element of `batches` is delivered as (at least) one micro-batch
-    * — written to the monitored dir, then drained — and the memory sink is
-    * read back as a DataFrame. The sink name is deterministic per query
-    * key (and the previous run's view is dropped) so repeated invocations
-    * — bench warm-up + timed pass — can't accumulate sinks or collide;
-    * the temp source dir is deleted before returning (the memory sink
-    * holds the results, so the source files are dead weight).
+  /** Starts `df` into a memory sink named `graft_sink_<key>` (the
+    * query's `name`). The sink name is deterministic per query key (and
+    * the previous run's view is dropped) so repeated invocations — bench
+    * warm-up + timed pass — can't accumulate sinks or collide.
     *
     * The stream starts inside [[GraftSession.withConfs]]: its clone
     * copies the session conf at `start()`, and the session gets its prior
@@ -106,12 +101,10 @@ object StreamingQueries {
     * deliveries here are KB-sized, and results are partition-count
     * invariant (oracle-gated). */
   private def startToSink(spark: SparkSession, key: String,
-      mode: OutputMode, df: DataFrame,
-      ckRoot: java.nio.file.Path)
-      : (String, org.apache.spark.sql.streaming.StreamingQuery) = {
+      mode: OutputMode, df: DataFrame, ckRoot: Path): StreamingQuery = {
     val name = s"graft_sink_$key"
     spark.catalog.dropTempView(name)
-    val q = GraftSession.withConfs(spark, GraftSession.sharedExecutor,
+    GraftSession.withConfs(spark, GraftSession.sharedExecutor,
         "spark.sql.shuffle.partitions" -> streamStateParts) {
       df.writeStream.format("memory").queryName(name)
         // explicit checkpoint under the caller's scratch root (tmpfs,
@@ -121,7 +114,6 @@ object StreamingQueries {
         .option("checkpointLocation", ckRoot.resolve(s"ck_$key").toString)
         .outputMode(mode).start()
     }
-    (name, q)
   }
   // NOTE (r17, measured dead end): disabling no-data micro-batches
   // (`spark.sql.streaming.noDataMicroBatches.enabled=false`) halves the
@@ -132,86 +124,108 @@ object StreamingQueries {
   // step more leniently (stream_lateness admitted 4 extra rows at
   // sf0.01). The oracles model the default; the knob must stay on.
 
-  private def runFileStream(spark: SparkSession, key: String,
-      batches: Seq[DataFrame], mode: OutputMode)(
+  /** Stages a replay's deliveries in ONE Spark job: `deliveries` carries
+    * each row's delivery index in an integer `bid` column (arrival
+    * order), and is written under `dir` partitioned by `bid` from a
+    * single task (`coalesce(1)`), so every delivery is exactly one
+    * parquet file. No shuffle: `repartition(bid)` would give the same
+    * files, but under AQE its exchange materialises as a job of its own.
+    * Returns each delivery's files keyed by bid, in NUMERIC bid order; a
+    * bid with no rows gets no directory, so an empty delivery is left
+    * out. The files are staging only — [[replay]] renames them into a
+    * monitored directory, and the caller's scratch root removes the
+    * rest. */
+  private[graft] def stageDeliveries(deliveries: DataFrame, dir: Path)
+      : Seq[(Long, Seq[File])] = {
+    deliveries.coalesce(1).write.partitionBy("bid").mode("overwrite")
+      .parquet(dir.toString)
+    dir.toFile.listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith("bid="))
+      .map { d =>
+        d.getName.stripPrefix("bid=").toLong ->
+          d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+      }
+      .sortBy(_._1)
+  }
+
+  /** [[stageDeliveries]] over one frame per delivery, in arrival order
+    * (delivery i gets bid i; the frames union by column name). */
+  private[graft] def stageDeliveries(deliveries: Seq[DataFrame], dir: Path)
+      : Seq[(Long, Seq[File])] =
+    stageDeliveries(deliveries.zipWithIndex
+      .map { case (df, i) => df.withColumn("bid", lit(i.toLong)) }
+      .reduce(_ unionByName _), dir)
+
+  /** The one replay loop: delivery 0 is renamed into its source
+    * directories, the query is started and drained, then each later
+    * delivery is renamed in and drained in turn, so every delivery is (at
+    * least) one micro-batch. A delivery is a list of (staged file,
+    * monitored directory) moves; the file source tracks files by PATH, so
+    * every rename is new input — including a byte-identical redelivery.
+    * A `b<i>-` prefix keeps names unique across deliveries (part-file
+    * names can repeat across the partition dirs of one write). Returns
+    * the stopped query. */
+  private def replay(deliveries: Seq[Seq[(File, Path)]])(
+      start: => StreamingQuery): StreamingQuery = {
+    def moveIn(i: Int): Unit = deliveries(i).foreach { case (f, dir) =>
+      Files.move(f.toPath, dir.resolve(s"b$i-${f.getName}")): Unit
+    }
+    if (deliveries.nonEmpty) moveIn(0)
+    val q = start
+    try {
+      q.processAllAvailable()
+      deliveries.indices.drop(1).foreach { i =>
+        moveIn(i)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    q
+  }
+
+  /** Runs `pipeline` as a stream over one file-stream source declaring
+    * `schema`, fed by [[replay]], and reads the memory sink back as a
+    * DataFrame. `stage` lays every delivery down under the directory it
+    * is given and returns the files of each micro-batch in arrival
+    * order — [[stageDeliveries]] or [[copyTable]]. Everything a run
+    * leaves (staging, source dir, checkpoint) sits under one scratch
+    * root, deleted on every exit path: the memory sink holds the
+    * results, so the source files are dead weight. */
+  private def runStaged(spark: SparkSession, key: String,
+      schema: StructType, mode: OutputMode)(
+      stage: Path => Seq[Seq[File]])(
       pipeline: DataFrame => DataFrame): DataFrame = {
     val root = streamTmp(s"graft_stream_$key")
     try {
-      val srcDir = root.resolve("src").toString
-      deliver(batches.head, srcDir)
-      val src = spark.readStream.schema(batches.head.schema).parquet(srcDir)
-      val (name, q) = startToSink(spark, key, mode, pipeline(src), root)
-      try {
-        q.processAllAvailable()
-        batches.tail.foreach { b =>
-          deliver(b, srcDir)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.table(name)
+      val srcDir = Files.createDirectories(root.resolve("src"))
+      val staged = stage(root.resolve("stage"))
+      val q = replay(staged.map(_.map(_ -> srcDir))) {
+        val src = spark.readStream.schema(schema).parquet(srcDir.toString)
+        startToSink(spark, key, mode, pipeline(src), root)
+      }
+      spark.table(q.name)
     } finally Etl.deleteRecursively(root.toFile)
   }
 
-  /** Rename-delivery variant of [[runFileStream]]: no Spark job per
-    * delivery. `stage` lays every delivery down under the directory it
-    * is given (inside this run's scratch root, so the run's
-    * `deleteRecursively` removes what it leaves on every exit path) and
-    * returns the delivery list in arrival order, each entry the files of
-    * one micro-batch; each delivery is then a plain file RENAME into the
-    * monitored directory. Two stagings use it:
-    *  - MANY-batch replays pre-write every delivery in ONE partitioned
-    *    Spark write (one parquet file per delivery instead of one write
-    *    JOB per delivery — the r17 `stream_lateness` finding: 32
-    *    filter+write jobs emitted ~32 part-files EACH, so the file
-    *    source re-listed a directory growing toward ~1000 tiny files
-    *    every micro-batch);
-    *  - a whole stored table is a byte copy of its parquet file
-    *    ([[copyTable]]): no Spark job at all, where a write would have
-    *    read and re-encoded every row before the stream read them
-    *    again. */
-  private def runFileStreamStaged(spark: SparkSession, key: String,
-      schema: org.apache.spark.sql.types.StructType, mode: OutputMode)(
-      stage: java.nio.file.Path => Seq[Seq[java.io.File]])(
-      pipeline: DataFrame => DataFrame): DataFrame = {
-    val root = streamTmp(s"graft_stream_$key")
-    try {
-      val staged = stage(root.resolve("stage"))
-      val srcDir = root.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      // batch index prefixes keep names unique across deliveries (part
-      // file names can repeat across partition dirs of one write)
-      def moveIn(files: Seq[java.io.File], i: Int): Unit =
-        files.foreach { f =>
-          java.nio.file.Files.move(f.toPath,
-            srcDir.resolve(s"b$i-${f.getName}")): Unit
-        }
-      moveIn(staged.head, 0)
-      val src = spark.readStream.schema(schema).parquet(srcDir.toString)
-      val (name, q) = startToSink(spark, key, mode, pipeline(src), root)
-      try {
-        q.processAllAvailable()
-        staged.tail.zipWithIndex.foreach { case (files, i) =>
-          moveIn(files, i + 1)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      spark.table(name)
-    } finally Etl.deleteRecursively(root.toFile)
-  }
+  /** [[runStaged]] over one frame per delivery, in arrival order, staged
+    * by [[stageDeliveries]]; the source declares the first frame's
+    * schema. */
+  private def runStaged(spark: SparkSession, key: String,
+      deliveries: Seq[DataFrame], mode: OutputMode)(
+      pipeline: DataFrame => DataFrame): DataFrame =
+    runStaged(spark, key, deliveries.head.schema, mode)(
+      stageDeliveries(deliveries, _).map(_._2))(pipeline)
 
   /** A whole stored table as ONE delivery: its parquet file copied byte
     * for byte into `dir`. The table is only ever read — fixtures may sit
     * on read-only storage, so it is never linked, renamed or written.
     * Fails unless the table is a non-empty regular file and the copy is
     * whole, so a stream never runs over a silently empty source. */
-  private def copyTable(table: String, dir: java.nio.file.Path)
-      : java.io.File = {
-    val src = new java.io.File(table)
+  private def copyTable(table: String, dir: Path): File = {
+    val src = new File(table)
     require(src.isFile && src.length > 0,
       s"whole-table delivery: $table is not a non-empty parquet file")
-    java.nio.file.Files.createDirectories(dir)
-    val copy = java.nio.file.Files.copy(src.toPath,
-      dir.resolve(src.getName)).toFile
+    Files.createDirectories(dir)
+    val copy = Files.copy(src.toPath, dir.resolve(src.getName)).toFile
     require(copy.length == src.length,
       s"whole-table delivery: copied ${copy.length} of ${src.length} " +
         s"bytes of $table")
@@ -219,17 +233,16 @@ object StreamingQueries {
   }
 
   /** Runs `pipeline` as a stream over ONE delivery of the whole events
-    * table ([[copyTable]] through [[runFileStreamStaged]]): no Spark job
-    * runs before the stream starts, and its micro-batch is the table's
-    * only scan. The source declares the stored file's raw schema
-    * (memoised by `Tables.rawSchema`, so no footer job); `pipeline` sees
-    * what [[eventsDf]] gives a batch query — `Tables.normalizeEvents`,
-    * then the five event columns. */
+    * table ([[copyTable]] through [[runStaged]]): no Spark job runs
+    * before the stream starts, and its micro-batch is the table's only
+    * scan. The source declares the stored file's raw schema (memoised by
+    * `Tables.rawSchema`, so no footer job); `pipeline` sees what
+    * [[eventsDf]] gives a batch query — `Tables.normalizeEvents`, then
+    * the five event columns. */
   private def runEventsStream(spark: SparkSession, sfDir: String,
       key: String, mode: OutputMode)(
       pipeline: DataFrame => DataFrame): DataFrame =
-    runFileStreamStaged(spark, key,
-      Tables.rawSchema(spark, sfDir, "events"), mode)(
+    runStaged(spark, key, Tables.rawSchema(spark, sfDir, "events"), mode)(
       dir => Seq(Seq(copyTable(Tables.file(sfDir, "events"), dir)))) {
       src => pipeline(eventColumns(Tables.normalizeEvents(src)))
     }
@@ -269,7 +282,7 @@ object StreamingQueries {
     require(!maxRow.isNullAt(0), "events fixture is empty")
     val bound =
       new Timestamp(maxRow.getLong(0) / 1000L - 9L * 60000L)
-    val out = runFileStream(spark, "dedup",
+    val out = runStaged(spark, "dedup",
       Seq(ev, ev.filter($"ts" > lit(bound))), OutputMode.Append()) { df =>
       StreamingOps.dedupStream(df)
     }
@@ -314,7 +327,7 @@ object StreamingQueries {
   def hllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = eventsDf(spark, sfDir)
-    val out = runFileStream(spark, "hll_registers",
+    val out = runStaged(spark, "hll_registers",
       Seq(ev.filter($"event_id" % 2 === 0), ev.filter($"event_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
       graft.operators.Sketches.hllDayRegisters(df)
@@ -345,7 +358,7 @@ object StreamingQueries {
       Seq((-1L, new Timestamp(maxUs / 1000L + plusMin * 60000L), 0.0))
         .toDF("user_id", "ts", "value")
     // +41 min: past every lastEvent+gap(30)+watermark(10) horizon
-    val out = runFileStream(spark, "sessionize",
+    val out = runStaged(spark, "sessionize",
       Seq(evs, sentinel(41), sentinel(120)), OutputMode.Append()) { df =>
       StreamingOps.sessionize(df.as[StreamingOps.Ev], gapMinutes = 30).toDF()
     }
@@ -382,30 +395,33 @@ object StreamingQueries {
   def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = eventsDf(spark, sfDir)
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id".as("c_user"), $"ts".as("c_ts"),
-        $"event_id".as("c_id"))
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id".as("p_user"), $"ts".as("p_ts"),
-        $"event_id".as("p_id"))
+    // both sides staged by ONE write (bid 0 = clicks, 1 = purchases) and
+    // renamed into their own source dirs as one delivery, before the start
+    val sides = ev.filter($"event_type".isin("click", "purchase"))
+      .select($"user_id", $"ts", $"event_id",
+        when($"event_type" === "click", 0L).otherwise(1L).as("bid"))
     val root = streamTmp("graft_stream_join")
     val result =
       try {
-        val cDir = root.resolve("clicks").toString
-        val pDir = root.resolve("purchases").toString
-        deliver(clicks, cDir)
-        deliver(purchases, pDir)
-        val cs = spark.readStream.schema(clicks.schema).parquet(cDir)
-        val ps = spark.readStream.schema(purchases.schema).parquet(pDir)
-        val joined = StreamingOps.clickAttribution(cs, ps)
-        // two sources, so the single-source runFileStream doesn't fit —
-        // but the pinned-layout start/sink scaffolding is shared (a
+        val dirs = Seq("clicks", "purchases")
+          .map(d => Files.createDirectories(root.resolve(d)))
+        val staged = stageDeliveries(sides, root.resolve("stage"))
+        def side(bid: Int, p: String): DataFrame =
+          spark.readStream.schema(sides.drop("bid").schema)
+            .parquet(dirs(bid).toString)
+            .select($"user_id".as(s"${p}_user"), $"ts".as(s"${p}_ts"),
+              $"event_id".as(s"${p}_id"))
+        // two sources, so the single-source runStaged doesn't fit — but
+        // the replay loop and the pinned-layout start/sink are shared (a
         // stream-stream join runs FOUR state stores per shuffle
-        // partition, the case the 8-partition pin exists for)
-        val (name, q) = startToSink(spark, "stream_join",
-          OutputMode.Append(), joined, root)
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
+        // partition, so the [[streamStateParts]] pin matters most here)
+        val q = replay(Seq(staged.flatMap { case (bid, files) =>
+          files.map(_ -> dirs(bid.toInt))
+        })) {
+          startToSink(spark, "stream_join", OutputMode.Append(),
+            StreamingOps.clickAttribution(side(0, "c"), side(1, "p")), root)
+        }
+        spark.table(q.name)
       } finally Etl.deleteRecursively(root.toFile)
     result
       .groupBy($"p_user")
@@ -428,26 +444,25 @@ object StreamingQueries {
     val cutUs = java.time.Instant.parse("2024-01-20T00:00:00Z")
       .getEpochSecond * 1000000L
     val ev = eventsDf(spark, sfDir)
-    val hist = ev.filter(unix_micros($"ts") < cutUs)
-    val delta = ev.filter(unix_micros($"ts") >= cutUs)
-    // a one-sided split would still write a metadata-only parquet file,
-    // fire an empty micro-batch, and leave state_v1 in place — the
-    // merge-equals-recompute proof would pass VACUOUSLY; fail loudly
-    // instead (limit-1 existence probes, not counts)
-    require(!hist.isEmpty && !delta.isEmpty,
-      "cutoff must split the fixture into two non-empty batches")
     val root = streamTmp("graft_stream_inc")
     try {
-      val srcDir = root.resolve("src").toString
+      val srcDir = Files.createDirectories(root.resolve("src"))
       val stateRoot = root.resolve("state").toString
-      deliver(hist, srcDir)
-      val src = spark.readStream.schema(ev.schema).parquet(srcDir)
-      val q = StreamingOps.incrementalAggSink(src, stateRoot)
-      try {
-        q.processAllAvailable()
-        deliver(delta, srcDir)
-        q.processAllAvailable()
-      } finally q.stop()
+      val staged = stageDeliveries(
+        Seq(ev.filter(unix_micros($"ts") < cutUs),
+          ev.filter(unix_micros($"ts") >= cutUs)),
+        root.resolve("stage"))
+      // a one-sided split would leave one delivery, fire one micro-batch,
+      // and leave state_v0 in place — the merge-equals-recompute proof
+      // would pass VACUOUSLY; fail loudly instead (the stager leaves
+      // empty deliveries out, so no probe job is needed)
+      require(staged.size == 2,
+        "cutoff must split the fixture into two non-empty batches")
+      replay(staged.map(_._2.map(_ -> srcDir))) {
+        StreamingOps.incrementalAggSink(
+          spark.readStream.schema(ev.schema).parquet(srcDir.toString),
+          stateRoot)
+      }
       // locate the last surviving generation (older ones are pruned by
       // the sink's retention pass)
       val statePath = new org.apache.hadoop.fs.Path(stateRoot)
@@ -487,7 +502,7 @@ object StreamingQueries {
       .agg(min($"event_id"), max($"event_id")).head()
     require(!bounds.isNullAt(0), "events fixture is empty")
     val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2L
-    val out = runFileStream(spark, "ohlc",
+    val out = runStaged(spark, "ohlc",
       Seq(ev.filter($"event_id" <= mid), ev.filter($"event_id" > mid)),
       OutputMode.Complete()) { df =>
       df.groupBy($"event_type", to_date($"ts").cast("string").as("day"))
@@ -524,7 +539,7 @@ object StreamingQueries {
   def heavyHittersCms(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val fact = graft.operators.Sketches.cmsFact(spark, sfDir)
-    val out = runFileStream(spark, "cms_cells",
+    val out = runStaged(spark, "cms_cells",
       Seq(fact.filter($"half" === 0), fact.filter($"half" === 1)),
       OutputMode.Complete()) { df =>
       graft.operators.Sketches.cmsCells(df)
@@ -549,7 +564,7 @@ object StreamingQueries {
     import spark.implicits._
     val docs = Tables.read(spark, sfDir, "documents")
       .select($"doc_id", $"lang", $"text")
-    val out = runFileStream(spark, "classifier",
+    val out = runStaged(spark, "classifier",
       Seq(docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
       graft.operators.TextAnalysis.classifierRollup(
@@ -578,7 +593,7 @@ object StreamingQueries {
       .select($"doc_id", $"lang", $"text")
     val w = graft.operators.TextAnalysis
       .trainedBinWeights(docs, nBins, posLang, vsAll = false)
-    val out = runFileStream(spark, "classifier_train",
+    val out = runStaged(spark, "classifier_train",
       Seq(docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
       graft.operators.TextAnalysis.classifierRollup(
@@ -671,36 +686,19 @@ object StreamingQueries {
     val (late, delayMs) =
       latenessDerivation(spark, sfDir, nShards, targetBatches)
     // delivery list in arrival order — (cycle, shard) lexicographic,
-    // only non-empty batches (partitionBy writes no dir for an absent
-    // group; skipping keeps the run ≤ 32 batches). All ≤ 32 deliveries
-    // are STAGED by ONE partitioned write — `repartition(cycle, shard)`
-    // puts each delivery wholly in one task, so partitionBy emits
-    // exactly one parquet file per delivery — and delivered by file
-    // RENAME, replacing the 32 filter+write jobs (each of which
-    // re-scanned the checkpointed replay and emitted one part-file per
-    // partition, ~1000 tiny files total) that used to dominate this
-    // query's wall time.
-    val schema = org.apache.spark.sql.types.StructType(
-      late.select($"event_id", $"ts", $"event_type").schema.fields)
-    val out = runFileStreamStaged(spark, "lateness", schema,
-      OutputMode.Append()) { stageDir =>
-      late.select($"event_id", $"ts", $"event_type", $"cycle", $"shard")
-        .repartition($"cycle", $"shard")
-        .write.partitionBy("cycle", "shard").mode("overwrite")
-        .parquet(stageDir.toString)
-      val dirPat = "cycle=(\\d+)/shard=(\\d+)".r
-      stageDir.toFile.listFiles().toSeq
-        .filter(_.isDirectory).flatMap(_.listFiles())
-        .filter(_.isDirectory)
-        .flatMap { d =>
-          dirPat.findFirstMatchIn(d.getPath).map { m =>
-            ((m.group(1).toLong, m.group(2).toInt),
-              d.listFiles().toSeq.filter(f =>
-                f.getName.endsWith(".parquet")))
-          }
-        }
-        .sortBy(_._1).map(_._2)
-    } { df =>
+    // which bid = cycle·nShards + shard numbers in order (shard =
+    // event_id % nShards, in [0, nShards) for the fixture's non-negative
+    // ids); only non-empty batches (the stager skips an absent bid, which
+    // keeps the run ≤ 32 batches). All ≤ 32 deliveries are STAGED by ONE
+    // write and delivered by file RENAME, replacing the 32 filter+write
+    // jobs (each of which re-scanned the checkpointed replay and emitted
+    // one part-file per partition, ~1000 tiny files total) that used to
+    // dominate this query's wall time.
+    val deliveries = late.select($"event_id", $"ts", $"event_type",
+      ($"cycle" * nShards + $"shard").as("bid"))
+    val out = runStaged(spark, "lateness", deliveries.drop("bid").schema,
+        OutputMode.Append())(
+      stageDeliveries(deliveries, _).map(_._2)) { df =>
       df.withWatermark("ts", s"$delayMs milliseconds")
         .dropDuplicates("event_id")
     }
@@ -746,7 +744,7 @@ object StreamingQueries {
       .select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val cents = graft.operators.Similarity
       .kmeansCentroids(spark, sfDir, nCells)
-    val out = runFileStream(spark, "ivf_cells",
+    val out = runStaged(spark, "ivf_cells",
       Seq(emb.filter($"vec_id" % 2 === 0), emb.filter($"vec_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
       df.select(graft.operators.Similarity.cellAssignCol(cents)
@@ -799,30 +797,8 @@ object StreamingQueries {
         Seq(feed(2).filter($"o_orderkey" % 2 === 0),
           feed(2).filter($"o_orderkey" % 2 === 1))
       else Seq(feed(2))
-    // all deliveries staged by ONE write (bid = delivery index,
-    // repartition(bid) → exactly one parquet file per delivery) and
-    // delivered by rename — the lateness staging recipe: the three
-    // commit feeds are computed in one parallel job instead of one
-    // sequential write job per delivery interleaved with the batches
-    val deliveries = (Seq(ingest, feed(1)) ++ mergeBatches).zipWithIndex
-      .map { case (df, i) => df.withColumn("bid", lit(i)) }
-      .reduce(_ unionByName _)
-    val out = runFileStreamStaged(spark, "cdf_replay", ingest.schema,
-      OutputMode.Complete()) { stageDir =>
-      deliveries.repartition($"bid")
-        .write.partitionBy("bid").mode("overwrite")
-        .parquet(stageDir.toString)
-      val bidPat = "bid=(\\d+)".r
-      stageDir.toFile.listFiles().toSeq
-        .filter(_.isDirectory)
-        .flatMap { d =>
-          bidPat.findFirstMatchIn(d.getName).map { m =>
-            (m.group(1).toInt, d.listFiles().toSeq
-              .filter(_.getName.endsWith(".parquet")))
-          }
-        }
-        .sortBy(_._1).map(_._2)
-    } { df =>
+    val out = runStaged(spark, "cdf_replay",
+      Seq(ingest, feed(1)) ++ mergeBatches, OutputMode.Complete()) { df =>
       val sgn = when($"change_type".isin("delete", "update_pre"), -1L)
         .otherwise(1L)
       val sq =
@@ -867,7 +843,7 @@ object StreamingQueries {
     import spark.implicits._
     val docs = Tables.read(spark, sfDir, "documents")
       .select($"doc_id", $"text")
-    val out = runFileStream(spark, "minhash_index",
+    val out = runStaged(spark, "minhash_index",
       Seq(docs.filter($"doc_id" % 2 === 0), docs.filter($"doc_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
       graft.operators.Dedup.bandCells(
@@ -910,7 +886,7 @@ object StreamingQueries {
       graft.operators.Dedup.minhashBanded(docs)).localCheckpoint(true)
     val tombs = docs.filter(
       pmod(call_function("mix64", $"doc_id"), lit(19L)) === 0L)
-    val dead = runFileStream(spark, "forget_index",
+    val dead = runStaged(spark, "forget_index",
       Seq(tombs.filter($"doc_id" % 2 === 0),
         tombs.filter($"doc_id" % 2 === 1)),
       OutputMode.Complete()) { df =>
@@ -942,7 +918,7 @@ object StreamingQueries {
     val li = Tables.read(spark, sfDir, "lineitem")
       .select($"l_orderkey", $"l_extendedprice")
     val width = graft.operators.RefQueries.HistWidth
-    val out = runFileStream(spark, "histogram",
+    val out = runStaged(spark, "histogram",
       Seq(li.filter($"l_orderkey" % 2 === 0),
         li.filter($"l_orderkey" % 2 === 1)),
       OutputMode.Complete()) { df =>

@@ -212,8 +212,8 @@ class StreamingSpec extends SparkSpec {
   test("file-stream harness: redelivery through real file appends dedups exactly") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // the declared-query harness end-to-end (parquet appends into a
-    // monitored dir, redelivery of the inside-the-watermark slice,
+    // the declared-query harness end-to-end (parquet files renamed into
+    // a monitored dir, redelivery of the inside-the-watermark slice,
     // file-source micro-batches) — the sink aggregate must equal the
     // batch aggregate over the UN-duplicated fixture. The redelivered
     // rows arrive ON-TIME by construction (ts > max − 9 min vs the
@@ -256,6 +256,55 @@ class StreamingSpec extends SparkSpec {
     }
     assert(outsideStream(written) > 0,
       s"$written launched no job outside its stream: the counter is blind")
+  }
+
+  test("the delivery stager writes every delivery in one job, one file" +
+      " each, in numeric bid order, skipping an empty one") {
+    import org.apache.spark.sql.functions._
+    val base = spark.range(0, 120).toDF("v")
+    val empty = 5
+    val deliveries = (0 until 12).map { i =>
+      if (i == empty) base.filter(lit(false))
+      else base.filter(col("v") % 12 === i)
+    }
+    val dir = java.nio.file.Files.createTempDirectory(
+      graft.streaming.StreamingQueries.streamTmpBase, "stager_spec")
+    try {
+      val (staged, jobs) = jobsDuring(graft.streaming.StreamingQueries
+        .stageDeliveries(deliveries, dir.resolve("stage")))
+      assert(jobs == 1, s"staging launched $jobs jobs, not one write")
+      // numeric, not by directory name: bid 10 follows bid 9
+      assert(staged.map(_._1) == (0 until 12).filter(_ != empty)
+        .map(_.toLong), s"deliveries out of order: ${staged.map(_._1)}")
+      staged.foreach { case (bid, files) =>
+        assert(files.size == 1, s"delivery $bid is ${files.size} files")
+        val vs = spark.read.parquet(files.head.toString)
+          .collect().map(_.getLong(0)).toSet
+        assert(vs == (0L until 120L).filter(_ % 12 == bid).toSet,
+          s"delivery $bid holds the wrong rows: $vs")
+      }
+    } finally graft.sources.Etl.deleteRecursively(dir.toFile)
+  }
+
+  test("a stream's deliveries cost one staging write, not one write" +
+      " each") {
+    // non-stream jobs per warm build before the stager (one write job
+    // per delivery) and the deliveries each query makes
+    val before = Seq(("stream_sessionize", 5, 3),
+      ("stream_hll_distinct", 2, 2), ("stream_histogram", 3, 2))
+    before.foreach { case (name, _, _) => SparkEntry.queries(name)(spark, sf) }
+    before.foreach { case (name, jobs, n) =>
+      val (_, now) = nonStreamJobsDuring(SparkEntry.queries(name)(spark, sf))
+      assert(now == jobs - (n - 1), s"$name launched $now non-stream " +
+        s"jobs, expected ${jobs - (n - 1)} ($jobs with $n delivery writes)")
+    }
+    // the incremental sink also drops its two non-empty probes: the
+    // stager's two deliveries are the check
+    SparkEntry.queries("stream_incremental_sink")(spark, sf)
+    val (_, inc) = nonStreamJobsDuring(
+      SparkEntry.queries("stream_incremental_sink")(spark, sf))
+    assert(inc == 6 - 2 - 1, s"stream_incremental_sink launched $inc " +
+      "non-stream jobs, expected 3 (6 with two probes and two writes)")
   }
 
   test("whole-table streams ≡ their batch twins, with the stored ts " +

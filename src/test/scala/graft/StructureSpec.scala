@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Source-tree guards that keep the single seams single: one session
   * builder (GraftSession), derived sessions and stream starts only through
   * its `child` and `withConfs`, function names and planner strategies
-  * bound only through GraftExtensions, one connected-components loop, and
-  * a fixed set of environment keys. */
+  * bound only through GraftExtensions, one connected-components loop, one
+  * stream delivery stager, and a fixed set of environment keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -76,6 +76,21 @@ class StructureSpec extends AnyFunSuite {
     }
     assert(hits.size == 1,
       s"expected connectedComponentsStar's alone, found in: $hits")
+  }
+
+  test("one way to feed a stream: the stager is StreamingQueries' one" +
+      " write, and no query delivers by hand") {
+    val dir = root.resolve("graft/streaming")
+    val text = sources.collect {
+      case (p, t) if p.getFileName.toString == "StreamingQueries.scala" &&
+          p.startsWith(dir) => t
+    }
+    assert(text.size == 1, s"no StreamingQueries.scala under $dir")
+    val writes = """\.write\b""".r.findAllMatchIn(text.head).size
+    assert(writes == 1, s"$writes .write calls in StreamingQueries: stage" +
+      " deliveries through stageDeliveries")
+    assert(!text.head.contains("deliver("),
+      "a per-delivery deliver( is back in StreamingQueries")
   }
 
   /** Deployment paths and core count, then the Bench/StarCcAudit
