@@ -2,35 +2,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Per-task counters summed (peak: maxed) over whatever ran between two
-    * listener-bus drains — the per-query physical cost the 100 TB design
-    * claims are graded on. StarCcAudit reads its `shuffleWrite` per
-    * round. */
-  private[graft] final class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    val peakMem = new java.util.concurrent.atomic.AtomicLong
-    // summed task CPU nanoseconds — the LOAD-INVARIANT cost: wall time on
-    // a busy machine inflates sub-second planning-bound queries 2-7x
-    // while CPU-seconds stay flat, so round-over-round comparisons read
-    // cpu when `noisy` is non-empty (PERF.md documents the read)
-    val cpuTime = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(t.taskMetrics).foreach { m =>
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
-        cpuTime.addAndGet(m.executorCpuTime): Unit
-      }
-    def reset(): Unit = {
-      shuffleWrite.set(0); spillMem.set(0); spillDisk.set(0); peakMem.set(0)
-      cpuTime.set(0)
-    }
-  }
+  // 3 timed passes: a single-pass number is hostage to machine-load
+  // variance (the r5 artifact disagreed with a re-run by 1.6-2.9x on
+  // one query family) — the committed per-query number is the MEDIAN,
+  // with [min,max] spread kept alongside so variance is visible instead
+  // of silently baked in.
+  private val Passes = 3
+  // passes of a noisy query's solo re-measure (SOLO RE-MEASURE below)
+  private val SoloPasses = 3
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -41,24 +20,17 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = GraftSession.sfDir
     val cpus = GraftSession.cpus
-    // N>=3 timed passes: a single-pass number is hostage to machine-load
-    // variance (the r5 artifact disagreed with a re-run by 1.6-2.9x on
-    // one query family) — the committed per-query number is the MEDIAN,
-    // with [min,max] spread kept alongside so variance is visible instead
-    // of silently baked in.
-    val passes = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt)
+    // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration on a
+    // hot query; the driver never sets it, so round artifacts are always
+    // the full suite. A misspelled name fails here, before the session
+    // starts, instead of silently shrinking the run (possibly to zero)
+    // while still writing a success artifact.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(s => SparkEntry.select(s.split(",").toSeq))
+    val ordered = only.getOrElse(SparkEntry.registry).sortBy(_.name)
+      .map(q => q.name -> q.run)
     val spark = GraftSession.local(cpus)
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    // returns false on timeout: queued events from the PREVIOUS query may
-    // then drain after reset and pollute the next snapshot — the caller
-    // must mark the affected metrics invalid, never record them silently
-    def drain(): Boolean =
-      try {
-        org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-        true
-      } catch { case _: java.util.concurrent.TimeoutException => false }
+    val profile = Profile.attach(spark.sparkContext)
     // fixture conversions (CSV/ORC/JSON twins, partitioned events copy,
     // bucketed tables) are one-time ETL, not query cost: build them up
     // front and report the time as a separate metric so the per-query
@@ -84,47 +56,28 @@ object Bench {
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         false
       }
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration on a
-    // hot query; the driver never sets it, so round artifacts are always
-    // the full suite.
-    val only =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // fail fast on a typo: a misspelled name would silently shrink the
-    // run (possibly to zero) while still writing a success artifact
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(",")}")
-      require(names.nonEmpty, "SPARK_GRAFT_ONLY is empty")
-    }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // warm-up pass: JIT + codegen compilation are per-query one-time
-    // costs; the timed passes below measure steady-state throughput
-    // (disable with SPARK_GRAFT_WARMUP=0). The pass is TIMED and
-    // reported as the separate `cold` metric — with per-JVM fitted-model
-    // caches (PCA Gramian, fixture schemas) the one-time model/build
-    // costs land exactly here and would otherwise vanish from the
-    // artifact (the r10 finding: embed_pca_power's warm median dropped
-    // 200× because the Gramian moved to the first pass).
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
+    // costs; the timed passes below measure steady-state throughput. The
+    // pass is TIMED and reported as the separate `cold` metric — with
+    // per-JVM fitted-model caches (PCA Gramian, fixture schemas) the
+    // one-time model/build costs land exactly here and would otherwise
+    // vanish from the artifact (the r10 finding: embed_pca_power's warm
+    // median dropped 200× because the Gramian moved to the first pass).
     val coldSecs = scala.collection.mutable.Map.empty[String, Double]
-    if (warmup)
-      ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = run(name, fn)
-        if (ok) coldSecs(name) = (System.nanoTime() - t0) / 1e9
-      }
+    ordered.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok = run(name, fn)
+      if (ok) coldSecs(name) = (System.nanoTime() - t0) / 1e9
+    }
     // timed passes; physical metrics are attributed per query on EVERY
-    // pass (drain -> reset -> run -> drain -> snapshot). Shuffle/spill
-    // volumes are plan properties — any clean pass's snapshot is the
-    // number — but cpuNs is NOT: a single attributed pass hands the
-    // whole suite's deferred JVM work (GC of 200 queries' garbage, a
-    // JIT recompile) to whichever query's window it lands in, and the
-    // r15/r16 "cpu regressions" were exactly that — 2-7x cpu flags on
-    // untouched queries that a solo re-run measured BELOW baseline. The
-    // committed cpuNs is the MEDIAN over passes, same discipline as the
-    // wall medians.
+    // pass (one profile window per run). Shuffle/spill volumes are plan
+    // properties — any clean pass's window is the number — but cpuNs is
+    // NOT: a single attributed pass hands the whole suite's deferred JVM
+    // work (GC of 200 queries' garbage, a JIT recompile) to whichever
+    // query's window it lands in, and the r15/r16 "cpu regressions" were
+    // exactly that — 2-7x cpu flags on untouched queries that a solo
+    // re-run measured BELOW baseline. The committed cpuNs is the MEDIAN
+    // over passes, same discipline as the wall medians.
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     val cpuSamples = scala.collection.mutable.Map.empty[String, List[Long]]
@@ -132,28 +85,26 @@ object Bench {
     val failedNames = scala.collection.mutable.Set.empty[String]
     val metrics =
       scala.collection.mutable.Map.empty[String, (Long, Long, Long, Long)]
-    // one attributed timed pass: drain -> reset -> run -> drain ->
-    // snapshot. Shared by the suite loop and the solo re-measure below.
+    // one attributed timed pass: mark -> run -> mark. Shared by the suite
+    // loop and the solo re-measure below.
     def timedPass(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val preClean = { val d = drain(); listener.reset(); d }
+      profile.mark()
       val t0 = System.nanoTime()
       val ok = run(name, fn)
       val sec = (System.nanoTime() - t0) / 1e9
       if (ok) samples(name) = sec :: samples(name)
       else failedNames += name
-      val postClean = drain()
-      // a pass's snapshot is only trustworthy if the query succeeded
-      // and both bounding drains completed — a polluted snapshot is
-      // dropped, never recorded silently
-      if (ok && preClean && postClean) {
-        cpuSamples(name) = listener.cpuTime.get :: cpuSamples(name)
-        metrics(name) =
-          (listener.shuffleWrite.get, listener.spillMem.get,
-            listener.spillDisk.get, listener.peakMem.get)
+      val w = profile.mark()
+      // a pass's window is only trustworthy if the query succeeded and
+      // both bounding drains completed — a polluted window is dropped,
+      // never recorded silently
+      if (ok && w.clean) {
+        cpuSamples(name) = w.cpuNs :: cpuSamples(name)
+        metrics(name) = (w.shuffleWrite, w.spillMem, w.spillDisk, w.peakMem)
       }
     }
-    for (pass <- 1 to passes)
+    for (_ <- 1 to Passes)
       ordered.foreach { case (name, fn) => timedPass(name, fn) }
     def spreadNoisy(med: Double, lo: Double, hi: Double): Boolean =
       med > 0 && (hi - lo) > 0.5 * med
@@ -173,8 +124,6 @@ object Bench {
     // numbers instead of shipping dozens of noisy entries. Bounded: at
     // most 64 queries, 3 solo passes each (noisy queries are
     // overwhelmingly sub-second planning-bound ones).
-    val soloPasses = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_SOLO_PASSES", "3").toInt)
     val noisyFirst = ordered.map { case (n, _) => resultOf(n) }
       .collect { case (n, med, lo, hi) if spreadNoisy(med, lo, hi) => n }
     val soloNames = noisyFirst.take(64)
@@ -184,7 +133,7 @@ object Bench {
     val fnOf = ordered.toMap
     soloNames.foreach { name =>
       samples.remove(name); cpuSamples.remove(name)
-      for (_ <- 1 to soloPasses) timedPass(name, fnOf(name))
+      for (_ <- 1 to SoloPasses) timedPass(name, fnOf(name))
     }
     // a query that failed on ANY pass reports -1 everywhere (the
     // failure convention) — metrics from its clean passes must not
@@ -239,15 +188,15 @@ object Bench {
     val soloJson = soloNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qsFull = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // first-pass (cold) timings: -1 when the warm-up was disabled or the
-    // query failed there — same failure convention as the medians
+    // first-pass (cold) timings: -1 when the query failed there — same
+    // failure convention as the medians
     val coldFull = results.map { case (k, _, _, _) =>
       "\"" + k + "\":" + coldSecs.getOrElse(k, -1.0)
     }.mkString("{", ",", "}")
     // -1 sentinel mirrors the per-query convention: a query that failed
     // only during warm-up must not silently under-report the total
     val coldTotal =
-      if (warmup && results.forall { case (k, _, _, _) => coldSecs.contains(k) })
+      if (results.forall { case (k, _, _, _) => coldSecs.contains(k) })
         coldSecs.values.sum
       else -1.0
     val met = results.map { case (k, _, _, _) =>
@@ -255,12 +204,16 @@ object Bench {
       s""""$k":{"shuffleWrite":$sw,"spillMem":$sm,"spillDisk":$sd,"peakMem":$pk,"cpuNs":${cpuMedian(k)}}"""
     }.mkString("{", ",", "}")
     // CPU-seconds beside the wall-time map — the per-pass MEDIAN (see
-    // the attribution note above); -1 follows the failure convention
+    // the attribution note above); -1 follows the failure convention.
+    // Task CPU is the LOAD-INVARIANT cost: wall time on a busy machine
+    // inflates sub-second planning-bound queries 2-7x while CPU-seconds
+    // stay flat, so round-over-round comparisons read cpu when `noisy`
+    // is non-empty (PERF.md documents the read)
     val cpuFull = results.map { case (k, _, _, _) =>
       val cpu = cpuMedian(k)
       "\"" + k + "\":" + (if (cpu < 0) "-1" else (cpu / 1e9).toString)
     }.mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"etl":$etlSec,"coldTotal":$coldTotal,"failed":$failed,"sf":"$sfDir","queries":$qsFull,"cold":$coldFull,"spread":$spread,"noisy":$noisy,"noisyCount":${noisyNames.size},"soloRemeasured":$soloJson,"cpuSec":$cpuFull,"taskMetrics":$met}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","passes":$Passes,"etl":$etlSec,"coldTotal":$coldTotal,"failed":$failed,"sf":"$sfDir","queries":$qsFull,"cold":$coldFull,"spread":$spread,"noisy":$noisy,"noisyCount":${noisyNames.size},"soloRemeasured":$soloJson,"cpuSec":$cpuFull,"taskMetrics":$met}"""
     // default lands next to the code: sbt runs main classes in-process,
     // so user.dir is the project root of whatever checkout ran the bench.
     // A SPARK_GRAFT_ONLY run writes BENCH_ONLY.json instead — a partial
@@ -303,7 +256,7 @@ object Bench {
         headlineKeys.contains(k) || slowest.contains(k) }
       .map { case (k, v, _, _) => "\"" + k + "\":" + fmt(v, 3) }
       .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","passes":$passes,"etl":${fmt(etlSec, 1)},"cold":${fmt(coldTotal, 1)},"failedCount":${failedNames.size},"failed":$failedBounded,"failedTruncated":$failedTruncated,"noisyCount":${noisyNames.size},"soloCount":${soloNames.size},"sf":"$sfDir","queries":$headlines,"artifact":"${new java.io.File(outFile).getName}","artifact_sha256":"$sha"}"""
+    val summary = s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","passes":$Passes,"etl":${fmt(etlSec, 1)},"cold":${fmt(coldTotal, 1)},"failedCount":${failedNames.size},"failed":$failedBounded,"failedTruncated":$failedTruncated,"noisyCount":${noisyNames.size},"soloCount":${soloNames.size},"sf":"$sfDir","queries":$headlines,"artifact":"${new java.io.File(outFile).getName}","artifact_sha256":"$sha"}"""
     // The driver parses this line from a bounded stdout TAIL. It must
     // arrive bare: `run` is forked, and sbt's default LoggedOutput
     // would re-log the forked stdout with an "[info] " prefix (the

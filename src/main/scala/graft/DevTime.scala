@@ -6,30 +6,12 @@ package graft
   * coalesced partitions, join conversions), then the initial one. `-jobs`
   * additionally prints every Spark job the warm run launched (wall ms +
   * description) plus the driver-side gap between jobs — the
-  * planning/listing/collect time no task metric sees. Not part of the
-  * driver contract.
+  * planning/listing/collect time no task metric sees — as recorded by the
+  * warm run's [[Profile]] window. Not part of the driver contract.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=...
   *   runMain graft.DevTime [-plan | -jobs] <query> [<query> ...] */
 object DevTime {
-
-  private final class JobLog extends org.apache.spark.scheduler.SparkListener {
-    case class J(id: Int, desc: String, start: Long, var end: Long = 0L)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[J]
-    private val open = new java.util.concurrent.ConcurrentHashMap[Int, J]
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val d = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
-      val j = J(e.jobId, d, e.time)
-      open.put(e.jobId, j); jobs.add(j): Unit
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      Option(open.remove(e.jobId)).foreach(_.end = e.time)
-    def clear(): Unit = { jobs.clear(); open.clear() }
-  }
 
   /** Formatted plan of the last query `action` executed, captured after
     * it ran (the listener bus is drained before reading). */
@@ -54,43 +36,35 @@ object DevTime {
   }
 
   def main(args: Array[String]): Unit = {
+    val (flags, names) = args.partition(_.startsWith("-"))
+    val selected = SparkEntry.select(names.toSeq)
     val spark = GraftSession.local(GraftSession.cpus)
     val d = GraftSession.sfDir
-    val (flags, names) = args.partition(_.startsWith("-"))
-    val jl = new JobLog
-    if (flags.contains("-jobs")) spark.sparkContext.addSparkListener(jl)
-    def noop(name: String): Unit =
-      SparkEntry.queries(name)(spark, d)
-        .write.format("noop").mode("overwrite").save()
-    names.foreach { name =>
+    def noop(q: SparkEntry.Query): Unit =
+      q.run(spark, d).write.format("noop").mode("overwrite").save()
+    selected.foreach { q =>
       if (flags.contains("-plan")) {
-        println(s"===== PLAN $name =====")
-        println(executedPlan(spark)(noop(name)))
+        println(s"===== PLAN ${q.name} =====")
+        println(executedPlan(spark)(noop(q)))
       } else {
-        (1 to 2).foreach { i =>
-          if (i == 2 && flags.contains("-jobs")) {
-            org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-            jl.clear()
-          }
+        def timed(i: Int): Unit = {
           val t0 = System.nanoTime()
-          noop(name)
-          println(f"TIMING $name run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          noop(q)
+          println(f"TIMING ${q.name} run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
+        timed(1)
         if (flags.contains("-jobs")) {
-          org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-          val js = jl.jobs.toArray(Array.empty[jl.J]).sortBy(_.start)
+          val (_, w) = Profile.during(spark.sparkContext)(timed(2))
           var prev = 0L
-          js.foreach { j =>
+          w.jobs.foreach { j =>
             val gap = if (prev == 0L) 0L else j.start - prev
             prev = math.max(prev, j.end)
             val dur = if (j.end > 0) j.end - j.start else -1L
-            // first line only: a stream job's description goes on with
-            // "\nid = …\nrunId = …"
-            val desc = j.desc.takeWhile(_ != '\n').take(90)
+            val desc = j.desc.take(90)
             println(f"  JOB ${j.id}%4d ${dur}%6d ms  (gap ${gap}%5d ms)  $desc")
           }
-          println(s"  JOBS total ${js.length}")
-        }
+          println(s"  JOBS total ${w.jobs.length}")
+        } else timed(2)
       }
     }
     spark.stop()

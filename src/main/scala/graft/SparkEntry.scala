@@ -5739,4 +5739,18 @@ object SparkEntry {
 
   lazy val oracleSql: Map[String, String] =
     registry.map(q => q.name -> q.oracle).toMap
+
+  /** The registry entries named in `names`, in the order given (blank and
+    * repeated names dropped). The mains' one query selector: it fails
+    * naming every unknown name, so a typo stops a run before any query
+    * runs instead of silently shrinking it. */
+  def select(names: Seq[String]): Seq[Query] = {
+    val wanted = names.map(_.trim).filter(_.nonEmpty).distinct
+    val byName = registry.map(q => q.name -> q).toMap
+    val unknown = wanted.filterNot(byName.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    require(wanted.nonEmpty, "no query named")
+    wanted.map(byName)
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * O(log n) rounds at constant bytes. The gate enforces the invariant
   * both shapes share: no round amplifies its predecessor's shuffle.)
   * This main runs the resolver over the real LSH pair graph at bench
-  * scale, brackets every round with a listener drain to attribute its
+  * scale, takes one [[Profile]] window per round to attribute its
   * shuffle write exactly, prints one JSON line, writes
   * STARCC_ROUNDS.json, and exits 1 if a non-final round shuffles more
   * than `tolerance`× its predecessor (the final round is excluded: the
@@ -33,8 +33,7 @@ object StarCcAudit {
     val sfDir = GraftSession.sfDir
     val tolerance = 1.10
     val spark = GraftSession.local(GraftSession.cpus)
-    val listener = new Bench.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val profile = Profile.attach(spark.sparkContext)
 
     val mode = args.headOption.getOrElse("lsh")
     // materialize the pair graph FIRST so its construction shuffles
@@ -58,17 +57,14 @@ object StarCcAudit {
         spark.stop()
         sys.exit(2)
     }).localCheckpoint(true)
-    def drain(): Unit =
-      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-    drain()
-    var last = listener.shuffleWrite.get()
+    profile.mark()
     val rounds = scala.collection.mutable.ListBuffer.empty[(Int, Long, Long)]
     val (labels, _) = operators.Dedup.connectedComponentsStar(pairs,
       onRound = (iter, edges) => {
-        drain()
-        val now = listener.shuffleWrite.get()
-        rounds += ((iter, edges, now - last))
-        last = now
+        val w = profile.mark()
+        // a timed-out drain leaves the round's bytes unattributable
+        require(w.clean, s"listener drain timed out in round $iter")
+        rounds += ((iter, edges, w.shuffleWrite))
       })
     val nLabels = labels.count()
 

@@ -1,33 +1,24 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each SparkEntry.registry query (or the
+  * selected ones), in registry order, → parquet, plus oracle_sql.json, for
+  * the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg (local iteration only — the driver passes 2):
-    // comma-separated query names to run instead of the full surface
-    val only: Option[Set[String]] =
-      args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // comma-separated query names to run instead of the full surface. A
+    // typo fails before anything is written: silently writing nothing
+    // would leave stale parquet from a prior run to be compared instead.
+    val selected = args.lift(2).fold(SparkEntry.registry)(s =>
+      SparkEntry.select(s.split(",").toSeq))
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        // fail, don't warn: a typo that silently writes nothing leaves
-        // stale parquet from a prior run to be compared instead
-        System.err.println(
-          s"[verify] unknown query name(s): ${unknown.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

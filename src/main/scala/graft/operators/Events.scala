@@ -242,11 +242,8 @@ object Events {
       gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    // microsecond precision, matching the window variant's unix_micros —
-    // Timestamp.getTime alone floors to millis and could merge sessions
-    // whose gap exceeds the threshold by <1ms.
-    def micros(ts: Timestamp): Long =
-      (ts.getTime - ts.getNanos / 1000000) * 1000L + ts.getNanos / 1000
+    // microsecond precision, matching the window variant's unix_micros
+    import graft.streaming.StreamingOps.micros
     Tables.read(spark, sfDir, "events")
       .select($"user_id", $"event_id", $"ts", $"value")
       .as[(Long, Long, Timestamp, Double)]

@@ -216,10 +216,6 @@ object Etl {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, HilbertZonesDir).getAbsolutePath)
-      // cachedFixture's staleness marker sits at the FIXTURE root (the
-      // per-subdir _SUCCESS files are one level down)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** COMPACTED (bin-packed) copy of the Hilbert table — the OPTIMIZE /
@@ -289,8 +285,6 @@ object Etl {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, HilbertZonesDir).getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -321,12 +315,8 @@ object Etl {
     cachedFixture(sfDir, "orders-hilbert-cow-v2",
         s"$src/_SUCCESS") { tmp =>
       copyDir(new java.io.File(src), tmp)
-      // the copied root carries the source's _SUCCESS; cachedFixture
-      // re-stamps it below either way
       cowDeleteRect(spark, src, tmp,
         graft.operators.RefQueries.HilbertRect)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -435,8 +425,6 @@ object Etl {
         s"$src/_SUCCESS") { tmp =>
       copyDir(new java.io.File(src), tmp)
       cowMergeStripe(spark, sfDir, src, tmp): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -589,8 +577,6 @@ object Etl {
         .sortWithinPartitions(col("hbucket"), col("hidx"))
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, "adds").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -670,8 +656,6 @@ object Etl {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, PriceStatsDir).getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** The MATERIALIZED VIEW `q_cdf_refresh` maintains — the per-x8-band
@@ -686,8 +670,6 @@ object Etl {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
         .parquet(tmp.getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -704,8 +686,6 @@ object Etl {
         tmp.getAbsolutePath)
       java.nio.file.Files.writeString(
         new java.io.File(tmp, "_current").toPath, "v1"): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** SCHEMA-EVOLUTION fixture — the mid-life column add every long-lived
@@ -728,8 +708,6 @@ object Etl {
       ord.filter(col("o_orderkey") % 2 === 1)
         .withColumn("o_bucket", pmod(col("ck"), lit(16L)))
         .write.mode(SaveMode.Append).parquet(tmp.getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** TYPE-WIDENING fixture — the mid-life migration `mergeSchema`
@@ -765,8 +743,6 @@ object Etl {
       ord.filter(col("o_orderkey") % 3 === 2)
         .withColumn("o_qty", pmod(col("ck"), lit(100L)) + 5000000000L)
         .write.mode(SaveMode.Append).parquet(tmp.getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** DELETION-VECTOR sidecar fixture — the MERGE-ON-READ delete, the
@@ -794,8 +770,6 @@ object Etl {
       morDvBuild(spark, src)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, "dv").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -841,8 +815,6 @@ object Etl {
       morDv2Build(spark, src, dv1)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, "dv").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -911,12 +883,10 @@ object Etl {
         .withColumn("ri", col("_metadata.row_index"))
         .join(broadcast(dv), Seq("fp", "ri"), "left_anti")
         .drop("fp", "ri")
-      cowRewrite(spark, src, tmp, survivors.localCheckpoint(true),
-        touched.toSeq)
       // retire the materialized DVs: a reader of THIS version must find
       // no sidecar to apply (the dv dir simply isn't part of the layout)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
+      cowRewrite(spark, src, tmp, survivors.localCheckpoint(true),
+        touched.toSeq)
     }
   }
 
@@ -945,8 +915,6 @@ object Etl {
         .withColumn("o_qty", pmod(col("ck"), lit(100L)) + 100L)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, "g2").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** DROP-COLUMN fixture — the fourth mid-life migration: generation 1
@@ -974,8 +942,6 @@ object Etl {
       ord.filter(col("o_orderkey") % 2 === 1)
         .write.mode(SaveMode.Overwrite)
         .parquet(new java.io.File(tmp, "g2").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** Subdirectories of [[partitionEvolutionFixture]]: per-commit data
@@ -1029,8 +995,6 @@ object Etl {
         PartEvoWidthOld, "spec24")
       writeSpec("c1", laid.filter(col("o_orderkey") % 2 === 1),
         PartEvoWidthNew, "spec96")
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -1291,8 +1255,6 @@ object Etl {
           .mkString("\n").getBytes("UTF-8")): Unit
       java.nio.file.Files.writeString(
         new java.io.File(tmp, "_current").toPath, "v3"): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   /** Commit-metadata file of [[chainFixture]] roots: one
@@ -1394,8 +1356,6 @@ object Etl {
         new java.io.File(new java.io.File(tmp, ChainManifestsDir),
           "b_clean.stats").toPath,
         s"${stamped.getLong(0)} ${stamped.getLong(1)}"): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -1444,8 +1404,6 @@ object Etl {
       stageDeleteBranch(spark, root, "b_cc1", "c6", R.HilbertRect)
       stageDeleteBranch(spark, root, "b_cc2", "c7", R.HilbertRect2)
       stageDeleteBranch(spark, root, "b_cc3", "c8", R.ConflictRect3)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
   }
 
@@ -1704,8 +1662,6 @@ object Etl {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("lbucket")
         .parquet(new java.io.File(tmp, "pairs").getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, ""): Unit
     }
 
   def prepareFixtures(spark: SparkSession, sfDir: String): Unit = {
@@ -1736,7 +1692,7 @@ object Etl {
     ()
   }
 
-  private def cachedFixture(sfDir: String, key: String, srcPath: String)(
+  private[graft] def cachedFixture(sfDir: String, key: String, srcPath: String)(
       write: java.io.File => Unit): String = {
     val safe = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val target = new java.io.File(
@@ -1748,6 +1704,11 @@ object Etl {
         s"$key.tmp-${java.util.UUID.randomUUID()}")
       tmp.getParentFile.mkdirs()
       write(tmp)
+      // the staleness marker sits at the fixture ROOT and is stamped after
+      // the whole build: a builder that writes only subdirectories, or
+      // copies an older fixture's root, still publishes a fresh one
+      java.nio.file.Files.writeString(
+        new java.io.File(tmp, "_SUCCESS").toPath, "")
       deleteRecursively(target)
       // if the rename loses a concurrent-writer race, the winner's copy
       // (also complete — it renamed a finished dir) is used instead

@@ -83,9 +83,10 @@ object StreamingOps {
   /** Epoch MICROS of a Timestamp — `getTime` alone floors to millis and
     * could merge sessions whose gap exceeds the threshold by < 1 ms,
     * diverging from the batch twin's `unix_micros` comparison. Shared
-    * with StreamingQueries' sentinel/cutoff arithmetic — one formula,
-    * not two copies to drift apart. */
-  private[streaming] def micros(ts: java.sql.Timestamp): Long =
+    * with StreamingQueries' sentinel/cutoff arithmetic and the typed
+    * batch sessionizer `Events.sessionizeTyped` — one formula, not
+    * copies to drift apart. */
+  private[graft] def micros(ts: java.sql.Timestamp): Long =
     (ts.getTime - ts.getNanos / 1000000) * 1000L + ts.getNanos / 1000
 
   /** Event-time sessionization with a gap timeout via

@@ -242,31 +242,9 @@ class DedupSpec extends SparkSpec {
       DedupRefs.ngramJaccardUnsplit(spark, boilerplateDir, threshold = 0.2))
   }
 
-  /** Sums shuffle-write bytes across all tasks of `run` via a listener.
-    * Listener delivery is async — poll until the counter stabilizes. */
-  private def shuffledBytes(run: => Unit): Long = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach { m =>
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      run
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val b = bytes.get
-        if (b == prev) stable += 1 else { stable = 0; prev = b }
-      }
-      bytes.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  /** Shuffle-write bytes summed over every task `run` launched. */
+  private def shuffledBytes(run: => Unit): Long =
+    Profile.during(spark.sparkContext)(run)._2.shuffleWrite
 
   test("two-pass exact dedup shuffles a fraction of the one-shuffle bytes") {
     // the real corpus is (almost) all-unique — the representative case:

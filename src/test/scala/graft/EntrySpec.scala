@@ -73,6 +73,20 @@ class EntrySpec extends SparkSpec {
     assert(dups.isEmpty, s"query names declared more than once: $dups")
   }
 
+  test("select resolves names to registry entries in the order given") {
+    val qs = SparkEntry.select(Seq(" q2_sql", "q1_sql", "", "q2_sql"))
+    assert(qs.map(_.name) == Seq("q2_sql", "q1_sql"))
+    assert(qs.forall(q => SparkEntry.registry.contains(q)))
+  }
+
+  test("select names every unknown query and rejects an empty selection") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q1_sql", "no_such_query", "q2_sql", "q9_typo")))
+    assert(e.getMessage.contains("no_such_query, q9_typo"), e.getMessage)
+    assert(!e.getMessage.contains("q1_sql"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.select(Seq("", " ")))
+  }
+
   test("oracle column aliases appear in spark output columns") {
     // cheap guard against the alias-mismatch failure mode the driver
     // contract warns about: every Spark output column name must appear

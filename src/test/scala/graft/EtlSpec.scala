@@ -32,6 +32,31 @@ class EtlSpec extends SparkSpec {
     assert(pruned.count() == 1)
   }
 
+  test("cachedFixture stamps the fixture root's _SUCCESS after a builder " +
+      "that writes no marker") {
+    val dir = Files.createTempDirectory("graft-stamp").toFile
+    val src = new java.io.File(dir, "t.parquet")
+    Files.writeString(src.toPath, "")
+    src.setLastModified(System.currentTimeMillis() - 60000L)
+    val root = Etl.cachedFixture(dir.getPath, "stamp", src.getPath) { tmp =>
+      val sub = new java.io.File(tmp, "data")
+      sub.mkdirs()
+      Files.writeString(new java.io.File(sub, "part").toPath, "x"): Unit
+    }
+    try {
+      val success = new java.io.File(root, "_SUCCESS")
+      assert(success.exists(), s"no _SUCCESS at the root of $root")
+      assert(success.lastModified > src.lastModified)
+      // the marker is fresh, so the primed cache is used as published
+      Etl.cachedFixture(dir.getPath, "stamp", src.getPath) { _ =>
+        fail("a fresh fixture was rebuilt")
+      }
+    } finally {
+      Etl.deleteRecursively(new java.io.File(root).getParentFile)
+      Etl.deleteRecursively(dir)
+    }
+  }
+
   test("curve fixtures hold exactly one data file per hbucket " +
       "(the MOR (hbucket, row_index) join-key invariant)") {
     // qDeleteMor/qDeleteMorStacked/qMergeMor anti-join deletes on

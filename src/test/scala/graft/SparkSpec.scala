@@ -18,34 +18,19 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
 
-  /** `body`'s result and the number of Spark jobs it launched (listener
-    * delivery is drained before and after, so no other job is counted). */
-  def jobsDuring[T](body: => T): (T, Int) = jobsWhere(_ => true)(body)
+  /** `body`'s result and the number of Spark jobs it launched (the
+    * [[Profile]] window of `body` alone). */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val (r, w) = Profile.during(spark.sparkContext)(body)
+    (r, w.jobs.size)
+  }
 
   /** As [[jobsDuring]], counting only the jobs launched outside any
-    * streaming query (no `sql.streaming.queryId` local property): the
-    * jobs a stream-backed query runs before or after its stream. */
-  def nonStreamJobsDuring[T](body: => T): (T, Int) =
-    jobsWhere(j => Option(j.properties)
-      .forall(_.getProperty("sql.streaming.queryId") == null))(body)
-
-  private def jobsWhere[T](
-      counted: org.apache.spark.scheduler.SparkListenerJobStart => Boolean)(
-      body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (counted(j)) jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.GraftListenerBridge.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.GraftListenerBridge.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
+    * streaming query: the jobs a stream-backed query runs before or after
+    * its stream. */
+  def nonStreamJobsDuring[T](body: => T): (T, Int) = {
+    val (r, w) = Profile.during(spark.sparkContext)(body)
+    (r, w.jobs.count(!_.inStream))
   }
 
   /** Order-insensitive DataFrame equality on collected rows. */

@@ -8,17 +8,20 @@ import scala.jdk.CollectionConverters._
   * builder (GraftSession), derived sessions and stream starts only through
   * its `child` and `withConfs`, function names and planner strategies
   * bound only through GraftExtensions, one connected-components loop, one
-  * stream delivery stager, and a fixed set of environment keys. */
+  * stream delivery stager, one profiler, and a fixed set of environment
+  * keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val s = Files.walk(root)
+  private def scalaFiles(dir: Path): Seq[(Path, String)] = {
+    val s = Files.walk(dir)
     try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> Files.readString(p))
     finally s.close()
   }
+
+  private lazy val sources = scalaFiles(root)
 
   private def offenders(needle: String,
       allowed: Path => Boolean = _ => false): Seq[String] =
@@ -93,11 +96,22 @@ class StructureSpec extends AnyFunSuite {
       "a per-delivery deliver( is back in StreamingQueries")
   }
 
-  /** Deployment paths and core count, then the Bench/StarCcAudit
-    * harness keys. */
+  test("one profiler: SparkListener is subclassed or instantiated only" +
+      " in graft/Profile.scala") {
+    val listener = """(?:extends|with|new)\s+(?:[\w.]+\.)?SparkListener\b""".r
+    val profile = root.resolve("graft/Profile.scala")
+    val hits = (sources ++ scalaFiles(Paths.get("src/test/scala"))).collect {
+      case (p, text) if listener.findFirstIn(text).nonEmpty => p
+    }
+    assert(hits.contains(profile), s"no listener in $profile")
+    val bad = hits.filterNot(_ == profile)
+    assert(bad.isEmpty, s"measure Spark work through graft.Profile: $bad")
+  }
+
+  /** Deployment paths and core count, the stream scratch directory, and
+    * the query selection of a local Bench run. */
   private val envKeys = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
-    "SPARK_GRAFT_STREAM_TMP", "SPARK_GRAFT_PASSES", "SPARK_GRAFT_ONLY",
-    "SPARK_GRAFT_WARMUP", "SPARK_GRAFT_SOLO_PASSES",
+    "SPARK_GRAFT_STREAM_TMP", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_STARCC_OUT")
 
   test("environment reads use only the allowed keys") {
