@@ -930,20 +930,17 @@ object RefQueries {
 
   private def curveWriteScan(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     val t = spark.read.parquet(
       s"$path/${graft.sources.Etl.HilbertTableDir}")
     // the zone-map table is WRITE-TIME metadata beside the data (≤ 2731
     // rows at any corpus size) — the consult never touches the corpus
     val zones = spark.read
       .parquet(s"$path/${graft.sources.Etl.HilbertZonesDir}")
-      .select($"hbucket",
-        ($"x_hi" >= xLo && $"x_lo" <= xHi &&
-          $"y_hi" >= yLo && $"y_lo" <= yHi).as("hit"))
+      .select($"hbucket", graft.sources.Etl.zoneOverlap(HilbertRect).as("hit"))
       .as[(Long, Boolean)].collect()
     val cands = zones.filter(_._2).map(_._1).sorted
     t.filter($"hbucket".isin(cands: _*) &&
-        $"x8".between(xLo, xHi) && $"y8".between(yLo, yHi))
+        graft.sources.Etl.inRect(HilbertRect))
       .agg(
         lit(zones.length.toLong).as("n_buckets_total"),
         lit(cands.length.toLong).as("n_buckets_scanned"),
@@ -1100,22 +1097,19 @@ object RefQueries {
   private def curveCompactScan(spark: SparkSession, basePath: String,
       compPath: String): DataFrame = {
     import spark.implicits._
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     val dir = graft.sources.Etl.HilbertTableDir
     val nBefore = countPartFiles(spark, s"$basePath/$dir")
     val nAfter = countPartFiles(spark, s"$compPath/$dir")
     val t = spark.read.parquet(s"$compPath/$dir")
     val zones = spark.read
       .parquet(s"$compPath/${graft.sources.Etl.HilbertZonesDir}")
-      .select($"cbin",
-        ($"x_hi" >= xLo && $"x_lo" <= xHi &&
-          $"y_hi" >= yLo && $"y_lo" <= yHi).as("hit"))
+      .select($"cbin", graft.sources.Etl.zoneOverlap(HilbertRect).as("hit"))
       .as[(Long, Boolean)].collect()
     val cands = zones.filter(_._2).map(_._1).sorted
     val full = t.agg(count(lit(1)).as("n_rows"),
       keyChecksum($"o_orderkey").as("key_checksum"))
     val rect = t.filter($"cbin".isin(cands: _*) &&
-        $"x8".between(xLo, xHi) && $"y8".between(yLo, yHi))
+        graft.sources.Etl.inRect(HilbertRect))
       .agg(count(lit(1)).as("n_rect_rows"),
         keyChecksum($"o_orderkey").as("rect_checksum"))
     full.crossJoin(rect)
@@ -1149,7 +1143,6 @@ object RefQueries {
     * manifest re-point. */
   def qDeleteRewrite(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     val srcPath = graft.sources.Etl.hilbertOrdersFixture(spark, sfDir)
     val cowPath = graft.sources.Etl.deleteRewriteFixture(spark, sfDir)
     val dir = graft.sources.Etl.HilbertTableDir
@@ -1157,8 +1150,7 @@ object RefQueries {
     val nAfter = countPartFiles(spark, s"$cowPath/$dir")
     val nTouched = spark.read
       .parquet(s"$srcPath/${graft.sources.Etl.HilbertZonesDir}")
-      .filter($"x_hi" >= xLo && $"x_lo" <= xHi &&
-        $"y_hi" >= yLo && $"y_lo" <= yHi)
+      .filter(graft.sources.Etl.zoneOverlap(HilbertRect))
       .count()
     // pre-delete row count from the COMPACT source parquet (one file) —
     // the clustered table is a 1:1 re-layout of orders, and a 2731-file
@@ -1170,15 +1162,14 @@ object RefQueries {
     // same single pass as the survivor aggregate
     val candsAfter = spark.read
       .parquet(s"$cowPath/${graft.sources.Etl.HilbertZonesDir}")
-      .filter($"x_hi" >= xLo && $"x_lo" <= xHi &&
-        $"y_hi" >= yLo && $"y_lo" <= yHi)
+      .filter(graft.sources.Etl.zoneOverlap(HilbertRect))
       .select($"hbucket").as[Long].collect().sorted
     val after = spark.read.parquet(s"$cowPath/$dir")
       .withColumn("hbucket", $"hbucket".cast("long"))
       .agg(count(lit(1)).as("n_rows_after"),
         keyChecksum($"o_orderkey").as("survivor_checksum"),
         sum(when($"hbucket".isin(candsAfter: _*) &&
-            $"x8".between(xLo, xHi) && $"y8".between(yLo, yHi),
+            graft.sources.Etl.inRect(HilbertRect),
           1L).otherwise(0L)).as("n_rect_rows_after"))
     before.crossJoin(after)
       .select(lit(nBefore).as("n_files_before"),
@@ -1480,28 +1471,20 @@ object RefQueries {
     val E = graft.sources.Etl
     val src = E.hilbertOrdersFixture(spark, sfDir)
     val dvRoot = E.morDvFixture(spark, sfDir)
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     val dv = spark.read.parquet(s"$dvRoot/dv")
     // the sidecar names files; the ingest wrote exactly ONE file per
-    // hbucket (repartition(hbucket) + partitionBy — Etl.curveOrdersFixture),
-    // so (file, position) ≡ (hbucket, position) and the scan side can
-    // join on the PARTITION column instead of materializing a
-    // `_metadata.file_path` string per corpus row (the r17 measurement:
-    // the per-row path string + substring was ~2s of task cpu on a
-    // ~3s scan). The fp → hbucket decode happens once, on the
-    // broadcast-side sidecar rows only.
-    val dvPos = dv.select(
-      regexp_extract($"fp", "hbucket=(\\d+)/", 1).cast("long")
-        .as("hbucket"), $"ri")
+    // hbucket (Etl.writeClustered), so the scan side joins on the
+    // PARTITION column and the fp → hbucket decode runs on the
+    // broadcast-side sidecar rows only (Etl.dvPositions)
+    val dvPos = E.dvPositions(dv)
     val base = spark.read.parquet(s"$src/${E.HilbertTableDir}")
       .select($"o_orderkey", $"x8", $"y8",
         $"hbucket".cast("long").as("hbucket"),
         $"_metadata.row_index".as("ri"))
-    val survivors = base.join(broadcast(dvPos), Seq("hbucket", "ri"),
-      "left_anti")
+    val survivors = E.dropDeleted(base, dvPos)
     val served = survivors.agg(count(lit(1)).as("n_rows_after"),
       coalesce(keyChecksum($"o_orderkey"), lit(0L)).as("survivor_checksum"),
-      sum(when($"x8".between(xLo, xHi) && $"y8".between(yLo, yHi), 1L)
+      sum(when(E.inRect(HilbertRect), 1L)
         .otherwise(0L)).as("n_rect_rows_after"))
     val sidecar = dv.agg(
       countDistinct($"fp").as("n_dv_files"),
@@ -1542,28 +1525,20 @@ object RefQueries {
     import spark.implicits._
     val E = graft.sources.Etl
     val src = E.hilbertOrdersFixture(spark, sfDir)
-    val (x1Lo, x1Hi, y1Lo, y1Hi) = HilbertRect
-    val (x2Lo, x2Hi, y2Lo, y2Hi) = HilbertRect2
     val dv1 = spark.read.parquet(s"${E.morDvFixture(spark, sfDir)}/dv")
     val dv2 = spark.read.parquet(s"${E.morDv2Fixture(spark, sfDir)}/dv")
-    // (file, position) ≡ (hbucket, position) — one file per bucket by
-    // the ingest's construction (see qDeleteMor); decode fp → hbucket
-    // on the broadcast-side sidecars only, never a per-corpus-row
-    // file-path string
-    val dvAll = dv1.unionByName(dv2).select(
-      regexp_extract($"fp", "hbucket=(\\d+)/", 1).cast("long")
-        .as("hbucket"), $"ri")
+    // (file, position) ≡ (hbucket, position) — see qDeleteMor
+    val dvAll = E.dvPositions(dv1.unionByName(dv2))
     val base = spark.read.parquet(s"$src/${E.HilbertTableDir}")
       .select($"o_orderkey", $"x8", $"y8",
         $"hbucket".cast("long").as("hbucket"),
         $"_metadata.row_index".as("ri"))
-    val survivors = base.join(broadcast(dvAll), Seq("hbucket", "ri"),
-      "left_anti")
+    val survivors = E.dropDeleted(base, dvAll)
     val served = survivors.agg(count(lit(1)).as("n_rows_after"),
       coalesce(keyChecksum($"o_orderkey"), lit(0L)).as("survivor_checksum"),
-      sum(when($"x8".between(x1Lo, x1Hi) && $"y8".between(y1Lo, y1Hi), 1L)
+      sum(when(E.inRect(HilbertRect), 1L)
         .otherwise(0L)).as("n_rect1_rows_after"),
-      sum(when($"x8".between(x2Lo, x2Hi) && $"y8".between(y2Lo, y2Hi), 1L)
+      sum(when(E.inRect(HilbertRect2), 1L)
         .otherwise(0L)).as("n_rect2_rows_after"))
     val s1 = dv1.agg(count(lit(1)).as("n_dv1_entries"))
     val s2 = dv2.agg(count(lit(1)).as("n_dv2_entries"))
@@ -1595,16 +1570,14 @@ object RefQueries {
     import spark.implicits._
     val E = graft.sources.Etl
     val root = E.morDvCompactFixture(spark, sfDir)
-    val (x1Lo, x1Hi, y1Lo, y1Hi) = HilbertRect
-    val (x2Lo, x2Hi, y2Lo, y2Hi) = HilbertRect2
     val nFiles = listPartFiles(spark, s"$root/${E.HilbertTableDir}").size
     spark.read.parquet(s"$root/${E.HilbertTableDir}")
       .select($"o_orderkey", $"x8", $"y8")
       .agg(count(lit(1)).as("n_rows_after"),
         coalesce(keyChecksum($"o_orderkey"), lit(0L)).as("survivor_checksum"),
-        sum(when($"x8".between(x1Lo, x1Hi) && $"y8".between(y1Lo, y1Hi), 1L)
+        sum(when(E.inRect(HilbertRect), 1L)
           .otherwise(0L)).as("n_rect1_rows_after"),
-        sum(when($"x8".between(x2Lo, x2Hi) && $"y8".between(y2Lo, y2Hi), 1L)
+        sum(when(E.inRect(HilbertRect2), 1L)
           .otherwise(0L)).as("n_rect2_rows_after"))
       .select(lit(nFiles.toLong).as("n_files_after"),
         $"n_rows_after", $"survivor_checksum",
@@ -1635,18 +1608,13 @@ object RefQueries {
     val src = E.hilbertOrdersFixture(spark, sfDir)
     val root = E.morMergeFixture(spark, sfDir)
     val dv = spark.read.parquet(s"$root/dv")
-    // (file, position) ≡ (hbucket, position) — one file per bucket by
-    // the ingest's construction (see qDeleteMor); fp decodes to hbucket
-    // on the broadcast-side sidecar only
-    val dvPos = dv.select(
-      regexp_extract($"fp", "hbucket=(\\d+)/", 1).cast("long")
-        .as("hbucket"), $"ri")
+    // (file, position) ≡ (hbucket, position) — see qDeleteMor
+    val dvPos = E.dvPositions(dv)
     val base = spark.read.parquet(s"$src/${E.HilbertTableDir}")
       .select($"o_orderkey", $"hidx",
         $"hbucket".cast("long").as("hbucket"),
         $"_metadata.row_index".as("ri"))
-    val survivors = base.join(broadcast(dvPos), Seq("hbucket", "ri"),
-      "left_anti")
+    val survivors = E.dropDeleted(base, dvPos)
       .select($"o_orderkey", $"hidx", lit(0L).as("is_add"))
     val adds = spark.read.parquet(s"$root/adds")
       .select($"o_orderkey", $"hidx", lit(1L).as("is_add"))
@@ -1824,18 +1792,16 @@ object RefQueries {
     import spark.implicits._
     val E = graft.sources.Etl
     val root = E.partitionEvolutionFixture(spark, sfDir)
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     def spec(commit: String, zones: String): (DataFrame, Long, Long) = {
       val z = spark.read.parquet(s"$root/${E.PartEvoZonesDir}/$zones")
       val total = z.count()
-      val cands = z.filter($"x_hi" >= xLo && $"x_lo" <= xHi &&
-          $"y_hi" >= yLo && $"y_lo" <= yHi)
+      val cands = z.filter(E.zoneOverlap(HilbertRect))
         .select($"pbucket").as[Long].collect().sorted
       val rows = spark.read
         .parquet(s"$root/${E.PartEvoDataDir}/$commit")
         .withColumn("pbucket", $"pbucket".cast("long"))
         .filter($"pbucket".isin(cands: _*) &&
-          $"x8".between(xLo, xHi) && $"y8".between(yLo, yHi))
+          E.inRect(HilbertRect))
         .select($"o_orderkey")
       (rows, total, cands.length.toLong)
     }
@@ -1938,17 +1904,13 @@ object RefQueries {
       versions: Range): DataFrame = {
     import spark.implicits._
     val E = graft.sources.Etl
-    val (xLo, xHi, yLo, yHi) = HilbertRect
     val entries = versions.flatMap { v =>
       val keyCol = if (v == 3) "cbin" else "hbucket"
       val cands = spark.read.parquet(s"$root/${E.ChainZonesDir}/v$v")
-        .filter($"x_hi" >= xLo && $"x_lo" <= xHi &&
-          $"y_hi" >= yLo && $"y_lo" <= yHi)
+        .filter(E.zoneOverlap(HilbertRect))
         .select(col(keyCol)).as[Long].collect().toSet
-      val pat = s"$keyCol=(\\d+)".r
       E.chainManifest(root, v).map { rel =>
-        val key = pat.findFirstMatchIn(rel).get.group(1).toLong
-        (rel, v, cands(key))
+        (rel, v, cands(E.partitionValue(rel, keyCol)))
       }
     }
     val fileMap = broadcast(entries.toDF("rel", "version", "in_cands"))
@@ -1970,8 +1932,8 @@ object RefQueries {
       .groupBy($"version".cast("long").as("version"))
       .agg(count(lit(1)).as("n_rows"),
         keyChecksum($"o_orderkey").as("key_checksum"),
-        sum(when($"in_cands" && $"x8".between(xLo, xHi) &&
-          $"y8".between(yLo, yHi), 1L).otherwise(0L)).as("n_rect_rows"))
+        sum(when($"in_cands" && E.inRect(HilbertRect), 1L).otherwise(0L))
+          .as("n_rect_rows"))
       .orderBy($"version".asc)
   }
 
@@ -2192,9 +2154,6 @@ object RefQueries {
     import spark.implicits._
     val E = graft.sources.Etl
     val root = E.concurrentFixture(spark, sfDir)
-    val (x1Lo, x1Hi, y1Lo, y1Hi) = HilbertRect
-    val (x2Lo, x2Hi, y2Lo, y2Hi) = HilbertRect2
-    val (x3Lo, x3Hi, y3Lo, y3Hi) = ConflictRect3
     // deterministic replay: the episode always starts from v3 (the
     // reset is the same idempotent atomic swap publication uses)
     E.chainPublish(root, "v3")
@@ -2206,11 +2165,11 @@ object RefQueries {
     val served = E.chainReadNamed(spark, root, E.chainCurrent(root))
     served.agg(count(lit(1)).as("n_rows"),
         keyChecksum($"o_orderkey").as("key_checksum"),
-        sum(when($"x8".between(x1Lo, x1Hi) && $"y8".between(y1Lo, y1Hi),
+        sum(when(E.inRect(HilbertRect),
           1L).otherwise(0L)).as("n_rect1_rows"),
-        sum(when($"x8".between(x2Lo, x2Hi) && $"y8".between(y2Lo, y2Hi),
+        sum(when(E.inRect(HilbertRect2),
           1L).otherwise(0L)).as("n_rect2_rows"),
-        sum(when($"x8".between(x3Lo, x3Hi) && $"y8".between(y3Lo, y3Hi),
+        sum(when(E.inRect(ConflictRect3),
           1L).otherwise(0L)).as("n_rect3_rows"))
       .select(lit(ok(r1)).as("publish1_ok"),
         lit(nConflict).as("n_conflict_files"),

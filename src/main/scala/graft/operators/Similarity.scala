@@ -1078,20 +1078,22 @@ object Similarity {
     * the deterministic ±1 [[jlSign]] matrix, preserving pairwise
     * distances to JL tolerance at a quarter of the bytes.
     *
-    * The projection is built as LITERAL column arithmetic — 16 columns
-    * of 64 codegen'd multiply-adds in a FIXED left-fold order, so the
-    * double sums are bit-identical on any partitioning and on both
-    * engines (the oracle regenerates the same expression from the same
-    * sign formula; no higher-order interpreted lambdas in the hot
-    * path, unlike an `aggregate(sequence(...))` fold). Scale: map-only
-    * — zero shuffles, the matrix is ~1 KB of plan constants, and the
-    * scan prunes to (vec_id, embedding). */
+    * Each output is ONE fold over a literal sign array: the d = 0 term
+    * seeds it and `v_d · s(j,d)` for d = 1..63 adds left to right — the
+    * same double sum the oracle evaluates (it regenerates the terms from
+    * the same sign formula), and the signs are ±1, so every product is
+    * exact and the result is bit-identical on any partitioning. A
+    * 16 × 64 tree of `element_at · lit` terms computes the same sum but
+    * compiles into a ~1.4 MB task binary. Scale: map-only — zero
+    * shuffles, the matrix is 1 K plan constants, and the scan prunes to
+    * (vec_id, embedding). */
   def randomProject(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val proj = (0 until JlOutDim).map { j =>
-      val s = (0 until Dim).map { d =>
-        element_at($"vec", d + 1) * lit(jlSign(j, d))
-      }.reduce(_ + _)
+      val signs = Array.tabulate(Dim)(jlSign(j, _))
+      val s = aggregate(
+        zip_with(slice($"vec", 2, Dim - 1), typedLit(signs.tail), _ * _),
+        element_at($"vec", 1) * lit(signs(0)), _ + _)
       round(s, 6).as(s"p$j")
     }
     corpus(spark, sfDir)

@@ -1,10 +1,28 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.io.File
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** ETL utilities — the reference's `csv_to_parquet.py` (CSV with header +
   * inferSchema → snappy parquet, csv_to_parquet.py:7-13) re-expressed, plus
-  * the scale-aware variants a 100 TB ingest actually needs.
+  * the scale-aware variants a 100 TB ingest actually needs, and the cached
+  * fixtures the table-lifecycle queries read.
+  *
+  * Those fixtures share ONE clustered-table layout protocol; each layout
+  * decision is made by one helper:
+  *  - [[writeClustered]]: partition directories, one sorted file per
+  *    partition, and the check that guards it;
+  *  - [[zoneMaps]] / [[writeZones]]: the per-partition (x_lo, x_hi, y_lo,
+  *    y_hi) boxes, one small file beside the data;
+  *  - [[zoneOverlap]] / [[zoneCands]] / [[candidateScan]]: the rectangle
+  *    prune and the candidate-bucket read every rectangle DML shares;
+  *  - [[dvKey]] / [[dvPositions]] / [[dropDeleted]]: the deletion-vector
+  *    (fp, ri) sidecar, its (hbucket, ri) decode and the one anti-join;
+  *  - [[partitionValue]]: a partition value from a table-relative path;
+  *  - [[binPack]]: the OPTIMIZE bin assignment;
+  *  - [[writeManifest]] / [[chainPublish]] / [[forkChain]]: ref manifests,
+  *    the `_current` pointer, and forking a chain root.
   */
 object Etl {
 
@@ -71,13 +89,181 @@ object Etl {
     * time instead of scanning 100 TB to discard 97% of it. */
   def eventsByDayFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "events-byday", s"$sfDir/events.parquet") { tmp =>
-      import org.apache.spark.sql.functions.{col, date_format}
       graft.Tables.read(spark, sfDir, "events")
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("event_date")
         .parquet(tmp.getAbsolutePath)
     }
+
+  /** Subdirectories of a clustered table root ([[hilbertOrdersFixture]]
+    * and the fixtures derived from it): `table/` holds the
+    * hbucket-partitioned data; `zones/` the per-bucket zone-map table
+    * (hbucket, x_lo, x_hi, y_lo, y_hi — ≤ 2731 rows). Zone maps are
+    * collected AT WRITE TIME — the production shape, where layout
+    * statistics are index metadata maintained by the ingest, never
+    * re-derived by a full scan at query time. */
+  val HilbertTableDir = "table"
+  val HilbertZonesDir = "zones"
+
+  // ---- The clustered-table layout protocol. Each layout decision lives
+  // in exactly one helper below; every lifecycle fixture in this file and
+  // every table-lifecycle query in RefQueries goes through them.
+
+  /** CLUSTERED WRITE — owns the physical layout: one directory partition
+    * per `key` value, holding ONE file whose rows are `sortCol`-sorted
+    * (tight footer stats). Rows are APPENDED: a fresh `dir` gets the
+    * whole table, and a copy-on-write pass ([[cowRewrite]]) removes the
+    * partitions it rewrites first, so untouched partitions carry over.
+    * LOAD-BEARING INVARIANT, checked after every write: one data file
+    * per partition directory. The MOR serve joins key deletes on
+    * (hbucket, `_metadata.row_index`) and the chain maps each manifest
+    * entry to one bucket, both sound ONLY while (file, position) ≡
+    * (partition, position) — a writer that splits a partition
+    * (maxRecordsPerFile, task splitting) or appends into a partition
+    * that was not removed fails the BUILD here, naming the directory,
+    * instead of letting an anti-join silently under-delete. Flip side
+    * at 100 TB: one file per partition caps write parallelism and file
+    * size per partition — acceptable at these narrow partitions; a
+    * wider layout would need a row-group-aware position key. */
+  private[graft] def writeClustered(rows: DataFrame, key: String,
+      sortCol: String, dir: File): Unit = {
+    rows.repartition(col(key))
+      .sortWithinPartitions(col(key), col(sortCol))
+      .write.mode(SaveMode.Append)
+      .partitionBy(key)
+      .parquet(dir.getAbsolutePath)
+    Option(dir.listFiles()).getOrElse(Array.empty[File])
+      .filter(d => d.isDirectory && d.getName.startsWith(s"$key="))
+      .foreach { d =>
+        val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
+        require(parts == 1, s"one-file-per-partition invariant broken: " +
+          s"$d holds $parts data files (expected 1)")
+      }
+  }
+
+  /** ZONE MAPS — own the per-partition bounding box: one row per `key`
+    * value with the (x_lo, x_hi, y_lo, y_hi) of its rows' grid coords,
+    * then any `extra` aggregates (the compaction's hbucket range). */
+  private[graft] def zoneMaps(rows: DataFrame, key: String,
+      extra: Column*): DataFrame =
+    rows.groupBy(col(key).cast("long").as(key))
+      .agg(min(col("x8")).as("x_lo"), Seq(max(col("x8")).as("x_hi"),
+        min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi")) ++ extra: _*)
+
+  /** Zone maps are one small file beside the data. */
+  private[graft] def writeZones(zones: DataFrame, dir: File): Unit =
+    zones.coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(dir.getAbsolutePath)
+
+  /** ZONE PRUNE — owns the overlap test: a zone row can hold a point of
+    * `rect` = (xLo, xHi, yLo, yHi) iff the two boxes intersect. */
+  private[graft] def zoneOverlap(rect: (Long, Long, Long, Long)): Column = {
+    val (xLo, xHi, yLo, yHi) = rect
+    col("x_hi") >= xLo && col("x_lo") <= xHi &&
+      col("y_hi") >= yLo && col("y_lo") <= yHi
+  }
+
+  /** The `key` values of the zone rows overlapping `rect`, ascending
+    * (one collect of ≤ 2731 metadata rows). */
+  private[graft] def zoneCands(zones: DataFrame, key: String,
+      rect: (Long, Long, Long, Long)): Array[Long] =
+    zones.filter(zoneOverlap(rect))
+      .select(col(key)).collect().map(_.getLong(0)).sorted
+
+  /** `RefQueries.MergeStripe` as a zone rectangle: the x8 stripe across
+    * the whole 8-bit y range. */
+  private[graft] def stripeRect: (Long, Long, Long, Long) = {
+    val (sLo, sHi) = graft.operators.RefQueries.MergeStripe
+    (sLo, sHi, 0L, 255L)
+  }
+
+  /** The rows of the clustered table at `root` in the given buckets
+    * (hbucket as long) — a plan-time partition prune. */
+  private[graft] def bucketScan(spark: SparkSession, root: String,
+      buckets: Seq[Long]): DataFrame =
+    spark.read.parquet(s"$root/$HilbertTableDir")
+      .withColumn("hbucket", col("hbucket").cast("long"))
+      .filter(col("hbucket").isin(buckets: _*))
+
+  /** The CANDIDATE SCAN every rectangle DML shares: `rect`'s
+    * zone-candidate buckets of the table at `root` and their rows —
+    * nothing outside the candidates is listed, opened or decoded
+    * (PlanSpec pins the PartitionFilters). */
+  private[graft] def candidateScan(spark: SparkSession, root: String,
+      rect: (Long, Long, Long, Long)): (DataFrame, Array[Long]) = {
+    val cands = zoneCands(spark.read.parquet(s"$root/$HilbertZonesDir"),
+      "hbucket", rect)
+    (bucketScan(spark, root, cands), cands)
+  }
+
+  /** Rows inside `rect` on the 8-bit grid. */
+  private[graft] def inRect(rect: (Long, Long, Long, Long)): Column = {
+    val (xLo, xHi, yLo, yHi) = rect
+    col("x8").between(xLo, xHi) && col("y8").between(yLo, yHi)
+  }
+
+  /** DELETION-VECTOR KEY — owns the sidecar shape: `fp`, the row's file
+    * as a table-relative path, and `ri`, its position in that file (the
+    * Delta/Iceberg deletion-vector shape, positions-array instead of a
+    * roaring bitmap — same semantics). */
+  private def dvKey: Seq[Column] = Seq(
+    substring_index(col("_metadata.file_path"), s"/$HilbertTableDir/", -1)
+      .as("fp"),
+    col("_metadata.row_index").as("ri"))
+
+  /** A sidecar's tombstones as (hbucket, ri): one file per bucket
+    * directory ([[writeClustered]]) makes (file, position) ≡ (hbucket,
+    * position), so the decode runs on the sidecar rows only and the scan
+    * side never materializes a per-row file-path string (the r17
+    * measurement: ~2 s of task cpu on a ~3 s scan). */
+  private[graft] def dvPositions(dv: DataFrame): DataFrame =
+    dv.select(regexp_extract(col("fp"), "hbucket=(\\d+)/", 1).cast("long")
+      .as("hbucket"), col("ri"))
+
+  /** `rows` (long `hbucket`, `ri` = `_metadata.row_index`) minus the
+    * [[dvPositions]] tombstones — the one broadcast position anti-join
+    * of every DV reader and builder. */
+  private[graft] def dropDeleted(rows: DataFrame,
+      positions: DataFrame): DataFrame =
+    rows.join(broadcast(positions), Seq("hbucket", "ri"), "left_anti")
+
+  /** The live rows of the given buckets of the clustered table at
+    * `root` under the [[dvPositions]] tombstones — what a compaction
+    * materializes. */
+  private def liveRows(spark: SparkSession, root: String,
+      buckets: Seq[Long], positions: DataFrame): DataFrame =
+    dropDeleted(bucketScan(spark, root, buckets)
+      .withColumn("ri", col("_metadata.row_index")), positions).drop("ri")
+
+  /** The value of partition column `key` in a table-relative file path
+    * (`c1/hbucket=17/part-…` → 17). */
+  private[graft] def partitionValue(rel: String, key: String): Long =
+    rel.split('/').find(_.startsWith(s"$key=")).get
+      .drop(key.length + 1).toLong
+
+  /** OPTIMIZE bin assignment — `rows` (long `hbucket`) with a `cbin`
+    * column packing CONTIGUOUS hbucket ranges into ~256 target-size bins
+    * (rows stand in for bytes at fixture scale). Deterministic: running
+    * row count over the ≤ 2731-row bucket-count table (triangular
+    * broadcast join, the packSequences offset pattern), bin =
+    * cum_before div target — so the DuckDB oracle replays the exact file
+    * layout. */
+  private def binPack(rows: DataFrame): DataFrame = {
+    val counts = rows.groupBy(col("hbucket"))
+      .agg(count(lit(1)).as("bc"))
+    val total = counts.agg(coalesce(sum(col("bc")), lit(0L)))
+      .head().getLong(0)
+    val target = math.max(64L, (total + 255L) / 256L)
+    val bins = counts.as("a")
+      .join(broadcast(counts.as("b")),
+        col("b.hbucket") < col("a.hbucket"), "left_outer")
+      .groupBy(col("a.hbucket").as("hbucket"))
+      .agg(coalesce(sum(col("b.bc")), lit(0L)).as("cum_before"))
+      .select(col("hbucket"),
+        expr(s"cum_before div $target").as("cbin"))
+    rows.join(broadcast(bins), Seq("hbucket"))
+  }
 
   /** Cached copy of `orders` PHYSICALLY laid out on the Hilbert curve —
     * the write path that makes `RefQueries.qHilbertLayout`'s analysis
@@ -91,15 +277,6 @@ object Etl {
     * plan-guards it) — the reason warehouses cluster on space-filling
     * curves. Built once per (machine, sfDir) like the other fixtures;
     * Bench accounts it under `etl`, never inside a timed query. */
-  /** Subdirectories of [[hilbertOrdersFixture]]: `table/` holds the
-    * hbucket-partitioned data; `zones/` the per-bucket zone-map table
-    * (hbucket, x_lo, x_hi, y_lo, y_hi — ≤ 2731 rows). Zone maps are
-    * collected AT WRITE TIME — the production shape, where layout
-    * statistics are index metadata maintained by the ingest, never
-    * re-derived by a full scan at query time. */
-  val HilbertTableDir = "table"
-  val HilbertZonesDir = "zones"
-
   def hilbertOrdersFixture(spark: SparkSession, sfDir: String): String = {
     curveOrdersFixture(spark, sfDir, "orders-hilbert-v3",
       "hilbert_xy2d(x8, y8)")
@@ -127,7 +304,6 @@ object Etl {
     * impossible by construction. */
   private[graft] def orderLayoutStats(spark: SparkSession,
       sfDir: String): org.apache.spark.sql.Row = {
-    import org.apache.spark.sql.functions._
     graft.Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey").cast("long").as("ck"),
         datediff(col("o_orderdate").cast("date"),
@@ -144,7 +320,6 @@ object Etl {
     * with the same integer arithmetic. */
   private[graft] def mergeKeyOffset(spark: SparkSession,
       sfDir: String): Long = {
-    import org.apache.spark.sql.functions._
     val mx = graft.Tables.read(spark, sfDir, "orders")
       .agg(max(col("o_orderkey"))).head().getLong(0)
     (mx / 10000000L + 1L) * 10000000L
@@ -156,7 +331,6 @@ object Etl {
     * (both place rows with the SAME [[orderLayoutStats]]). */
   private[graft] def curveLaid(spark: SparkSession, sfDir: String,
       idxSql: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val st = orderLayoutStats(spark, sfDir)
     val (ckMin, ckMax) = (st.getLong(0), st.getLong(1))
     val (dayMin, dayMax) = (st.getLong(2), st.getLong(3))
@@ -179,43 +353,12 @@ object Etl {
   private def curveOrdersFixture(spark: SparkSession, sfDir: String,
       key: String, idxSql: String): String =
     cachedFixture(sfDir, key, s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val laid = curveLaid(spark, sfDir, idxSql)
-      laid
-        .repartition(col("hbucket"))
-        .sortWithinPartitions(col("hbucket"), col("hidx"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("hbucket")
-        .parquet(new java.io.File(tmp, HilbertTableDir).getAbsolutePath)
-      // LOAD-BEARING WRITE INVARIANT: the MOR serve joins
-      // (RefQueries.qDeleteMor/qDeleteMorStacked/qMergeMor) key deletes
-      // on (hbucket, _metadata.row_index), which is sound ONLY while
-      // each hbucket directory holds exactly ONE data file — then
-      // (file, position) ≡ (hbucket, position). repartition(hbucket)
-      // guarantees it today (one task per bucket, no maxRecordsPerFile
-      // on this writer); if the writer ever splits a bucket, fail the
-      // BUILD loudly instead of letting the anti-join silently
-      // under-delete. Flip side at 100 TB: one file per bucket caps
-      // write parallelism and file size per bucket — acceptable at this
-      // fixture's ~2731 narrow buckets; a wider-bucket layout would
-      // need a real row-group-aware position key instead.
-      new java.io.File(tmp, HilbertTableDir).listFiles()
-        .filter(d => d.isDirectory && d.getName.startsWith("hbucket="))
-        .foreach { d =>
-          val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
-          require(parts == 1,
-            s"MOR (hbucket, row_index) key invariant broken: " +
-              s"${d.getName} holds $parts data files (expected 1)")
-        }
+      writeClustered(laid, "hbucket", "hidx", new File(tmp, HilbertTableDir))
       // zone maps collected in the same build, beside the data (one
       // grid-bounded aggregate — at scale this is the stats pass an
       // ingest job already does)
-      laid.groupBy(col("hbucket").cast("long").as("hbucket"))
-        .agg(min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-          min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, HilbertZonesDir).getAbsolutePath)
+      writeZones(zoneMaps(laid, "hbucket"), new File(tmp, HilbertZonesDir))
     }
 
   /** COMPACTED (bin-packed) copy of the Hilbert table — the OPTIMIZE /
@@ -223,13 +366,10 @@ object Etl {
     * fine-grained clustered write: [[hilbertOrdersFixture]] deliberately
     * writes ~2731 tiny per-bucket files (zone-map granularity); this
     * pass bin-packs CONTIGUOUS hbucket ranges into ~256 target-size
-    * output files (rows stand in for bytes at fixture scale), keeping
-    * rows hidx-sorted within each file so footer zone maps stay tight,
-    * and writes per-BIN zone maps beside the data. Bin assignment is
-    * deterministic — running row count over the ≤ 2731-row bucket-count
-    * table (triangular broadcast join, the packSequences offset
-    * pattern), bin = cum_before div target — so the DuckDB oracle
-    * replays the exact file layout, and `q_compact_scan` hash-gates the
+    * output files ([[binPack]]), keeping rows hidx-sorted within each
+    * file so footer zone maps stay tight, and writes per-BIN zone maps
+    * beside the data. The oracle replays the exact file layout, and
+    * `q_compact_scan` hash-gates the
     * on-disk file count against the oracle's derived bin count (each
     * bin lands in exactly one task → exactly one file).
     * Zone-map soundness: bins are contiguous hidx-bucket ranges, so a
@@ -256,35 +396,11 @@ object Etl {
   private def compactCurveFixture(spark: SparkSession, sfDir: String,
       key: String, src: String): String = {
     cachedFixture(sfDir, key, s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
-      val t = spark.read.parquet(s"$src/$HilbertTableDir")
-        .withColumn("hbucket", col("hbucket").cast("long"))
-      val counts = t.groupBy(col("hbucket"))
-        .agg(count(lit(1)).as("bc"))
-      val total = counts.agg(coalesce(sum(col("bc")), lit(0L)))
-        .head().getLong(0)
-      val target = math.max(64L, (total + 255L) / 256L)
-      val bins = counts.as("a")
-        .join(broadcast(counts.as("b")),
-          col("b.hbucket") < col("a.hbucket"), "left_outer")
-        .groupBy(col("a.hbucket").as("hbucket"))
-        .agg(coalesce(sum(col("b.bc")), lit(0L)).as("cum_before"))
-        .select(col("hbucket"),
-          expr(s"cum_before div $target").as("cbin"))
-      val laid = t.join(broadcast(bins), Seq("hbucket"))
-      laid
-        .repartition(col("cbin"))
-        .sortWithinPartitions(col("cbin"), col("hidx"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("cbin")
-        .parquet(new java.io.File(tmp, HilbertTableDir).getAbsolutePath)
-      laid.groupBy(col("cbin").cast("long").as("cbin"))
-        .agg(min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-          min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"),
-          min(col("hbucket")).as("hb_lo"), max(col("hbucket")).as("hb_hi"))
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, HilbertZonesDir).getAbsolutePath)
+      val laid = binPack(spark.read.parquet(s"$src/$HilbertTableDir")
+        .withColumn("hbucket", col("hbucket").cast("long")))
+      writeClustered(laid, "cbin", "hidx", new File(tmp, HilbertTableDir))
+      writeZones(zoneMaps(laid, "cbin", min(col("hbucket")).as("hb_lo"),
+        max(col("hbucket")).as("hb_hi")), new File(tmp, HilbertZonesDir))
     }
   }
 
@@ -296,13 +412,9 @@ object Etl {
     *    stands in for a manifest re-point, which costs a real table
     *    format zero I/O — nothing outside the predicate's zone-map
     *    candidates is read, decoded, or rewritten);
-    *  - touched buckets are rewritten from their SURVIVING rows through
-    *    per-write dynamic partition overwrite (only partitions present
-    *    in the written data are replaced — the Spark-native COW
-    *    mechanism, scoped to this write via `.option(...)`, no session
-    *    conf);
-    *  - buckets whose every row dies have their directories removed
-    *    (dynamic overwrite never visits an absent partition);
+    *  - touched buckets are rewritten from their SURVIVING rows
+    *    ([[cowRewrite]]);
+    *  - buckets whose every row dies have their directories removed;
     *  - zone maps refresh for touched buckets only.
     * Deterministic end-to-end (the survivor set and the
     * one-file-per-bucket layout both derive from the grid), so the
@@ -314,7 +426,7 @@ object Etl {
     // a rebuilt v0 (fresh part UUIDs) must rebuild this copy too
     cachedFixture(sfDir, "orders-hilbert-cow-v2",
         s"$src/_SUCCESS") { tmp =>
-      copyDir(new java.io.File(src), tmp)
+      copyDir(new File(src), tmp)
       cowDeleteRect(spark, src, tmp,
         graft.operators.RefQueries.HilbertRect)
     }
@@ -323,11 +435,11 @@ object Etl {
   /** Recursive file copy — the manifest-re-point stand-in for
     * [[deleteRewriteFixture]] (driver metadata work over ≤ ~2731 files;
     * a real table format writes a new manifest instead). */
-  private[graft] def copyDir(from: java.io.File, to: java.io.File): Unit =
+  private[graft] def copyDir(from: File, to: File): Unit =
     if (from.isDirectory) {
       to.mkdirs()
-      Option(from.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(f => copyDir(f, new java.io.File(to, f.getName)))
+      Option(from.listFiles()).getOrElse(Array.empty[File])
+        .foreach(f => copyDir(f, new File(to, f.getName)))
     } else {
       java.nio.file.Files.copy(from.toPath, to.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
@@ -340,18 +452,8 @@ object Etl {
     * production read. */
   private[graft] def cowSurvivors(spark: SparkSession, srcRoot: String,
       rect: (Long, Long, Long, Long)): (DataFrame, Array[Long]) = {
-    import org.apache.spark.sql.functions._
-    val (xLo, xHi, yLo, yHi) = rect
-    val touched = spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
-      .filter(col("x_hi") >= xLo && col("x_lo") <= xHi &&
-        col("y_hi") >= yLo && col("y_lo") <= yHi)
-      .select(col("hbucket")).collect().map(_.getLong(0)).sorted
-    val surv = spark.read.parquet(s"$srcRoot/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(touched: _*))
-      .filter(!(col("x8").between(xLo, xHi) &&
-        col("y8").between(yLo, yHi)))
-    (surv, touched)
+    val (cands, touched) = candidateScan(spark, srcRoot, rect)
+    (cands.filter(!inRect(rect)), touched)
   }
 
   /** The COW DELETE pass over a copied layout at `dstRoot` (see
@@ -360,47 +462,32 @@ object Etl {
     * maps. Exposed for the physical spec (untouched files bit-identical,
     * touched replaced, dead dirs gone). */
   private[graft] def cowDeleteRect(spark: SparkSession, srcRoot: String,
-      dstRoot: java.io.File, rect: (Long, Long, Long, Long)): Unit = {
+      dstRoot: File, rect: (Long, Long, Long, Long)): Unit = {
     val (surv0, touched) = cowSurvivors(spark, srcRoot, rect)
-    // three consumers (write, liveness census, zone refresh) — one scan
+    // two consumers (write, zone refresh) — one scan
     cowRewrite(spark, srcRoot, dstRoot, surv0.localCheckpoint(true),
       touched.toSeq)
   }
 
-  /** The shared COW rewrite tail (DELETE and MERGE run the identical
-    * protocol — one implementation so they can never physically
-    * diverge): write `finalRows` through per-write dynamic partition
-    * overwrite (hbucket directory partitions, hidx-sorted within files),
-    * drop the directories of touched buckets that ended up with no rows
-    * (dynamic overwrite never visits a partition absent from the data),
-    * and refresh zone maps — untouched rows carry over, touched buckets
-    * recompute from the written rows. `finalRows` must be checkpointed
-    * by the caller (three consumers — one scan). */
+  /** The shared COW rewrite tail (DELETE, MERGE and both MOR
+    * compactions run the identical protocol — one implementation so they
+    * can never physically diverge): remove every touched bucket's
+    * directory from the copied layout at `dstRoot`, write `finalRows`
+    * (all in touched buckets) through [[writeClustered]] — a touched
+    * bucket left with no rows simply never comes back — and refresh zone
+    * maps: untouched rows carry over, touched buckets recompute from the
+    * written rows. `finalRows` must be checkpointed by the caller (two
+    * consumers — one scan). */
   private def cowRewrite(spark: SparkSession, srcRoot: String,
-      dstRoot: java.io.File, finalRows: DataFrame,
+      dstRoot: File, finalRows: DataFrame,
       touched: Seq[Long]): Unit = {
-    import org.apache.spark.sql.functions._
-    val dstTable = new java.io.File(dstRoot, HilbertTableDir)
-    finalRows
-      .repartition(col("hbucket"))
-      .sortWithinPartitions(col("hbucket"), col("hidx"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("hbucket")
-      .parquet(dstTable.getAbsolutePath)
-    val alive = finalRows.select(col("hbucket")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    touched.filterNot(alive).foreach { b =>
-      deleteRecursively(new java.io.File(dstTable, s"hbucket=$b"))
-    }
-    val zones = spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
-    zones.filter(!col("hbucket").isin(touched: _*))
-      .unionByName(finalRows.groupBy(col("hbucket"))
-        .agg(min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-          min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi")))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(new java.io.File(dstRoot, HilbertZonesDir).getAbsolutePath)
+    val dstTable = new File(dstRoot, HilbertTableDir)
+    touched.foreach(b => deleteRecursively(new File(dstTable, s"hbucket=$b")))
+    writeClustered(finalRows, "hbucket", "hidx", dstTable)
+    writeZones(spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
+      .filter(!col("hbucket").isin(touched: _*))
+      .unionByName(zoneMaps(finalRows, "hbucket")),
+      new File(dstRoot, HilbertZonesDir))
   }
 
   /** Subdirectory of [[mergeRewriteFixture]] holding the commit manifest
@@ -423,26 +510,9 @@ object Etl {
     // file-name-identity argument — see deleteRewriteFixture)
     cachedFixture(sfDir, "orders-hilbert-merge-v2",
         s"$src/_SUCCESS") { tmp =>
-      copyDir(new java.io.File(src), tmp)
+      copyDir(new File(src), tmp)
       cowMergeStripe(spark, sfDir, src, tmp): Unit
     }
-  }
-
-  /** The MERGE update-half read — stripe zone-map candidates only
-    * (plan-time PartitionFilters; PlanSpec guards that partitions
-    * outside the stripe's candidates are never read). Exposed so the
-    * plan guard exercises exactly the production read. */
-  private[graft] def mergeStripeCands(spark: SparkSession,
-      srcRoot: String): (DataFrame, Array[Long]) = {
-    import org.apache.spark.sql.functions._
-    val (sLo, sHi) = graft.operators.RefQueries.MergeStripe
-    val srcCands = spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
-      .filter(col("x_hi") >= sLo && col("x_lo") <= sHi)
-      .select(col("hbucket")).collect().map(_.getLong(0)).sorted
-    val candRows = spark.read.parquet(s"$srcRoot/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(srcCands: _*))
-    (candRows, srcCands)
   }
 
   /** The COW MERGE pass over a copied layout at `dstRoot`:
@@ -451,8 +521,8 @@ object Etl {
     *    table's day span), which RELOCATES them on the curve — new y8,
     *    new hidx, new hbucket. Source partitions are zone-map candidates
     *    for the stripe (the only partitions the update half reads —
-    *    [[mergeStripeCands]]); their retained rows rewrite with the
-    *    bucket.
+    *    the [[candidateScan]] of [[stripeRect]]); their retained rows
+    *    rewrite with the bucket.
     *  - INSERT half: a CDC feed of re-keyed sampled orders
     *    (`mix64(o_orderkey) mod MergeInsertMod = 0`, key +
     *    [[mergeKeyOffset]] — derived above the max key, never a fixed
@@ -472,14 +542,11 @@ object Etl {
     * Returns (stripe zone candidates, full touched set) so the physical
     * spec can prove untouched partitions carried over bit-identical. */
   private[graft] def cowMergeStripe(spark: SparkSession, sfDir: String,
-      srcRoot: String, dstRoot: java.io.File): (Array[Long], Array[Long]) = {
-    import org.apache.spark.sql.functions._
-    val R = graft.operators.RefQueries
-    val (sLo, sHi) = R.MergeStripe
+      srcRoot: String, dstRoot: File): (Array[Long], Array[Long]) = {
     val keyOff = mergeKeyOffset(spark, sfDir)
     // update half reads ONLY the stripe's zone-map candidates
-    val (candRows, srcCands) = mergeStripeCands(spark, srcRoot)
-    val retained = candRows.filter(!col("x8").between(sLo, sHi))
+    val (candRows, srcCands) = candidateScan(spark, srcRoot, stripeRect)
+    val retained = candRows.filter(!inRect(stripeRect))
     val (movers, ins) = mergeBatch(spark, sfDir, candRows)
     // two consumers (bucket census, final union) — one computation
     val incoming = movers.unionByName(ins).localCheckpoint(true)
@@ -487,10 +554,8 @@ object Etl {
       .collect().map(_.getLong(0))
     val touched = (srcCands ++ inBuckets).distinct.sorted
     val destOnly = inBuckets.filterNot(srcCands.toSet).sorted
-    val existingDest = spark.read.parquet(s"$srcRoot/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(destOnly: _*))
-    // three consumers (write, liveness census, zone refresh) — one scan
+    val existingDest = bucketScan(spark, srcRoot, destOnly)
+    // two consumers (write, zone refresh) — one scan
     val finalRows = retained.unionByName(existingDest)
       .unionByName(incoming).localCheckpoint(true)
     cowRewrite(spark, srcRoot, dstRoot, finalRows, touched.toSeq)
@@ -509,7 +574,7 @@ object Etl {
       .toDF("n_buckets_touched", "n_updated", "n_inserted")
       .coalesce(1)
       .write.mode(SaveMode.Overwrite)
-      .parquet(new java.io.File(dstRoot, MergeManifestDir).getAbsolutePath)
+      .parquet(new File(dstRoot, MergeManifestDir).getAbsolutePath)
     (srcCands, touched.toArray)
   }
 
@@ -522,14 +587,12 @@ object Etl {
     * placed with the frozen layout stats. */
   private def mergeBatch(spark: SparkSession, sfDir: String,
       candRows: DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
     val R = graft.operators.RefQueries
-    val (sLo, sHi) = R.MergeStripe
     val st = orderLayoutStats(spark, sfDir)
     val dayMin = st.getLong(2)
     val span = st.getLong(3) - dayMin + 1L
     val keyOff = mergeKeyOffset(spark, sfDir)
-    val movers = candRows.filter(col("x8").between(sLo, sHi))
+    val movers = candRows.filter(inRect(stripeRect))
       .withColumn("off", (col("day") - dayMin + R.MergeDayShift) % span)
       .withColumn("day", col("off") + dayMin)
       .withColumn("y8", expr(s"(off * 256) div $span"))
@@ -562,21 +625,16 @@ object Etl {
     val src = hilbertOrdersFixture(spark, sfDir)
     cachedFixture(sfDir, "orders-hilbert-mormerge-v1",
         s"$src/_SUCCESS") { tmp =>
-      import org.apache.spark.sql.functions._
-      val (sLo, sHi) = graft.operators.RefQueries.MergeStripe
-      val (candRows, _) = mergeStripeCands(spark, src)
-      candRows.filter(col("x8").between(sLo, sHi))
-        .select(substring_index(col("_metadata.file_path"),
-          s"/$HilbertTableDir/", -1).as("fp"),
-          col("_metadata.row_index").as("ri"))
+      val (candRows, _) = candidateScan(spark, src, stripeRect)
+      candRows.filter(inRect(stripeRect)).select(dvKey: _*)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "dv").getAbsolutePath)
+        .parquet(new File(tmp, "dv").getAbsolutePath)
       val (movers, ins) = mergeBatch(spark, sfDir, candRows)
       movers.unionByName(ins)
         .repartition(col("hbucket"))
         .sortWithinPartitions(col("hbucket"), col("hidx"))
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "adds").getAbsolutePath)
+        .parquet(new File(tmp, "adds").getAbsolutePath)
     }
   }
 
@@ -589,25 +647,15 @@ object Etl {
     * layout census-for-census, which is the claim that MOR and COW are
     * one protocol with a deferred write. */
   private[graft] def morMergeCompact(spark: SparkSession, sfDir: String,
-      dstRoot: java.io.File): Unit = {
-    import org.apache.spark.sql.functions._
+      dstRoot: File): Unit = {
     val src = hilbertOrdersFixture(spark, sfDir)
     val mor = morMergeFixture(spark, sfDir)
-    val dv = spark.read.parquet(s"$mor/dv").localCheckpoint(true)
+    val dv = dvPositions(spark.read.parquet(s"$mor/dv")).localCheckpoint(true)
     val adds = spark.read.parquet(s"$mor/adds")
-    val touched = dv
-      .select(regexp_extract(col("fp"), "hbucket=(\\d+)/", 1)
-        .cast("long").as("hbucket"))
+    val touched = dv.select(col("hbucket"))
       .unionByName(adds.select(col("hbucket")))
       .distinct().collect().map(_.getLong(0)).sorted
-    val survivors = spark.read.parquet(s"$src/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(touched: _*))
-      .withColumn("fp", substring_index(col("_metadata.file_path"),
-        s"/$HilbertTableDir/", -1))
-      .withColumn("ri", col("_metadata.row_index"))
-      .join(broadcast(dv), Seq("fp", "ri"), "left_anti")
-      .drop("fp", "ri")
+    val survivors = liveRows(spark, src, touched, dv)
     val finalRows = survivors
       .unionByName(adds.select(survivors.columns.map(col): _*))
       .localCheckpoint(true)
@@ -632,22 +680,17 @@ object Etl {
   def priceStatsFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-pricestats-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val R = graft.operators.RefQueries
       val laid = graft.Tables.read(spark, sfDir, "orders")
         .select(col("o_orderkey"),
           (col("o_totalprice") * 100).cast("long").as("cents"))
         .withColumn("pbin", expr(s"cents div ${R.PriceBinCents}"))
-      laid.repartition(col("pbin"))
-        .sortWithinPartitions(col("pbin"), col("cents"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("pbin")
-        .parquet(new java.io.File(tmp, PriceTableDir).getAbsolutePath)
+      writeClustered(laid, "pbin", "cents", new File(tmp, PriceTableDir))
       // write-time stats: per physical FILE, the column's min/max and
       // row count — built from the files just written (at 100 TB the
       // writer emits these with each file's footer; this pass stands in)
       spark.read
-        .parquet(new java.io.File(tmp, PriceTableDir).getAbsolutePath)
+        .parquet(new File(tmp, PriceTableDir).getAbsolutePath)
         .select(substring_index(col("_metadata.file_path"),
           s"/$PriceTableDir/", -1).as("fp"), col("cents"))
         .groupBy(col("fp"))
@@ -655,7 +698,7 @@ object Etl {
           count(lit(1)).as("n_rows"))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, PriceStatsDir).getAbsolutePath)
+        .parquet(new File(tmp, PriceStatsDir).getAbsolutePath)
     }
 
   /** The MATERIALIZED VIEW `q_cdf_refresh` maintains — the per-x8-band
@@ -684,8 +727,7 @@ object Etl {
         s"$sfDir/embeddings.parquet") { tmp =>
       graft.operators.Similarity.buildIndexV1(spark, sfDir,
         tmp.getAbsolutePath)
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_current").toPath, "v1"): Unit
+      chainPublish(tmp.getAbsolutePath, "v1")
     }
 
   /** SCHEMA-EVOLUTION fixture — the mid-life column add every long-lived
@@ -700,7 +742,6 @@ object Etl {
   def schemaEvolutionFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-schema-evo-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val ord = graft.Tables.read(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey").cast("long").as("ck"))
       ord.filter(col("o_orderkey") % 2 === 0)
@@ -730,7 +771,6 @@ object Etl {
   def typeWideningFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-schema-widen-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val ord = graft.Tables.read(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey").cast("long").as("ck"))
       ord.filter(col("o_orderkey") % 3 === 0)
@@ -769,7 +809,7 @@ object Etl {
     cachedFixture(sfDir, "orders-hilbert-dv-v1", s"$src/_SUCCESS") { tmp =>
       morDvBuild(spark, src)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "dv").getAbsolutePath)
+        .parquet(new File(tmp, "dv").getAbsolutePath)
     }
   }
 
@@ -779,20 +819,9 @@ object Etl {
     * build. */
   private[graft] def morDvBuild(spark: SparkSession, srcRoot: String)
       : DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (xLo, xHi, yLo, yHi) = graft.operators.RefQueries.HilbertRect
-    val cands = spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
-      .filter(col("x_hi") >= xLo && col("x_lo") <= xHi &&
-        col("y_hi") >= yLo && col("y_lo") <= yHi)
-      .select(col("hbucket")).collect().map(_.getLong(0)).sorted
-    spark.read.parquet(s"$srcRoot/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(cands: _*) &&
-        col("x8").between(xLo, xHi) && col("y8").between(yLo, yHi))
-      .select(
-        substring_index(col("_metadata.file_path"),
-          s"/$HilbertTableDir/", -1).as("fp"),
-        col("_metadata.row_index").as("ri"))
+    val rect = graft.operators.RefQueries.HilbertRect
+    candidateScan(spark, srcRoot, rect)._1.filter(inRect(rect))
+      .select(dvKey: _*)
   }
 
   /** SECOND deletion-vector sidecar — DV STACKING, the daily reality of
@@ -814,32 +843,22 @@ object Etl {
     cachedFixture(sfDir, "orders-hilbert-dv2-v1", s"$dv1/_SUCCESS") { tmp =>
       morDv2Build(spark, src, dv1)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "dv").getAbsolutePath)
+        .parquet(new File(tmp, "dv").getAbsolutePath)
     }
   }
 
   /** The stacked-DV build read: rect2 victims among rows still alive
     * under dv1 — zone-candidate partitions only, dv1 applied as a
-    * broadcast anti-join INSIDE the candidate scan. Exposed so PlanSpec
-    * pins both the PartitionFilters and the broadcast. */
+    * broadcast (hbucket, position) anti-join INSIDE the candidate scan.
+    * Exposed so PlanSpec pins both the PartitionFilters and the
+    * broadcast. */
   private[graft] def morDv2Build(spark: SparkSession, srcRoot: String,
       dv1Root: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (xLo, xHi, yLo, yHi) = graft.operators.RefQueries.HilbertRect2
-    val cands = spark.read.parquet(s"$srcRoot/$HilbertZonesDir")
-      .filter(col("x_hi") >= xLo && col("x_lo") <= xHi &&
-        col("y_hi") >= yLo && col("y_lo") <= yHi)
-      .select(col("hbucket")).collect().map(_.getLong(0)).sorted
-    val dv1 = spark.read.parquet(s"$dv1Root/dv")
-    spark.read.parquet(s"$srcRoot/$HilbertTableDir")
-      .withColumn("hbucket", col("hbucket").cast("long"))
-      .filter(col("hbucket").isin(cands: _*) &&
-        col("x8").between(xLo, xHi) && col("y8").between(yLo, yHi))
-      .select(
-        substring_index(col("_metadata.file_path"),
-          s"/$HilbertTableDir/", -1).as("fp"),
-        col("_metadata.row_index").as("ri"))
-      .join(broadcast(dv1), Seq("fp", "ri"), "left_anti")
+    val rect = graft.operators.RefQueries.HilbertRect2
+    val victims = candidateScan(spark, srcRoot, rect)._1.filter(inRect(rect))
+      .select(col("hbucket") +: dvKey: _*)
+    dropDeleted(victims, dvPositions(spark.read.parquet(s"$dv1Root/dv")))
+      .select("fp", "ri")
   }
 
   /** DV COMPACTION fixture — the commit that ENDS a merge-on-read
@@ -859,33 +878,22 @@ object Etl {
     * untouched buckets carry over by manifest re-point (file copy
     * stand-in). */
   def morDvCompactFixture(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions._
     val src = hilbertOrdersFixture(spark, sfDir)
     val dv1 = morDvFixture(spark, sfDir)
     val dv2 = morDv2Fixture(spark, sfDir)
     cachedFixture(sfDir, "orders-hilbert-dvcompact-v1",
         s"$dv2/_SUCCESS") { tmp =>
-      copyDir(new java.io.File(src), tmp)
-      val dv = spark.read.parquet(s"$dv1/dv")
-        .unionByName(spark.read.parquet(s"$dv2/dv"))
-        .localCheckpoint(true)
+      copyDir(new File(src), tmp)
+      val dv = dvPositions(spark.read.parquet(s"$dv1/dv")
+        .unionByName(spark.read.parquet(s"$dv2/dv"))).localCheckpoint(true)
       // the sidecar itself names every touched bucket — compliance-sized
       // driver metadata, no table scan needed to plan the rewrite
-      val touched = dv
-        .select(regexp_extract(col("fp"), "hbucket=(\\d+)/", 1)
-          .cast("long").as("hbucket"))
+      val touched = dv.select(col("hbucket"))
         .distinct().collect().map(_.getLong(0)).sorted
-      val survivors = spark.read.parquet(s"$src/$HilbertTableDir")
-        .withColumn("hbucket", col("hbucket").cast("long"))
-        .filter(col("hbucket").isin(touched: _*))
-        .withColumn("fp", substring_index(col("_metadata.file_path"),
-          s"/$HilbertTableDir/", -1))
-        .withColumn("ri", col("_metadata.row_index"))
-        .join(broadcast(dv), Seq("fp", "ri"), "left_anti")
-        .drop("fp", "ri")
       // retire the materialized DVs: a reader of THIS version must find
       // no sidecar to apply (the dv dir simply isn't part of the layout)
-      cowRewrite(spark, src, tmp, survivors.localCheckpoint(true),
+      cowRewrite(spark, src, tmp,
+        liveRows(spark, src, touched, dv).localCheckpoint(true),
         touched.toSeq)
     }
   }
@@ -904,17 +912,16 @@ object Etl {
   def schemaRenameFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-schema-rename-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val ord = graft.Tables.read(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey").cast("long").as("ck"))
       ord.filter(col("o_orderkey") % 2 === 0)
         .withColumn("qty_v1", pmod(col("ck"), lit(100L)))
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "g1").getAbsolutePath)
+        .parquet(new File(tmp, "g1").getAbsolutePath)
       ord.filter(col("o_orderkey") % 2 === 1)
         .withColumn("o_qty", pmod(col("ck"), lit(100L)) + 100L)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "g2").getAbsolutePath)
+        .parquet(new File(tmp, "g2").getAbsolutePath)
     }
 
   /** DROP-COLUMN fixture — the fourth mid-life migration: generation 1
@@ -932,16 +939,15 @@ object Etl {
   def schemaDropFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-schema-drop-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val ord = graft.Tables.read(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_custkey").cast("long").as("ck"))
       ord.filter(col("o_orderkey") % 2 === 0)
         .withColumn("o_note", pmod(col("ck"), lit(1000L)))
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "g1").getAbsolutePath)
+        .parquet(new File(tmp, "g1").getAbsolutePath)
       ord.filter(col("o_orderkey") % 2 === 1)
         .write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "g2").getAbsolutePath)
+        .parquet(new File(tmp, "g2").getAbsolutePath)
     }
 
   /** Subdirectories of [[partitionEvolutionFixture]]: per-commit data
@@ -971,25 +977,15 @@ object Etl {
       : String = {
     cachedFixture(sfDir, "orders-partition-evo-v1",
         s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val laid = curveLaid(spark, sfDir, "hilbert_xy2d(x8, y8)")
         .localCheckpoint(true)
       def writeSpec(commit: String, rows: DataFrame, width: Long,
           spec: String): Unit = {
         val binned = rows.withColumn("pbucket", expr(s"hidx div $width"))
-        binned.repartition(col("pbucket"))
-          .sortWithinPartitions(col("pbucket"), col("hidx"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("pbucket")
-          .parquet(new java.io.File(new java.io.File(tmp, PartEvoDataDir),
-            commit).getAbsolutePath)
-        binned.groupBy(col("pbucket").cast("long").as("pbucket"))
-          .agg(min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-            min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(new java.io.File(new java.io.File(tmp, PartEvoZonesDir),
-            spec).getAbsolutePath)
+        writeClustered(binned, "pbucket", "hidx",
+          new File(new File(tmp, PartEvoDataDir), commit))
+        writeZones(zoneMaps(binned, "pbucket"),
+          new File(new File(tmp, PartEvoZonesDir), spec))
       }
       writeSpec("c0", laid.filter(col("o_orderkey") % 2 === 0),
         PartEvoWidthOld, "spec24")
@@ -1017,7 +1013,7 @@ object Etl {
     * dir means concurrent runs can never delete each other's in-flight
     * builds and nothing accumulates after exit. */
   lazy val warehouseDir: String = {
-    val dir = new java.io.File(
+    val dir = new File(
       s"${System.getProperty("java.io.tmpdir")}/graft_wh_${java.util.UUID.randomUUID()}")
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       deleteRecursively(dir)))
@@ -1052,7 +1048,7 @@ object Etl {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val success = new org.apache.hadoop.fs.Path(loc, "_SUCCESS")
       val srcMtime =
-        new java.io.File(s"$sfDir/$srcTable.parquet").lastModified
+        new File(s"$sfDir/$srcTable.parquet").lastModified
       val fresh = fs.exists(success) &&
         fs.getFileStatus(success).getModificationTime >= srcMtime
       if (!spark.catalog.tableExists(table) || !fresh) {
@@ -1109,119 +1105,54 @@ object Etl {
     * arithmetic alone. */
   def chainFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "orders-chain-v4", s"$sfDir/orders.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val R = graft.operators.RefQueries
-      val data = new java.io.File(tmp, ChainDataDir)
-      val mans = new java.io.File(tmp, ChainManifestsDir)
-      mans.mkdirs()
-
-      def writeCommit(c: String, rows: DataFrame, partCol: String): Unit =
-        rows.repartition(col(partCol))
-          .sortWithinPartitions(col(partCol), col("hidx"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy(partCol)
-          .parquet(new java.io.File(data, c).getAbsolutePath)
-      def commitFiles(c: String): Seq[String] = {
-        val base = new java.io.File(data, c)
-        Option(base.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-          .filter(d => d.isDirectory && d.getName.contains("="))
-          .flatMap { d =>
-            Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-              .filter(_.getName.startsWith("part-"))
-              .map(f => s"$c/${d.getName}/${f.getName}")
-          }.sorted
+      val root = tmp.getAbsolutePath
+      def writeCommit(c: String, rows: DataFrame, key: String): Seq[String] = {
+        writeClustered(rows, key, "hidx",
+          new File(new File(tmp, ChainDataDir), c))
+        listCommitFiles(root, c)
       }
-      def writeManifest(v: Int, files: Seq[String]): Unit =
-        java.nio.file.Files.write(
-          new java.io.File(mans, s"v$v.txt").toPath,
-          files.sorted.mkString("\n").getBytes("UTF-8")): Unit
-      def zonesOf(rows: DataFrame, keyCol: String): DataFrame =
-        rows.groupBy(col(keyCol).cast("long").as(keyCol))
-          .agg(min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-            min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
-      def writeZones(v: Int, zones: DataFrame): Unit =
-        zones.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new java.io.File(new java.io.File(tmp, ChainZonesDir),
-            s"v$v").getAbsolutePath)
-      def bucketOf(rel: String): Long =
-        "hbucket=(\\d+)".r.findFirstMatchIn(rel).get.group(1).toLong
+      def writeVersion(v: Int, files: Seq[String], zones: DataFrame): Unit = {
+        writeManifest(root, s"v$v", files)
+        writeZones(zones, new File(new File(tmp, ChainZonesDir), s"v$v"))
+      }
+      def inBuckets(bs: Set[Long]): Column = col("hbucket").isin(bs.toSeq: _*)
+      def untouched(files: Seq[String], bs: Set[Long]): Seq[String] =
+        files.filterNot(f => bs(partitionValue(f, "hbucket")))
 
       // ---- v0: ingest commit
       val laid = curveLaid(spark, sfDir, "hilbert_xy2d(x8, y8)")
         .localCheckpoint(true)
-      writeCommit("c0", laid, "hbucket")
-      val c0 = commitFiles("c0")
-      writeManifest(0, c0)
-      writeZones(0, zonesOf(laid, "hbucket"))
+      val c0 = writeCommit("c0", laid, "hbucket")
+      val z0 = zoneMaps(laid, "hbucket")
+      writeVersion(0, c0, z0)
 
       // ---- v1: COW DELETE commit (rect rows out, candidates rewritten)
-      val (xLo, xHi, yLo, yHi) = R.HilbertRect
-      val inRect = col("x8").between(xLo, xHi) &&
-        col("y8").between(yLo, yHi)
-      val touchedDel = zonesOf(laid, "hbucket")
-        .filter(col("x_hi") >= xLo && col("x_lo") <= xHi &&
-          col("y_hi") >= yLo && col("y_lo") <= yHi)
-        .select(col("hbucket")).collect().map(_.getLong(0)).toSet
-      val v1Rows = laid.filter(!inRect).localCheckpoint(true)
-      writeCommit("c1",
-        v1Rows.filter(col("hbucket").isin(touchedDel.toSeq: _*)), "hbucket")
-      val v1Files = c0.filterNot(f => touchedDel(bucketOf(f))) ++
-        commitFiles("c1")
-      writeManifest(1, v1Files)
-      writeZones(1, zonesOf(v1Rows, "hbucket"))
+      val touchedDel = zoneCands(z0, "hbucket", R.HilbertRect).toSet
+      val v1Rows = laid.filter(!inRect(R.HilbertRect)).localCheckpoint(true)
+      val v1Files = untouched(c0, touchedDel) ++
+        writeCommit("c1", v1Rows.filter(inBuckets(touchedDel)), "hbucket")
+      val z1 = zoneMaps(v1Rows, "hbucket")
+      writeVersion(1, v1Files, z1)
 
-      // ---- v2: COW MERGE commit (stripe movers within v1 + CDC inserts)
-      val (sLo, sHi) = R.MergeStripe
-      val st = orderLayoutStats(spark, sfDir)
-      val dayMin = st.getLong(2)
-      val span = st.getLong(3) - dayMin + 1L
-      val keyOff = mergeKeyOffset(spark, sfDir)
-      val srcCands = zonesOf(v1Rows, "hbucket")
-        .filter(col("x_hi") >= sLo && col("x_lo") <= sHi)
-        .select(col("hbucket")).collect().map(_.getLong(0)).toSet
-      val movers = v1Rows.filter(col("x8").between(sLo, sHi))
-        .withColumn("off", (col("day") - dayMin + R.MergeDayShift) % span)
-        .withColumn("day", col("off") + dayMin)
-        .withColumn("y8", expr(s"(off * 256) div $span"))
-        .withColumn("hidx",
-          call_function("hilbert_xy2d", col("x8"), col("y8")))
-        .withColumn("hbucket", expr("hidx div 24"))
-        .drop("off")
-      val inserts = laid
-        .filter(pmod(call_function("mix64", col("o_orderkey")),
-          lit(R.MergeInsertMod)) === 0L)
-        .withColumn("o_orderkey", col("o_orderkey") + keyOff)
+      // ---- v2: COW MERGE commit (the mergeBatch movers within v1 + CDC
+      // inserts)
+      val srcCands = zoneCands(z1, "hbucket", stripeRect).toSet
+      val (movers, inserts) = mergeBatch(spark, sfDir, v1Rows)
       val incoming = movers.unionByName(inserts).localCheckpoint(true)
       val touchedMrg = srcCands ++ incoming.select(col("hbucket"))
         .distinct().collect().map(_.getLong(0))
-      val v2Rows = v1Rows.filter(!col("x8").between(sLo, sHi))
+      val v2Rows = v1Rows.filter(!inRect(stripeRect))
         .unionByName(incoming).localCheckpoint(true)
-      writeCommit("c2",
-        v2Rows.filter(col("hbucket").isin(touchedMrg.toSeq: _*)), "hbucket")
-      val v2Files = v1Files.filterNot(f => touchedMrg(bucketOf(f))) ++
-        commitFiles("c2")
-      writeManifest(2, v2Files)
-      writeZones(2, zonesOf(v2Rows, "hbucket"))
+      val v2Files = untouched(v1Files, touchedMrg) ++
+        writeCommit("c2", v2Rows.filter(inBuckets(touchedMrg)), "hbucket")
+      writeVersion(2, v2Files, zoneMaps(v2Rows, "hbucket"))
 
-      // ---- v3: OPTIMIZE commit (bin-pack the live set — the
+      // ---- v3: OPTIMIZE commit (binPack the live set — the
       // compactCurveFixture protocol on v2's rows)
-      val counts = v2Rows.groupBy(col("hbucket"))
-        .agg(count(lit(1)).as("bc"))
-      val total = counts.agg(coalesce(sum(col("bc")), lit(0L)))
-        .head().getLong(0)
-      val target = math.max(64L, (total + 255L) / 256L)
-      val bins = counts.as("a")
-        .join(broadcast(counts.as("b")),
-          col("b.hbucket") < col("a.hbucket"), "left_outer")
-        .groupBy(col("a.hbucket").as("hbucket"))
-        .agg(coalesce(sum(col("b.bc")), lit(0L)).as("cum_before"))
-        .select(col("hbucket"),
-          expr(s"cum_before div $target").as("cbin"))
-      val laid3 = v2Rows.join(broadcast(bins), Seq("hbucket"))
-        .localCheckpoint(true)
-      writeCommit("c3", laid3, "cbin")
-      writeManifest(3, commitFiles("c3"))
-      writeZones(3, zonesOf(laid3, "cbin"))
+      val laid3 = binPack(v2Rows).localCheckpoint(true)
+      writeVersion(3, writeCommit("c3", laid3, "cbin"),
+        zoneMaps(laid3, "cbin"))
 
       // ---- branch 'b_audit': WRITE-AUDIT-PUBLISH — an append commit
       // staged on a BRANCH, never on main. The CDC batch carries a
@@ -1231,30 +1162,26 @@ object Etl {
       // stays at v3: publish is a pointer swap that the failed audit
       // refuses (q_wap_audit gates the refusal; ChainSpec proves branch
       // abandonment vacuums ONLY the branch commit's files).
-      val keyOff2 = keyOff * 2
+      val keyOff2 = mergeKeyOffset(spark, sfDir) * 2
       val batch = laid
         .filter(pmod(call_function("mix64", col("o_orderkey")),
           lit(WapBatchMod)) === 0L)
         .withColumn("o_orderkey",
           when(col("o_orderkey") % WapDefectMod === 0, col("o_orderkey"))
             .otherwise(col("o_orderkey") + keyOff2))
-      writeCommit("c4", batch, "hbucket")
-      java.nio.file.Files.write(
-        new java.io.File(mans, "b_audit.txt").toPath,
-        (commitFiles("c3") ++ commitFiles("c4")).sorted
-          .mkString("\n").getBytes("UTF-8")): Unit
+      writeManifest(root, "b_audit",
+        listCommitFiles(root, "c3") ++ writeCommit("c4", batch, "hbucket"))
 
       // per-commit metadata: kind + dataChange flag — what a table
       // format records with every commit, and what lets a change-data
       // read SKIP layout-only commits (OPTIMIZE moves bytes, never
       // rows) without paying a two-snapshot diff to find that out
       java.nio.file.Files.write(
-        new java.io.File(tmp, ChainCommitsFile).toPath,
+        new File(tmp, ChainCommitsFile).toPath,
         Seq("c0 ingest true", "c1 delete true", "c2 merge true",
           "c3 optimize false", "c4 append true")
           .mkString("\n").getBytes("UTF-8")): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_current").toPath, "v3"): Unit
+      chainPublish(root, "v3")
     }
 
   /** Commit-metadata file of [[chainFixture]] roots: one
@@ -1266,7 +1193,7 @@ object Etl {
     * (OPTIMIZE): their transition's change feed is empty BY METADATA,
     * never by diffing two full snapshots. */
   def chainCommitMeta(root: String): Map[String, (String, Boolean)] = {
-    val f = new java.io.File(s"$root/$ChainCommitsFile")
+    val f = new File(s"$root/$ChainCommitsFile")
     val src = scala.io.Source.fromFile(f, "UTF-8")
     try src.getLines().filter(_.nonEmpty).map { line =>
       val Array(c, kind, dc) = line.trim.split("\\s+")
@@ -1299,15 +1226,8 @@ object Etl {
   def wapPublishFixture(spark: SparkSession, sfDir: String): String = {
     val src = chainFixture(spark, sfDir)
     cachedFixture(sfDir, "orders-chain-wap-v2", s"$src/_SUCCESS") { tmp =>
-      import org.apache.spark.sql.functions._
-      linkDir(new java.io.File(src, ChainDataDir),
-        new java.io.File(tmp, ChainDataDir))
-      copyDir(new java.io.File(src, ChainManifestsDir),
-        new java.io.File(tmp, ChainManifestsDir))
-      copyDir(new java.io.File(src, ChainZonesDir),
-        new java.io.File(tmp, ChainZonesDir))
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_current").toPath, "v3"): Unit
+      val root = tmp.getAbsolutePath
+      forkChain(src, tmp)
       // the clean batch: the SAME mod-101 CDC draw, every row re-keyed
       // (the defect sub-draw fixed) — placed with the frozen layout
       // stats like every other chain commit
@@ -1316,27 +1236,10 @@ object Etl {
         .filter(pmod(call_function("mix64", col("o_orderkey")),
           lit(WapBatchMod)) === 0L)
         .withColumn("o_orderkey", col("o_orderkey") + keyOff2)
-      batch.repartition(col("hbucket"))
-        .sortWithinPartitions(col("hbucket"), col("hidx"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("hbucket")
-        .parquet(new java.io.File(new java.io.File(tmp, ChainDataDir),
-          "c5").getAbsolutePath)
-      val c5 = {
-        val base = new java.io.File(new java.io.File(tmp, ChainDataDir), "c5")
-        Option(base.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-          .filter(d => d.isDirectory && d.getName.contains("="))
-          .flatMap { d =>
-            Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-              .filter(_.getName.startsWith("part-"))
-              .map(f => s"c5/${d.getName}/${f.getName}")
-          }.sorted
-      }
-      java.nio.file.Files.write(
-        new java.io.File(new java.io.File(tmp, ChainManifestsDir),
-          "b_clean.txt").toPath,
-        (chainManifest(src, 3) ++ c5).sorted
-          .mkString("\n").getBytes("UTF-8")): Unit
+      writeClustered(batch, "hbucket", "hidx",
+        new File(new File(tmp, ChainDataDir), "c5"))
+      writeManifest(root, "b_clean",
+        chainManifest(src, 3) ++ listCommitFiles(root, "c5"))
       // STAGE-TIME aggregate stamp: the commit manifest carries the
       // staged delta's (row count, key checksum) — written by the same
       // pass that wrote the files, verified by the audit's delta read,
@@ -1345,7 +1248,7 @@ object Etl {
       // re-derive what the commit already knew
       val P = graft.operators.TextAnalysis.ChecksumP
       val stamped = spark.read
-        .parquet(new java.io.File(new java.io.File(tmp, ChainDataDir),
+        .parquet(new File(new File(tmp, ChainDataDir),
           "c5").getAbsolutePath)
         .agg(count(lit(1)),
           pmod(sum((pmod(col("o_orderkey"), lit(P))
@@ -1353,7 +1256,7 @@ object Etl {
             .cast("decimal(38,0)")),
             lit(P).cast("decimal(38,0)")).cast("long")).head()
       java.nio.file.Files.writeString(
-        new java.io.File(new java.io.File(tmp, ChainManifestsDir),
+        new File(new File(tmp, ChainManifestsDir),
           "b_clean.stats").toPath,
         s"${stamped.getLong(0)} ${stamped.getLong(1)}"): Unit
     }
@@ -1362,7 +1265,7 @@ object Etl {
   /** A staged commit's stamped aggregates: (n_rows, key_checksum). */
   def chainBranchStats(root: String, branch: String): (Long, Long) = {
     val s = java.nio.file.Files.readString(
-      new java.io.File(s"$root/$ChainManifestsDir/$branch.stats").toPath)
+      new File(s"$root/$ChainManifestsDir/$branch.stats").toPath)
       .trim.split("\\s+")
     (s(0).toLong, s(1).toLong)
   }
@@ -1389,17 +1292,10 @@ object Etl {
     val src = chainFixture(spark, sfDir)
     cachedFixture(sfDir, "orders-chain-cc-v1", s"$src/_SUCCESS") { tmp =>
       val R = graft.operators.RefQueries
-      linkDir(new java.io.File(src, ChainDataDir),
-        new java.io.File(tmp, ChainDataDir))
-      copyDir(new java.io.File(src, ChainManifestsDir),
-        new java.io.File(tmp, ChainManifestsDir))
-      copyDir(new java.io.File(src, ChainZonesDir),
-        new java.io.File(tmp, ChainZonesDir))
+      forkChain(src, tmp)
       java.nio.file.Files.copy(
-        new java.io.File(src, ChainCommitsFile).toPath,
-        new java.io.File(tmp, ChainCommitsFile).toPath): Unit
-      java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_current").toPath, "v3"): Unit
+        new File(src, ChainCommitsFile).toPath,
+        new File(tmp, ChainCommitsFile).toPath): Unit
       val root = tmp.getAbsolutePath
       stageDeleteBranch(spark, root, "b_cc1", "c6", R.HilbertRect)
       stageDeleteBranch(spark, root, "b_cc2", "c7", R.HilbertRect2)
@@ -1416,41 +1312,26 @@ object Etl {
   private def stageDeleteBranch(spark: SparkSession, root: String,
       branch: String, commit: String,
       rect: (Long, Long, Long, Long)): Unit = {
-    import org.apache.spark.sql.functions._
-    val (xLo, xHi, yLo, yHi) = rect
-    val cands = spark.read.parquet(s"$root/$ChainZonesDir/v3")
-      .filter(col("x_hi") >= xLo && col("x_lo") <= xHi &&
-        col("y_hi") >= yLo && col("y_lo") <= yHi)
-      .select(col("cbin")).collect().map(_.getLong(0)).toSet
+    val cands = zoneCands(spark.read.parquet(s"$root/$ChainZonesDir/v3"),
+      "cbin", rect).toSet
     val v3Files = chainManifestNamed(root, "v3")
-    val cbinPat = "cbin=(\\d+)".r
-    def cbinOf(rel: String): Long =
-      cbinPat.findFirstMatchIn(rel).get.group(1).toLong
-    val removed = v3Files.filter(f => cands(cbinOf(f)))
+    val removed = v3Files.filter(f => cands(partitionValue(f, "cbin")))
     val survivors = spark.read
       .option("basePath", s"$root/$ChainDataDir/c3")
       .parquet(removed.map(r => s"$root/$ChainDataDir/$r"): _*)
-      .filter(!(col("x8").between(xLo, xHi) &&
-        col("y8").between(yLo, yHi)))
-    survivors.repartition(col("cbin"))
-      .sortWithinPartitions(col("cbin"), col("hidx"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cbin")
-      .parquet(new java.io.File(
-        new java.io.File(root, ChainDataDir), commit).getAbsolutePath)
-    val added = listCommitFiles(root, commit)
+      .filter(!inRect(rect))
+    writeClustered(survivors, "cbin", "hidx",
+      new File(new File(root, ChainDataDir), commit))
+    writeManifest(root, branch,
+      (v3Files.toSet -- removed ++ listCommitFiles(root, commit)).toSeq)
     java.nio.file.Files.write(
-      new java.io.File(s"$root/$ChainManifestsDir/$branch.txt").toPath,
-      ((v3Files.toSet -- removed) ++ added).toSeq.sorted
-        .mkString("\n").getBytes("UTF-8")): Unit
-    java.nio.file.Files.write(
-      new java.io.File(s"$root/$ChainManifestsDir/$branch.meta").toPath,
+      new File(s"$root/$ChainManifestsDir/$branch.meta").toPath,
       (s"base v3" +: removed.sorted).mkString("\n").getBytes("UTF-8")): Unit
   }
 
   /** A staged branch's commit metadata: (base ref, overwritten files). */
   def chainBranchMeta(root: String, branch: String): (String, Seq[String]) = {
-    val f = new java.io.File(s"$root/$ChainManifestsDir/$branch.meta")
+    val f = new File(s"$root/$ChainManifestsDir/$branch.meta")
     val src = scala.io.Source.fromFile(f, "UTF-8")
     try {
       val lines = src.getLines().filter(_.nonEmpty).toList
@@ -1462,11 +1343,11 @@ object Etl {
   /** On-disk part files of one commit directory (table-relative). */
   private[graft] def listCommitFiles(root: String, commit: String)
       : Seq[String] = {
-    val base = new java.io.File(s"$root/$ChainDataDir/$commit")
-    Option(base.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+    val base = new File(s"$root/$ChainDataDir/$commit")
+    Option(base.listFiles()).getOrElse(Array.empty[File]).toSeq
       .filter(d => d.isDirectory && d.getName.contains("="))
       .flatMap { d =>
-        Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+        Option(d.listFiles()).getOrElse(Array.empty[File]).toSeq
           .filter(_.getName.startsWith("part-"))
           .map(f => s"$commit/${d.getName}/${f.getName}")
       }.sorted
@@ -1496,11 +1377,8 @@ object Etl {
     val conflict = removed.toSet & removedSince
     if (conflict.nonEmpty) Left(conflict.toSeq.sorted)
     else {
-      val rebased = ((curFiles -- removed) ++ added).toSeq.sorted
       val ref = s"p_$branch"
-      java.nio.file.Files.write(
-        new java.io.File(s"$root/$ChainManifestsDir/$ref.txt").toPath,
-        rebased.mkString("\n").getBytes("UTF-8")): Unit
+      writeManifest(root, ref, ((curFiles -- removed) ++ added).toSeq)
       chainPublish(root, ref)
       Right(ref)
     }
@@ -1512,21 +1390,32 @@ object Etl {
     * one). Idempotent by content. */
   def chainPublish(root: String, ref: String): Unit = {
     val tmp = java.nio.file.Files.writeString(
-      new java.io.File(s"$root/_current.tmp-${java.util.UUID.randomUUID()}")
+      new File(s"$root/_current.tmp-${java.util.UUID.randomUUID()}")
         .toPath, ref)
-    java.nio.file.Files.move(tmp, new java.io.File(s"$root/_current").toPath,
+    java.nio.file.Files.move(tmp, new File(s"$root/_current").toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
+  /** Fork the chain root `src` into `dst` at v3: data files hardlinked
+    * (immutable by the chain's own contract), manifests and zone maps
+    * copied, `_current` published. */
+  private def forkChain(src: String, dst: File): Unit = {
+    linkDir(new File(src, ChainDataDir), new File(dst, ChainDataDir))
+    copyDir(new File(src, ChainManifestsDir),
+      new File(dst, ChainManifestsDir))
+    copyDir(new File(src, ChainZonesDir), new File(dst, ChainZonesDir))
+    chainPublish(dst.getAbsolutePath, "v3")
   }
 
   /** Recursive HARDLINK mirror (falls back to copy across filesystems) —
     * the zero-byte data-sharing stand-in for a manifest referencing
     * another catalog's immutable files. */
-  private[graft] def linkDir(from: java.io.File, to: java.io.File): Unit =
+  private[graft] def linkDir(from: File, to: File): Unit =
     if (from.isDirectory) {
       to.mkdirs()
-      Option(from.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(f => linkDir(f, new java.io.File(to, f.getName)))
+      Option(from.listFiles()).getOrElse(Array.empty[File])
+        .foreach(f => linkDir(f, new File(to, f.getName)))
     } else {
       try {
         java.nio.file.Files.createLink(to.toPath, from.toPath): Unit
@@ -1543,8 +1432,18 @@ object Etl {
   def chainManifest(root: String, v: Int): Seq[String] =
     chainManifestNamed(root, s"v$v")
 
+  /** Write a chain ref's manifest — owns the format: one table-relative
+    * part path per line, sorted. */
+  private[graft] def writeManifest(root: String, ref: String,
+      files: Seq[String]): Unit = {
+    val f = new File(s"$root/$ChainManifestsDir/$ref.txt")
+    f.getParentFile.mkdirs()
+    java.nio.file.Files.write(f.toPath,
+      files.sorted.mkString("\n").getBytes("UTF-8")): Unit
+  }
+
   def chainManifestNamed(root: String, ref: String): Seq[String] = {
-    val f = new java.io.File(s"$root/$ChainManifestsDir/$ref.txt")
+    val f = new File(s"$root/$ChainManifestsDir/$ref.txt")
     val src = scala.io.Source.fromFile(f, "UTF-8")
     try src.getLines().filter(_.nonEmpty).toList finally src.close()
   }
@@ -1553,7 +1452,7 @@ object Etl {
     * swap of this one file — the WAP endpoint. */
   def chainCurrent(root: String): String =
     java.nio.file.Files.readString(
-      new java.io.File(s"$root/_current").toPath).trim
+      new File(s"$root/_current").toPath).trim
 
   /** Read one chain ref's rows (o_orderkey, x8, y8, hidx) through
     * its manifest — explicit file lists, no directory listing. Throws if
@@ -1588,10 +1487,9 @@ object Etl {
     * scan cost its own listing job + scan fixed overhead. */
   def chainReadFiles(spark: SparkSession, root: String,
       rels: Seq[String], ref: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     require(rels.nonEmpty, s"ref $ref resolves to an empty file list")
     rels.foreach { r =>
-      if (!new java.io.File(s"$root/$ChainDataDir/$r").exists())
+      if (!new File(s"$root/$ChainDataDir/$r").exists())
         throw new java.io.FileNotFoundException(
           s"ref $ref references vacuumed file $r")
     }
@@ -1612,7 +1510,7 @@ object Etl {
     val dead = expired.toSeq.flatMap(r => chainManifestNamed(root, r))
       .distinct.filterNot(live)
     dead.foreach { r =>
-      val f = new java.io.File(s"$root/$ChainDataDir/$r")
+      val f = new File(s"$root/$ChainDataDir/$r")
       if (f.exists() && !f.delete())
         throw new java.io.IOException(s"could not vacuum $r")
     }
@@ -1644,24 +1542,18 @@ object Etl {
     * Built once per (machine, sfDir); Bench accounts it under `etl`. */
   def pairStoreFixture(spark: SparkSession, sfDir: String): String =
     cachedFixture(sfDir, "pair-store-v1", s"$sfDir/documents.parquet") { tmp =>
-      import org.apache.spark.sql.functions._
       val pairs = graft.operators.Dedup.minHashLsh(spark, sfDir)
         .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
       val (labels, _) = graft.operators.Dedup.connectedComponentsStar(pairs)
       val labelsCk = labels.select(col("doc_id"), col("label"))
         .localCheckpoint(true)
       labelsCk.write.mode(SaveMode.Overwrite)
-        .parquet(new java.io.File(tmp, "labels").getAbsolutePath)
-      pairs
+        .parquet(new File(tmp, "labels").getAbsolutePath)
+      writeClustered(pairs
         .join(labelsCk.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
         .select(col("doc_a"), col("doc_b"), col("label"),
           pmod(col("label"), lit(PairStoreBuckets.toLong)).cast("int")
-            .as("lbucket"))
-        .repartition(col("lbucket"))
-        .sortWithinPartitions(col("lbucket"), col("label"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("lbucket")
-        .parquet(new java.io.File(tmp, "pairs").getAbsolutePath)
+            .as("lbucket")), "lbucket", "label", new File(tmp, "pairs"))
     }
 
   def prepareFixtures(spark: SparkSession, sfDir: String): Unit = {
@@ -1693,14 +1585,14 @@ object Etl {
   }
 
   private[graft] def cachedFixture(sfDir: String, key: String, srcPath: String)(
-      write: java.io.File => Unit): String = {
+      write: File => Unit): String = {
     val safe = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val target = new java.io.File(
+    val target = new File(
       s"${System.getProperty("java.io.tmpdir")}/graft_fix_$safe/$key")
-    val success = new java.io.File(target, "_SUCCESS")
-    val srcMtime = new java.io.File(srcPath).lastModified
+    val success = new File(target, "_SUCCESS")
+    val srcMtime = new File(srcPath).lastModified
     if (!success.exists() || success.lastModified < srcMtime) {
-      val tmp = new java.io.File(target.getParentFile,
+      val tmp = new File(target.getParentFile,
         s"$key.tmp-${java.util.UUID.randomUUID()}")
       tmp.getParentFile.mkdirs()
       write(tmp)
@@ -1708,7 +1600,7 @@ object Etl {
       // the whole build: a builder that writes only subdirectories, or
       // copies an older fixture's root, still publishes a fresh one
       java.nio.file.Files.writeString(
-        new java.io.File(tmp, "_SUCCESS").toPath, "")
+        new File(tmp, "_SUCCESS").toPath, "")
       deleteRecursively(target)
       // if the rename loses a concurrent-writer race, the winner's copy
       // (also complete — it renamed a finished dir) is used instead
@@ -1717,7 +1609,7 @@ object Etl {
     target.getAbsolutePath
   }
 
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }

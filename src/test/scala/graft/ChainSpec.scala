@@ -117,10 +117,8 @@ class ChainSpec extends SparkSpec {
     // layout census-for-census (per-bucket file sets) and row sets
     val compact = Etl.morDvCompactFixture(spark, sf)
     val R = graft.operators.RefQueries
-    val tmp1 = java.nio.file.Files
-      .createTempDirectory("graft_cow_seq1").toFile
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft_cow_seq2").toFile
+    val tmp1 = SparkSpec.tempDir("graft_cow_seq1").toFile
+    val tmp2 = SparkSpec.tempDir("graft_cow_seq2").toFile
     try {
       Etl.copyDir(new java.io.File(base), tmp1)
       Etl.cowDeleteRect(spark, base, tmp1, R.HilbertRect)
@@ -276,8 +274,7 @@ class ChainSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(branchDups.nonEmpty && branchDups.subsetOf(v3Keys),
       "every duplicate must collide with a LIVE published key")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_chain_wap").toFile
+    val tmp = SparkSpec.tempDir("graft_chain_wap").toFile
     try {
       Etl.copyDir(new java.io.File(src), tmp)
       val root = tmp.getAbsolutePath
@@ -351,8 +348,7 @@ class ChainSpec extends SparkSpec {
     // zone-candidate buckets the COW pass rewrote without any mover
     // (MOR's commit never touched them, so they carry over verbatim;
     // their file COUNT is 1 either way, which census equality covers)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_mor_merge_compact").toFile
+    val tmp = SparkSpec.tempDir("graft_mor_merge_compact").toFile
     try {
       Etl.copyDir(new java.io.File(base), tmp)
       Etl.morMergeCompact(spark, sf, tmp)
@@ -390,8 +386,7 @@ class ChainSpec extends SparkSpec {
     val src = Etl.concurrentFixture(spark, sf)
     def rect(t: (Long, Long, Long, Long)) =
       col("x8").between(t._1, t._2) && col("y8").between(t._3, t._4)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_chain_cc").toFile
+    val tmp = SparkSpec.tempDir("graft_chain_cc").toFile
     try {
       Etl.copyDir(new java.io.File(src), tmp)
       val root = tmp.getAbsolutePath
@@ -446,8 +441,7 @@ class ChainSpec extends SparkSpec {
   test("executed retention vacuum: expired v0 read fails, kept versions" +
       " byte-identical, the {v0,v1}-shared trap class survives") {
     val src = Etl.chainFixture(spark, sf)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_chain_vac").toFile
+    val tmp = SparkSpec.tempDir("graft_chain_vac").toFile
     try {
       Etl.copyDir(new java.io.File(src), tmp)
       val root = tmp.getAbsolutePath

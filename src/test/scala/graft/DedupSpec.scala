@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.{Dedup, Similarity, TextAnalysis, Multimodal}
 
 /** Semantics tests on crafted fixtures: write a tiny documents.parquet
@@ -10,7 +9,7 @@ class DedupSpec extends SparkSpec {
 
   private lazy val fixtureDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dedup").toString
+    val dir = SparkSpec.tempDir("graft-dedup").toString
     val base = "the quick brown fox jumps over the lazy dog and then " +
       "runs far away into the deep green forest to hide from hunters"
     val docs = Seq(
@@ -106,7 +105,7 @@ class DedupSpec extends SparkSpec {
 
   test("substring dedup: within-doc repetition alone marks a span") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-substr").toString
+    val dir = SparkSpec.tempDir("graft-substr").toString
     // doc 20 repeats its own opening trigram later; no other doc shares it
     Seq(
       (20L, "alpha beta gamma delta alpha beta gamma", "en", "s", 0L),
@@ -123,7 +122,7 @@ class DedupSpec extends SparkSpec {
 
   test("substring dedup: hot-shingle bypass is output-invariant on a dominant shingle") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-substr-hot").toString
+    val dir = SparkSpec.tempDir("graft-substr-hot").toString
     // a degenerate corpus: 400 docs all opening with the same
     // boilerplate line (one shingle dominating the corpus — the skew
     // case where the shash window partition concentrates), plus clean
@@ -153,7 +152,7 @@ class DedupSpec extends SparkSpec {
 
   test("containment: finds the doc-in-doc pair Jaccard misses, asymmetrically") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-contain").toString
+    val dir = SparkSpec.tempDir("graft-contain").toString
     val big = (0 until 40).map(i => s"w$i").mkString(" ")       // 38 shingles
     val slice = (10 until 20).map(i => s"w$i").mkString(" ")    // 8, all in big
     val other = (0 until 12).map(i => s"z$i").mkString(" ")
@@ -182,7 +181,7 @@ class DedupSpec extends SparkSpec {
 
   test("image phash: identical payloads at hamming 0, unrelated images unpaired") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-phash").toString
+    val dir = SparkSpec.tempDir("graft-phash").toString
     // >= 128 bytes so the decoded image has the 8 rows the 8x8 grid needs
     val imgText = (0 until 40).map(i => s"px$i").mkString(" ")
     val other = (0 until 40).map(i => s"zz${(i * 7) % 13}q$i").mkString(" ")
@@ -214,7 +213,7 @@ class DedupSpec extends SparkSpec {
     * groups with exact-duplicate clusters inside each group. */
   private lazy val boilerplateDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-boiler").toString
+    val dir = SparkSpec.tempDir("graft-boiler").toString
     val prefix = (1 to 15).map(i => s"common$i").mkString(" ") // > 64 chars
     val docs = (0 until 240).map { i =>
       val group = i % 6

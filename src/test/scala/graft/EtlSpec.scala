@@ -9,7 +9,7 @@ import graft.sources.Etl
 class EtlSpec extends SparkSpec {
 
   test("csv -> parquet roundtrip preserves data (inferred schema)") {
-    val dir = Files.createTempDirectory("graft-etl").toString
+    val dir = SparkSpec.tempDir("graft-etl").toString
     val src = Tables.read(spark, sf, "nation")
     src.write.option("header", "true").csv(s"$dir/nation_csv")
     Etl.csvToParquet(spark, s"$dir/nation_csv", s"$dir/nation_parquet")
@@ -19,7 +19,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("csv -> parquet with explicit schema and partitioning") {
-    val dir = Files.createTempDirectory("graft-etl2").toString
+    val dir = SparkSpec.tempDir("graft-etl2").toString
     Tables.read(spark, sf, "region")
       .write.option("header", "true").csv(s"$dir/region_csv")
     Etl.csvToParquetWithSchema(spark, s"$dir/region_csv",
@@ -34,7 +34,7 @@ class EtlSpec extends SparkSpec {
 
   test("cachedFixture stamps the fixture root's _SUCCESS after a builder " +
       "that writes no marker") {
-    val dir = Files.createTempDirectory("graft-stamp").toFile
+    val dir = SparkSpec.tempDir("graft-stamp").toFile
     val src = new java.io.File(dir, "t.parquet")
     Files.writeString(src.toPath, "")
     src.setLastModified(System.currentTimeMillis() - 60000L)
@@ -80,11 +80,28 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  test("every clustered write fails the build, naming the directory, " +
+      "when a partition splits into several files") {
+    // the invariant writeClustered checks guards every clustered layout,
+    // not only the curve fixtures: the same rows written with a file-size
+    // cap small enough to split a bucket must not publish
+    val rows = Etl.curveLaid(spark, sf, "hilbert_xy2d(x8, y8)")
+    val dir = new java.io.File(SparkSpec.tempDir("graft-split-bucket").toFile,
+      Etl.HilbertTableDir)
+    val key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "1")
+    val e = try intercept[IllegalArgumentException] {
+      Etl.writeClustered(rows, "hbucket", "hidx", dir)
+    } finally spark.conf.unset(key)
+    assert(e.getMessage.contains(s"${dir.getPath}/hbucket="),
+      s"the failure must name the split partition directory: ${e.getMessage}")
+  }
+
   test("a CSV twin rebuilt from a newer source is read with its new " +
       "schema") {
     // the twin's inferred schema is memoised per published copy: a copy
     // rebuilt at the same path must not be read with the old schema
-    val dir = Files.createTempDirectory("graft-twin").toString
+    val dir = SparkSpec.tempDir("graft-twin").toString
     val src = new java.io.File(dir, "t.parquet")
     spark.range(4).selectExpr("id AS a", "id * 2 AS b")
       .write.parquet(src.getPath)

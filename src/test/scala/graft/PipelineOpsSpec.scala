@@ -131,7 +131,7 @@ class PipelineOpsSpec extends SparkSpec {
     import spark.implicits._
     // ids near Long.MaxValue would overflow a raw doc_id * prime; the
     // pmod pre-reduction must keep every bucket in [0, 100)
-    val dir = java.nio.file.Files.createTempDirectory("graft-split").toString
+    val dir = SparkSpec.tempDir("graft-split").toString
     val ids = Seq(0L, 1L, Long.MaxValue, Long.MaxValue - 1,
       999999937L, 4294967296L) ++ (0 until 200).map(i => i * 7919L)
     ids.distinct.map(id => (id, s"text $id", "en", "s", 1L))
@@ -165,7 +165,7 @@ class PipelineOpsSpec extends SparkSpec {
     // partition-layout invariance: a differently-partitioned copy of the
     // corpus yields the identical assignment (the property a rand() or
     // monotonically_increasing_id shuffle lacks)
-    val dir = java.nio.file.Files.createTempDirectory("graft-shuf").toString
+    val dir = SparkSpec.tempDir("graft-shuf").toString
     Tables.read(spark, sf, "documents").repartition(7, $"lang")
       .write.parquet(s"$dir/documents.parquet")
     val again = TextAnalysis.shufflePack(spark, dir).collect()
@@ -185,7 +185,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("token rarity: corpus-relative frequencies, exact on a crafted corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rare").toString
+    val dir = SparkSpec.tempDir("graft-rare").toString
     // counts: aa=5, zz=qq=ww=1 -> N=8, V=4, mean=2; below-mean = cnt<2
     Seq((0L, "aa aa aa aa", "en", "s", 1L),
         (1L, "aa zz", "en", "s", 1L),
@@ -283,8 +283,7 @@ class PipelineOpsSpec extends SparkSpec {
       Seq((i.toLong * 2, v.map(_.toFloat).toSeq),
         (i.toLong * 2 + 1, w.map(_.toFloat).toSeq))
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_neardup_recall").toString
+    val dir = SparkSpec.tempDir("graft_neardup_recall").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     val found = graft.operators.Similarity
@@ -690,7 +689,7 @@ class PipelineOpsSpec extends SparkSpec {
       s"fixture merges ${got.toSeq} != reference $fixtureRef")
     // run-heavy synthetic corpus: the 4x-iterated replace must reach the
     // greedy fixpoint even when one symbol repeats many times in a word
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = SparkSpec.tempDir("graft-bpe").toString
     val runWords = Seq("aaaaaaaa", "aaaa", "aab", "baa", "ab", "aaaaaaab")
     val corpus = runWords.zipWithIndex.flatMap { case (w, i) =>
       Seq.fill(runWords.length - i)(w) // skewed counts, deterministic
@@ -1837,8 +1836,7 @@ class PipelineOpsSpec extends SparkSpec {
     val E = graft.sources.Etl
     val R = graft.operators.RefQueries
     val src = E.hilbertOrdersFixture(spark, sf)
-    val root = java.nio.file.Files.createTempDirectory("graft_cow_spec")
-      .toFile
+    val root = SparkSpec.tempDir("graft_cow_spec").toFile
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory)
         Option(f.listFiles()).foreach(_.foreach(rm))
@@ -1862,15 +1860,14 @@ class PipelineOpsSpec extends SparkSpec {
       val touchedSet = touched.toSet
       E.cowDeleteRect(spark, src, root, R.HilbertRect)
       val after = snapshot()
-      def bucketOf(p: String): Long =
-        "hbucket=(\\d+)".r.findFirstMatchIn(p).get.group(1).toLong
+      def bucketOf(p: String): Long = E.partitionValue(p, "hbucket")
       // untouched partitions: identical file sets, sizes AND mtimes
       // unchanged — the physical proof the delete never rewrote them
       val ub = before.filter { case (p, _) => !touchedSet(bucketOf(p)) }
       val ua = after.filter { case (p, _) => !touchedSet(bucketOf(p)) }
       assert(ub.nonEmpty, "no untouched partition — prune vacuous")
       assert(ua == ub, "untouched partition files changed")
-      // touched partitions: dynamic overwrite replaced every old file
+      // touched partitions: the rewrite replaced every old file
       val tb = before.keySet.filter(p => touchedSet(bucketOf(p)))
       val ta = after.keySet.filter(p => touchedSet(bucketOf(p)))
       assert(tb.nonEmpty && ta.nonEmpty, "no touched partition — vacuous")
@@ -1903,8 +1900,7 @@ class PipelineOpsSpec extends SparkSpec {
     val E = graft.sources.Etl
     val R = graft.operators.RefQueries
     val src = E.hilbertOrdersFixture(spark, sf)
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_spec")
-      .toFile
+    val root = SparkSpec.tempDir("graft_merge_spec").toFile
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory)
         Option(f.listFiles()).foreach(_.foreach(rm))
@@ -1927,8 +1923,7 @@ class PipelineOpsSpec extends SparkSpec {
       val (_, touched) = E.cowMergeStripe(spark, sf, src, root)
       val touchedSet = touched.toSet
       val after = snapshot()
-      def bucketOf(p: String): Long =
-        "hbucket=(\\d+)".r.findFirstMatchIn(p).get.group(1).toLong
+      def bucketOf(p: String): Long = E.partitionValue(p, "hbucket")
       // untouched partitions: identical file sets, sizes AND mtimes
       val ub = before.filter { case (p, _) => !touchedSet(bucketOf(p)) }
       val ua = after.filter { case (p, _) => !touchedSet(bucketOf(p)) }

@@ -621,8 +621,9 @@ class PlanSpec extends SparkSpec {
     // partitions the stripe's zone maps nominate — that read must be a
     // plan-time partition prune with the stripe filter at the scan
     val (sLo, sHi) = graft.operators.RefQueries.MergeStripe
-    val (candRows, srcCands) = graft.sources.Etl.mergeStripeCands(spark,
-      graft.sources.Etl.hilbertOrdersFixture(spark, sf))
+    val E = graft.sources.Etl
+    val (candRows, srcCands) = E.candidateScan(spark,
+      E.hilbertOrdersFixture(spark, sf), E.stripeRect)
     assert(srcCands.nonEmpty, "no stripe zone candidate — prune vacuous")
     val p = candRows
       .filter(org.apache.spark.sql.functions.col("x8").between(sLo, sHi))

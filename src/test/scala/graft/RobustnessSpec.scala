@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Degenerate-input behavior: an empty documents table (schema only) must
@@ -10,7 +9,7 @@ class RobustnessSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-empty").toString
+    val dir = SparkSpec.tempDir("graft-empty").toString
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -65,7 +64,7 @@ class RobustnessSpec extends SparkSpec {
 
   test("fk integrity: orphans are counted per child row on a broken corpus") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-fk").toString
+    val dir = SparkSpec.tempDir("graft-fk").toString
     // region 0 exists; nation 7 points at missing region 9 (1 orphan)
     Seq((0L, "R0")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
@@ -113,7 +112,7 @@ class RobustnessSpec extends SparkSpec {
     // with gaps, three seeds.
     val rnd = new scala.util.Random(20260813L)
     for (trial <- 1 to 3) {
-      val dir = Files.createTempDirectory(s"graft-pack$trial").toString
+      val dir = SparkSpec.tempDir(s"graft-pack$trial").toString
       val nDocs = 50 + rnd.nextInt(150)
       var id = 0L
       val docs = (0 until nDocs).map { _ =>
@@ -201,7 +200,7 @@ class RobustnessSpec extends SparkSpec {
     // a user's own events table has a plain TIMESTAMP ts; the nanos-as-
     // long conversion must be schema-driven, not assumed
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-microev").toString
+    val dir = SparkSpec.tempDir("graft-microev").toString
     Tables.read(spark, sf, "events").limit(100)
       .write.parquet(s"$dir/events.parquet") // Spark writes micros
     val again = Tables.read(spark, dir, "events")

@@ -19,8 +19,7 @@ class SimilaritySpec extends SparkSpec {
     // both iterations (integer mean of equal quantized vectors is
     // exact, so cell 0's refit centroid stays bit-equal to the others)
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tie").toString
+    val dir = SparkSpec.tempDir("graft-tie").toString
     (0L until 20L).map(i => (i, Array.fill(64)(0.5f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
@@ -269,8 +268,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val E = graft.sources.Etl
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ivf_idx").toFile
+    val tmp = SparkSpec.tempDir("graft_ivf_idx").toFile
     try {
       val root = tmp.getAbsolutePath
       Similarity.buildIndexV1(spark, sf, root)
@@ -359,7 +357,7 @@ class SimilaritySpec extends SparkSpec {
     // Lloyd cells must then hold occupancy near the 256 target — the
     // guard is against centroid collapse (everything in one cell), which
     // would silently restore the quadratic within-cell blow-up
-    val dir = java.nio.file.Files.createTempDirectory("graft-semk").toString
+    val dir = SparkSpec.tempDir("graft-semk").toString
     val n = 6000
     (0 until n).map { i =>
       val vec = Array.tabulate(Similarity.Dim) { d =>

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,25 @@ object SparkSpec {
   /** The denser second-scale fixture for tests whose claim only holds
     * past the sparse-grid regime (curve-layout comparisons etc.). */
   val sfDense: String = "/root/testdata/sf0.01"
+
+  /** Per-JVM root of every test's scratch directory. When the test JVM
+    * exits it is removed, together with the `graft_fix_` fixture caches
+    * keyed on directories under it. */
+  private lazy val tmpRoot: Path = {
+    val root = Files.createTempDirectory("graft-test")
+    val fixPrefix = "graft_fix_" + root.toString.replaceAll("[^a-zA-Z0-9]", "_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      graft.sources.Etl.deleteRecursively(root.toFile)
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.startsWith(fixPrefix))
+        .foreach(graft.sources.Etl.deleteRecursively)
+    }))
+    root
+  }
+
+  /** A fresh scratch directory under the per-JVM root. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tmpRoot, prefix)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -182,8 +182,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch generational merge equals a from-scratch aggregate") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_incr_state").toString
+    val root = SparkSpec.tempDir("graft_incr_state").toString
     val input = MemoryStream[(Long, Timestamp, Double)]
     val df = input.toDF().toDF("user_id", "ts", "value")
     val q = StreamingOps.incrementalAggSink(df, root)
@@ -267,8 +266,7 @@ class StreamingSpec extends SparkSpec {
       if (i == empty) base.filter(lit(false))
       else base.filter(col("v") % 12 === i)
     }
-    val dir = java.nio.file.Files.createTempDirectory(
-      graft.streaming.StreamingQueries.streamTmpBase, "stager_spec")
+    val dir = SparkSpec.tempDir("stager_spec")
     try {
       val (staged, jobs) = jobsDuring(graft.streaming.StreamingQueries
         .stageDeliveries(deliveries, dir.resolve("stage")))

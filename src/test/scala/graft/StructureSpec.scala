@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
   * builder (GraftSession), derived sessions and stream starts only through
   * its `child` and `withConfs`, function names and planner strategies
   * bound only through GraftExtensions, one connected-components loop, one
-  * stream delivery stager, one profiler, and a fixed set of environment
-  * keys. */
+  * stream delivery stager, one profiler, one table-layout protocol, and a
+  * fixed set of environment keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -106,6 +106,26 @@ class StructureSpec extends AnyFunSuite {
     assert(hits.contains(profile), s"no listener in $profile")
     val bad = hits.filterNot(_ == profile)
     assert(bad.isEmpty, s"measure Spark work through graft.Profile: $bad")
+  }
+
+  /** The sources holding a match of `pattern`, one entry per match. */
+  private def matches(pattern: String): Seq[String] =
+    sources.flatMap { case (p, text) =>
+      pattern.r.findAllMatchIn(text).map(_ => p.toString)
+    }
+
+  test("one table-layout protocol: the clustered write, the zone-map" +
+      " aggregate and the zone-overlap predicate each appear once") {
+    val recipe =
+      matches("""(?s)sortWithinPartitions\(.{0,200}?\.partitionBy\(""")
+    assert(recipe.size == 1,
+      s"clustered writes go through Etl.writeClustered, found: $recipe")
+    val zoneAgg = matches("""\.as\("x_lo"\)""")
+    assert(zoneAgg.size == 1,
+      s"zone maps are built by Etl.zoneMaps, found: $zoneAgg")
+    val overlap = matches(""""x_hi"\)?\s*>=""")
+    assert(overlap.size == 1,
+      s"zone prunes use Etl.zoneOverlap, found: $overlap")
   }
 
   /** Deployment paths and core count, the stream scratch directory, and

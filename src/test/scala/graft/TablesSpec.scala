@@ -13,7 +13,7 @@ class TablesSpec extends SparkSpec {
 
   /** Writes `df` as ONE regular parquet file `dir/name.parquet`. */
   private def writeFile(df: DataFrame, dir: String, name: String): File = {
-    val out = Files.createTempDirectory("graft-tables-out").toFile
+    val out = SparkSpec.tempDir("graft-tables-out").toFile
     df.coalesce(1).write.mode("overwrite").parquet(out.getPath)
     val part = out.listFiles().filter(f =>
       f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
@@ -41,7 +41,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a file rewritten at the same path is read with its new schema") {
-    val dir = Files.createTempDirectory("graft-tables-rw").toString
+    val dir = SparkSpec.tempDir("graft-tables-rw").toString
     writeFile(spark.range(3).toDF("a"), dir, "t")
     assert(Tables.read(spark, dir, "t").columns.toSeq == Seq("a"))
     val f = writeFile(spark.range(3).selectExpr("id AS a", "id * 2 AS b"),
@@ -54,7 +54,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a directory path is read through Spark's inference every time") {
-    val dir = Files.createTempDirectory("graft-tables-dir").toString
+    val dir = SparkSpec.tempDir("graft-tables-dir").toString
     val tbl = new File(dir, "d.parquet")
     spark.range(3).toDF("a").coalesce(1).write.parquet(tbl.getPath)
     assert(Tables.read(spark, dir, "d").count() == 3)
