@@ -13,8 +13,10 @@ package graft
   *   runMain graft.DevTime [-plan | -jobs] <query> [<query> ...] */
 object DevTime {
 
-  /** Formatted plan of the last query `action` executed, captured after
-    * it ran (the listener bus is drained before reading). */
+  /** Formatted plan of the last query `action` executed on `spark`,
+    * captured after it ran (the listener bus is drained before reading).
+    * `spark` must be the session the action runs on: a child session
+    * (`q_runtime_filter`'s) has its own listener manager. */
   private def executedPlan(spark: org.apache.spark.sql.SparkSession)(
       action: => Unit): String = {
     val last = new java.util.concurrent.atomic.AtomicReference[
@@ -40,16 +42,17 @@ object DevTime {
     val selected = SparkEntry.select(names.toSeq)
     val spark = GraftSession.local(GraftSession.cpus)
     val d = GraftSession.sfDir
-    def noop(q: SparkEntry.Query): Unit =
-      q.run(spark, d).write.format("noop").mode("overwrite").save()
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
     selected.foreach { q =>
       if (flags.contains("-plan")) {
         println(s"===== PLAN ${q.name} =====")
-        println(executedPlan(spark)(noop(q)))
+        val df = q.run(spark, d)
+        println(executedPlan(df.sparkSession)(noop(df)))
       } else {
         def timed(i: Int): Unit = {
           val t0 = System.nanoTime()
-          noop(q)
+          noop(q.run(spark, d))
           println(f"TIMING ${q.name} run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
         timed(1)

@@ -1,23 +1,28 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{TopKAggregator, VectorFunctions}
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
-  * (`embedding: array<float>[64]`).
+/** Nearest-neighbor search and embedding analytics over the `embeddings`
+  * table (`embedding: array<float>[64]`). ANN tiers, exact first:
+  * brute-force cosine top-k and radius search (one broadcast scan of the
+  * corpus, which never shuffles); random-hyperplane LSH (16 sign bits,
+  * banded 4×4); IVF over seeded or k-means cells (per query, batched,
+  * incremental and versioned-rebuild serving); PQ/ADC over a seeded or
+  * trained codebook, and the IVF-PQ composite; binary sign-bit codes.
+  * Beside them: semantic dedup, int8 quantization, JL projection,
+  * near-dup pairs, outliers and PCA.
   *
-  * Two tiers, per the standard ANN playbook:
-  *  - brute-force cosine top-k — the exact baseline. The query set is tiny
-  *    and broadcast, so the "cross join" is really a broadcast nested loop
-  *    over one scan of the corpus: at 100 TB it is scan-bound and never
-  *    shuffles the corpus.
-  *  - random-hyperplane LSH — the scale path: 16 sign bits, banded 4×4;
-  *    only bucket-colliding candidates get exact cosine. Candidate count
-  *    is bounded by bucket occupancy instead of corpus size.
-  */
+  * The fitted-model layer writes each decision once: seed
+  * ([[seedSample]], whose vectors are [[seedVectors]]) → fit
+  * ([[lloyd]], shared by [[kmeansCentroids]] and [[pqCodebookKmeans]])
+  * → frames ([[centroidFrame]], [[codebookFrame]]) → use
+  * ([[assignCells]], [[probeCells]], [[sqL2]], [[adcTopK]]). Every tier
+  * ranks through [[rankTopK]]. */
 object Similarity {
 
   val Dim = 64 // testdata embedding dimensionality (FIXTURES.md §B)
@@ -204,9 +209,7 @@ object Similarity {
     import spark.implicits._
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
-    val centroids = broadcast(
-      seedVectors(spark, emb, nc).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark, seedVectors(spark, emb, nc))
     ivfFlow(spark, emb, centroids, k, nQueries, ivfNprobe(nc, nprobe))
   }
 
@@ -234,19 +237,10 @@ object Similarity {
     import spark.implicits._
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
-    val centroids = broadcast(
-      seedVectors(spark, emb, nc).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark, seedVectors(spark, emb, nc))
     val assigned = assignCells(spark, emb, centroids)
-    val wProbe = Window.partitionBy($"q_id")
-      .orderBy($"probe_cos".desc, $"cell_id".asc)
-    val probes = emb.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("probe_cos", expr("cosine_sim(q_vec, centroid)"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter($"r" <= ivfNprobe(nc, nprobe))
-      .select($"q_id", $"q_vec", $"cell_id")
+    val probes =
+      probeCells(spark, emb, centroids, nQueries, ivfNprobe(nc, nprobe))
     val scored = assigned.join(probes, Seq("cell_id"))
       .filter($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id", expr("cosine_sim(vec, q_vec)").as("score"))
@@ -312,9 +306,7 @@ object Similarity {
     val isDelta = $"vec_id" % 2 === 1
     val index = emb.filter(!isDelta)
     val nc = ivfCells(index, 0)
-    val centroids = broadcast(
-      seedVectors(spark, index, nc).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark, seedVectors(spark, index, nc))
     // the persisted cell-assigned index — built once, frozen
     val assignedIndex = assignCells(spark, index, centroids)
       .localCheckpoint(true)
@@ -336,20 +328,20 @@ object Similarity {
   private[graft] def ivfNprobe(nCells: Int, nprobe: Int = 0): Int =
     if (nprobe > 0) nprobe else math.max(4, nCells / 4)
 
-  /** Skew-immune deterministic model seed sample: (rank, vec_id, vec)
-    * for the `n` corpus vectors FIRST in (mix64(vec_id), vec_id) order —
+  /** Skew-immune deterministic model seed sample: (vec_id, vec) for the
+    * `n` corpus vectors FIRST in (mix64(vec_id), vec_id) order —
     * a uniform pseudo-random sample no ingestion order or id-range
     * clustering can bias, which is what a 100 TB corpus needs where "the
     * first n ids" would all come from whatever shard loaded first —
-    * re-ranked 0..n−1 as the model's cell / code ids. One
+    * its array index 0..n−1 is the model's cell / code id. One
     * TakeOrderedAndProject job + an n-row fitted-model collect (the
     * spark.ml pattern); the DuckDB oracles replay the same splitmix64
     * chain and signed ordering (the `text_cap_per_source` convention).
-    * SINGLE source of truth for the ordering: [[seedVectors]] and
-    * [[seedRanks]] both project from it, so the IVF-PQ residual-codebook
+    * SINGLE source of truth for the ordering: [[seedVectors]] and the
+    * IVF-PQ residual codebook's seed ids both project from it, so the
     * codes always align with the cell ids. */
   private def seedSample(spark: SparkSession, emb: DataFrame, n: Int)
-      : Array[(Int, Long, Array[Double])] = {
+      : Array[(Long, Array[Double])] = {
     import spark.implicits._
     emb
       .select(call_function("mix64", $"vec_id").as("mz"), $"vec_id", $"vec")
@@ -359,14 +351,14 @@ object Similarity {
       .collect()
       .sortBy { case (mz, id, _) => (mz, id) } // collect order is plan
       // order already; the re-sort makes the contract explicit
-      .zipWithIndex
-      .map { case ((_, id, v), i) => (i, id, v.toArray) }
+      .map { case (_, id, v) => (id, v.toArray) }
   }
 
-  /** The seed sample's (rank, vector) pairs — model centroids/codewords. */
+  /** The seed sample's vectors: the model's centroids/codewords, vector
+    * i being cell / code i. */
   private[graft] def seedVectors(spark: SparkSession, emb: DataFrame, n: Int)
-      : Array[(Int, Array[Double])] =
-    seedSample(spark, emb, n).map { case (i, _, v) => (i, v) }
+      : Array[Array[Double]] =
+    seedSample(spark, emb, n).map(_._2)
 
   /** Corpus → nearest-centroid assignment (cosine argmax over the
     * broadcast centroids, cell_id-ascending tie-break). The
@@ -395,13 +387,9 @@ object Similarity {
     * a real DuckDB oracle like the seeded variant. */
   def topKIvfKmeans(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 3, nCells: Int = 0, nprobe: Int = 0): DataFrame = {
-    import spark.implicits._
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
-    val cents = kmeansCentroids(spark, sfDir, nc)
-    val centroids = broadcast(
-      cents.toSeq.map { case (id, v) => (id, v.toSeq) }
-        .toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark, kmeansCentroids(spark, sfDir, nc))
     ivfFlow(spark, emb, centroids, k, nQueries, ivfNprobe(nc, nprobe))
   }
 
@@ -411,6 +399,24 @@ object Similarity {
     ivfServe(spark, emb, assignCells(spark, emb, centroids), centroids,
       k, nQueries, nprobe)
 
+  /** Query → its `nprobe` nearest cells by cosine, cell_id ascending on
+    * ties: (q_id, q_vec, cell_id, centroid) for the first `nQueries`
+    * corpus vectors. The window ranks the nQueries × nCells centroid
+    * table, never the corpus. The result carries no join hint — each
+    * caller picks its own probe-join strategy. */
+  private def probeCells(spark: SparkSession, emb: DataFrame,
+      centroids: DataFrame, nQueries: Int, nprobe: Int): DataFrame = {
+    import spark.implicits._
+    emb.filter($"vec_id" < nQueries)
+      .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
+      .crossJoin(broadcast(centroids))
+      .withColumn("probe_cos", expr("cosine_sim(q_vec, centroid)"))
+      .withColumn("r", row_number().over(Window.partitionBy($"q_id")
+        .orderBy($"probe_cos".desc, $"cell_id".asc)))
+      .filter($"r" <= nprobe)
+      .select($"q_id", $"q_vec", $"cell_id", $"centroid")
+  }
+
   /** The serving half of the IVF flow over an ALREADY cell-assigned
     * corpus — shared by [[ivfFlow]] (assign-then-serve) and
     * [[topKIvfIncremental]] (serve over the persisted index ∪ the
@@ -419,16 +425,7 @@ object Similarity {
       assigned: DataFrame, centroids: DataFrame, k: Int, nQueries: Int,
       nprobe: Int): DataFrame = {
     import spark.implicits._
-    // query → nprobe nearest centroids
-    val wProbe = Window.partitionBy($"q_id")
-      .orderBy($"probe_cos".desc, $"cell_id".asc)
-    val probes = emb.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("probe_cos", expr("cosine_sim(q_vec, centroid)"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter($"r" <= nprobe)
-      .select($"q_id", $"q_vec", $"cell_id")
+    val probes = probeCells(spark, emb, centroids, nQueries, nprobe)
     // exact rerank within probed cells only — two-stage top-k, never a
     // q_id window (the probe stream is ~nprobe/nCells of the corpus:
     // still corpus-sized)
@@ -476,7 +473,6 @@ object Similarity {
 
   private[graft] def indexRebuildAt(spark: SparkSession, sfDir: String,
       root: String): DataFrame = {
-    import spark.implicits._
     val E = graft.sources.Etl
     val emb = corpus(spark, sfDir)
     val n = emb.count()
@@ -485,9 +481,8 @@ object Similarity {
     // census (pure metadata — the stream keeps the skew statistics; the
     // census check is the commit-time guard)
     if (n > curBuilt) {
-      val nc2 = ivfCells(emb, 0)
-      val cdf = kmeansCentroids(spark, sfDir, nc2).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid")
+      val nc2 = semanticCellCount(n)
+      val cdf = centroidFrame(spark, kmeansCentroids(spark, sfDir, nc2))
       writeIndexVersion(spark, root, "v2", emb, cdf, n, nc2)
       E.chainPublish(root, "v2") // the atomic cutover
     }
@@ -541,8 +536,7 @@ object Similarity {
     import spark.implicits._
     val index = corpus(spark, sfDir).filter($"vec_id" % 2 === 0)
     val nc1 = ivfCells(index, 0)
-    val cdf = seedVectors(spark, index, nc1).toSeq
-      .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid")
+    val cdf = centroidFrame(spark, seedVectors(spark, index, nc1))
     writeIndexVersion(spark, root, "v1", index, cdf, index.count(), nc1)
   }
 
@@ -554,51 +548,112 @@ object Similarity {
     (s(0).toLong, s(1).toInt, s(2).toInt)
   }
 
-  /** Deterministic Lloyd iterations for IVF centroids, seeded with the
-    * `nCells` vectors first in (mix64(vec_id), vec_id) order
-    * ([[seedVectors]] — skew-immune, unlike a first-N-ids seed).
-    *
-    * The update is integer-quantized so the result is bit-reproducible
-    * regardless of aggregation order (and replicable by the DuckDB
-    * oracle): per dimension, sum `floor(x·1e6 + 0.5)` as longs (integer
-    * addition is associative — float sums would vary with partition
-    * merge order), then truncated integer mean, then `/1e6` back to
-    * double. Assignment is cosine-argmax with cell_id tiebreak.
-    *
-    * Scale: each iteration is one broadcast-centroids pass over the
-    * corpus + a (cell × dim) partial-sum shuffle of `nCells·64` longs;
-    * the 16×64 model is collected to the driver exactly like any
-    * fitted-model loop (spark.ml does the same). */
+  /** The one fitted-model training loop: `iters` Lloyd updates of
+    * `model`, vectors indexed by a dense key. `assign` maps the current
+    * model to Catalyst-assigned `(key: int, v: array<double>)` rows, each
+    * member under its nearest entry. Each iteration folds those rows in
+    * one tree-reduced RDD aggregate of per-key fixed-point sums
+    * ([[LloydSums]]) and sets each entry to the truncated integer mean;
+    * an empty key keeps its vector. Integer sums do not depend on order,
+    * so the model is bit-identical on any partitioning and the DuckDB
+    * oracles unroll it. The accumulator is keys × (width + 1) longs:
+    * 8 KiB at 16 × 64, 34 MB at [[semanticCellCount]]'s 65,536 cells. */
+  private def lloyd(model: Array[Array[Double]], iters: Int)(
+      assign: Array[Array[Double]] => DataFrame): Array[Array[Double]] = {
+    val width = model.headOption.fold(0)(_.length) // empty corpus: no model
+    var m = model
+    for (_ <- 1 to iters) {
+      val sums = assign(m).queryExecution.toRdd.treeAggregate(
+        new Array[Long](m.length * (width + 1)))(
+        LloydSums.add(width), LloydSums.merge)
+      m = LloydSums.means(m, sums)
+    }
+    m
+  }
+
+  /** [[lloyd]]'s accumulator: slot `key·(w+1) + d` sums floor(x_d·1e6 +
+    * 0.5), slot `key·(w+1) + w` counts members; `Math.addExact` fails on
+    * overflow as ANSI `sum` does. The fold functions live in this small
+    * object so that the closure cleaner reads its class, not
+    * `Similarity$`. */
+  private object LloydSums {
+    private val Scale = 1000000.0
+
+    def add(w: Int): (Array[Long], InternalRow) => Array[Long] =
+      (acc, row) => {
+        val v = row.getArray(1)
+        require(v.numElements() == w,
+          s"Lloyd member has ${v.numElements()} dims, the model $w")
+        val base = row.getInt(0) * (w + 1)
+        var d = 0
+        while (d < w) {
+          acc(base + d) = Math.addExact(acc(base + d),
+            math.floor(v.getDouble(d) * Scale + 0.5).toLong)
+          d += 1
+        }
+        acc(base + w) += 1
+        acc
+      }
+
+    val merge: (Array[Long], Array[Long]) => Array[Long] = (a, b) => {
+      var i = 0
+      while (i < a.length) { a(i) = Math.addExact(a(i), b(i)); i += 1 }
+      a
+    }
+
+    def means(model: Array[Array[Double]],
+        sums: Array[Long]): Array[Array[Double]] =
+      model.zipWithIndex.map { case (old, key) =>
+        val base = key * (old.length + 1)
+        val n = sums(base + old.length)
+        if (n == 0L) old
+        else Array.tabulate(old.length)(d => (sums(base + d) / n) / Scale)
+      }
+  }
+
+  /** A centroid model (centroid `i` is cell `i`) as the broadcast
+    * (cell_id, centroid) frame every IVF and k-means stage joins. */
+  private[graft] def centroidFrame(spark: SparkSession,
+      cents: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    broadcast(cents.toSeq.map(_.toSeq).zipWithIndex.map(_.swap)
+      .toDF("cell_id", "centroid"))
+  }
+
+  /** The `nSub`-subspace codebook of `n` vectors: entry `s·n + code` is
+    * subvector s of vector `code`. */
+  private def subCodebook(vecs: Array[Array[Double]],
+      nSub: Int): Array[Array[Double]] = {
+    val (n, subDim) = (vecs.length, Dim / nSub)
+    Array.tabulate(nSub * n) { key =>
+      vecs(key % n).slice(key / n * subDim, (key / n + 1) * subDim)
+    }
+  }
+
+  /** A [[subCodebook]] of `nCodes` codes as the broadcast (s, code, cvec)
+    * frame its encode and ADC stages join. */
+  private def codebookFrame(spark: SparkSession, cb: Array[Array[Double]],
+      nCodes: Int): DataFrame = {
+    import spark.implicits._
+    broadcast(cb.toSeq.zipWithIndex
+      .map { case (v, key) => (key / nCodes, key % nCodes, v.toSeq) }
+      .toDF("s", "code", "cvec"))
+  }
+
+  /** IVF k-means: [[lloyd]] from the `nCells` [[seedVectors]], each
+    * corpus vector a member of its cosine-argmax cell ([[assignCells]]).
+    * Each iteration is one broadcast-centroids pass over the corpus; the
+    * model — 16 × 64 doubles for the IVF tiers, up to 65,536 × 64 for
+    * `dedup_semantic` — is collected to the driver like any fitted-model
+    * loop (spark.ml does the same). */
   private[graft] def kmeansCentroids(spark: SparkSession, sfDir: String,
-      nCells: Int = 16, iters: Int = 2): Array[(Int, Array[Double])] = {
+      nCells: Int = 16, iters: Int = 2): Array[Array[Double]] = {
     import spark.implicits._
     val emb = corpus(spark, sfDir)
-    var cents: Array[(Int, Array[Double])] = seedVectors(spark, emb, nCells)
-    for (_ <- 1 to iters) {
-      val centDf = broadcast(
-        cents.toSeq.map { case (id, v) => (id, v.toSeq) }
-          .toDF("cell_id", "centroid"))
-      val sums = assignCells(spark, emb, centDf)
-        .select($"cell_id", posexplode($"vec").as(Seq("pos", "x")))
-        .groupBy($"cell_id", $"pos")
-        .agg(sum(floor($"x" * 1000000.0 + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val byCell = sums.groupBy(_.getInt(0))
-      cents = cents.map { case (id, old) =>
-        byCell.get(id) match {
-          case Some(rows) =>
-            val arr = old.clone()
-            rows.foreach { r =>
-              arr(r.getInt(1)) =
-                (r.getLong(2) / r.getLong(3)).toDouble / 1000000.0
-            }
-            (id, arr)
-          case None => (id, old) // empty cell keeps its previous centroid
-        }
-      }
+    lloyd(seedVectors(spark, emb, nCells), iters) { cents =>
+      assignCells(spark, emb, centroidFrame(spark, cents))
+        .select($"cell_id", $"vec")
     }
-    cents
   }
 
   /** Embedding clustering summary — the corpus-curation view of the same
@@ -613,10 +668,7 @@ object Similarity {
     import spark.implicits._
     val emb = corpus(spark, sfDir)
     val cents = kmeansCentroids(spark, sfDir, nCells)
-    val centroids = broadcast(
-      cents.toSeq.map { case (id, v) => (id, v.toSeq) }
-        .toDF("cell_id", "centroid"))
-    val counts = assignCells(spark, emb, centroids)
+    val counts = assignCells(spark, emb, centroidFrame(spark, cents))
       .groupBy($"cell_id")
       .agg(count(lit(1)).as("n_vecs"))
     kmeansCellReport(spark, cents, counts)
@@ -627,9 +679,9 @@ object Similarity {
     * the batch summary and its streaming maintenance twin so the two
     * cannot drift. */
   private[graft] def kmeansCellReport(spark: SparkSession,
-      cents: Array[(Int, Array[Double])], counts: DataFrame): DataFrame = {
+      cents: Array[Array[Double]], counts: DataFrame): DataFrame = {
     import spark.implicits._
-    val norms = cents.toSeq.map { case (id, v) =>
+    val norms = cents.toSeq.zipWithIndex.map { case (v, id) =>
       var ss = 0.0
       var i = 0
       while (i < v.length) { ss += v(i) * v(i); i += 1 }
@@ -652,8 +704,8 @@ object Similarity {
     * `max_by(struct(cos, -cell_id))`'s order. Zero bytes per vector to
     * any exchange. */
   private[graft] def cellAssignCol(
-      cents: Array[(Int, Array[Double])]): Column = {
-    val centArr = array(cents.sortBy(_._1).map { case (id, v) =>
+      cents: Array[Array[Double]]): Column = {
+    val centArr = array(cents.zipWithIndex.map { case (v, id) =>
       struct(lit(id).as("cell_id"),
         array(v.map(lit): _*).as("centroid"))
     }.toIndexedSeq: _*)
@@ -683,87 +735,46 @@ object Similarity {
     * approximate pipeline is hash-gated like the LSH/IVF tiers). */
   def topKPq(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 3, nSub: Int = 8, nCodes: Int = 16): DataFrame = {
-    import spark.implicits._
-    val subDim = Dim / nSub
     val emb = corpus(spark, sfDir)
     // codebook: (subspace, code, centroid subvector) — fitted model size
     // nSub × nCodes × subDim doubles (8·16·8 here), seeded skew-immune
     // in (mix64, vec_id) order and collected like the k-means centroids
-    val codebook = broadcast(
-      pqSeedCodebook(spark, emb, nSub, nCodes).toSeq
-        .map { case (s, c, v) => (s, c, v.toSeq) }
-        .toDF("s", "code", "cvec"))
+    val codebook = codebookFrame(spark,
+      subCodebook(seedVectors(spark, emb, nCodes), nSub), nCodes)
     pqFlow(spark, emb, codebook, k, nQueries, nSub)
-  }
-
-  /** The mix64-sampled raw-subvector codebook [[topKPq]] starts from
-    * (and [[pqCodebookKmeans]] refines). */
-  private def pqSeedCodebook(spark: SparkSession, emb: DataFrame,
-      nSub: Int, nCodes: Int): Array[(Int, Int, Array[Double])] = {
-    val subDim = Dim / nSub
-    seedVectors(spark, emb, nCodes).flatMap { case (code, v) =>
-      (0 until nSub).map(s => (s, code, v.slice(s * subDim, (s + 1) * subDim)))
-    }
   }
 
   /** PQ TRAINING — per-subspace Lloyd refinement of the seed codebook,
     * the step FAISS runs as `ProductQuantizer::train`: within each of
     * the `nSub` subspaces independently, k-means the corpus subvectors
-    * (L2 metric, the one ADC scores with) for `iters` deterministic
-    * integer-quantized updates. All `nSub` subspaces train TOGETHER in
-    * each distributed pass — assignment is one broadcast-codebook join
-    * over the exploded (vec, subspace) stream, the update one
-    * (s × code × dim) partial-sum shuffle of ≤ 8·16·8 cells — so
-    * training costs two corpus passes regardless of nSub. Same
-    * fixed-point discipline as [[kmeansCentroids]] (sum floor(x·1e6 +
-    * 0.5) as longs, truncated integer mean), so the fitted codebook is
-    * bit-reproducible and the DuckDB oracle unrolls it. Empty codes
-    * keep their previous centroid. */
+    * under the L2 metric ADC scores with. All subspaces train together
+    * in ONE [[lloyd]] run keyed `s·nCodes + code`: each iteration is one
+    * broadcast-codebook join over the checkpointed (vec, subspace)
+    * stream, a per-(vec, subspace) `min_by` encode (lowest code on
+    * ties), and one tree-reduced accumulator of ≤ 8·16 entries — so
+    * training costs the same corpus passes regardless of nSub, and the
+    * fitted codebook is bit-reproducible like the IVF centroids. */
   private[graft] def pqCodebookKmeans(spark: SparkSession, sfDir: String,
       nSub: Int = 8, nCodes: Int = 16, iters: Int = 2)
-      : Array[(Int, Int, Array[Double])] = {
+      : Array[Array[Double]] = {
     import spark.implicits._
-    val subDim = Dim / nSub
     val emb = corpus(spark, sfDir)
-    var cb = pqSeedCodebook(spark, emb, nSub, nCodes)
     // materialized (r18): every Lloyd iteration re-scanned the corpus
     // and re-exploded the subvector stream; one pass feeds all `iters`
     // assignment jobs (guide §2.4/§5 — the fitted-model training loop
     // reads its training set from memory, not from the scan)
-    val subs = emb.select($"vec_id", explode(array((0 until nSub).map(s =>
-        struct(lit(s).as("s"),
-          expr(s"slice(vec, ${s * subDim} + 1, $subDim)").as("sv"))): _*))
-        .as("z"))
-      .select($"vec_id", $"z.s".as("s"), $"z.sv".as("sv"))
+    val subs = emb
+      .select($"vec_id", explode(sequence(lit(0), lit(nSub - 1))).as("s"),
+        $"vec")
+      .select($"vec_id", $"s", subvector($"vec", Dim / nSub).as("sv"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val cbDf = broadcast(cb.toSeq.map { case (s, c, v) => (s, c, v.toSeq) }
-        .toDF("s", "code", "cvec"))
-      val sums = subs.join(cbDf, Seq("s"))
-        .withColumn("l2", expr(
-          """aggregate(zip_with(sv, cvec, (x, c) -> (x - c) * (x - c)),
-            |          0.0D, (a, x) -> a + x)""".stripMargin))
+    lloyd(subCodebook(seedVectors(spark, emb, nCodes), nSub), iters) { cb =>
+      subs.join(codebookFrame(spark, cb, nCodes), Seq("s"))
+        .withColumn("l2", sqL2($"sv", $"cvec"))
         .groupBy($"vec_id", $"s")
         .agg(min_by(struct($"code", $"sv"), struct($"l2", $"code")).as("a"))
-        .select($"s", $"a.code".as("code"), posexplode($"a.sv")
-          .as(Seq("pos", "x")))
-        .groupBy($"s", $"code", $"pos")
-        .agg(sum(floor($"x" * 1000000.0 + 0.5).cast("long")).as("m"),
-          count(lit(1)).as("n"))
-        .collect()
-      val byKey = sums.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
-        (r.getLong(3), r.getLong(4))).toMap
-      cb = cb.map { case (s, code, old) =>
-        val arr = old.clone()
-        arr.indices.foreach { p =>
-          byKey.get((s, code, p)).foreach { case (m, n) =>
-            arr(p) = (m / n).toDouble / 1000000.0
-          }
-        }
-        (s, code, arr)
-      }
+        .select(($"s" * nCodes + $"a.code").as("key"), $"a.sv")
     }
-    cb
   }
 
   /** PQ/ADC over the Lloyd-TRAINED codebook ([[pqCodebookKmeans]]) —
@@ -774,31 +785,33 @@ object Similarity {
     * tier. */
   def topKPqKmeans(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 3, nSub: Int = 8, nCodes: Int = 16): DataFrame = {
-    import spark.implicits._
     val emb = corpus(spark, sfDir)
-    val codebook = broadcast(
-      pqCodebookKmeans(spark, sfDir, nSub, nCodes).toSeq
-        .map { case (s, c, v) => (s, c, v.toSeq) }
-        .toDF("s", "code", "cvec"))
+    val codebook = codebookFrame(spark,
+      pqCodebookKmeans(spark, sfDir, nSub, nCodes), nCodes)
     pqFlow(spark, emb, codebook, k, nQueries, nSub)
   }
+
+  /** Squared L2 distance between two `array<double>` columns: a
+    * sequential fold over the dims, the deterministic IEEE order the
+    * DuckDB oracles replay. Every PQ distance (training, encode, ADC
+    * tables) is this one fold. */
+  private def sqL2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)), lit(0.0), _ + _)
+
+  /** The s-th `subDim`-wide subvector of `v` (`s` a column of the row). */
+  private def subvector(v: Column, subDim: Int): Column =
+    slice(v, col("s") * subDim + 1, lit(subDim))
 
   /** Shared PQ encode + ADC scoring flow over a broadcast codebook. */
   private def pqFlow(spark: SparkSession, emb: DataFrame,
       codebook: DataFrame, k: Int, nQueries: Int, nSub: Int): DataFrame = {
     import spark.implicits._
     val subDim = Dim / nSub
-    // squared L2 between a vector's s-th subvector and a codebook entry:
-    // sequential fold over the subDim dims (deterministic IEEE order)
-    def subL2(vecCol: String): Column = expr(
-      s"""aggregate(zip_with(slice($vecCol, s * $subDim + 1, $subDim), cvec,
-                             (x, c) -> (x - c) * (x - c)),
-                    0.0D, (a, x) -> a + x)""")
     // encode: per (vec, subspace) the nearest code — min_by partial-
     // combines map-side; the struct(l2, code) ordering is the
     // deterministic tie-break
     val codes = emb.crossJoin(codebook)
-      .withColumn("l2", subL2("vec"))
+      .withColumn("l2", sqL2(subvector($"vec", subDim), $"cvec"))
       .groupBy($"vec_id", $"s")
       .agg(min_by($"code", struct($"l2", $"code")).as("code"))
     // ADC table: per (query, subspace, code) the squared distance
@@ -806,29 +819,30 @@ object Similarity {
       emb.filter($"vec_id" < nQueries)
         .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
         .crossJoin(codebook)
-        .withColumn("l2q", subL2("q_vec"))
+        .withColumn("l2q", sqL2(subvector($"q_vec", subDim), $"cvec"))
         .select($"q_id", $"s", $"code", $"l2q"))
-    // score: 8 table lookups per (query, candidate), folded in subspace
-    // order so the double sum is order-independent across engines
-    val est = codes.join(qtable, Seq("s", "code"))
-      .groupBy($"q_id", $"vec_id")
-      .agg(sort_array(collect_list(struct($"s", $"l2q"))).as("parts"))
-      .withColumn("dist",
-        expr("aggregate(parts, 0.0D, (a, x) -> a + x.l2q)"))
-      .filter($"vec_id" =!= $"q_id")
-    rankTopK(est.select($"q_id", $"vec_id", $"dist".as("score")),
-        k, descending = false, "pq_dist")
-      .select($"q_id", $"vec_id", $"pq_dist", $"rnk")
-      .orderBy($"q_id".asc, $"rnk".asc)
+    adcTopK(codes, qtable, Seq("s", "code"), k, "pq_dist")
   }
 
-  /** The seed sample's (rank, original vec_id) pairs — for model stages
-    * that need to look the seeds up again after a derived transform (the
-    * IVF-PQ residual codebook). Derived from the same [[seedSample]] as
-    * [[seedVectors]], so the two orderings cannot drift apart. */
-  private def seedRanks(spark: SparkSession, emb: DataFrame, n: Int)
-      : Array[(Int, Long)] =
-    seedSample(spark, emb, n).map { case (i, id, _) => (i, id) }
+  /** ADC scoring shared by [[pqFlow]] and [[topKIvfPq]]: a candidate's
+    * codes meet the broadcast query table on `keys`, its nSub `l2q`
+    * lookups fold in subspace order (sequential IEEE adds —
+    * bit-identical in DuckDB's list_reduce, so the fold is
+    * order-independent across engines), and the k smallest distances
+    * per query rank as `scoreOut`. */
+  private def adcTopK(codes: DataFrame, qtable: DataFrame, keys: Seq[String],
+      k: Int, scoreOut: String): DataFrame = {
+    import codes.sparkSession.implicits._
+    val est = codes.join(qtable, keys)
+      .filter($"vec_id" =!= $"q_id")
+      .groupBy($"q_id", $"vec_id")
+      .agg(sort_array(collect_list(struct($"s", $"l2q"))).as("parts"))
+      .select($"q_id", $"vec_id",
+        expr("aggregate(parts, 0.0D, (a, x) -> a + x.l2q)").as("score"))
+    rankTopK(est, k, descending = false, scoreOut)
+      .select($"q_id", $"vec_id", col(scoreOut), $"rnk")
+      .orderBy($"q_id".asc, $"rnk".asc)
+  }
 
   /** IVF-PQ composite ANN — the two fitted models fused the way a
     * production vector index runs them (the FAISS `IVF16,PQ8` layout):
@@ -857,15 +871,12 @@ object Similarity {
     val subDim = Dim / nSub
     val emb = corpus(spark, sfDir)
     val nc = ivfCells(emb, nCells)
-    val np = ivfNprobe(nc, nprobe)
-    val centroids = broadcast(
-      seedVectors(spark, emb, nc).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark, seedVectors(spark, emb, nc))
     // corpus → nearest cell (map-side argmax), then the winning cell's
     // centroid rejoins by id (broadcast, map-side) to form the residual —
     // cheaper than carrying the 64-double centroid through the argmax
     val assigned = assignCells(spark, emb, centroids)
-      .join(broadcast(centroids), Seq("cell_id"))
+      .join(centroids, Seq("cell_id"))
       .select($"vec_id", $"cell_id",
         expr("zip_with(vec, centroid, (x, c) -> x - c)").as("res"))
       // materialized (r18): the residual table feeds the codebook
@@ -875,58 +886,31 @@ object Similarity {
     // residual codebook: the nCodes mix64 seed vectors' own residuals,
     // sliced per subspace — a 128-row fitted model (the spark.ml
     // pattern), collected once and broadcast to both encode and ADC
-    val ranks = seedRanks(spark, emb, nCodes)
-    val rankDf = broadcast(ranks.toSeq.toDF("code", "vec_id"))
-    val cbRows = assigned.join(rankDf, Seq("vec_id"))
-      .select($"code", $"res").as[(Int, Seq[Double])].collect()
-      .sortBy(_._1)
-      .flatMap { case (code, res) =>
-        (0 until nSub).map(s0 =>
-          (s0, code, res.slice(s0 * subDim, (s0 + 1) * subDim)))
-      }
-    val codebook = broadcast(cbRows.toSeq.toDF("s", "code", "cvec"))
+    val rankDf = broadcast(seedSample(spark, emb, nCodes).map(_._1).toSeq
+      .zipWithIndex.toDF("vec_id", "code"))
+    val seedRes = assigned.join(rankDf, Seq("vec_id"))
+      .select($"code", $"res").as[(Int, Array[Double])].collect()
+      .sortBy(_._1).map(_._2)
+    val codebook = codebookFrame(spark, subCodebook(seedRes, nSub), nCodes)
     // encode: per (vec, subspace) the L2-nearest residual codeword —
     // min_by partial-combines map-side, struct tie-break deterministic
     val codes = assigned.crossJoin(codebook)
-      .withColumn("l2", expr(
-        s"""aggregate(zip_with(slice(res, s * $subDim + 1, $subDim), cvec,
-                               (x, c) -> (x - c) * (x - c)),
-                      0.0D, (a, x) -> a + x)"""))
+      .withColumn("l2", sqL2(subvector($"res", subDim), $"cvec"))
       .groupBy($"vec_id", $"cell_id", $"s")
       .agg(min_by($"code", struct($"l2", $"code")).as("code"))
     // query → nprobe nearest cells, carrying the PER-CELL query residual
-    val wProbe = Window.partitionBy($"q_id")
-      .orderBy($"probe_cos".desc, $"cell_id".asc)
-    val probes = emb.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("q_id"), $"vec".as("q_vec"))
-      .crossJoin(centroids)
-      .withColumn("probe_cos", expr("cosine_sim(q_vec, centroid)"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter($"r" <= np)
+    val probes = probeCells(spark, emb, centroids, nQueries,
+        ivfNprobe(nc, nprobe))
       .select($"q_id", $"cell_id",
         expr("zip_with(q_vec, centroid, (x, c) -> x - c)").as("qres"))
     // ADC tables: (query, probed cell, subspace, code) → squared L2 of
     // the query residual subvector to the codeword — nQueries · nprobe
-    // · nSub · nCodes rows, broadcast
+    // · nSub · nCodes rows, broadcast. Candidates are exactly the
+    // vectors whose single home cell is probed.
     val qtable = broadcast(probes.crossJoin(codebook)
-      .withColumn("l2q", expr(
-        s"""aggregate(zip_with(slice(qres, s * $subDim + 1, $subDim), cvec,
-                               (x, c) -> (x - c) * (x - c)),
-                      0.0D, (a, x) -> a + x)"""))
+      .withColumn("l2q", sqL2(subvector($"qres", subDim), $"cvec"))
       .select($"q_id", $"cell_id", $"s", $"code", $"l2q"))
-    // score: candidates are exactly the vectors whose single home cell
-    // is probed; 8 table lookups folded in subspace order (sequential
-    // IEEE adds — bit-identical in DuckDB's list_reduce)
-    val est = codes.join(qtable, Seq("cell_id", "s", "code"))
-      .filter($"vec_id" =!= $"q_id")
-      .groupBy($"q_id", $"vec_id")
-      .agg(sort_array(collect_list(struct($"s", $"l2q"))).as("parts"))
-      .withColumn("dist",
-        expr("aggregate(parts, 0.0D, (a, x) -> a + x.l2q)"))
-    rankTopK(est.select($"q_id", $"vec_id", $"dist".as("score")),
-        k, descending = false, "ivfpq_dist")
-      .select($"q_id", $"vec_id", $"ivfpq_dist", $"rnk")
-      .orderBy($"q_id".asc, $"rnk".asc)
+    adcTopK(codes, qtable, Seq("cell_id", "s", "code"), k, "ivfpq_dist")
   }
 
   /** Binary (sign-bit) quantized ANN — the 32× compression tier below
@@ -1007,11 +991,8 @@ object Similarity {
       threshold: Double = 0.4, nCells: Int = 0): DataFrame = {
     import spark.implicits._
     val emb = corpus(spark, sfDir)
-    val k = if (nCells > 0) nCells else semanticCellCount(emb.count())
-    val cents = kmeansCentroids(spark, sfDir, k)
-    val centroids = broadcast(
-      cents.toSeq.map { case (id, v) => (id, v.toSeq) }
-        .toDF("cell_id", "centroid"))
+    val centroids = centroidFrame(spark,
+      kmeansCentroids(spark, sfDir, ivfCells(emb, nCells)))
     val assigned = assignCells(spark, emb, centroids)
       .select($"cell_id", $"vec_id", $"vec")
       // both sides of the within-cell self-join (r18): without the cut

@@ -187,9 +187,10 @@ object Etl {
       .filter(col("hbucket").isin(buckets: _*))
 
   /** The CANDIDATE SCAN every rectangle DML shares: `rect`'s
-    * zone-candidate buckets of the table at `root` and their rows —
-    * nothing outside the candidates is listed, opened or decoded
-    * (PlanSpec pins the PartitionFilters). */
+    * zone-candidate buckets of the table at `root` and their rows. Only
+    * candidate files are opened and decoded (PlanSpec pins the
+    * PartitionFilters), but [[bucketScan]] lists every bucket directory
+    * of the table before the prune. */
   private[graft] def candidateScan(spark: SparkSession, root: String,
       rect: (Long, Long, Long, Long)): (DataFrame, Array[Long]) = {
     val cands = zoneCands(spark.read.parquet(s"$root/$HilbertZonesDir"),

@@ -144,6 +144,7 @@ class RobustnessSpec extends SparkSpec {
     assert(Similarity.kmeansClusters(spark, emptyDir).count() == 0)
     assert(Similarity.cosineNearDup(spark, emptyDir).count() == 0)
     assert(Similarity.topKPq(spark, emptyDir).count() == 0)
+    assert(Similarity.topKPqKmeans(spark, emptyDir).count() == 0)
     assert(Similarity.topKBinary(spark, emptyDir).count() == 0)
     assert(Similarity.dedupSemantic(spark, emptyDir).count() == 0)
   }

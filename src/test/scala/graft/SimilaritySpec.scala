@@ -2,7 +2,8 @@ package graft
 
 import graft.operators.Similarity
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.functions.{broadcast, expr, round}
+import org.apache.spark.sql.functions.{broadcast, call_function, col, expr,
+  round}
 
 /** Similarity-search behavior: brute force is the exact reference; the LSH
   * tier must return a subset of the corpus ranked consistently. */
@@ -30,6 +31,27 @@ class SimilaritySpec extends SparkSpec {
       assert(n == (if (cell == 0) 20L else 0L),
         s"cell $cell holds $n vectors — tie-break regressed")
       assert(norm == 4.0, s"cell $cell centroid norm $norm != 4.0")
+    }
+    // the PQ encode's min_by struct(l2, code) tie-break, through one
+    // training iteration: the 16 seed vectors (first in mix64 order) are
+    // all 0.5, so every subvector is a 16-way exact L2 tie and code 0
+    // takes all 40 — its mean (16·0.5 + 24·0.75)/40 = 0.65 shows it got
+    // every one — while the other 15 codes, empty, keep their seeds
+    val pqDir = SparkSpec.tempDir("graft-pq-tie").toString
+    val seedIds = spark.range(40)
+      .select($"id", call_function("mix64", $"id").as("mz"))
+      .orderBy($"mz".asc, $"id".asc).limit(16)
+      .as[(Long, Long)].collect().map(_._1).toSet
+    (0L until 40L).map { i =>
+      (i, Array.fill(64)(if (seedIds(i)) 0.5f else 0.75f), 0)
+    }.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$pqDir/embeddings.parquet")
+    val cb = Similarity.pqCodebookKmeans(spark, pqDir, iters = 1)
+    assert(cb.length == 8 * 16)
+    cb.zipWithIndex.foreach { case (v, key) =>
+      val want = if (key % 16 == 0) 0.65 else 0.5
+      assert(v.forall(_ == want),
+        s"subspace ${key / 16} code ${key % 16} is ${v.toSeq}, not $want")
     }
   }
 
@@ -265,7 +287,6 @@ class SimilaritySpec extends SparkSpec {
   test("versioned index rebuild: pre-cutover serves the frozen v1 model," +
       " post-cutover the full re-fit, re-serve is idempotent, pointer" +
       " never torn") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val E = graft.sources.Etl
     val tmp = SparkSpec.tempDir("graft_ivf_idx").toFile
@@ -291,9 +312,8 @@ class SimilaritySpec extends SparkSpec {
           .as("vec"))
       val index = emb.filter(col("vec_id") % 2 === 0)
       val nc1 = Similarity.ivfCells(index, 0)
-      val cents1 = broadcast(
-        Similarity.seedVectors(spark, index, nc1).toSeq
-          .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+      val cents1 = Similarity.centroidFrame(spark,
+        Similarity.seedVectors(spark, index, nc1))
       val expectPre = bareTuples(Similarity.ivfServe(spark, emb,
         Similarity.assignCells(spark, index, cents1), cents1,
         k = 5, nQueries = 64, nprobe = Similarity.ivfNprobe(nc1, 0)))
@@ -469,6 +489,72 @@ class SimilaritySpec extends SparkSpec {
       "Rayleigh quotient decreased across power iterations")
   }
 
+  test("k-means and PQ training: bit-exact against an in-memory" +
+      " fixed-point Lloyd reference") {
+    val emb = Tables.read(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+    val vecs = emb.select("vec").collect().map(_.getSeq[Double](0).toArray)
+    // one Lloyd update: per key, sum floor(x·1e6 + 0.5) as exact longs,
+    // take the truncated integer mean, and keep an empty key's vector
+    def update(model: Array[Array[Double]],
+        members: Seq[(Int, Array[Double])]): Array[Array[Double]] = {
+      val byKey = members.groupBy(_._1)
+      Array.tabulate(model.length) { key =>
+        byKey.get(key).fold(model(key)) { ms =>
+          Array.tabulate(model(key).length) { d =>
+            ms.map(m => math.floor(m._2(d) * 1000000.0 + 0.5).toLong).sum /
+              ms.length / 1000000.0
+          }
+        }
+      }
+    }
+    // the first strictly best score wins: lowest key on ties
+    def best(scores: Array[Double], better: (Double, Double) => Boolean) = {
+      assert(!scores.exists(_.isNaN))
+      scores.indices.foldLeft(0) { (b, i) =>
+        if (better(scores(i), scores(b))) i else b
+      }
+    }
+    // cosine as CosineSimilarity folds it: dot and both norms in one pass
+    def cosine(x: Array[Double], y: Array[Double]): Double = {
+      var (dot, nx, ny) = (0.0, 0.0, 0.0)
+      x.indices.foreach { i =>
+        dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i)
+      }
+      dot / (math.sqrt(nx) * math.sqrt(ny))
+    }
+    def sqL2(x: Array[Double], c: Array[Double]): Double =
+      x.indices.foldLeft(0.0)((a, i) => a + (x(i) - c(i)) * (x(i) - c(i)))
+    def bits(v: Array[Double]) =
+      v.map(java.lang.Double.doubleToRawLongBits).toSeq
+    val seeds = Similarity.seedVectors(spark, emb, 16)
+
+    var cents = seeds
+    for (_ <- 1 to 2) cents = update(cents,
+      vecs.toSeq.map(v => (best(cents.map(cosine(v, _)), _ > _), v)))
+    val km = Similarity.kmeansCentroids(spark, sf, 16)
+    assert(km.length == 16)
+    km.indices.foreach { id =>
+      assert(bits(km(id)) == bits(cents(id)), s"k-means cell $id")
+    }
+
+    val (nSub, subDim) = (8, 8)
+    def sub(v: Array[Double], s: Int) = v.slice(s * subDim, (s + 1) * subDim)
+    var books = Array.tabulate(nSub)(s => seeds.map(sub(_, s)))
+    for (_ <- 1 to 2) books = books.indices.map { s =>
+      update(books(s), vecs.toSeq.map { v =>
+        (best(books(s).map(sqL2(sub(v, s), _)), _ < _), sub(v, s))
+      })
+    }.toArray
+    val pq = Similarity.pqCodebookKmeans(spark, sf)
+    assert(pq.length == nSub * 16)
+    pq.indices.foreach { key =>
+      val (s, code) = (key / 16, key % 16)
+      assert(bits(pq(key)) == bits(books(s)(code)),
+        s"PQ subspace $s code $code")
+    }
+  }
+
   test("pca projection: exact dot with the in-memory eigenvector," +
       " and order is eigvec-consistent") {
     // rebuild the fixed-point reference eigenvector (same recipe as the
@@ -529,7 +615,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("incremental IVF ≡ full rebuild under the frozen index model" +
       " (sf fixture differential)") {
-    import org.apache.spark.sql.functions.col
     // rebuild: the SAME index-frozen centroids/geometry, but assignment
     // recomputed over the whole corpus in one pass — the thing the
     // incremental path replaces with (persisted index) ∪ (Δ-only pass)
@@ -538,10 +623,8 @@ class SimilaritySpec extends SparkSpec {
         col("embedding").cast("array<double>").as("vec"))
     val index = emb.filter(col("vec_id") % 2 === 0)
     val nc = Similarity.ivfCells(index, 0)
-    import spark.implicits._
-    val centroids = broadcast(
-      Similarity.seedVectors(spark, index, nc).toSeq
-        .map { case (id, v) => (id, v.toSeq) }.toDF("cell_id", "centroid"))
+    val centroids = Similarity.centroidFrame(spark,
+      Similarity.seedVectors(spark, index, nc))
     val rebuilt = Similarity.ivfServe(spark, emb,
         Similarity.assignCells(spark, emb, centroids), centroids,
         5, 3, Similarity.ivfNprobe(nc, 0)).collect()
@@ -558,8 +641,8 @@ class SimilaritySpec extends SparkSpec {
     // the frozen-model claim is load-bearing: the index-half seed draw
     // genuinely differs from a full-corpus re-seed (which a per-shard
     // re-training bug would produce)
-    val reSeed = Similarity.seedVectors(spark, emb, nc).map(_._2.toSeq)
-    val frozen = Similarity.seedVectors(spark, index, nc).map(_._2.toSeq)
+    val reSeed = Similarity.seedVectors(spark, emb, nc).map(_.toSeq)
+    val frozen = Similarity.seedVectors(spark, index, nc).map(_.toSeq)
     assert(reSeed.toSet != frozen.toSet,
       "full-corpus re-seed coincides with the frozen model — the" +
         " differential cannot distinguish a re-training bug")
@@ -567,7 +650,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("serving under maintenance: the merged index serves the query" +
       " batch identically to the rebuilt index at BOTH batch sizes") {
-    import org.apache.spark.sql.functions.col
     // the two incremental halves composed: whatever batch size the
     // serving layer throws at it (the per-query 3 and the production 64),
     // (persisted index) ∪ (Δ-assigned shard) must answer exactly as a

@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
   * builder (GraftSession), derived sessions and stream starts only through
   * its `child` and `withConfs`, function names and planner strategies
   * bound only through GraftExtensions, one connected-components loop, one
-  * stream delivery stager, one profiler, one table-layout protocol, and a
-  * fixed set of environment keys. */
+  * stream delivery stager, one profiler, one table-layout protocol, one
+  * Lloyd kernel, and a fixed set of environment keys. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -126,6 +126,20 @@ class StructureSpec extends AnyFunSuite {
     val overlap = matches(""""x_hi"\)?\s*>=""")
     assert(overlap.size == 1,
       s"zone prunes use Etl.zoneOverlap, found: $overlap")
+  }
+
+  test("one Lloyd kernel: Similarity's fixed-point update, model frames," +
+      " squared-L2 fold, probe ranking and ADC fold each appear once") {
+    val file = root.resolve("graft/operators/Similarity.scala")
+    val text = sources.collect { case (p, t) if p == file => t }
+    assert(text.size == 1, s"no $file")
+    Seq("1000000.0", "treeAggregate", """toDF("cell_id", "centroid")""",
+      "(x - c) * (x - c)", """Window.partitionBy($"q_id")""",
+      """collect_list(struct($"s", $"l2q"))""").foreach { needle =>
+      val n = java.util.regex.Pattern.quote(needle).r
+        .findAllMatchIn(text.head).size
+      assert(n == 1, s"$needle appears $n times in $file")
+    }
   }
 
   /** Deployment paths and core count, the stream scratch directory, and
